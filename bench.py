@@ -65,11 +65,16 @@ def _host_probes() -> tuple[float, float]:
     return round(one, 3), round(time.perf_counter() - t0, 3)
 
 
+# Bump when tests/fixtures.py changes what it generates, so a cache built
+# by an older generator is never reused (v2: valid, monotone block times).
+PARSE_FIXTURE_VERSION = 2
+
+
 def _ensure_parse_fixture(n_blocks: int) -> str:
     """Raw blockchain JSON at bench scale (cached in /tmp, built once,
     OUTSIDE the timed region): ~n_blocks blocks + ~n_blocks txs written as
     64 JSON-lines batch files per table so the scan parallelizes."""
-    cache = f"/tmp/bread_spark_parse_fixture_{n_blocks}"
+    cache = f"/tmp/bread_spark_parse_fixture_v{PARSE_FIXTURE_VERSION}_{n_blocks}"
     done = os.path.join(cache, "_DONE")
     if os.path.exists(done):
         return cache

@@ -4,7 +4,7 @@ pairs, ranked by an exact-integer association score.
 Corpus collocations ("new york", "machine learning") are the classic
 association-mining surface over the same unigram/bigram count tables
 the n-gram LM family already maintains — so this module CONSUMES the
-shared LM seams (`curation.lm_unigram_frame` / `lm_bigram_frame`,
+shared LM count seam (`curation.lm_counts` at orders 1 and 2,
 materialize.py contract) rather than recounting: in the bench cold
 pass whoever touches the counts first pays once for the LM scorers,
 the perplexity buckets, and the collocation miner together.
@@ -86,10 +86,11 @@ def pmi_collocations_df(uni: DataFrame, big: DataFrame) -> DataFrame:
 def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-100 collocations (module docstring): (w1, w2, n_pair,
     n_w1, n_w2, pmi_lift_micro)."""
-    from .curation import lm_bigram_frame, lm_unigram_frame
+    from .curation import lm_counts
 
     return pmi_collocations_df(
-        lm_unigram_frame(spark, sf_dir), lm_bigram_frame(spark, sf_dir)
+        lm_counts(spark, sf_dir, 1).withColumnRenamed("w1", "token"),
+        lm_counts(spark, sf_dir, 2).withColumnRenamed("n", "n12"),
     )
 
 

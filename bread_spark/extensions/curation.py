@@ -13,13 +13,15 @@ documents" and "mixture-weighted, deduplicated corpus":
                           with weight w get floor(w) full epochs plus an
                           md5-gated fractional epoch (the LLaMA-recipe
                           upsampling shape).
-- unigram_logprob_scores: per-document mean unigram log-probability under
-                          the corpus's own unigram LM (the CCNet
-                          perplexity-filter shape, with a unigram model
-                          standing in for the KenLM n-gram model).
-- bigram_logprob_scores:  the same perplexity-filter shape with a real
-                          interpolated bigram LM (unigram backoff) — one
-                          step closer to CCNet's KenLM.
+- {unigram,bigram,trigram,ngram5}_logprob_scores:
+                          per-document mean log-probability under the
+                          corpus's own interpolated order-k n-gram LM
+                          (k = 1, 2, 3, 5; deleted interpolation down to
+                          the unigram) — the CCNet perplexity-filter
+                          shape, with k = 5 the order of CCNet's KenLM.
+                          One scorer (`ngram_logprob_scores_df`) over one
+                          count seam per order (`lm_counts`), plus the
+                          CCNet head/middle/tail perplexity buckets.
 - domain_token_quota:     per-source quota by cumulative TOKEN budget (real
                           pre-training quotas bound tokens, not documents).
 - corpus_mix_tokens:      mixture weighting where the fractional epoch is
@@ -31,6 +33,8 @@ Python in any hot path. Every operator has a DuckDB oracle.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -694,732 +698,262 @@ def temperature_mix_weights(
 
 
 # ---------------------------------------------------------------------------
-# Unigram-LM quality scoring
+# Order-k interpolated n-gram LM quality scoring
 # ---------------------------------------------------------------------------
+
+LM_LAMBDA3 = 0.6  # trigram weight in the deleted-interpolation chain
+LM_LAMBDA4 = 0.5  # 4-gram weight in the deleted-interpolation chain
+LM_LAMBDA5 = 0.4  # 5-gram weight in the deleted-interpolation chain
+# λ_k by order k; order 1 has no weight (P₁ is the bare unigram ratio)
+LM_LAMBDAS = {2: LM_LAMBDA, 3: LM_LAMBDA3, 4: LM_LAMBDA4, 5: LM_LAMBDA5}
+LM_MAX_ORDER = max(LM_LAMBDAS)
+# Count tables up to this order are shared compute-once seams (the 5-gram
+# chain reads the 3- and 4-gram tables twice each, and the trigram scorer,
+# the collocation miner and the streaming twin read the lower ones). The
+# 5-gram table's only consumer is the cached order-5 scored frame, so it
+# is aggregated inline there.
+LM_SEAM_MAX_ORDER = 4
 
 
 def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document mean log10 unigram probability under the corpus's own
-    unigram distribution — the perplexity-filter shape (CCNet trains a
-    KenLM model; the unigram stand-in keeps the engine-side plumbing
-    identical: build LM → score every doc → threshold the tail). See
-    `bigram_logprob_scores` for the context-aware upgrade: an interpolated
-    bigram LM with unigram backoff, the same shape one interpolation order
-    below KenLM's 5-gram.
-
-    Low (very negative) scores mean a document of rare tokens; high means
-    common-token text. Plan: ONE explode for the join-back stream; the
-    LM itself rides the shared `lm_unigram_frame` seam (r14 — the
-    aggregate branch previously re-evaluated the same scan+explode
-    subtree, exchange keys differ so ReusedExchange never fires) →
-    token-keyed join back (broadcast here; at real vocab sizes a
-    shuffle join on token — both sides token-partitioned, and the heavy
-    side already exists from the explode) → per-doc mean. All JVM.
-    """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("token") != "")
-    lm = lm_unigram_frame(spark, sf_dir)
-    total = lm.agg(F.sum("n").alias("total"))
-    lm_p = lm.join(F.broadcast(total)).select(
-        "token", (F.log10(F.col("n") / F.col("total"))).alias("logp")
-    )
-    return (
-        toks.join(F.broadcast(lm_p), "token")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("logp"), 6).alias("mean_logp"),
-        )
-    )
+    """`ngram_logprob_scores_df` at order 1: per-document mean log10
+    unigram probability n(w)/N under the corpus's own unigram LM."""
+    return _lm_scores(spark, sf_dir, 1)
 
 
 def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document mean log10 probability under an INTERPOLATED BIGRAM LM
-    trained on the corpus itself — the CCNet/KenLM perplexity-filter shape
-    with real context: the first token of a doc scores its unigram
-    probability; every later token w2 with predecessor w1 scores
-    λ·(n(w1,w2)/n(w1)) + (1−λ)·(n(w2)/N), λ = 0.75. Low (very negative)
-    mean log-prob = rare/incoherent token sequences → filter the tail.
-
-    Plan (all JVM): bigram pairs are built IN-ARRAY from the same split
-    the scan already does (transform over slice — map-side, no
-    self-join-on-position shuffle), then exploded; the unigram and bigram
-    count tables are one groupBy each; scoring joins the tiny LM tables
-    back (broadcast here — at real vocab sizes the bigram table outgrows
-    broadcast and these become ordinary shuffle joins keyed on the pair,
-    which is exactly how the plan degrades: no driver state either way).
-    The per-doc mean is one groupBy(doc_id) over the unioned first-token
-    and pair scores, so n_tokens = 1 + n_pairs = the doc's token count.
-
-    The result rides the shared scored-frame seam (`lm_scored_frame`):
-    three catalog entries need these scores, one build pays for all.
-    """
-    return lm_scored_frame(spark, sf_dir)
+    """`ngram_logprob_scores_df` at order 2, served by the order-2
+    scored-frame seam (three catalog entries read it)."""
+    return lm_scored_frame(spark, sf_dir, 2)
 
 
-# Compute-once seam for the bigram-LM scored frame. Three catalog entries
-# consume the same (doc_id, n_tokens, mean_logp) build — the scores
-# themselves, and both perplexity-bucket plan forms — so a catalog/bench
-# pass was paying the LM training cost three times over identical input.
+def trigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`ngram_logprob_scores_df` at order 3 over the shared order-1..3
+    count seams (no scored-frame seam: nothing else reads these scores)."""
+    return _lm_scores(spark, sf_dir, 3)
+
+
+def ngram5_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`ngram_logprob_scores_df` at order 5 — the order CCNet's KenLM
+    models run — served by the order-5 scored-frame seam (the 5-gram
+    perplexity buckets read the same scores)."""
+    return lm_scored_frame(spark, sf_dir, 5)
+
+
+def _lm_scores(spark: SparkSession, sf_dir: str, order: int) -> DataFrame:
+    """The order-k scorer over the documents table, reading the shared
+    count seams for orders up to `LM_SEAM_MAX_ORDER`."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    seams = [
+        lm_counts(spark, sf_dir, k)
+        for k in range(1, min(order, LM_SEAM_MAX_ORDER) + 1)
+    ]
+    return ngram_logprob_scores_df(docs, order, seams)
+
+
+# Compute-once seam for the order-k scored frame. The scores entry and its
+# perplexity-bucket consumers read the same (doc_id, n_tokens, mean_logp)
+# build, so one LM training pass per catalog pass serves all of them.
 # This is the materialized-intermediate pattern (dbt would call the scored
-# frame a model the buckets `ref()`), not benchmark gaming: the cache key
-# is (Spark applicationId, realpath(sf_dir), LM_LAMBDA), so a new session
-# or a different dataset (or LM parameterization) always rebuilds, and
-# the persisted frame is the SAME DataFrame every consumer would have
-# computed (equality is pinned by the shared oracle + the window-vs-
-# distributed equality test in test_curation.py).
-def lm_scored_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+# frame a model the buckets `ref()`): the cache key is (applicationId,
+# realpath(sf_dir), order, λ chain), so a new session, dataset or LM
+# parameterization always rebuilds, and the persisted frame is the SAME
+# DataFrame every consumer would have computed (pinned by the shared
+# oracles + the window-vs-distributed equality test in test_curation.py).
+def lm_scored_frame(spark: SparkSession, sf_dir: str, order: int) -> DataFrame:
     from ..plans.materialize import materialized_frame
 
     # Eager materialization (inside the seam) matters here: downstream
     # repartitionByRange samples its child for bounds, which must hit the
     # cache, not re-run the LM.
+    lambdas = tuple(LM_LAMBDAS[k] for k in range(2, order + 1))
     return materialized_frame(
         spark,
         "lm_scored",
         sf_dir,
-        lambda: bigram_logprob_scores_df(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            uni=lm_unigram_frame(spark, sf_dir),
-            big=lm_bigram_frame(spark, sf_dir),
-        ),
-        (LM_LAMBDA,),
+        lambda: _lm_scores(spark, sf_dir, order),
+        (order, *lambdas),
     )
 
 
-def clear_lm_cache() -> None:
-    """Unpersist and drop all cached seam frames (test isolation hook)."""
-    from ..plans.materialize import clear_materialized_frames
+def lm_counts(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """Compute-once k-gram count table (w1..wk, n) for the canonical
+    documents table — read by the LM scorers of every order above k, the
+    collocation miner, the OOV report and the streaming 5-gram twin.
+    Cache contract: plans/materialize.py.
 
-    clear_materialized_frames()
-
-
-def lm_unigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compute-once unigram count table (token, n) for the canonical
-    documents table — shared by the bigram AND trigram LM builds (the
-    trigram was re-counting the identical tables its lower orders
-    already built). Cache contract: plans/materialize.py.
-
-    r14: folds the `source_token_counts` seam by token instead of
-    re-tokenizing the corpus — the two families (LM scorers /
-    distributional profiles) counted the IDENTICAL token multiset in
-    two separate full-text aggregates per catalog pass. The fold is a
-    vocabulary-sized aggregate over the already-checkpointed seam, so
-    one tokenization pass now serves both; per-token counts are
-    bit-identical (same split/filter, grouped one level finer then
-    summed)."""
+    Order 1 folds the `source_token_counts` seam by token instead of
+    re-tokenizing the corpus: the LM scorers and the distributional
+    profiles count the IDENTICAL token multiset, so one tokenization pass
+    serves both (same split/filter, grouped one level finer then summed).
+    Checkpointing that fold nests one checkpoint inside another on
+    purpose: it keeps a single order-1 seam for its many consumers and
+    measured faster cold (1.29 s → 0.78 s) than re-deriving the fold in
+    each consumer."""
     from ..plans.materialize import materialized_frame
 
     def build():
-        from .sketch import corpus_token_counts
+        if k == 1:
+            from .sketch import corpus_token_counts
 
-        return corpus_token_counts(spark, sf_dir)
-
-    return materialized_frame(spark, "lm_uni", sf_dir, build)
-
-
-def lm_bigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compute-once bigram count table (w1, w2, n12) — see
-    `lm_unigram_frame`."""
-    from ..plans.materialize import materialized_frame
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-        w = docs.select(toks_arr.alias("toks")).filter(F.size("toks") >= 1)
-        return (
-            w.select(
-                F.explode(
-                    F.expr(
-                        BIGRAM_PAIRS_EXPR
-                    )
-                ).alias("p")
+            return corpus_token_counts(spark, sf_dir).withColumnRenamed(
+                "token", "w1"
             )
-            .select("p.w1", "p.w2")
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("n12"))
-        )
+        return ngram_counts_df(load_table(spark, sf_dir, "documents"), k)
 
-    return materialized_frame(spark, "lm_big", sf_dir, build)
+    return materialized_frame(spark, "lm_counts", sf_dir, build, (k,))
 
 
-# The adjacent-pair construction shared by every bigram count build —
-# batch LM seam, per-source collocation counts, and the streaming twin
-# (which must produce the IDENTICAL pair stream for its snapshot to
-# equal the batch tables). One definition so the contract cannot drift.
-BIGRAM_PAIRS_EXPR = (
-    "transform(slice(toks, 2, size(toks) - 1), "
-    "(t, i) -> struct(toks[i] AS w1, t AS w2))"
-)
+def _gram_cols(k: int) -> list[str]:
+    return [f"w{j}" for j in range(1, k + 1)]
 
 
-def _gram_stream(w: DataFrame, k: int, names: tuple, with_doc: bool = True) -> DataFrame:
-    """Exploded k-gram stream from a (doc_id, toks) frame — in-array
-    construction (one higher-order transform over the split the scan
-    already did; zero shuffles), the bigram/trigram idiom generalized to
-    any order. ``greatest(…, 0)`` guards the ANSI-mode negative slice
-    length on docs shorter than k tokens."""
-    fields = ", ".join(
-        [f"toks[i + {j}] AS {nm}" for j, nm in enumerate(names[:-1])]
-        + [f"t AS {names[-1]}"]
-    )
-    head = ["doc_id"] if with_doc else []
-    return w.select(
-        *head,
-        F.explode(
-            F.expr(
-                f"transform(slice(toks, {k}, greatest(size(toks) - {k - 1}, 0)), "
-                f"(t, i) -> struct({fields}))"
-            )
-        ).alias("p"),
-    ).select(*head, *[f"p.{nm}" for nm in names])
-
-
-def _doc_toks(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks) — the shared split+filter every LM build starts from."""
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    return docs.select("doc_id", toks_arr.alias("toks")).filter(F.size("toks") >= 1)
-
-
-def lm_trigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compute-once trigram count table (w1, w2, w3, n123) — shared by
-    the trigram scorer AND the 5-gram chain (which reads it twice: as
-    the order-4 denominator and the order-3 backoff numerator). See
-    `lm_unigram_frame` for the cache contract."""
-    from ..plans.materialize import materialized_frame
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        return (
-            _gram_stream(_doc_toks(docs), 3, ("w1", "w2", "w3"), with_doc=False)
-            .groupBy("w1", "w2", "w3")
-            .agg(F.count(F.lit(1)).alias("n123"))
-        )
-
-    return materialized_frame(spark, "lm_tri", sf_dir, build)
-
-
-def lm_quadgram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compute-once 4-gram count table (w1..w4, n1234) — the 5-gram
-    chain reads it twice (order-5 denominator, order-4 backoff
-    numerator). See `lm_unigram_frame` for the cache contract."""
-    from ..plans.materialize import materialized_frame
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        return (
-            _gram_stream(_doc_toks(docs), 4, ("w1", "w2", "w3", "w4"), with_doc=False)
-            .groupBy("w1", "w2", "w3", "w4")
-            .agg(F.count(F.lit(1)).alias("n1234"))
-        )
-
-    return materialized_frame(spark, "lm_quad", sf_dir, build)
-
-
-def bigram_logprob_scores_df(
-    docs: DataFrame, uni: DataFrame | None = None, big: DataFrame | None = None
-) -> DataFrame:
-    """`bigram_logprob_scores` core over any (doc_id, text) frame — the
-    seam synthetic-fixture and scale tests drive directly. `uni`/`big`
-    accept pre-built count tables (the shared LM seams) and must hold
-    exactly the counts the inline build would produce."""
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    w = docs.select("doc_id", toks_arr.alias("toks")).filter(F.size("toks") >= 1)
-    toks = w.select("doc_id", F.explode("toks").alias("token"))
-    pairs = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                BIGRAM_PAIRS_EXPR
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2")
-    if uni is None:
-        uni = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    total = uni.agg(F.sum("n").alias("total"))
-    if big is None:
-        big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-    # Score each DISTINCT pair once on the small LM table (three cheap
-    # joins on |bigram vocab| rows); the unigram table gets the same
-    # treatment for the first-token term.
-    lm_uni = (
-        uni.join(F.broadcast(total))
-        .select(
-            F.col("token").alias("w1"),
-            F.log10(F.col("n") / F.col("total")).alias("lp"),
-        )
-    )
-    u1 = uni.select(F.col("token").alias("w1"), F.col("n").alias("n1"))
-    u2 = uni.select(F.col("token").alias("w2"), F.col("n").alias("n2"))
-    lm_pair = (
-        big.join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .join(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            F.log10(
-                F.lit(LM_LAMBDA) * (F.col("n12") / F.col("n1"))
-                + F.lit(1 - LM_LAMBDA) * (F.col("n2") / F.col("total"))
-            ).alias("lp"),
-        )
-    )
-    # r13-opt (the trigram restructure one order down): the first-token
-    # branch and the pair stream used to re-scan and re-tokenize the
-    # documents once each; one unified (kind, w1, w2)-keyed lookup and
-    # one in-array contribution stream replace them — one scan + one
-    # broadcast join. Same per-position lp values, same row count.
-    lm_all = lm_uni.select(
-        F.lit(0).alias("kind"), "w1", F.lit("").alias("w2"), "lp"
-    ).unionByName(lm_pair.select(F.lit(1).alias("kind"), "w1", "w2", "lp"))
-    contribs = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "concat("
-                "array(named_struct('kind', 0, 'w1', toks[0], 'w2', '')), "
-                "transform(slice(toks, 2, size(toks) - 1), "
-                "(t, i) -> named_struct("
-                "'kind', 1, 'w1', toks[i], 'w2', t)))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.kind", "p.w1", "p.w2")
+def ngram_window_expr(
+    k: int, first_only: bool = False, kind: int | None = None, width: int = 0
+) -> str:
+    """SQL over a `toks` array: the array of its k-gram windows as
+    (w1..wk) structs, built in-array (one higher-order transform over the
+    split the scan already did — zero shuffles). `first_only` keeps only
+    the first window. `kind` prefixes each struct with a gram-order tag
+    and `width` pads w(k+1)..w(width) with '' — the scorer's contribution
+    shape ('' is a safe absent-context sentinel: tokens are non-empty).
+    ``greatest(…, 0)`` guards the ANSI-mode negative slice length on docs
+    shorter than k tokens."""
+    n = f"size(toks) - {k - 1}"
+    length = f"least({n}, 1)" if first_only else n
+    fields = ["toks[i] AS w1"] if k > 1 else []
+    fields += [f"toks[i + {j}] AS w{j + 1}" for j in range(1, k - 1)]
+    fields += [f"t AS w{k}"]
+    fields += [f"'' AS w{j}" for j in range(k + 1, width + 1)]
+    if kind is not None:
+        fields.insert(0, f"{kind} AS kind")
     return (
-        contribs.join(F.broadcast(lm_all), ["kind", "w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("lp"), 6).alias("mean_logp"),
-        )
+        f"transform(slice(toks, {k}, greatest({length}, 0)), "
+        f"(t, i) -> struct({', '.join(fields)}))"
     )
 
 
-LM_LAMBDA3 = 0.6  # trigram weight in the deleted-interpolation chain
+# The adjacent-pair construction shared by every bigram count build — the
+# LM seams, per-source collocation counts, and the streaming twin (which
+# must produce the IDENTICAL pair stream for its snapshot to equal the
+# batch tables). One definition so the contract cannot drift.
+BIGRAM_PAIRS_EXPR = ngram_window_expr(2)
 
 
-def trigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document mean log10 probability under an interpolated TRIGRAM
-    LM with bigram/unigram backoff — one interpolation order closer to
-    CCNet's KenLM 5-gram than `bigram_logprob_scores`:
+def _doc_toks(docs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, toks) — the shared split+filter every LM build starts from."""
+    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
+    return docs.select(*keep, toks_arr.alias("toks")).filter(F.size("toks") >= 1)
 
-        token 1            : n(w1)/N
-        token 2            : λ2·n(w1,w2)/n(w1) + (1−λ2)·n(w2)/N
-        token t ≥ 3        : λ3·n(w1,w2,w3)/n(w1,w2)
-                             + (1−λ3)·[λ2·n(w2,w3)/n(w2) + (1−λ2)·n(w3)/N]
 
-    (deleted interpolation, λ3 = 0.6, λ2 = 0.75 — every term is a count
-    ratio from the corpus itself, so the whole model is engine-agnostic
-    and DuckDB-oracle-checkable, unlike a smoothed KenLM binary.)
-
-    Plan (all JVM, the `bigram_logprob_scores` shape one order up):
-    pairs and triples are built IN-ARRAY from the same split the scan
-    already does, then exploded; count tables are one groupBy each;
-    each DISTINCT triple is scored once against the small LM tables
-    (broadcast here — at real vocab sizes these become shuffle joins
-    keyed on the n-gram, no driver state either way) and the big
-    exploded triple stream takes a single broadcast join. n_tokens =
-    1 + 1 + n_triples = the doc's token count.
-    """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return trigram_logprob_scores_df(
-        docs,
-        uni=lm_unigram_frame(spark, sf_dir),
-        big=lm_bigram_frame(spark, sf_dir),
-        tri=lm_trigram_frame(spark, sf_dir),
+def ngram_counts_df(docs: DataFrame, k: int) -> DataFrame:
+    """(w1..wk, n) k-gram counts over any frame with a `text` column —
+    the `lm_counts` build for k ≥ 2, and the inline build the scorer
+    falls back to for orders it is not handed."""
+    return (
+        _doc_toks(docs)
+        .select(F.explode(F.expr(ngram_window_expr(k))).alias("p"))
+        .select("p.*")
+        .groupBy(*_gram_cols(k))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
-def trigram_logprob_scores_df(
+def ngram_logprob_scores_df(
     docs: DataFrame,
-    uni: DataFrame | None = None,
-    big: DataFrame | None = None,
-    tri: DataFrame | None = None,
+    order: int,
+    counts: list[DataFrame] | None = None,
     broadcast_lm: bool = True,
 ) -> DataFrame:
-    """`trigram_logprob_scores` core over any (doc_id, text) frame.
-    `uni`/`big`/`tri` accept the shared LM count seams (the lower-order
-    tables are identical to the bigram build's; the trigram table is
-    shared with the 5-gram chain).
+    """Per-document mean log10 probability under an interpolated order-k
+    LM trained on any (doc_id, text) frame itself — the CCNet/KenLM
+    perplexity-filter shape (build LM → score every doc → threshold the
+    tail; low mean log-prob = rare/incoherent token sequences). The
+    model is deleted interpolation over the corpus's own counts:
+
+        P₁(w)      = n(w)/N
+        P_k(w1..wk) = λ_k·n(w1..wk)/n(w1..wk−1) + (1−λ_k)·P_(k−1)(w2..wk)
+
+    (λ₂=0.75 λ₃=0.6 λ₄=0.5 λ₅=0.4, `LM_LAMBDAS`). Token t of a doc scores
+    P_min(t, k) over the window ending at it, so a doc shorter than k
+    degrades to the lower orders and n_tokens = the doc's token count.
+    Every term is a count ratio, so the model is engine-agnostic and
+    DuckDB-oracle-checkable, unlike a smoothed KenLM binary.
+
+    `counts[j-1]` may carry the (w1..wj, n) table of order j (the shared
+    `lm_counts` seams); orders it does not cover are counted inline.
+
+    Plan (all JVM): each order's DISTINCT grams are scored once against
+    the count tables (vocabulary-bounded joins), the per-order tables
+    union into ONE (kind, w1..wk)-keyed lookup, and one in-array
+    expression over the single document scan emits every position's
+    contribution (kind j−1 = the doc's first j-gram for j < k, kind k−1 =
+    every k-gram window) — one explode, one join, one groupBy(doc_id).
 
     `broadcast_lm` is the scale switch (the BM25 df/idf convention): at
-    test/benchmark vocab the LM count tables are KB-scale, so every
-    scoring join is hinted broadcast — zero extra shuffles past the
-    count aggregates themselves. Above executor-memory vocab (a real
-    web-corpus trigram table is tens of GB) pass False and the same
-    joins run as keyed shuffle joins on the n-gram — no driver state,
-    no collect, the plan stays correct at any vocabulary (the 1-row
-    corpus-total frame stays broadcast in both modes; it never grows). Both modes
-    are plan-asserted and result-equality-pinned in
+    test/benchmark vocab the count tables are KB-scale, so every scoring
+    join is hinted broadcast. Above executor-memory vocab (a real
+    web-corpus 5-gram table is tens of GB) pass False and the same joins
+    run as keyed shuffle joins on the n-gram — no driver state, no
+    collect (the 1-row corpus total stays broadcast; it never grows).
+    Both modes are plan-asserted and result-equality-pinned in
     tests/test_plans.py."""
-    _hint = F.broadcast if broadcast_lm else (lambda f: f)
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    w = docs.select("doc_id", toks_arr.alias("toks")).filter(F.size("toks") >= 1)
-    toks = w.select("doc_id", F.explode("toks").alias("token"))
-    pairs = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                BIGRAM_PAIRS_EXPR
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2")
-    # greatest(…, 0): a 1-token doc would make the slice length -1, which
-    # THROWS under ANSI mode (the bigram slice bottoms out at 0 naturally)
-    triples = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(toks, 3, greatest(size(toks) - 2, 0)), "
-                "(t, i) -> struct(toks[i] AS w1, toks[i + 1] AS w2, t AS w3))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.w1", "p.w2", "p.w3")
+    if not 1 <= order <= LM_MAX_ORDER:
+        raise ValueError(f"LM order must be in 1..{LM_MAX_ORDER}, got {order}")
+    hint = F.broadcast if broadcast_lm else (lambda f: f)
+    counts = list(counts or [])
+    counts += [ngram_counts_df(docs, j) for j in range(len(counts) + 1, order + 1)]
+    total = counts[0].agg(F.sum("n").alias("total"))
 
-    if uni is None:
-        uni = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    total = uni.agg(F.sum("n").alias("total"))
-    if big is None:
-        big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-    if tri is None:
-        tri = triples.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("n123"))
+    def n_col(s: int, e: int) -> str:  # count column of the gram ws..we
+        return f"n{s}_{e}"
 
-    # token 1: unigram scores as a (w1 → lp) table
-    lm_uni = (
-        uni.join(F.broadcast(total))
-        .select(
-            F.col("token").alias("w1"),
-            F.log10(F.col("n") / F.col("total")).alias("lp"),
+    # Every read of a count table renames ALL its columns (keys to c1..ck),
+    # so the two reads of one table differ only in alias names, which
+    # exchange reuse ignores: each table is broadcast (or shuffled) once.
+    def gram(m: int, s: int) -> DataFrame:  # order-m table keyed cs..c(s+m-1)
+        return counts[m - 1].select(
+            *[F.col(f"w{j}").alias(f"c{s + j - 1}") for j in range(1, m + 1)],
+            F.col("n").alias(n_col(s, s + m - 1)),
         )
-    )
-    # token 2: the bigram interpolation, on the doc's first pair only
-    u1 = uni.select(F.col("token").alias("w1"), F.col("n").alias("n1"))
-    u2 = uni.select(F.col("token").alias("w2"), F.col("n").alias("n2"))
-    lm_pair = (
-        big.join(_hint(u1), "w1")
-        .join(_hint(u2), "w2")
-        .join(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            F.log10(
-                F.lit(LM_LAMBDA) * (F.col("n12") / F.col("n1"))
-                + F.lit(1 - LM_LAMBDA) * (F.col("n2") / F.col("total"))
-            ).alias("lp"),
-        )
-    )
-    # tokens ≥ 3: trigram with the bigram/unigram backoff chain — score
-    # each distinct triple once, then one broadcast join onto the stream
-    big12 = big.select("w1", "w2", "n12")
-    big23 = big.select(
-        F.col("w1").alias("w2"), F.col("w2").alias("w3"), F.col("n12").alias("n23")
-    )
-    u2c = uni.select(F.col("token").alias("w2"), F.col("n").alias("n2"))
-    u3 = uni.select(F.col("token").alias("w3"), F.col("n").alias("n3"))
-    lm_tri = (
-        tri.join(_hint(big12), ["w1", "w2"])
-        .join(_hint(big23), ["w2", "w3"])
-        .join(_hint(u2c), "w2")
-        .join(_hint(u3), "w3")
-        .join(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            F.log10(
-                F.lit(LM_LAMBDA3) * (F.col("n123") / F.col("n12"))
-                + F.lit(1 - LM_LAMBDA3)
-                * (
-                    F.lit(LM_LAMBDA) * (F.col("n23") / F.col("n2"))
-                    + F.lit(1 - LM_LAMBDA) * (F.col("n3") / F.col("total"))
+
+    lookups = []
+    for j in range(1, order + 1):
+        # the chain for P_j(w1..wj) reads, for each lower order m, the
+        # context m-gram ending at w(j-1) and the backoff m-gram ending at wj
+        scored = gram(j, 1)
+        for m in range(j - 1, 0, -1):
+            for s in (j - m, j - m + 1):
+                scored = scored.join(
+                    hint(gram(m, s)), [f"c{i}" for i in range(s, s + m)]
                 )
-            ).alias("lp"),
-        )
-    )
-    # r13-opt (guide §2.3/§2.4): the former three position branches
-    # (first token ⋈ uni, first pair ⋈ lm_pair, triple stream ⋈ lm_tri)
-    # re-scanned and re-tokenized the document stream once EACH. The
-    # three scoring tables instead union into ONE lookup keyed
-    # (kind, w1, w2, w3) — still vocabulary-bounded — and one in-array
-    # expression emits every position's contribution from the single
-    # scan: kind 0 = first token, kind 1 = the first pair (empty when
-    # the doc has one token), kind 2 = each triple. Same per-position
-    # lp values (the per-distinct-gram scoring expressions are
-    # untouched), same row count per doc, one scan + one join instead
-    # of three + three. '' is a safe absent-context sentinel (tokens
-    # are non-empty by construction) and `kind` disambiguates anyway.
-    lm_all = (
-        lm_uni.select(
-            F.lit(0).alias("kind"),
-            "w1",
-            F.lit("").alias("w2"),
-            F.lit("").alias("w3"),
-            "lp",
-        )
-        .unionByName(
-            lm_pair.select(
-                F.lit(1).alias("kind"), "w1", "w2", F.lit("").alias("w3"), "lp"
+        p = F.col(n_col(j, j)) / F.col("total")
+        for m in range(2, j + 1):
+            s = j - m + 1
+            lam = LM_LAMBDAS[m]
+            p = F.lit(lam) * (F.col(n_col(s, j)) / F.col(n_col(s, j - 1))) + F.lit(
+                1 - lam
+            ) * p
+        lookups.append(
+            scored.join(F.broadcast(total)).select(
+                F.lit(j - 1).alias("kind"),
+                *[F.col(f"c{i}").alias(f"w{i}") for i in range(1, j + 1)],
+                *[F.lit("").alias(f"w{i}") for i in range(j + 1, order + 1)],
+                F.log10(p).alias("lp"),
             )
         )
-        .unionByName(
-            lm_tri.select(F.lit(2).alias("kind"), "w1", "w2", "w3", "lp")
-        )
+    lm_all = reduce(DataFrame.unionByName, lookups)
+    windows = [
+        ngram_window_expr(j, first_only=j < order, kind=j - 1, width=order)
+        for j in range(1, order + 1)
+    ]
+    contribs = (
+        _doc_toks(docs, "doc_id")
+        .select("doc_id", F.explode(F.expr(f"concat({', '.join(windows)})")).alias("p"))
+        .select("doc_id", "p.*")
     )
-    contribs = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "concat("
-                "array(named_struct("
-                "'kind', 0, 'w1', toks[0], 'w2', '', 'w3', '')), "
-                "transform(slice(toks, 2, least(size(toks) - 1, 1)), "
-                "x -> named_struct("
-                "'kind', 1, 'w1', toks[0], 'w2', x, 'w3', '')), "
-                "transform(slice(toks, 3, greatest(size(toks) - 2, 0)), "
-                "(t, i) -> named_struct("
-                "'kind', 2, 'w1', toks[i], 'w2', toks[i + 1], 'w3', t)))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.kind", "p.w1", "p.w2", "p.w3")
     return (
-        contribs.join(_hint(lm_all), ["kind", "w1", "w2", "w3"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("lp"), 6).alias("mean_logp"),
-        )
-    )
-
-
-LM_LAMBDA4 = 0.5  # 4-gram weight in the deleted-interpolation chain
-LM_LAMBDA5 = 0.4  # 5-gram weight in the deleted-interpolation chain
-
-
-def ngram5_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document mean log10 probability under an interpolated 5-GRAM
-    LM with full 4/3/2/1-gram backoff — the KenLM-realism order CCNet's
-    perplexity filter actually runs (its KenLM models are 5-gram):
-
-        token 1 : P₁(w) = n(w)/N
-        token 2 : P₂ = λ₂·n₁₂/n₁ + (1−λ₂)·P₁
-        token 3 : P₃ = λ₃·n₁₂₃/n₁₂ + (1−λ₃)·P₂(w₃|w₂)
-        token 4 : P₄ = λ₄·n₁₂₃₄/n₁₂₃ + (1−λ₄)·P₃(w₄|w₂w₃)
-        token t≥5: P₅ = λ₅·n₁₂₃₄₅/n₁₂₃₄ + (1−λ₅)·P₄(wₜ|wₜ₋₃..wₜ₋₁)
-
-    (deleted interpolation, λ₅=0.4 λ₄=0.5 λ₃=0.6 λ₂=0.75 — every term is
-    a count ratio from the corpus itself, so the model is engine-agnostic
-    and DuckDB-oracle-checkable, unlike a smoothed KenLM binary.)
-
-    Plan (all JVM, the trigram shape two orders up): every n-gram stream
-    is built IN-ARRAY from the one split the scan already does
-    (`_gram_stream`); the uni/bi/tri/quad count tables are the shared
-    compute-once seams (`lm_*_frame` — the trigram scorer reads the same
-    tri table); the 5-gram count table is one groupBy (this entry is its
-    only consumer). Each DISTINCT 5-gram is scored once against the
-    count tables, then the exploded quint stream takes a single join.
-    n_tokens = 4 + n_quints = the doc's token count.
-
-    The result rides the shared `ngram5_scored_frame` seam — the 5-gram
-    perplexity buckets consume the same scores, one build pays for both."""
-    return ngram5_scored_frame(spark, sf_dir)
-
-
-def ngram5_logprob_scores_df(
-    docs: DataFrame,
-    uni: DataFrame | None = None,
-    big: DataFrame | None = None,
-    tri: DataFrame | None = None,
-    quad: DataFrame | None = None,
-    broadcast_lm: bool = True,
-) -> DataFrame:
-    """`ngram5_logprob_scores` core over any (doc_id, text) frame.
-    `uni`/`big`/`tri`/`quad` accept the shared LM count seams.
-    `broadcast_lm` is the same scale switch as the trigram scorer's: at
-    real web-corpus vocabulary the 4/5-gram tables are the largest
-    objects in the job — pass False and every scoring join runs keyed
-    on the n-gram as a shuffle join (the 1-row corpus total stays
-    broadcast; it never grows)."""
-    _hint = F.broadcast if broadcast_lm else (lambda f: f)
-    w = _doc_toks(docs)
-    toks = w.select("doc_id", F.explode("toks").alias("token"))
-    pairs = _gram_stream(w, 2, ("w1", "w2"))
-    triples = _gram_stream(w, 3, ("w1", "w2", "w3"))
-    quads = _gram_stream(w, 4, ("w1", "w2", "w3", "w4"))
-    quints = _gram_stream(w, 5, ("w1", "w2", "w3", "w4", "w5"))
-
-    if uni is None:
-        uni = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    total = uni.agg(F.sum("n").alias("total"))
-    if big is None:
-        big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-    if tri is None:
-        tri = triples.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("n123"))
-    if quad is None:
-        quad = quads.groupBy("w1", "w2", "w3", "w4").agg(
-            F.count(F.lit(1)).alias("n1234")
-        )
-    quint = quints.groupBy("w1", "w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).alias("n12345")
-    )
-
-    def uni_as(col, n_name):
-        return uni.select(F.col("token").alias(col), F.col("n").alias(n_name))
-
-    def big_as(c1, c2, n_name):
-        return big.select(
-            F.col("w1").alias(c1), F.col("w2").alias(c2), F.col("n12").alias(n_name)
-        )
-
-    def tri_as(c1, c2, c3, n_name):
-        return tri.select(
-            F.col("w1").alias(c1),
-            F.col("w2").alias(c2),
-            F.col("w3").alias(c3),
-            F.col("n123").alias(n_name),
-        )
-
-    def quad_as(c1, c2, c3, c4, n_name):
-        return quad.select(
-            F.col("w1").alias(c1),
-            F.col("w2").alias(c2),
-            F.col("w3").alias(c3),
-            F.col("w4").alias(c4),
-            F.col("n1234").alias(n_name),
-        )
-
-    # interpolation chains as column expressions over the joined counts
-    def p2(n12, n1, n2):
-        return F.lit(LM_LAMBDA) * (F.col(n12) / F.col(n1)) + F.lit(
-            1 - LM_LAMBDA
-        ) * (F.col(n2) / F.col("total"))
-
-    def p3(n123, n12, n23, n2, n3):
-        return F.lit(LM_LAMBDA3) * (F.col(n123) / F.col(n12)) + F.lit(
-            1 - LM_LAMBDA3
-        ) * p2(n23, n2, n3)
-
-    def p4(n1234, n123, n234, n23, n34, n3, n4):
-        return F.lit(LM_LAMBDA4) * (F.col(n1234) / F.col(n123)) + F.lit(
-            1 - LM_LAMBDA4
-        ) * p3(n234, n23, n34, n3, n4)
-
-    # r13-opt (the trigram restructure two orders up): the five position
-    # branches each re-scanned and re-tokenized the documents. Instead,
-    # score each ORDER's distinct grams once into small lookup tables
-    # (the lm_quint pattern applied to the lower orders), union them
-    # into ONE (kind, w1..w5)-keyed table, and emit every position's
-    # contribution from a single in-array expression over one scan.
-    # Same interpolation chains over the same counts; one scan + one
-    # stream join instead of five of each.
-    lm_uni = (
-        uni.join(F.broadcast(total))
-        .select(
-            F.col("token").alias("w1"),
-            F.log10(F.col("n") / F.col("total")).alias("lp"),
-        )
-    )
-    lm_pair = (
-        big.join(_hint(uni_as("w1", "n1")), "w1")
-        .join(_hint(uni_as("w2", "n2")), "w2")
-        .join(F.broadcast(total))
-        .select("w1", "w2", F.log10(p2("n12", "n1", "n2")).alias("lp"))
-    )
-    lm_tri = (
-        tri.join(_hint(big_as("w1", "w2", "n12")), ["w1", "w2"])
-        .join(_hint(big_as("w2", "w3", "n23")), ["w2", "w3"])
-        .join(_hint(uni_as("w2", "n2")), "w2")
-        .join(_hint(uni_as("w3", "n3")), "w3")
-        .join(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            F.log10(p3("n123", "n12", "n23", "n2", "n3")).alias("lp"),
-        )
-    )
-    lm_quad = (
-        quad.join(_hint(tri_as("w1", "w2", "w3", "n123")), ["w1", "w2", "w3"])
-        .join(_hint(tri_as("w2", "w3", "w4", "n234")), ["w2", "w3", "w4"])
-        .join(_hint(big_as("w2", "w3", "n23")), ["w2", "w3"])
-        .join(_hint(big_as("w3", "w4", "n34")), ["w3", "w4"])
-        .join(_hint(uni_as("w3", "n3")), "w3")
-        .join(_hint(uni_as("w4", "n4")), "w4")
-        .join(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            "w4",
-            F.log10(
-                p4("n1234", "n123", "n234", "n23", "n34", "n3", "n4")
-            ).alias("lp"),
-        )
-    )
-    # tokens ≥ 5: score each DISTINCT 5-gram once, one join onto the stream
-    lm_quint = (
-        quint.join(_hint(quad_as("w1", "w2", "w3", "w4", "n1234")), ["w1", "w2", "w3", "w4"])
-        .join(_hint(quad_as("w2", "w3", "w4", "w5", "n2345")), ["w2", "w3", "w4", "w5"])
-        .join(_hint(tri_as("w2", "w3", "w4", "n234")), ["w2", "w3", "w4"])
-        .join(_hint(tri_as("w3", "w4", "w5", "n345")), ["w3", "w4", "w5"])
-        .join(_hint(big_as("w3", "w4", "n34")), ["w3", "w4"])
-        .join(_hint(big_as("w4", "w5", "n45")), ["w4", "w5"])
-        .join(_hint(uni_as("w4", "n4")), "w4")
-        .join(_hint(uni_as("w5", "n5")), "w5")
-        .join(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            "w4",
-            "w5",
-            F.log10(
-                F.lit(LM_LAMBDA5) * (F.col("n12345") / F.col("n1234"))
-                + F.lit(1 - LM_LAMBDA5)
-                * p4("n2345", "n234", "n345", "n34", "n45", "n4", "n5")
-            ).alias("lp"),
-        )
-    )
-    def _pad(df, kind, *keys):
-        cols = [F.lit(kind).alias("kind")]
-        for i, name in enumerate(("w1", "w2", "w3", "w4", "w5")):
-            cols.append(
-                F.col(name) if i < len(keys) else F.lit("").alias(name)
-            )
-        return df.select(*cols, "lp")
-
-    lm_all = (
-        _pad(lm_uni, 0, "w1")
-        .unionByName(_pad(lm_pair, 1, "w1", "w2"))
-        .unionByName(_pad(lm_tri, 2, "w1", "w2", "w3"))
-        .unionByName(_pad(lm_quad, 3, "w1", "w2", "w3", "w4"))
-        .unionByName(_pad(lm_quint, 4, "w1", "w2", "w3", "w4", "w5"))
-    )
-    contribs = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "concat("
-                "array(named_struct('kind', 0, 'w1', toks[0], "
-                "'w2', '', 'w3', '', 'w4', '', 'w5', '')), "
-                "transform(slice(toks, 2, least(size(toks) - 1, 1)), "
-                "x -> named_struct('kind', 1, 'w1', toks[0], 'w2', x, "
-                "'w3', '', 'w4', '', 'w5', '')), "
-                "transform(slice(toks, 3, least(size(toks) - 2, 1)), "
-                "x -> named_struct('kind', 2, 'w1', toks[0], 'w2', toks[1], "
-                "'w3', x, 'w4', '', 'w5', '')), "
-                "transform(slice(toks, 4, least(size(toks) - 3, 1)), "
-                "x -> named_struct('kind', 3, 'w1', toks[0], 'w2', toks[1], "
-                "'w3', toks[2], 'w4', x, 'w5', '')), "
-                "transform(slice(toks, 5, greatest(size(toks) - 4, 0)), "
-                "(t, i) -> named_struct('kind', 4, 'w1', toks[i], "
-                "'w2', toks[i + 1], 'w3', toks[i + 2], 'w4', toks[i + 3], "
-                "'w5', t)))"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.kind", "p.w1", "p.w2", "p.w3", "p.w4", "p.w5")
-    return (
-        contribs.join(_hint(lm_all), ["kind", "w1", "w2", "w3", "w4", "w5"])
+        contribs.join(hint(lm_all), ["kind", *_gram_cols(order)])
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -1621,47 +1155,24 @@ def perplexity_buckets(
     construction, engine-stable per the float-discipline rule for
     RANKED values (DECISIONS #12).
     """
-    scored = bigram_logprob_scores(spark, sf_dir)
-    w = Window.orderBy(_logp_lattice().desc(), F.col("doc_id").asc())
-    return scored.select(
-        "doc_id", "mean_logp", F.ntile(k).over(w).alias("bucket")
-    )
-
-
-def ngram5_scored_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compute-once seam for the 5-gram scored corpus — the bucket entry
-    and the scores entry share one build (cache contract:
-    plans/materialize.py; eager for the same repartitionByRange-sampling
-    reason as `lm_scored_frame`)."""
-    from ..plans.materialize import materialized_frame
-
-    return materialized_frame(
-        spark,
-        "ngram5_scored",
-        sf_dir,
-        lambda: ngram5_logprob_scores_df(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            uni=lm_unigram_frame(spark, sf_dir),
-            big=lm_bigram_frame(spark, sf_dir),
-            tri=lm_trigram_frame(spark, sf_dir),
-            quad=lm_quadgram_frame(spark, sf_dir),
-        ),
-        (LM_LAMBDA, LM_LAMBDA3, LM_LAMBDA4, LM_LAMBDA5),
-    )
+    return _ntile_buckets(lm_scored_frame(spark, sf_dir, 2), k)
 
 
 def perplexity_buckets_ngram5(
     spark: SparkSession, sf_dir: str, k: int = PERPLEXITY_K
 ) -> DataFrame:
     """`perplexity_buckets` under the 5-GRAM LM — the order CCNet's
-    KenLM models actually run. Same NTILE(k) head/middle/tail split,
-    scored frame served by the `ngram5_scored_frame` seam (shared with
-    `ngram5_logprob_scores`; the uni/bi/tri/quad count tables are the
-    same seams the trigram chain reads). The 100 TB form swaps the
-    window for the `perplexity_buckets_distributed` two-pass rank —
-    the assignment arithmetic is order-based and identical. Rank key
-    on the ×1e6 bigint lattice (DIVERGENCES #8 closure, r11)."""
-    scored = ngram5_scored_frame(spark, sf_dir)
+    KenLM models actually run. Same NTILE(k) head/middle/tail split over
+    the order-5 scored-frame seam (shared with `ngram5_logprob_scores`;
+    its order-1..4 count seams are the ones the lower orders read). The
+    100 TB form swaps the window for the `perplexity_buckets_distributed`
+    two-pass rank — the assignment arithmetic is order-based and
+    identical. Rank key on the ×1e6 bigint lattice (DIVERGENCES #8
+    closure, r11)."""
+    return _ntile_buckets(lm_scored_frame(spark, sf_dir, 5), k)
+
+
+def _ntile_buckets(scored: DataFrame, k: int) -> DataFrame:
     w = Window.orderBy(_logp_lattice().desc(), F.col("doc_id").asc())
     return scored.select(
         "doc_id", "mean_logp", F.ntile(k).over(w).alias("bucket")
@@ -1692,7 +1203,7 @@ def perplexity_buckets_distributed(
     # seam (`lm_scored_frame`), so the range partitioner's bound sampling
     # reads cached partitions instead of executing the bigram-LM plan a
     # second time (the job the per-call localCheckpoint did before r6).
-    scored = bigram_logprob_scores(spark, sf_dir).withColumn(
+    scored = lm_scored_frame(spark, sf_dir, 2).withColumn(
         "logp_q", _logp_lattice()  # lattice rank key (DIVERGENCES #8)
     )
     ranged = (
@@ -1835,7 +1346,7 @@ def curated_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
       → CDC-chunk dedup      (first-occurrence-wins over content-defined
                               boundaries, on the boilerplate-scrubbed text)
       → 5-gram perplexity    (keep CCNet head+middle buckets; scores come
-        gate                  from the shared `ngram5_scored_frame` seam —
+        gate                  from the shared order-5 `lm_scored_frame` seam —
                               the LM is trained on and scores the ORIGINAL
                               crawl text, CCNet's reference-model pattern,
                               so the gate is a doc_id-keyed filter)

@@ -543,15 +543,10 @@ def dedup_clusters(
     corpus: pairs only say "a~b"; keeping one doc per transitive group
     needs components (a~b, b~c → {a,b,c} even though a≁c directly).
 
-    Algorithm: min-label propagation — labels start as doc_id; each
-    round every node takes the min label among itself and its neighbors;
-    converged when no label changes. Rounds = graph diameter, and dup
-    components are small and dense (diameter 2-3), so the loop is short.
-    Each round is one join + one groupBy — all keyed shuffles. The
-    driver-side loop only reads a per-round changed-count (an aggregate,
-    not data). At 100 TB scale with adversarial long-chain graphs, swap
-    the body for the large-star/small-star variant (alternating rounds
-    halve long paths); the loop harness stays the same.
+    Algorithm: `connected_components` — alternating large-star /
+    small-star rounds converging on the min doc_id per component, every
+    round keyed shuffles of the edge set; the driver-side loop only
+    reads a per-round changed-count (an aggregate, not data).
 
     Oracle: DuckDB recursive CTE computing the same transitive min-label.
 
@@ -581,10 +576,9 @@ def _cluster_labels_build(
     return connected_components(docs, pairs, max_iters=max_iters)
 
 
-# round counters for the r14 star-rounds evidence (read by tests /
-# OPTIMIZATION notes; diagnostics only, never control flow)
+# round counter for the star-rounds evidence (read by tests; diagnostics
+# only, never control flow)
 _LAST_CC_ROUNDS = 0
-_LAST_LP_ITERS = 0
 
 
 def connected_components(
@@ -614,8 +608,8 @@ def connected_components(
     fixed point is the star forest rooted at each component's MINIMUM
     node id — exactly the labels min-label propagation converged to,
     so cluster sets are bit-identical (pinned by the union-find
-    property tests and the real-corpus equality pin vs the retained
-    `_connected_components_label_prop` reference).
+    property tests and the real-corpus equality pin vs the
+    min-label-propagation reference in tests/test_properties.py).
 
     `max_iters` stays a pure safety cap on ROUNDS: if the edge set is
     still moving at the cap we RAISE rather than silently return split
@@ -721,59 +715,6 @@ def connected_components(
         .distinct()
     )
     # fill isolated nodes (label = own id) back in with one keyed join
-    cluster = F.coalesce("label", F.col("doc_id"))
-    return docs.join(labels, "doc_id", "left").select(
-        "doc_id",
-        cluster.alias("cluster_id"),
-        (cluster == F.col("doc_id")).alias("is_canonical"),
-    )
-
-
-def _connected_components_label_prop(
-    docs: DataFrame, pairs: DataFrame, max_iters: int | None = None
-) -> DataFrame:
-    """The pre-r14 min-label-propagation form, retained as the REFERENCE
-    implementation for the star-rounds equality pin (test_properties /
-    test_recall): one hop per iteration, diameter-bounded, provably
-    converging to min-id-per-component labels."""
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    nodes = edges.select("doc_a").distinct().select(
-        F.col("doc_a").alias("doc_id")
-    ).localCheckpoint()
-
-    if max_iters is None:
-        max_iters = max(int(nodes.count()), 1)
-
-    global _LAST_LP_ITERS
-    labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
-    changed = 0
-    iters = 0
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(labels.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        updated = (
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least("label", F.coalesce("nbr_label", "label")).alias("new_label"),
-                "label",
-            )
-        ).localCheckpoint()
-        changed = updated.filter(F.col("new_label") != F.col("label")).count()
-        iters += 1
-        labels = updated.select("doc_id", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    _LAST_LP_ITERS = iters
-    if changed != 0:
-        raise RuntimeError(
-            f"label propagation did not converge within max_iters={max_iters}"
-        )
     cluster = F.coalesce("label", F.col("doc_id"))
     return docs.join(labels, "doc_id", "left").select(
         "doc_id",

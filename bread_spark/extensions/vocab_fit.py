@@ -9,7 +9,7 @@ counts) and `corpus_stats_by_source` (per-source totals/means):
 OUTSIDE the top-`VOCAB_SIZE` corpus vocabulary? A source whose OOV
 rate is an outlier either needs vocab budget or is noise. The
 vocabulary is the top-1024 tokens by (count, token) DESC — count from
-the SHARED LM unigram seam (`lm_unigram_frame`, no recount), the
+the SHARED LM order-1 count seam (`lm_counts`, no recount), the
 lexicographic tie-break making the cut deterministic in both engines.
 The rate is the exact integer micro-ratio (n_oov · 1e6) div n_tokens
 — no float anywhere. Scale shape: the vocab is ≤1024 rows BY
@@ -77,10 +77,11 @@ def oov_rate_df(
 def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OOV report (module docstring): (source, n_tokens, n_oov,
     oov_micro)."""
-    from .curation import lm_unigram_frame
+    from .curation import lm_counts
 
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    return oov_rate_df(docs, lm_unigram_frame(spark, sf_dir))
+    uni = lm_counts(spark, sf_dir, 1).withColumnRenamed("w1", "token")
+    return oov_rate_df(docs, uni)
 
 
 def doc_length_histogram_df(docs: DataFrame) -> DataFrame:

@@ -83,10 +83,11 @@ def ngram5_score_stream_against_base(
     (CCNet's online shape — the perplexity gate a crawl passes through
     as it lands, not after a nightly rebuild).
 
-    The count tables are the batch build's seams (`lm_*_frame` plus the
-    5-gram groupBy) — stage them once (localCheckpoint, or bucketed
-    tables keyed on the n-gram at 100 TB) and pass them in; Spark
-    re-resolves the static side of a stream-static join per micro-batch.
+    The count tables are the batch build's (w1..wk, n) tables
+    (`lm_counts` for orders 1-4, `ngram_counts_df` for order 5) — stage
+    them once (localCheckpoint, or bucketed tables keyed on the n-gram
+    at 100 TB) and pass them in; Spark re-resolves the static side of a
+    stream-static join per micro-batch.
 
     Two deliberate divergences from the batch scorer, both forced by
     scoring NEW text against a FIXED model (the batch entry scores the
@@ -130,11 +131,11 @@ def ngram5_score_stream_against_base(
     total = uni.agg(F.sum("n").alias("total"))
 
     def uni_as(col, n_name):
-        return uni.select(F.col("token").alias(col), F.col("n").alias(n_name))
+        return uni.select(F.col("w1").alias(col), F.col("n").alias(n_name))
 
     def big_as(c1, c2, n_name):
         return big.select(
-            F.col("w1").alias(c1), F.col("w2").alias(c2), F.col("n12").alias(n_name)
+            F.col("w1").alias(c1), F.col("w2").alias(c2), F.col("n").alias(n_name)
         )
 
     def tri_as(c1, c2, c3, n_name):
@@ -142,7 +143,7 @@ def ngram5_score_stream_against_base(
             F.col("w1").alias(c1),
             F.col("w2").alias(c2),
             F.col("w3").alias(c3),
-            F.col("n123").alias(n_name),
+            F.col("n").alias(n_name),
         )
 
     def quad_as(c1, c2, c3, c4, n_name):
@@ -151,7 +152,7 @@ def ngram5_score_stream_against_base(
             F.col("w2").alias(c2),
             F.col("w3").alias(c3),
             F.col("w4").alias(c4),
-            F.col("n1234").alias(n_name),
+            F.col("n").alias(n_name),
         )
 
     def p1(n1):
@@ -175,8 +176,8 @@ def ngram5_score_stream_against_base(
 
     # token 1: unigram
     first_lp = (
-        w.select(id_col, ts_col, F.col("toks")[0].alias("token"))
-        .join(uni, "token", "left")
+        w.select(id_col, ts_col, F.col("toks")[0].alias("w1"))
+        .join(uni, "w1", "left")
         .join(F.broadcast(total))
         .select(id_col, ts_col, lp(p1("n")).alias("lp"))
     )
@@ -186,7 +187,7 @@ def ngram5_score_stream_against_base(
         .select(
             id_col, ts_col, F.col("toks")[0].alias("w1"), F.col("toks")[1].alias("w2")
         )
-        .join(big, ["w1", "w2"], "left")
+        .join(big_as("w1", "w2", "n12"), ["w1", "w2"], "left")
         .join(uni_as("w1", "n1"), "w1", "left")
         .join(uni_as("w2", "n2"), "w2", "left")
         .join(F.broadcast(total))
@@ -202,7 +203,7 @@ def ngram5_score_stream_against_base(
             F.col("toks")[1].alias("w2"),
             F.col("toks")[2].alias("w3"),
         )
-        .join(tri, ["w1", "w2", "w3"], "left")
+        .join(tri_as("w1", "w2", "w3", "n123"), ["w1", "w2", "w3"], "left")
         .join(big_as("w1", "w2", "n12"), ["w1", "w2"], "left")
         .join(big_as("w2", "w3", "n23"), ["w2", "w3"], "left")
         .join(uni_as("w2", "n2"), "w2", "left")
@@ -221,7 +222,7 @@ def ngram5_score_stream_against_base(
             F.col("toks")[2].alias("w3"),
             F.col("toks")[3].alias("w4"),
         )
-        .join(quad, ["w1", "w2", "w3", "w4"], "left")
+        .join(quad_as("w1", "w2", "w3", "w4", "n1234"), ["w1", "w2", "w3", "w4"], "left")
         .join(tri_as("w1", "w2", "w3", "n123"), ["w1", "w2", "w3"], "left")
         .join(tri_as("w2", "w3", "w4", "n234"), ["w2", "w3", "w4"], "left")
         .join(big_as("w2", "w3", "n23"), ["w2", "w3"], "left")
@@ -236,7 +237,7 @@ def ngram5_score_stream_against_base(
         )
     )
     # tokens ≥ 5: the full 5-gram chain per sliding window of the stream
-    # doc (built in-array map-side, like the batch `_gram_stream`)
+    # doc (built in-array map-side, like the batch `ngram_window_expr`)
     quints = (
         w.filter(F.size("toks") >= 5)
         .select(
@@ -253,7 +254,9 @@ def ngram5_score_stream_against_base(
         .select(id_col, ts_col, "p.w1", "p.w2", "p.w3", "p.w4", "p.w5")
     )
     quint_lp = (
-        quints.join(quint, ["w1", "w2", "w3", "w4", "w5"], "left")
+        quints.join(
+            quint.withColumnRenamed("n", "n12345"), ["w1", "w2", "w3", "w4", "w5"], "left"
+        )
         .join(quad_as("w1", "w2", "w3", "w4", "n1234"), ["w1", "w2", "w3", "w4"], "left")
         .join(quad_as("w2", "w3", "w4", "w5", "n2345"), ["w2", "w3", "w4", "w5"], "left")
         .join(tri_as("w2", "w3", "w4", "n234"), ["w2", "w3", "w4"], "left")

@@ -39,21 +39,27 @@ SENTINEL_MAX = float(os.environ.get("CW_SENTINEL_MAX", "35"))
 
 
 def _sentinel_wall() -> float:
+    """Sentinel suite wall time; inf when it fails or hangs past
+    4 × SENTINEL_MAX (a hung sentinel is a failed bracket)."""
     t0 = time.time()
-    rc = subprocess.call(
-        [
-            sys.executable,
-            "-m",
-            "pytest",
-            os.path.join(ROOT, "tests", "test_models_stats.py"),
-            "-x",
-            "-q",
-            "--no-header",
-        ],
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
-        cwd=ROOT,
-    )
+    try:
+        rc = subprocess.call(
+            [
+                sys.executable,
+                "-m",
+                "pytest",
+                os.path.join(ROOT, "tests", "test_models_stats.py"),
+                "-x",
+                "-q",
+                "--no-header",
+            ],
+            stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL,
+            cwd=ROOT,
+            timeout=4 * SENTINEL_MAX,
+        )
+    except subprocess.TimeoutExpired:
+        return float("inf")
     wall = time.time() - t0
     return wall if rc == 0 else float("inf")
 

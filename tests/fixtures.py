@@ -12,9 +12,12 @@ import base64
 import json
 import os
 import random
+from datetime import datetime, timedelta
 
 CHAIN_ID = "testnet-1"
 START_HEIGHT = 10_000_001
+FIRST_BLOCK_TIME = datetime(2023, 7, 1, 0, 34, 56)
+BLOCK_INTERVAL = timedelta(hours=3)
 
 
 def _b64(s: str) -> str:
@@ -26,9 +29,8 @@ def make_blocks(n_blocks: int = 20, seed: int = 42) -> list[dict]:
     blocks = []
     for i in range(n_blocks):
         height = START_HEIGHT + i
-        # ns-precision RFC3339 timestamps spanning multiple days
-        day = 1 + i // 8
-        hour = (i * 3) % 24
+        # ns-precision RFC3339 timestamps, monotone across month ends
+        t = FIRST_BLOCK_TIME + BLOCK_INTERVAL * i
         ns = rng.randrange(10**9)
         blocks.append(
             {
@@ -37,7 +39,7 @@ def make_blocks(n_blocks: int = 20, seed: int = 42) -> list[dict]:
                     "header": {
                         "height": str(height),
                         "chain_id": CHAIN_ID,
-                        "time": f"2023-07-{day:02d}T{hour:02d}:34:56.{ns:09d}Z",
+                        "time": f"{t:%Y-%m-%dT%H:%M:%S}.{ns:09d}Z",
                         "proposer_address": f"PROPOSER{i % 4}",
                     },
                     "data": {"txs": [_b64(f"tx{height}_{j}") for j in range(i % 3)]},

@@ -294,11 +294,11 @@ def test_bigram_repeated_phrase_beats_shuffled_tokens(spark):
     # drive the operator core over the probe frame directly (the catalog
     # entry rides the shared scored-frame cache keyed on sf_dir, so a
     # load_table monkeypatch would be shadowed by a prior test's build)
-    from bread_spark.extensions.curation import bigram_logprob_scores_df
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
 
     scored = {
         r["doc_id"]: r["mean_logp"]
-        for r in bigram_logprob_scores_df(frame).collect()
+        for r in ngram_logprob_scores_df(frame, 2).collect()
     }
     assert scored[0] > scored[1]
 

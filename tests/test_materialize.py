@@ -75,14 +75,14 @@ def test_shingle_seam_equals_builder(spark, sf_dir):
 
 def test_lm_seam_equals_builder(spark, sf_dir):
     from bread_spark.extensions.curation import (
-        bigram_logprob_scores_df,
         lm_scored_frame,
+        ngram_logprob_scores_df,
     )
     from bread_spark.io import load_table
 
-    served = lm_scored_frame(spark, sf_dir)
-    direct = bigram_logprob_scores_df(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    served = lm_scored_frame(spark, sf_dir, 2)
+    direct = ngram_logprob_scores_df(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), 2
     )
     cols = ["doc_id", "n_tokens", "mean_logp"]
     assert _rows(served, cols) == _rows(direct, cols)
@@ -111,15 +111,15 @@ def test_ngram5_seams_equal_inline_build(spark, sf_dir):
     """The catalog entry serves the uni/bi/tri/quad count-table seams;
     an inline build that re-counts everything from the raw documents
     must produce identical scores — the seam-equality contract for the
-    5-gram chain (and, since the trigram entry now shares lm_tri, for
-    the tri seam's second consumer)."""
-    from bread_spark.extensions.curation import ngram5_logprob_scores_df
+    5-gram chain (and, since the trigram entry shares the order-3 seam,
+    for that seam's second consumer)."""
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
     from bread_spark.io import load_table
     from bread_spark.queries import QUERIES
 
     served = QUERIES["ngram5_logprob_scores"](spark, sf_dir)
-    direct = ngram5_logprob_scores_df(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    direct = ngram_logprob_scores_df(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), 5
     )
     cols = ["doc_id", "n_tokens", "mean_logp"]
     assert _rows(served, cols) == _rows(direct, cols)

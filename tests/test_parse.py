@@ -233,3 +233,28 @@ def test_events_attrs_is_shuffle_free(fixture_env):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
+
+
+def test_fixture_block_times_parse_and_increase():
+    """`make_blocks` emits valid, strictly increasing block times past the
+    end of a month (the bench builds 30,000 blocks), and the first 248
+    blocks — the ones that fit in July — keep their exact earlier
+    strings."""
+    import random
+
+    from tests.fixtures import make_blocks
+
+    times = [b["block"]["header"]["time"] for b in make_blocks(300)]
+    parsed = [
+        (datetime.datetime.strptime(t[:19], "%Y-%m-%dT%H:%M:%S"), int(t[20:29]))
+        for t in times
+    ]
+    assert all(t[19] == "." and t[29:] == "Z" for t in times)
+    assert all(a < b for a, b in zip(parsed, parsed[1:]))
+    rng = random.Random(42)
+    july = [
+        f"2023-07-{1 + i // 8:02d}T{(i * 3) % 24:02d}:34:56."
+        f"{rng.randrange(10**9):09d}Z"
+        for i in range(248)
+    ]
+    assert times[:248] == july

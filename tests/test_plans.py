@@ -167,14 +167,16 @@ def test_token_count_consumers_ride_seams(plans):
     text scan (the bigram pair stream — pairs cannot fold from unigram
     counts; its uni/u1/u2/totals previously re-evaluated the unigram
     subtree 3x); the unigram LM scorer keeps one (the per-doc
-    join-back stream — its LM aggregate rides lm_unigram_frame); the
-    MG calibration's true side folds the seam (only the shard-keyed
-    summary scans remain)."""
+    join-back stream — its LM aggregate rides the order-1 lm_counts
+    seam); the MG calibration's true side folds the seam (only the
+    shard-keyed summary scans remain — 2 in this AQE-off suite, where the
+    repeated summary subtrees plan as ReusedExchange; 6 with AQE on)."""
     p = plans("vocab_topk")
     assert p.count("Scan parquet") == 0
     assert "Scan ExistingRDD" in p
     assert plans("top_collocations_by_source").count("Scan parquet") == 1
     assert plans("unigram_logprob_scores").count("Scan parquet") == 1
+    assert plans("mg_heavy_hitters").count("Scan parquet") == 2
 
 
 def test_shuffle_order_distributed_has_no_window(plans):
@@ -304,14 +306,15 @@ def test_bigram_lm_joins_broadcast_and_pairs_join_once(spark, sf_dir):
     aggregate side. No sort-merge join anywhere at LM-broadcastable
     sizes.
 
-    Audited on the `bigram_logprob_scores_df` builder — the catalog entry
-    serves the compute-once seam frame (lineage cut by localCheckpoint)."""
-    from bread_spark.extensions.curation import bigram_logprob_scores_df
+    Audited on the order-2 `ngram_logprob_scores_df` builder — the
+    catalog entry serves the compute-once seam frame (lineage cut by
+    localCheckpoint)."""
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
     from bread_spark.io import load_table
 
     p = physical_plan(
-        bigram_logprob_scores_df(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        ngram_logprob_scores_df(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"), 2
         )
     )
     assert "BroadcastHashJoin" in p
@@ -447,24 +450,26 @@ def test_ohlc_single_exchange_with_partials(plans):
     assert "Window" not in p
 
 
-def test_trigram_lm_broadcast_at_test_scale_and_keyed_degrade(spark, sf_dir):
+@pytest.mark.parametrize("order", [3, 5])
+def test_ngram_lm_broadcast_at_test_scale_and_keyed_degrade(spark, sf_dir, order):
     """VERDICT r6 #4a. Default mode: every LM scoring join is broadcast
     (the count tables are KB-scale at test vocab) — no sort-merge join,
     no cartesian. Degrade mode (`broadcast_lm=False`, the real-web-corpus
-    vocabulary path where the trigram table is tens of GB): the SAME
-    joins run keyed on the n-gram — shuffle joins are allowed, a
-    cartesian/broadcast-nested-loop never is, and no driver collect
-    exists in either plan. Both modes must return identical rows.
+    vocabulary path where the 3/4/5-gram tables are tens of GB — the
+    largest objects in a real-corpus run): the SAME joins run keyed on
+    the n-gram — shuffle joins are allowed, a cartesian/broadcast-
+    nested-loop never is, and no driver collect exists in either plan.
+    Both modes must return identical rows.
 
-    Audited on the `trigram_logprob_scores_df` builder — the catalog
-    entry serves the compute-once seam frame (lineage cut by
+    Audited on the `ngram_logprob_scores_df` builder — the catalog
+    entries serve compute-once seam frames (lineage cut by
     localCheckpoint)."""
-    from bread_spark.extensions.curation import trigram_logprob_scores_df
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
     from bread_spark.io import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    bcast = trigram_logprob_scores_df(docs)
+    bcast = ngram_logprob_scores_df(docs, order)
     p = physical_plan(bcast)
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
@@ -481,42 +486,7 @@ def test_trigram_lm_broadcast_at_test_scale_and_keyed_degrade(spark, sf_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        keyed = trigram_logprob_scores_df(docs, broadcast_lm=False)
-        pk = physical_plan(keyed)
-        assert "CartesianProduct" not in pk
-        assert "SortMergeJoin" in pk or "ShuffledHashJoin" in pk
-        assert pk.count("BroadcastNestedLoopJoin") == p.count(
-            "BroadcastNestedLoopJoin"
-        )
-        got_k = {
-            r["doc_id"]: (r["n_tokens"], r["mean_logp"]) for r in keyed.collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    got_b = {r["doc_id"]: (r["n_tokens"], r["mean_logp"]) for r in bcast.collect()}
-    assert got_b == got_k
-
-
-def test_ngram5_lm_broadcast_and_keyed_degrade(spark, sf_dir):
-    """Same contract as the trigram test one order up: at test vocab all
-    4/5-gram scoring joins broadcast; with auto-broadcast disabled (the
-    over-threshold simulation) the SAME joins run keyed on the n-gram,
-    results identical. The 4/5-gram count tables are the largest objects
-    in a real-corpus run — this degrade path is the one that matters."""
-    from bread_spark.extensions.curation import ngram5_logprob_scores_df
-    from bread_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bcast = ngram5_logprob_scores_df(docs)
-    p = physical_plan(bcast)
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-    assert "CartesianProduct" not in p
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        keyed = ngram5_logprob_scores_df(docs, broadcast_lm=False)
+        keyed = ngram_logprob_scores_df(docs, order, broadcast_lm=False)
         pk = physical_plan(keyed)
         assert "CartesianProduct" not in pk
         assert "SortMergeJoin" in pk or "ShuffledHashJoin" in pk
@@ -534,7 +504,7 @@ def test_ngram5_lm_broadcast_and_keyed_degrade(spark, sf_dir):
 
 def test_ngram5_buckets_ride_the_scored_seam(plans):
     """`perplexity_buckets_ngram5` must consume the materialized
-    `ngram5_scored_frame` — its final plan is the NTILE window over the
+    order-5 `lm_scored_frame` — its final plan is the NTILE window over the
     checkpointed scores, with ZERO parquet scans (the one text pass is
     paid at seam materialization, shared with `ngram5_logprob_scores`)."""
     p = plans("perplexity_buckets_ngram5")

@@ -136,10 +136,10 @@ def test_paragraph_dedup_scales(spark):
 def test_bigram_lm_scales(spark):
     """Disjoint token spaces per replica → exactly linear scored-doc
     count; catches the LM join degenerating into anything super-linear."""
-    from bread_spark.extensions.curation import bigram_logprob_scores_df
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    small = bigram_logprob_scores_df(docs).count()
+    small = ngram_logprob_scores_df(docs, 2).count()
     reps = spark.range(REPS).select(F.col("id").alias("rep"))
     big = docs.crossJoin(reps).select(
         (F.col("doc_id") + F.col("rep") * 10_000_000).alias("doc_id"),
@@ -148,7 +148,7 @@ def test_bigram_lm_scales(spark):
             "t -> concat(t, '_', cast(rep AS string))), ' ')"
         ).alias("text"),
     )
-    assert bigram_logprob_scores_df(big).count() == small * REPS
+    assert ngram_logprob_scores_df(big, 2).count() == small * REPS
 
 
 def test_bm25_scales(spark, big_docs_r6):
@@ -342,18 +342,18 @@ def test_ngram5_invariant_under_replication(spark, big_docs_r6):
     interpolated probability and per-doc mean — is IDENTICAL to the
     base corpus. Also the quadratic-blowup canary for the two new
     count-table joins (quad/quint)."""
-    from bread_spark.extensions.curation import ngram5_logprob_scores_df
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
     from bread_spark.io import load_table as lt
 
     base = {
         r["doc_id"]: (r["n_tokens"], r["mean_logp"])
-        for r in ngram5_logprob_scores_df(
-            lt(spark, SF_DIR, "documents").select("doc_id", "text")
+        for r in ngram_logprob_scores_df(
+            lt(spark, SF_DIR, "documents").select("doc_id", "text"), 5
         ).collect()
     }
     rep0 = {
         r["doc_id"] : (r["n_tokens"], r["mean_logp"])
-        for r in ngram5_logprob_scores_df(big_docs_r6.select("doc_id", "text"))
+        for r in ngram_logprob_scores_df(big_docs_r6.select("doc_id", "text"), 5)
         .filter(F.col("doc_id") < 10_000_000)
         .collect()
     }

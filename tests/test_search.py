@@ -75,32 +75,32 @@ def test_trigram_repeated_text_scores_higher(spark):
     """A document whose trigrams dominate the corpus must out-score a
     document of corpus-rare sequences, and n_tokens must equal the true
     token count."""
-    from bread_spark.extensions.curation import trigram_logprob_scores_df
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
 
     rows = [(i, "a b c a b c a b c") for i in range(5)]
     rows += [(100, "x y z q w e r t u")]
     out = {
         r["doc_id"]: r
-        for r in trigram_logprob_scores_df(
-            _mkdocs(spark, rows)
-        ).collect()
+        for r in ngram_logprob_scores_df(_mkdocs(spark, rows), 3).collect()
     }
     assert out[1]["n_tokens"] == 9
     assert out[100]["n_tokens"] == 9
     assert out[1]["mean_logp"] > out[100]["mean_logp"]
 
 
-def test_trigram_short_docs_degrade_to_lower_orders(spark):
-    """1- and 2-token docs must still score (unigram / bigram backoff) —
-    the n-token accounting holds at the boundary."""
-    from bread_spark.extensions.curation import trigram_logprob_scores_df
+@pytest.mark.parametrize("order", [1, 2, 3, 5])
+def test_ngram_short_docs_degrade_to_lower_orders(spark, order):
+    """Docs shorter than the LM order must still score (lower-order
+    backoff) — the n-token accounting holds at every order's boundary,
+    up to the 4- and 5-token docs at order 5."""
+    from bread_spark.extensions.curation import ngram_logprob_scores_df
 
-    rows = [(1, "a"), (2, "a b"), (3, "a b a")]
+    rows = [(1, "a"), (2, "a b"), (3, "a b a"), (4, "a b a c"), (5, "a b a c b")]
     out = {
         r["doc_id"]: r["n_tokens"]
-        for r in trigram_logprob_scores_df(_mkdocs(spark, rows)).collect()
+        for r in ngram_logprob_scores_df(_mkdocs(spark, rows), order).collect()
     }
-    assert out == {1: 1, 2: 2, 3: 3}
+    assert out == {1: 1, 2: 2, 3: 3, 4: 4, 5: 5}
 
 
 def test_tfidf_ubiquitous_terms_score_zero(spark, sf_dir):

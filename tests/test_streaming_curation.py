@@ -122,13 +122,9 @@ def test_ngram5_stream_agrees_with_batch_and_floors_oov(spark, tmp_path):
     import datetime
 
     from bread_spark.extensions.curation import (
-        lm_bigram_frame,
-        lm_quadgram_frame,
-        lm_trigram_frame,
-        lm_unigram_frame,
-        ngram5_logprob_scores_df,
-        _doc_toks,
-        _gram_stream,
+        lm_counts,
+        ngram_counts_df,
+        ngram_logprob_scores_df,
     )
     from bread_spark.io import load_table
     from bread_spark.streaming.curation import (
@@ -139,16 +135,8 @@ def test_ngram5_stream_agrees_with_batch_and_floors_oov(spark, tmp_path):
     import math
 
     base = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    uni = lm_unigram_frame(spark, SF_DIR)
-    big = lm_bigram_frame(spark, SF_DIR)
-    tri = lm_trigram_frame(spark, SF_DIR)
-    quad = lm_quadgram_frame(spark, SF_DIR)
-    quint = (
-        _gram_stream(_doc_toks(base), 5, ("w1", "w2", "w3", "w4", "w5"), with_doc=False)
-        .groupBy("w1", "w2", "w3", "w4", "w5")
-        .agg(F.count(F.lit(1)).alias("n12345"))
-        .localCheckpoint()
-    )
+    uni, big, tri, quad = (lm_counts(spark, SF_DIR, k) for k in range(1, 5))
+    quint = ngram_counts_df(base, 5).localCheckpoint()
 
     sample = {r["doc_id"]: r["text"] for r in base.limit(8).collect()}
     ts = datetime.datetime(2024, 8, 1, 12, 0).isoformat()
@@ -202,7 +190,7 @@ def test_ngram5_stream_agrees_with_batch_and_floors_oov(spark, tmp_path):
     }
     want = {
         r["doc_id"]: (r["n_tokens"], r["mean_logp"])
-        for r in ngram5_logprob_scores_df(base, uni=uni, big=big, tri=tri, quad=quad)
+        for r in ngram_logprob_scores_df(base, 5, [uni, big, tri, quad])
         .filter(F.col("doc_id").isin(list(sample)))
         .collect()
     }
@@ -338,12 +326,7 @@ def test_v2_member_gate_chain_composes(spark, tmp_path):
     from bread_spark.extensions.curation import (
         CHUNK_TOKENS as W,
         _chunk_expr,
-        _doc_toks,
-        _gram_stream,
-        lm_bigram_frame,
-        lm_quadgram_frame,
-        lm_trigram_frame,
-        lm_unigram_frame,
+        ngram_counts_df,
     )
     from bread_spark.extensions.dedup import (
         SPAN_W,
@@ -377,35 +360,8 @@ def test_v2_member_gate_chain_composes(spark, tmp_path):
     # staged base tables — one freeze shared by stream AND batch sides
     boiler = base_boilerplate_table(base).localCheckpoint()
     spans = base_span_table(base).localCheckpoint()
-    uni_f = (
-        _doc_toks(base)
-        .select(F.explode("toks").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    big_f = (
-        _gram_stream(_doc_toks(base), 2, ("w1", "w2"), with_doc=False)
-        .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-        .localCheckpoint()
-    )
-    tri_f = (
-        _gram_stream(_doc_toks(base), 3, ("w1", "w2", "w3"), with_doc=False)
-        .groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("n123"))
-        .localCheckpoint()
-    )
-    quad_f = (
-        _gram_stream(_doc_toks(base), 4, ("w1", "w2", "w3", "w4"), with_doc=False)
-        .groupBy("w1", "w2", "w3", "w4").agg(F.count(F.lit(1)).alias("n1234"))
-        .localCheckpoint()
-    )
-    quint_f = (
-        _gram_stream(
-            _doc_toks(base), 5, ("w1", "w2", "w3", "w4", "w5"), with_doc=False
-        )
-        .groupBy("w1", "w2", "w3", "w4", "w5")
-        .agg(F.count(F.lit(1)).alias("n12345"))
-        .localCheckpoint()
+    uni_f, big_f, tri_f, quad_f, quint_f = (
+        ngram_counts_df(base, k).localCheckpoint() for k in range(1, 6)
     )
 
     deltas = [
