@@ -346,19 +346,27 @@ def merge_upsert(
     markers = os.path.join(path, "_batch_markers")
     if os.path.isdir(markers):
         shutil.copytree(markers, os.path.join(staging, "_batch_markers"))
-    # row count from the staged parquet footers (driver-side metadata
-    # read) — not a second full Spark job over the rewritten table
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    n = sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in _glob.glob(os.path.join(staging, "*.parquet"))
-    )
+    # row count from the staged parquet footers — not a second full Spark
+    # job over the rewritten table
+    n = parquet_row_count(staging)
     os.rename(path, backup)
     os.rename(staging, path)
     shutil.rmtree(backup)
+    return n
+
+
+def parquet_row_count(path: str) -> int:
+    """Rows of a parquet table directory, summed from the file footers — a
+    driver-side metadata read, no Spark job. Walks Hive partition
+    directories and skips `_`/`.` names, as Spark's file listing does."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return n
 
 

@@ -193,40 +193,52 @@ def hourly_cum_ibc_transfers(logs: DataFrame, txs: DataFrame) -> DataFrame:
     return _cum(hourly_ibc_transfers(logs, txs), "hour")
 
 
-def gas_used_per_day(txs: DataFrame) -> DataFrame:
-    """A3 (reference gas/gas_used_per_day.sql:1-5)."""
+def txs_per_day(txs: DataFrame) -> DataFrame:
+    """(day, total_gas_used, tx_count): the one day-grain aggregate the
+    three tx models below project from."""
     return (
         txs.select(F.date_trunc("day", "timestamp").alias("day"), "gas_used")
         .groupBy("day")
-        .agg(F.sum("gas_used").alias("total_gas_used"))
+        .agg(
+            F.sum("gas_used").alias("total_gas_used"),
+            F.count(F.lit(1)).alias("tx_count"),
+        )
     )
+
+
+def gas_used_per_day(txs: DataFrame) -> DataFrame:
+    """A3 (reference gas/gas_used_per_day.sql:1-5)."""
+    return txs_per_day(txs).select("day", "total_gas_used")
 
 
 def num_txs_per_day(txs: DataFrame) -> DataFrame:
     """A4 (reference txs/num_txs_per_day.sql:1-11)."""
-    return (
-        txs.select(F.date_trunc("day", "timestamp").alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("tx_count"))
-    )
+    return txs_per_day(txs).select("day", "tx_count")
 
 
-def cum_txs_per_day(txs: DataFrame) -> DataFrame:
-    """W1 (reference txs/cum_txs_per_day.sql:4-8) — global window over the
-    tiny day-grain aggregate."""
-    daily = num_txs_per_day(txs)
+def running_tx_count(daily: DataFrame) -> DataFrame:
+    """The running sum of a (day, tx_count) aggregate — a global window
+    over the tiny day-grain frame."""
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return daily.select("day", "tx_count", F.sum("tx_count").over(w).alias("cum_tx_count"))
 
 
+def cum_txs_per_day(txs: DataFrame) -> DataFrame:
+    """W1 (reference txs/cum_txs_per_day.sql:4-8)."""
+    return running_tx_count(num_txs_per_day(txs))
+
+
 # ---------------------------------------------------------------------------
-# dbt data-test analogs (SURVEY §2.12): assertion helpers
+# dbt data-test analogs (SURVEY §2.12): assertion helpers. They raise
+# ValueError explicitly; `python -O` strips a bare `assert`.
 # ---------------------------------------------------------------------------
 
+
 def assert_unique(df: DataFrame, col: str) -> None:
-    dupes = df.groupBy(col).count().filter("count > 1")
-    assert dupes.isEmpty(), f"column {col} not unique"
+    if not df.groupBy(col).count().filter("count > 1").isEmpty():
+        raise ValueError(f"column {col} not unique")
 
 
 def assert_not_null(df: DataFrame, col: str) -> None:
-    assert df.filter(F.col(col).isNull()).isEmpty(), f"column {col} has nulls"
+    if not df.filter(F.col(col).isNull()).isEmpty():
+        raise ValueError(f"column {col} has nulls")

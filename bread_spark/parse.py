@@ -24,6 +24,9 @@ shuffle; the blocks-time join broadcasts the (small per-batch) blocks side.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +46,7 @@ __all__ = [
     "parse_log_attributes",
     "parse_events_wide",
     "attach_block_time",
+    "parse_tables",
     "run",
 ]
 
@@ -289,17 +293,12 @@ def attach_block_time(df: DataFrame, blocks: DataFrame) -> DataFrame:
     return df.join(F.broadcast(time_cols), "height", "inner")
 
 
-def run(
-    spark: SparkSession,
-    blocks_path: str,
-    txs_path: str,
-    out_dir: str | None = None,
-) -> dict[str, DataFrame]:
-    """Full bronze→silver hop (reference DataParser.run, parse.py:202-226):
-    parse all four tables, attach block time columns, optionally write
-    each partitioned by year/month/day (SRC12)."""
-    from .io import write_partitioned
+SILVER_TABLES = ("blocks", "tx_result", "log_attributes", "events")
 
+
+def parse_tables(spark: SparkSession, blocks_path, txs_path) -> dict[str, DataFrame]:
+    """The four silver tables over the given bronze (a path or a list of
+    files each): parse, then attach the block time columns."""
     raw_blocks = read_raw_blocks(spark, blocks_path)
     raw_txs = read_raw_txs(spark, txs_path)
 
@@ -309,14 +308,116 @@ def run(
         *LOG_ATTRIBUTES_COLUMNS
     )
     events = attach_block_time(parse_events_wide(raw_txs), blocks)
-
-    tables = {
+    return {
         "blocks": blocks,
         "tx_result": tx_result,
         "log_attributes": log_attributes,
         "events": events,
     }
-    if out_dir:
-        for name, df in tables.items():
-            write_partitioned(df, f"{out_dir}/{name}")
+
+
+# The parsed-file ledger (reference parse.py:97-111): bronze file path →
+# [size, mtime_ns] of every file the silver tables hold. It lives at the
+# silver root, so it travels with the tables it describes: restoring an
+# older silver restores its ledger, and `io.compact_partitioned`, which
+# rewrites one table directory at a time, leaves it alone.
+LEDGER = "_parsed_files.json"
+
+
+def _list_bronze(landing_dir: str) -> dict[str, list[int]]:
+    """path → [size, mtime_ns] of the files Spark's reader would load from
+    a landing directory (hidden `_`/`.` names skipped); none when the
+    directory does not exist yet."""
+    try:
+        names = sorted(os.listdir(landing_dir))
+    except FileNotFoundError:
+        return {}
+    out = {}
+    for n in names:
+        f = os.path.abspath(os.path.join(landing_dir, n))
+        if not n.startswith(("_", ".")) and os.path.isfile(f):
+            st = os.stat(f)
+            out[f] = [st.st_size, st.st_mtime_ns]
+    return out
+
+
+def _read_ledger(out_dir: str) -> dict | None:
+    try:
+        with open(os.path.join(out_dir, LEDGER)) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
+def _write_ledger(out_dir: str, files: dict, pending: bool) -> None:
+    """Atomic replace: a reader sees the old ledger or the new one."""
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = os.path.join(out_dir, f".{LEDGER}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"pending": pending, "files": files}, f)
+    os.replace(tmp, os.path.join(out_dir, LEDGER))
+
+
+def _new_files(ledger: dict | None, blocks: dict, txs: dict) -> tuple[list, list] | None:
+    """The (blocks, txs) files to append, or None when only a full rebuild
+    is safe: no ledger, a commit still pending (appends may have landed
+    without it), a ledgered file changed or gone, or new blocks and txs
+    files that do not pair up by batch name — a txs batch joins block
+    times from the blocks batch of the same range, so one whose blocks
+    were parsed earlier would lose its rows."""
+    if ledger is None or ledger.get("pending", True):
+        return None
+    listed = {**blocks, **txs}
+    done = ledger.get("files", {})
+    if any(listed.get(p) != stat for p, stat in done.items()):
+        return None
+    new_b = [p for p in blocks if p not in done]
+    new_t = [p for p in txs if p not in done]
+    if sorted(map(os.path.basename, new_b)) != sorted(map(os.path.basename, new_t)):
+        return None
+    return new_b, new_t
+
+
+def run(
+    spark: SparkSession,
+    blocks_path: str,
+    txs_path: str,
+    out_dir: str | None = None,
+) -> dict[str, DataFrame]:
+    """Bronze→silver hop (reference DataParser.run, parse.py:202-226).
+
+    Without `out_dir`, returns the four silver tables over the whole
+    landing zone. With it, brings `out_dir` up to date with the landing
+    zone, each table partitioned by year/month/day (SRC12), and returns
+    the frames this call wrote:
+
+    - files already in the parsed-file ledger are not read again; new ones
+      are parsed and appended to the four tables (no new files: no Spark
+      job at all, and an empty dict back);
+    - without a usable ledger (see `_new_files`) every table is rebuilt
+      from the whole landing zone, as a full overwrite.
+
+    The ledger is marked pending before the first write and committed
+    after the last, so a crash between them makes the next run rebuild
+    rather than append the same files twice. Appends leave small files
+    per partition; `io.compact_partitioned` merges them.
+    """
+    from .io import write_partitioned
+
+    if not out_dir:
+        return parse_tables(spark, blocks_path, txs_path)
+    blocks, txs = _list_bronze(blocks_path), _list_bronze(txs_path)
+    ledger = _read_ledger(out_dir)
+    new = _new_files(ledger, blocks, txs)
+    if new is None:
+        mode, done, new = "overwrite", {}, (list(blocks), list(txs))
+    elif not new[0]:
+        return {}
+    else:
+        mode, done = "append", ledger["files"]
+    tables = parse_tables(spark, *new)
+    _write_ledger(out_dir, done, pending=True)
+    for name, df in tables.items():
+        write_partitioned(df, f"{out_dir}/{name}", mode=mode)
+    _write_ledger(out_dir, {**blocks, **txs}, pending=False)
     return tables

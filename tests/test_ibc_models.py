@@ -256,3 +256,16 @@ def test_dbt_style_assertions(legacy):
     daily_tx = M.num_txs_per_day(legacy["txs"])
     M.assert_unique(daily_tx, "day")
     M.assert_not_null(daily_tx, "day")
+
+
+def test_dbt_style_assertions_raise_on_bad_day_grain(spark):
+    """A duplicate day and a null day each fail their data test with an
+    explicit exception — a bare `assert` would vanish under `python -O`."""
+    dup = spark.createDataFrame([("2023-07-01",), ("2023-07-01",)], "day string")
+    with pytest.raises(ValueError, match="not unique"):
+        M.assert_unique(dup, "day")
+    M.assert_not_null(dup, "day")
+    null = spark.createDataFrame([("2023-07-01",), (None,)], "day string")
+    with pytest.raises(ValueError, match="has nulls"):
+        M.assert_not_null(null, "day")
+    M.assert_unique(null, "day")

@@ -3,10 +3,22 @@ models (SURVEY.md §3 entry point A, §2.9 S7)."""
 
 from __future__ import annotations
 
+import json
+import os
+from collections import Counter
+
 import pytest
 
+from bread_spark import io
+from bread_spark import parse as P
 from bread_spark.pipeline import build_gold, data_pipeline
-from tests.fixtures import START_HEIGHT, make_blocks, make_mock_rpc, make_txs
+from tests.fixtures import (
+    START_HEIGHT,
+    make_blocks,
+    make_mock_rpc,
+    make_txs,
+    write_fixture_files,
+)
 
 N_BLOCKS = 30
 
@@ -61,9 +73,19 @@ def test_pipeline_rerun_is_incremental(spark, tmp_path, chain):
     r1 = data_pipeline(spark, "http://node", landing, silver, num_blocks=100, fetch=fetch)
     assert r1.silver_counts["blocks"] == N_BLOCKS
     r2 = data_pipeline(spark, "http://node", landing, silver, num_blocks=100, fetch=fetch)
-    # watermark at head → nothing (or only the head block) re-fetched;
-    # parse is a full overwrite of the same landing zone → same counts
+    # watermark at head → nothing re-fetched; every landed file is in the
+    # parsed-file ledger, so parse appends nothing → same counts
     assert r2.silver_counts == r1.silver_counts
+
+    # with no new bronze, parse runs no Spark job at all
+    sc = spark.sparkContext
+    sc.setJobGroup("parse-noop", "parse with nothing new")
+    try:
+        parsed = P.run(spark, *_bronze(landing), out_dir=silver)
+        jobs = sc.statusTracker().getJobIdsForGroup("parse-noop")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert parsed == {} and list(jobs) == []
 
 
 def test_build_gold_views_without_dir(spark, tmp_path, chain):
@@ -76,3 +98,146 @@ def test_build_gold_views_without_dir(spark, tmp_path, chain):
     models = build_gold(spark, silver, gold_dir=None)  # SRC14: view path
     assert spark.sql("SELECT SUM(tx_count) AS n FROM num_txs_per_day").first()["n"] == len(txs)
     assert set(models) == {"gas_used_per_day", "num_txs_per_day", "cum_txs_per_day"}
+
+
+# ---------------------------------------------------------------------------
+# incremental parse: the parsed-file ledger in silver
+# ---------------------------------------------------------------------------
+
+
+def _bronze(landing: str) -> tuple[str, str]:
+    return f"{landing}/testnet/blocks", f"{landing}/testnet/txs"
+
+
+def _flow(spark, landing, silver, chain, n, num_blocks, backfill_batches=1):
+    """One flow run against a node whose head is the chain's n-th block."""
+    blocks, txs = chain
+    return data_pipeline(
+        spark,
+        "http://node",
+        landing,
+        silver,
+        num_blocks=num_blocks,
+        backfill_batches=backfill_batches,
+        fetch=make_mock_rpc(blocks[:n], txs),
+    )
+
+
+def _rows(spark, path) -> tuple[list[str], Counter]:
+    """A silver table as (sorted columns, row multiset); mergeSchema
+    unifies the wide `events` columns of batches appended apart."""
+    df = spark.read.option("mergeSchema", "true").parquet(path)
+    cols = sorted(df.columns)
+    return cols, Counter(tuple(r) for r in df.select(cols).collect())
+
+
+@pytest.fixture
+def parse_calls(monkeypatch):
+    """The bronze file lists each `parse.run` call parsed."""
+    calls = []
+    real = P.parse_tables
+
+    def spy(spark, blocks_path, txs_path):
+        calls.append((list(blocks_path), list(txs_path)))
+        return real(spark, blocks_path, txs_path)
+
+    monkeypatch.setattr(P, "parse_tables", spy)
+    return calls
+
+
+def _ledger(silver: str) -> dict:
+    with open(os.path.join(silver, P.LEDGER)) as f:
+        return json.load(f)
+
+
+def test_incremental_silver_equals_full_rebuild(spark, tmp_path, chain, parse_calls):
+    """A from-empty run with backfill, then two forward syncs, each parsing
+    only the files it landed: silver equals a full rebuild of the same
+    landing zone, row for row, in all four tables."""
+    blocks, txs = chain
+    landing, silver = str(tmp_path / "landing"), str(tmp_path / "silver")
+
+    # 12 blocks: a 6-block forward window (2 files) + 2 backfill batches
+    r = _flow(spark, landing, silver, chain, 12, num_blocks=5, backfill_batches=2)
+    assert r.backfill_ranges and r.silver_counts["blocks"] == 12
+    assert len(parse_calls[-1][0]) == 4  # from empty: every file
+    for n in (20, 30):
+        r = _flow(spark, landing, silver, chain, n, num_blocks=10)
+        assert len(parse_calls[-1][0]) == 1  # only the batch just landed
+        assert r.silver_counts["blocks"] == n
+    assert not _ledger(silver)["pending"]
+    assert r.silver_counts["tx_result"] == len(txs)
+
+    full = str(tmp_path / "full")
+    P.run(spark, *_bronze(landing), out_dir=full)
+    assert len(parse_calls[-1][0]) == 6
+    for name in P.SILVER_TABLES:
+        assert _rows(spark, f"{silver}/{name}") == _rows(spark, f"{full}/{name}"), name
+        assert r.silver_counts[name] == io.parquet_row_count(f"{full}/{name}"), name
+
+
+def _landing_in_two_batches(tmp_path) -> tuple[str, str, list[str], int]:
+    """Fixture bronze (20 blocks in two {start}_{end}.json batches):
+    (blocks dir, txs dir, batch file names, tx count)."""
+    bdir, tdir, _, txs = write_fixture_files(str(tmp_path / "landing"))
+    return bdir, tdir, sorted(os.listdir(bdir)), len(txs)
+
+
+def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatch):
+    """A write that fails after some tables were appended leaves the ledger
+    pending; the rerun rebuilds silver instead of appending twice."""
+    bdir, tdir, names, n_txs = _landing_in_two_batches(tmp_path)
+    held = tmp_path / "held"
+    held.mkdir()
+    for d in (bdir, tdir):  # land the second batch later
+        os.rename(os.path.join(d, names[1]), held / f"{os.path.basename(d)}_{names[1]}")
+    silver = str(tmp_path / "silver")
+    P.run(spark, bdir, tdir, out_dir=silver)
+    for d in (bdir, tdir):
+        os.rename(held / f"{os.path.basename(d)}_{names[1]}", os.path.join(d, names[1]))
+
+    real = io.write_partitioned
+
+    def fail_third(df, path, *a, **kw):
+        if path.endswith("/log_attributes"):
+            raise OSError("disk full")
+        real(df, path, *a, **kw)
+
+    monkeypatch.setattr(io, "write_partitioned", fail_third)
+    with pytest.raises(OSError, match="disk full"):
+        P.run(spark, bdir, tdir, out_dir=silver)
+    assert _ledger(silver)["pending"]
+    assert io.parquet_row_count(f"{silver}/blocks") == 20  # appended, uncommitted
+    monkeypatch.setattr(io, "write_partitioned", real)
+
+    P.run(spark, bdir, tdir, out_dir=silver)
+    assert not _ledger(silver)["pending"]
+    assert io.parquet_row_count(f"{silver}/blocks") == 20
+    assert io.parquet_row_count(f"{silver}/tx_result") == n_txs
+    heights = spark.read.parquet(f"{silver}/blocks").select("height")
+    assert heights.distinct().count() == heights.count() == 20
+
+
+@pytest.mark.parametrize("change", ["rewrite", "delete"])
+def test_changed_bronze_forces_full_rebuild(spark, tmp_path, parse_calls, change):
+    """A ledgered bronze file rewritten or deleted makes the next parse a
+    full rebuild of what the landing zone now holds."""
+    bdir, tdir, names, _ = _landing_in_two_batches(tmp_path)
+    silver = str(tmp_path / "silver")
+    P.run(spark, bdir, tdir, out_dir=silver)
+    with open(os.path.join(bdir, names[0])) as f:
+        lines = f.readlines()
+    if change == "rewrite":  # drop the batch's last block
+        with open(os.path.join(bdir, names[0]), "w") as f:
+            f.writelines(lines[:-1])
+        want = 20 - 1
+    else:  # drop the whole batch
+        os.remove(os.path.join(bdir, names[0]))
+        os.remove(os.path.join(tdir, names[0]))
+        want = 20 - len(lines)
+
+    P.run(spark, bdir, tdir, out_dir=silver)
+    assert len(parse_calls) == 2
+    assert len(parse_calls[-1][0]) == len(os.listdir(bdir))
+    assert io.parquet_row_count(f"{silver}/blocks") == want
+    assert spark.read.parquet(f"{silver}/blocks").count() == want
