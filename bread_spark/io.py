@@ -234,7 +234,9 @@ def compact_partitioned(
             "compacting it would break the sink log. Use a table format "
             "or a foreachBatch sink for compactable streaming output."
         )
-    df = spark.read.parquet(path)
+    # mergeSchema: appended batches may carry different columns (the wide
+    # silver `events`), and a plain read keeps only one file's
+    df = spark.read.option("mergeSchema", "true").parquet(path)
     if files_per_partition == 1:
         out = df.repartition(*[F.col(c) for c in partition_cols])
     else:
@@ -271,9 +273,70 @@ def compact_partitioned(
     os.rename(path, backup)
     os.rename(staging, path)
     shutil.rmtree(backup)
-    return sum(
-        1 for _, _, files in os.walk(path) for f in files if f.endswith(".parquet")
+    return sum(partition_files(path).values())
+
+
+def partition_files(path: str) -> dict[str, int]:
+    """Parquet data files per partition directory of a Hive-partitioned
+    table, keyed by the directory relative to `path`; `_`/`.` names are
+    skipped, as Spark's file listing does."""
+    out: dict[str, int] = {}
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        n = sum(f.endswith(".parquet") and not f.startswith(("_", ".")) for f in files)
+        if n:
+            out[os.path.relpath(root, path)] = n
+    return out
+
+
+def compact_partitions(
+    spark: SparkSession,
+    path: str,
+    partitions: list[str],
+    partition_cols: tuple[str, ...] = ("year", "month", "day"),
+) -> None:
+    """Rewrite the given partition directories of a Hive-partitioned table
+    (relative to `path`, as `partition_files` names them) into one file
+    each — `compact_partitioned` at partition grain, for an append
+    pipeline to run on the partitions each batch touched.
+
+    The partitions are read with `mergeSchema` (appended batches may carry
+    different columns) and written under `path/_compact_staging`, which
+    Spark's listing skips; each is then swapped in with two renames, the
+    old directory parked under `path/_compact_backup` until all are in. A
+    crash between the renames of one partition leaves it missing and is
+    NOT repaired here (a later call refuses to start while the backup is
+    there): the caller must be able to rebuild the table (`parse.run`
+    holds its ledger pending across the call, so its next run rewrites
+    the table from bronze).
+    """
+    import shutil
+
+    if not partitions:
+        return
+    staging = os.path.join(path, "_compact_staging")
+    backup = os.path.join(path, "_compact_backup")
+    if os.path.isdir(backup):  # may hold the only copy of a partition
+        raise RuntimeError(f"{path}: an earlier partition swap crashed; rebuild the table")
+    shutil.rmtree(staging, ignore_errors=True)
+    df = (
+        spark.read.option("basePath", path)
+        .option("mergeSchema", "true")
+        .parquet(*[os.path.join(path, p) for p in partitions])
     )
+    df.repartition(*[F.col(c) for c in partition_cols]).write.partitionBy(
+        *partition_cols
+    ).parquet(staging)
+    written = partition_files(staging)
+    if sorted(written) != sorted(partitions):  # partition values must round-trip
+        shutil.rmtree(staging)
+        raise RuntimeError(f"{path}: compaction wrote {sorted(written)}, not {sorted(partitions)}")
+    for p in partitions:
+        os.makedirs(os.path.dirname(os.path.join(backup, p)), exist_ok=True)
+        os.rename(os.path.join(path, p), os.path.join(backup, p))
+        os.rename(os.path.join(staging, p), os.path.join(path, p))
+    shutil.rmtree(staging)
+    shutil.rmtree(backup)
 
 
 def merge_upsert(

@@ -195,7 +195,7 @@ def hourly_cum_ibc_transfers(logs: DataFrame, txs: DataFrame) -> DataFrame:
 
 def txs_per_day(txs: DataFrame) -> DataFrame:
     """(day, total_gas_used, tx_count): the one day-grain aggregate the
-    three tx models below project from."""
+    three tx models project from (`tx_day_models`)."""
     return (
         txs.select(F.date_trunc("day", "timestamp").alias("day"), "gas_used")
         .groupBy("day")
@@ -206,26 +206,34 @@ def txs_per_day(txs: DataFrame) -> DataFrame:
     )
 
 
+def tx_day_models(daily: DataFrame) -> dict[str, DataFrame]:
+    """The three tx models as projections of a `txs_per_day` aggregate;
+    the cumulative count is a global window over the tiny day-grain frame.
+
+      gas_used_per_day  A3  (reference gas/gas_used_per_day.sql:1-5)
+      num_txs_per_day   A4  (reference txs/num_txs_per_day.sql:1-11)
+      cum_txs_per_day   W1  (reference txs/cum_txs_per_day.sql:4-8)
+    """
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return {
+        "gas_used_per_day": daily.select("day", "total_gas_used"),
+        "num_txs_per_day": daily.select("day", "tx_count"),
+        "cum_txs_per_day": daily.select(
+            "day", "tx_count", F.sum("tx_count").over(w).alias("cum_tx_count")
+        ),
+    }
+
+
 def gas_used_per_day(txs: DataFrame) -> DataFrame:
-    """A3 (reference gas/gas_used_per_day.sql:1-5)."""
-    return txs_per_day(txs).select("day", "total_gas_used")
+    return tx_day_models(txs_per_day(txs))["gas_used_per_day"]
 
 
 def num_txs_per_day(txs: DataFrame) -> DataFrame:
-    """A4 (reference txs/num_txs_per_day.sql:1-11)."""
-    return txs_per_day(txs).select("day", "tx_count")
-
-
-def running_tx_count(daily: DataFrame) -> DataFrame:
-    """The running sum of a (day, tx_count) aggregate — a global window
-    over the tiny day-grain frame."""
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return daily.select("day", "tx_count", F.sum("tx_count").over(w).alias("cum_tx_count"))
+    return tx_day_models(txs_per_day(txs))["num_txs_per_day"]
 
 
 def cum_txs_per_day(txs: DataFrame) -> DataFrame:
-    """W1 (reference txs/cum_txs_per_day.sql:4-8)."""
-    return running_tx_count(num_txs_per_day(txs))
+    return tx_day_models(txs_per_day(txs))["cum_txs_per_day"]
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,8 @@ parse.py (DataParser), producing the four silver tables of SURVEY.md §1.2:
 
 Design decisions (SURVEY.md §4.2):
 - `log_attributes` (EAV) is the CANONICAL store; wide `events` is derived.
-  The pivot's column set is data-dependent — deriving it per-run from the
-  EAV table sidesteps parquet schema drift across batches.
+  The pivot's column set is data-dependent: each batch `run` appends
+  carries its own columns, so `events` is read with `mergeSchema`.
 - Ordinals (`msg_index`, `occurrence`) come from posexplode positions, not
   input row order (the reference's cumcount relies on pandas row order —
   non-reproducible; SURVEY R3).
@@ -324,6 +324,16 @@ def parse_tables(spark: SparkSession, blocks_path, txs_path) -> dict[str, DataFr
 LEDGER = "_parsed_files.json"
 
 
+# Files a silver partition may hold before an append compacts it into
+# one. Each append adds about one file to each partition it touches, and
+# page queries pay per file; compacting costs a read and a rewrite of the
+# partition (about 1 s a batch for all four tables at benchmark scale, a
+# third of an incremental sync). On 4 vCPU, over 20 consecutive 100-block
+# syncs, a bound of 4 kept the page-load median level with a full rebuild
+# per sync (116 vs 113 ms); a bound of 8 left it 27% slower (143 ms).
+MAX_PARTITION_FILES = 4
+
+
 def _list_bronze(landing_dir: str) -> dict[str, list[int]]:
     """path → [size, mtime_ns] of the files Spark's reader would load from
     a landing directory (hidden `_`/`.` names skipped); none when the
@@ -356,6 +366,23 @@ def _write_ledger(out_dir: str, files: dict, pending: bool) -> None:
     with open(tmp, "w") as f:
         json.dump({"pending": pending, "files": files}, f)
     os.replace(tmp, os.path.join(out_dir, LEDGER))
+
+
+def _silver_intact(out_dir: str) -> bool:
+    """Whether all four silver tables exist, after finishing any swap an
+    interrupted `io.compact_partitioned` left behind. The ledger vouches
+    for files parsed into tables; a table gone (or still mid-swap) can
+    only be restored from bronze."""
+    from .io import recover_compaction
+
+    for name in SILVER_TABLES:
+        path = f"{out_dir}/{name}"
+        if os.path.isdir(f"{path}__compacting") or os.path.isdir(f"{path}__precompact"):
+            try:
+                recover_compaction(path)
+            except FileNotFoundError:  # nothing recoverable: rebuild
+                return False
+    return all(os.path.isdir(f"{out_dir}/{name}") for name in SILVER_TABLES)
 
 
 def _new_files(ledger: dict | None, blocks: dict, txs: dict) -> tuple[list, list] | None:
@@ -394,20 +421,29 @@ def run(
     - files already in the parsed-file ledger are not read again; new ones
       are parsed and appended to the four tables (no new files: no Spark
       job at all, and an empty dict back);
-    - without a usable ledger (see `_new_files`) every table is rebuilt
-      from the whole landing zone, as a full overwrite.
+    - without a usable ledger (see `_new_files`), or with a silver table
+      missing (see `_silver_intact`), every table is rebuilt from the
+      whole landing zone, as a full overwrite.
 
-    The ledger is marked pending before the first write and committed
-    after the last, so a crash between them makes the next run rebuild
-    rather than append the same files twice. Appends leave small files
-    per partition; `io.compact_partitioned` merges them.
+    After each append, every partition the batch wrote to that now holds
+    more than `MAX_PARTITION_FILES` files is rewritten into one
+    (`io.compact_partitions`), so files per partition stay bounded however
+    many batches land. The ledger is marked pending before the first write
+    and committed after the last compaction, so a crash between them makes
+    the next run rebuild rather than append the same files twice or trust
+    a half-swapped partition.
+
+    Appended `events` files carry only the pivot columns their batch
+    produced: read silver `events` with `mergeSchema` (the
+    `tests/test_schema_evolution.py` policy); a compacted partition holds
+    the merged columns.
     """
-    from .io import write_partitioned
+    from .io import compact_partitions, partition_files, write_partitioned
 
     if not out_dir:
         return parse_tables(spark, blocks_path, txs_path)
     blocks, txs = _list_bronze(blocks_path), _list_bronze(txs_path)
-    ledger = _read_ledger(out_dir)
+    ledger = _read_ledger(out_dir) if _silver_intact(out_dir) else None
     new = _new_files(ledger, blocks, txs)
     if new is None:
         mode, done, new = "overwrite", {}, (list(blocks), list(txs))
@@ -418,6 +454,15 @@ def run(
     tables = parse_tables(spark, *new)
     _write_ledger(out_dir, done, pending=True)
     for name, df in tables.items():
-        write_partitioned(df, f"{out_dir}/{name}", mode=mode)
+        path = f"{out_dir}/{name}"
+        before = partition_files(path) if mode == "append" else {}
+        write_partitioned(df, path, mode=mode)
+        if mode == "append":
+            over = [
+                p
+                for p, n in partition_files(path).items()
+                if n > max(before.get(p, 0), MAX_PARTITION_FILES)
+            ]
+            compact_partitions(spark, path, over)
     _write_ledger(out_dir, {**blocks, **txs}, pending=False)
     return tables

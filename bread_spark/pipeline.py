@@ -11,9 +11,10 @@ Stages, in the reference's order but with the boundaries redrawn for Spark:
 3. backfill — chunked backward ranges below the watermark
 4. parse    — the landing JSON not yet in silver → four silver tables,
               appended as partitioned parquet (replaces the pandas
-              DataParser); a parsed-file ledger at the silver root names
-              the files already parsed, and a full rebuild runs when it
-              can't vouch for silver (`parse.run`)
+              DataParser), a partition compacted once appends push it
+              past a file bound; a parsed-file ledger at the silver root
+              names the files already parsed, and a full rebuild runs
+              when it can't vouch for silver (`parse.run`)
 5. models   — gold DAG built in-session over the silver tables
               (replaces the `make dbt-run` subprocess hop), with the
               dbt-style unique/not_null assertions inline
@@ -46,7 +47,7 @@ from .ingest import (
     write_metadata,
 )
 from .io import parquet_row_count
-from .models_ibc import assert_not_null, assert_unique, running_tx_count, txs_per_day
+from .models_ibc import assert_not_null, assert_unique, tx_day_models, txs_per_day
 
 
 @dataclass
@@ -83,11 +84,7 @@ def build_gold(
     try:
         assert_unique(daily, "day")
         assert_not_null(daily, "day")
-        models: dict[str, DataFrame] = {
-            "gas_used_per_day": daily.select("day", "total_gas_used"),
-            "num_txs_per_day": daily.select("day", "tx_count"),
-            "cum_txs_per_day": running_tx_count(daily.select("day", "tx_count")),
-        }
+        models = tx_day_models(daily)
         for name, df in models.items():
             if gold_dir:
                 df.write.mode("overwrite").parquet(f"{gold_dir}/{name}")

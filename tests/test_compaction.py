@@ -4,11 +4,12 @@ crash-safe swap, optional sort clustering."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from bread_spark.io import compact_partitioned
+from bread_spark.io import compact_partitioned, compact_partitions, partition_files
 
 
 def _parquet_files(path):
@@ -231,6 +232,39 @@ def test_compaction_of_batch_pipeline_silver(spark, tmp_path):
     extra = P.parse_blocks(raw)
     extra.write.mode("append").partitionBy("year", "month", "day").parquet(path)
     assert spark.read.parquet(path).count() == n1 * 2
+
+
+def test_compact_partitions_rewrites_only_the_named_partitions(spark, fragmented):
+    before = partition_files(fragmented)
+    rows = sorted(spark.read.parquet(fragmented).collect())
+    compact_partitions(spark, fragmented, ["day=0", "day=1"], partition_cols=("day",))
+    after = partition_files(fragmented)
+    assert before["day=0"] > 1 and before["day=1"] > 1
+    assert after == {"day=0": 1, "day=1": 1, "day=2": before["day=2"]}
+    assert sorted(spark.read.parquet(fragmented).collect()) == rows
+    assert not [d for d in os.listdir(fragmented) if d.startswith("_compact")]
+
+
+@pytest.mark.parametrize("grain", ["table", "partitions"])
+def test_compaction_keeps_columns_of_every_appended_batch(spark, tmp_path, grain):
+    """Batches appended with different columns (as silver `events`' pivot
+    columns are) compact into one file holding the union of them."""
+    path = str(tmp_path / "wide")
+    for cols in ("id long, a string, day string", "id long, b string, day string"):
+        extra = cols.split(", ")[1].split()[0]
+        spark.createDataFrame([(len(extra), extra, "d1")], cols).write.mode(
+            "append"
+        ).partitionBy("day").parquet(path)
+    want = spark.read.option("mergeSchema", "true").parquet(path)
+    want_rows = Counter(map(tuple, want.select(sorted(want.columns)).collect()))
+    if grain == "table":
+        compact_partitioned(spark, path, partition_cols=("day",))
+    else:
+        compact_partitions(spark, path, ["day=d1"], partition_cols=("day",))
+    got = spark.read.parquet(path)  # one file left: no mergeSchema needed
+    assert partition_files(path) == {"day=d1": 1}
+    assert sorted(got.columns) == sorted(want.columns) == ["a", "b", "day", "id"]
+    assert Counter(map(tuple, got.select(sorted(got.columns)).collect())) == want_rows
 
 
 def test_merge_upsert_insert_update_delete_version(spark, tmp_path):

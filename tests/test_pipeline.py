@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections import Counter
 
 import pytest
@@ -183,18 +184,34 @@ def _landing_in_two_batches(tmp_path) -> tuple[str, str, list[str], int]:
     return bdir, tdir, sorted(os.listdir(bdir)), len(txs)
 
 
-def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatch):
-    """A write that fails after some tables were appended leaves the ledger
-    pending; the rerun rebuilds silver instead of appending twice."""
+def _parse_first_batch_then_land_second(spark, tmp_path, silver) -> tuple[str, str, int]:
+    """Silver holding the first fixture batch, with the second batch landed
+    after it: (blocks dir, txs dir, tx count of both batches)."""
     bdir, tdir, names, n_txs = _landing_in_two_batches(tmp_path)
     held = tmp_path / "held"
     held.mkdir()
-    for d in (bdir, tdir):  # land the second batch later
+    for d in (bdir, tdir):
         os.rename(os.path.join(d, names[1]), held / f"{os.path.basename(d)}_{names[1]}")
-    silver = str(tmp_path / "silver")
     P.run(spark, bdir, tdir, out_dir=silver)
     for d in (bdir, tdir):
         os.rename(held / f"{os.path.basename(d)}_{names[1]}", os.path.join(d, names[1]))
+    return bdir, tdir, n_txs
+
+
+def _assert_silver_is_bronze_truth(spark, silver: str, n_txs: int) -> None:
+    assert io.parquet_row_count(f"{silver}/blocks") == 20
+    assert io.parquet_row_count(f"{silver}/tx_result") == n_txs
+    heights = spark.read.parquet(f"{silver}/blocks").select("height")
+    assert heights.distinct().count() == heights.count() == 20
+    hashes = spark.read.parquet(f"{silver}/tx_result").select("hash")
+    assert hashes.distinct().count() == hashes.count() == n_txs
+
+
+def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatch):
+    """A write that fails after some tables were appended leaves the ledger
+    pending; the rerun rebuilds silver instead of appending twice."""
+    silver = str(tmp_path / "silver")
+    bdir, tdir, n_txs = _parse_first_batch_then_land_second(spark, tmp_path, silver)
 
     real = io.write_partitioned
 
@@ -212,10 +229,76 @@ def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatc
 
     P.run(spark, bdir, tdir, out_dir=silver)
     assert not _ledger(silver)["pending"]
-    assert io.parquet_row_count(f"{silver}/blocks") == 20
-    assert io.parquet_row_count(f"{silver}/tx_result") == n_txs
-    heights = spark.read.parquet(f"{silver}/blocks").select("height")
-    assert heights.distinct().count() == heights.count() == 20
+    _assert_silver_is_bronze_truth(spark, silver, n_txs)
+
+
+def test_append_compacts_the_partitions_it_grew(spark, tmp_path, monkeypatch):
+    """The two fixture batches share a day: with a one-file bound, appending
+    the second rewrites that partition into one file (merging the `events`
+    columns of both batches), and silver still equals a full rebuild."""
+    monkeypatch.setattr(P, "MAX_PARTITION_FILES", 1)
+    silver, full = str(tmp_path / "silver"), str(tmp_path / "full")
+    bdir, tdir, _ = _parse_first_batch_then_land_second(spark, tmp_path, silver)
+    before = {name: io.partition_files(f"{silver}/{name}") for name in P.SILVER_TABLES}
+    P.run(spark, bdir, tdir, out_dir=silver)
+    P.run(spark, bdir, tdir, out_dir=full)
+    for name in P.SILVER_TABLES:
+        after = io.partition_files(f"{silver}/{name}")
+        assert set(before[name]) & set(after), name  # a day both batches wrote
+        # one file in every partition the append wrote to; the rest untouched
+        assert all(n == 1 or before[name].get(p) == n for p, n in after.items()), name
+        assert _rows(spark, f"{silver}/{name}") == _rows(spark, f"{full}/{name}"), name
+
+
+def test_crash_mid_partition_swap_then_rerun_rebuilds(spark, tmp_path, monkeypatch):
+    """A crash between the two renames of a partition swap leaves that
+    partition missing and the ledger pending; the rerun rebuilds silver."""
+    monkeypatch.setattr(P, "MAX_PARTITION_FILES", 1)
+    silver = str(tmp_path / "silver")
+    bdir, tdir, n_txs = _parse_first_batch_then_land_second(spark, tmp_path, silver)
+    real_rename = os.rename
+
+    def killed_after_backup(src, dst):
+        real_rename(src, dst)
+        if "_compact_backup" in dst:
+            raise OSError("killed")
+
+    monkeypatch.setattr(io.os, "rename", killed_after_backup)
+    with pytest.raises(OSError, match="killed"):
+        P.run(spark, bdir, tdir, out_dir=silver)
+    monkeypatch.undo()
+    assert _ledger(silver)["pending"]
+    assert io.parquet_row_count(f"{silver}/blocks") < 20  # a partition is gone
+    with pytest.raises(RuntimeError, match="crashed"):  # its backup is kept
+        io.compact_partitions(spark, f"{silver}/blocks", list(io.partition_files(f"{silver}/blocks")))
+
+    P.run(spark, bdir, tdir, out_dir=silver)
+    assert not _ledger(silver)["pending"]
+    _assert_silver_is_bronze_truth(spark, silver, n_txs)
+
+
+@pytest.mark.parametrize("loss", ["mid_compaction", "deleted"])
+def test_lost_silver_table_is_restored_before_append(spark, tmp_path, parse_calls, loss):
+    """A table a crashed `io.compact_partitioned` left renamed to its backup
+    is swapped back before the next batch is appended; a table deleted
+    outright forces a full rebuild, with or without new bronze."""
+    silver = str(tmp_path / "silver")
+    bdir, tdir, n_txs = _parse_first_batch_then_land_second(spark, tmp_path, silver)
+    table = f"{silver}/tx_result"
+    if loss == "mid_compaction":  # crash between the two renames of the swap
+        os.rename(table, f"{table}__precompact")
+    else:
+        shutil.rmtree(table)
+
+    P.run(spark, bdir, tdir, out_dir=silver)
+    assert len(parse_calls[-1][0]) == (1 if loss == "mid_compaction" else 2)
+    assert not os.path.exists(f"{table}__precompact")
+    _assert_silver_is_bronze_truth(spark, silver, n_txs)
+
+    shutil.rmtree(table)  # no new bronze: still a rebuild, not a no-op
+    assert P.run(spark, bdir, tdir, out_dir=silver)
+    assert len(parse_calls[-1][0]) == 2
+    _assert_silver_is_bronze_truth(spark, silver, n_txs)
 
 
 @pytest.mark.parametrize("change", ["rewrite", "delete"])
