@@ -33,9 +33,10 @@ aggregation.
 
 Streaming: the moment table (n, Σv, Σv²) per (type, variant) is a
 textbook grouped streaming aggregation — the `nb_model_count_stream`
-discipline; the t-statistic is the batch snapshot read. Twin:
-`streaming/abtest.py::ab_moments_stream`, snapshot → `ab_report_df`'s
-final projection pinned in tests/test_streaming_abtest.py."""
+discipline; the t-statistic is the batch snapshot read. `ab_moments_df`
+applied to a streaming frame IS that aggregation; snapshot →
+`ab_report_df`'s final projection pinned in
+tests/test_streaming_abtest.py."""
 
 from __future__ import annotations
 

@@ -24,8 +24,8 @@ aggregation to O(users) rows, then one global aggregate of that.
 one aggregate to O(types) rows. No joins anywhere in either plan.
 
 Streaming: the per-user firsts table is a grouped MIN aggregation —
-`streaming/behavior.py::conversion_firsts_stream` (the
-`ab_moments_stream` discipline); a snapshot through the batch report
+`conversion_firsts_df` applied to a streaming frame (the `ab_moments_df`
+discipline); a snapshot through the batch report
 fold IS the online conversion monitor, pinned in
 tests/test_streaming_behavior.py. `inter_event_gap_stats` is
 batch-only: LAG needs each (user, type)'s ordered history (unbounded

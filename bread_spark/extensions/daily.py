@@ -26,13 +26,13 @@ derives each user's first day with ONE user-keyed aggregate, joins the
 two O(users)-scale tables user-keyed, and aggregates to O(days). No
 broadcast of anything unbounded, no window over raw events.
 
-Streaming: the (day, type) count table is the `daily_micro_stream`
-shape (counts instead of sums) — twin `streaming/stats.py::
-daily_type_counts_stream`, snapshot → the batch share projection,
-pinned in tests/test_streaming_stats.py. Percentile bands are
+Streaming: the (day, type) count table is the daily micro-sum shape
+(counts instead of sums) — `daily_type_counts_df` applied to a
+streaming frame, snapshot → the batch share projection, pinned in
+tests/test_streaming_stats.py. Percentile bands are
 batch-only (corpus order statistics; the online sibling is the HDR
 quantile stream). New-vs-returning is batch-only as a table — the
-per-user first-day state is exactly `conversion_firsts_stream`'s
+per-user first-day state is exactly `conversion_firsts_df`'s
 grouped-MIN shape, but the DAILY attribution needs the corpus day
 grid closed, i.e. a snapshot fold (stated, not NULLed).
 

@@ -10,8 +10,12 @@ Five strategies, scale-ordered:
   simhash      — 64-bit SimHash fingerprint, hamming-bucket grouping
 
 Exact + jaccard have DuckDB oracles (deterministic, engine-agnostic math).
-MinHash/SimHash use Spark's xxhash64 — engine-specific hashing, so the
-driver records them as rows-only checks (SURVEY.md §5 notes which).
+MinHash and SimHash are each ONE kernel called with a hash lane (`_Lane`):
+Spark's xxhash64 — engine-specific hashing, so those entries are
+rows-only checks (SURVEY.md §5 notes which) — or the md5 lane,
+whose `*_md5_*` entries are exact-oracle-backed. Banded candidate
+generation (`_mih_probe`, `_band_pairs`) and the survivor step
+(`_survivor_corpus`) are shared by every near-dup family, phash included.
 
 Scale notes: at 100 TB, the shingle inverted index is the dominant shuffle;
 we cap postings per shingle (drop shingles appearing in > MAX_DF docs —
@@ -22,7 +26,11 @@ the exact oracle) and ON in the production entry points.
 
 from __future__ import annotations
 
+import operator
 from fractions import Fraction
+from functools import reduce
+from itertools import combinations
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -248,70 +256,86 @@ SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
 
 
-def _word_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """doc_id → distinct word n-gram shingles as 64-bit hashes (JVM-side,
-    no UDF).
+class _Lane(NamedTuple):
+    """A hash lane: how the near-dup kernels turn text into integers.
+    `gram` is the SQL identity of one word 3-gram shingle over the words
+    ``w[i], w[i+1], w[i+2]``; `hash` formats a shingle or token column
+    into a `bits`-wide integer (a 64-bit lane can be negative, a
+    narrower one cannot)."""
 
-    The shingle IDENTITY is ``xxhash64(w[i], w[i+1], w[i+2])`` — hashed in
-    the same lambda that forms the n-gram, so the shingle string is never
-    materialized. Every downstream shuffle (distinct, inverted-index join,
-    hot-set aggregate, decontamination probe join) then moves 8-byte longs
-    instead of ~20-byte strings, and generation itself is ~2× faster than
-    concat_ws (measured at sf0.1; strings were the dominant cost of the
-    whole jaccard pipeline). Two distinct shingles colliding would need
-    ~2^32 distinct shingles for even-odds (birthday bound); at test scale
-    the probability is ~1e-9, and at 100 TB a stray collision perturbs one
-    pair's intersection count by ±1 — far below the noise floor of any
-    near-dup decision. The DuckDB oracle computes string-shingle jaccard;
-    hash-green rows certify the equivalence on real data.
-    """
+    name: str
+    gram: str
+    hash: str
+    bits: int
+
+
+# The production lane: Spark's xxhash64, the measured-faster engine hash
+# (rows-only by the engine-specific-hash convention).
+_XXHASH64 = _Lane("xxhash64", "xxhash64(w[i], w[i+1], w[i+2])", "xxhash64({})", 64)
+# The oracle lane: the repo's md5 hex-slice convention (15 hex chars → a
+# 60-bit positive lane) over space-joined shingle strings, which DuckDB
+# reproduces bit-for-bit.
+_MD5 = _Lane(
+    "md5",
+    "concat_ws(' ', w[i], w[i+1], w[i+2])",
+    "cast(conv(substring(md5({}), 1, 15), 16, 10) as bigint)",
+    60,
+)
+
+
+def _word_shingles_with_dups(docs: DataFrame, lane: _Lane = _XXHASH64) -> DataFrame:
+    """doc_id → every word 3-gram shingle in the lane's identity
+    (JVM-side, no UDF), duplicates kept.
+
+    On the xxhash64 lane the shingle IDENTITY is ``xxhash64(w[i], w[i+1],
+    w[i+2])`` — hashed in the same lambda that forms the n-gram, so the
+    shingle string is never materialized. Every downstream shuffle
+    (distinct, inverted-index join, hot-set aggregate, decontamination
+    probe join) then moves 8-byte longs instead of ~20-byte strings, and
+    generation itself is ~2× faster than concat_ws (measured at sf0.1;
+    strings were the dominant cost of the whole jaccard pipeline). Two
+    distinct shingles colliding would need ~2^32 distinct shingles for
+    even-odds (birthday bound); at test scale the probability is ~1e-9,
+    and at 100 TB a stray collision perturbs one pair's intersection
+    count by ±1 — far below the noise floor of any near-dup decision.
+    The DuckDB oracle computes string-shingle jaccard; hash-green rows
+    certify the equivalence on real data.
+
+    Duplicates are kept for duplicate-insensitive consumers: MinHash's
+    min-aggregate gives the same signature whether a shingle appears once
+    or ten times, so paying a full (doc_id, shingle) shuffle to dedup
+    first is pure waste; map-side partial mins absorb the duplicates for
+    free. Jaccard/decontamination COUNT shingles and read the distinct
+    `_word_shingles`."""
     words = docs.select("doc_id", F.split("text", " ").alias("w"))
-    shingled = words.filter(F.size("w") >= n).select(
+    return words.filter(F.size("w") >= SHINGLE_N).select(
         "doc_id",
         F.explode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {n}), "
-                f"i -> xxhash64(w[i], w[i+1], w[i+2]))"
-            )
-        ).alias("shingle"),
-    )
-    return shingled.distinct()
-
-
-def _word_shingles_with_dups(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """`_word_shingles` WITHOUT the distinct — for duplicate-insensitive
-    consumers. MinHash's min-aggregate gives the same signature whether a
-    shingle appears once or ten times, so paying a full (doc_id, shingle)
-    shuffle to dedup first is pure waste; map-side partial mins absorb
-    the duplicates for free. Jaccard/decontamination COUNT shingles and
-    must keep the distinct."""
-    words = docs.select("doc_id", F.split("text", " ").alias("w"))
-    return words.filter(F.size("w") >= n).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {n}), "
-                f"i -> xxhash64(w[i], w[i+1], w[i+2]))"
-            )
+            F.expr(f"transform(sequence(0, size(w) - {SHINGLE_N}), i -> {lane.gram})")
         ).alias("shingle"),
     )
 
 
-def shingle_frame(spark: SparkSession, sf_dir: str, n: int = SHINGLE_N) -> DataFrame:
+def _word_shingles(docs: DataFrame) -> DataFrame:
+    """doc_id → distinct xxhash64 word 3-gram shingles."""
+    return _word_shingles_with_dups(docs).distinct()
+
+
+def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compute-once distinct word-shingle index for the canonical
     `documents` table — the shared front end of jaccard near-dup and both
     decontamination paths. Four catalog entries (plus `training_corpus`,
     which composes decontamination) were each rebuilding the identical
     scan→shingle→distinct subtree; the seam builds it once per
-    (application, sf_dir, n) and persists it (see plans/materialize.py
+    (application, sf_dir) and persists it (see plans/materialize.py
     for the cache contract). At 100 TB this is the staged shingle-index
     table every downstream near-dup/decontamination job reads."""
     return materialized_frame(
         spark,
         "word_shingles",
         sf_dir,
-        lambda: _word_shingles(load_table(spark, sf_dir, "documents"), n),
-        (n,),
+        lambda: _word_shingles(load_table(spark, sf_dir, "documents")),
+        (SHINGLE_N,),
     )
 
 
@@ -735,14 +759,21 @@ def deduped_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized after filtering). No new shuffle shape beyond the components
     loop itself.
     """
-    clusters = dedup_clusters(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    survivors = (
-        clusters.groupBy(F.col("cluster_id").alias("doc_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
+    return _survivor_corpus(docs, dedup_clusters(spark, sf_dir))
+
+
+def _survivor_corpus(items: DataFrame, clusters: DataFrame) -> DataFrame:
+    """Each cluster's canonical (min id) member of `items` — keyed on its
+    first column, the rest carried — with its `cluster_size` and
+    `n_dups_removed`: the survivor step every near-dup corpus runs on
+    the (doc_id, cluster_id) labels of `connected_components`."""
+    key = items.columns[0]
+    survivors = clusters.groupBy(F.col("cluster_id").alias(key)).agg(
+        F.count(F.lit(1)).cast("long").alias("cluster_size")
     )
-    return docs.join(survivors, "doc_id").select(
-        "doc_id", "lang", "source", "cluster_size",
+    return items.join(survivors, key).select(
+        *items.columns, "cluster_size",
         (F.col("cluster_size") - 1).cast("long").alias("n_dups_removed"),
     )
 
@@ -846,16 +877,9 @@ def minhash_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall floor vs exact jaccard are pinned in tests; rows-only by
     design, the hash family is engine-specific).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    clusters = connected_components(docs.select("doc_id"), pairs)
-    survivors = clusters.groupBy(F.col("cluster_id").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return docs.join(survivors, "doc_id").select(
-        "doc_id", "lang", "source", "cluster_size",
-        (F.col("cluster_size") - 1).cast("long").alias("n_dups_removed"),
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
+    pairs = minhash_lsh_candidates(spark, sf_dir)
+    return _survivor_corpus(docs, connected_components(docs.select("doc_id"), pairs))
 
 
 ORACLE_SQL: dict[str, str] = {
@@ -1073,29 +1097,33 @@ def _minhash_coeffs(num_hashes: int = NUM_HASHES) -> tuple[list[int], list[int]]
     return rng_a, rng_b
 
 
-def minhash_signatures(docs_shingled: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """doc_id → array<long> MinHash signature.
-
-    Universal-hash family h_i(x) = (a_i * x + b_i) mod p over the xxhash64
-    re-mix of each (already hash-valued) shingle. One groupBy(doc_id) with `num_hashes` min-aggregate
-    expressions — a single shuffle of the shingle rows, with map-side
-    partial mins. (A first cut exploded a (doc, hash_idx) row per hash —
-    32× the shuffle volume and a second shuffle to re-assemble the array.)
-    """
-    # Deterministic (a, b) parameters — fixed seed, python-side constants.
+def _permutation_mins(
+    shingles: DataFrame, lane: _Lane, num_hashes: int = NUM_HASHES
+) -> DataFrame:
+    """(doc_id, h0..h{num_hashes-1}) MinHash minima of a (doc_id, shingle)
+    frame: universal-hash family h_i(x) = (a_i * x + b_i) mod p over the
+    lane's hash of each shingle. One groupBy(doc_id) with `num_hashes`
+    min-aggregate expressions — a single shuffle of the shingle rows, with
+    map-side partial mins. (A first cut exploded a (doc, hash_idx) row per
+    hash — 32× the shuffle volume and a second shuffle to re-assemble the
+    array.)"""
+    hx = lane.hash.format("shingle")
+    # pmod (not abs%) on a signed lane — abs(Long.MIN_VALUE) would throw
+    # under ANSI mode.
+    hx = f"pmod({hx}, {MERSENNE})" if lane.bits == 64 else f"{hx} % {MERSENNE}"
     rng_a, rng_b = _minhash_coeffs(num_hashes)
-    # pmod (not abs%) — abs(Long.MIN_VALUE) would throw under ANSI mode.
-    hashed = docs_shingled.select(
-        "doc_id", F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE)).alias("hx")
-    )
     mins = [
         F.min((F.lit(rng_a[i]) * F.col("hx") + F.lit(rng_b[i])) % F.lit(MERSENNE)).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return (
-        hashed.groupBy("doc_id")
-        .agg(*mins)
-        .select("doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature"))
+    return shingles.select("doc_id", F.expr(hx).alias("hx")).groupBy("doc_id").agg(*mins)
+
+
+def minhash_signatures(docs_shingled: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
+    """doc_id → array<long> MinHash signature over the xxhash64 re-mix of
+    each (already hash-valued) shingle."""
+    return _permutation_mins(docs_shingled, _XXHASH64, num_hashes).select(
+        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature")
     )
 
 
@@ -1150,75 +1178,89 @@ def minhash_lsh_candidates(
     # the shared seam materializes it once per catalog pass instead of
     # recomputing it per side (and per consumer).
     bands = lsh_band_frame(spark, sf_dir, num_bands)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    return _band_pairs(bands, bands, ("band", "bucket"), [("doc_id", "doc_a", "doc_b")])
+
+
+def _hamming_ball_masks(width: int, radius: int) -> list[int]:
+    """All XOR masks of ≤ radius set bits over `width`-bit values — the
+    MIH probe set, a bounded Python-side constant (ρ=1 → 17, ρ=2 →
+    137, ρ=3 → 697 at width 16). Guarded: ρ > 3 would mean the caller
+    wants max_hamming ≥ 4 × bands — lengthen the fingerprint instead
+    (multimodal.py banner dial)."""
+    if radius > 3:
+        raise ValueError(
+            f"probe radius {radius} > 3: raise the band count/band width "
+            "(or fingerprint bits) instead of widening the Hamming ball"
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    masks = [0]
+    for r in range(1, radius + 1):
+        for bits in combinations(range(width), r):
+            masks.append(sum(1 << b for b in bits))
+    return masks
+
+
+def _mih_probe(bands: DataFrame, width: int, radius: int) -> DataFrame:
+    """The multi-index-hashing probe side (Norouzi, Punjani & Fleet,
+    CVPR 2012; multimodal.py banner): each row once per value within
+    Hamming `radius` of its `width`-bit `band_val` (the last column),
+    by exploding the Hamming-ball masks and XOR-ing. Pigeonhole: a pair
+    within bands × (radius + 1) − 1 bits has some band within `radius`,
+    so the probe meets its twin there. At radius 0 the only mask is 0:
+    the frame passes through unexploded."""
+    if radius == 0:
+        return bands
+    masks = _hamming_ball_masks(width, radius)
+    keep = [c for c in bands.columns if c != "band_val"]
+    return bands.select(
+        *bands.columns, F.explode(F.array(*[F.lit(m) for m in masks])).alias("__mask")
+    ).select(*keep, F.col("band_val").bitwiseXOR(F.col("__mask")).alias("band_val"))
+
+
+def _band_pairs(
+    probe: DataFrame, bands: DataFrame, keys: tuple[str, str], carry: list[tuple[str, str, str]]
+) -> DataFrame:
+    """Banded candidate pairs: rows a of `probe` (the MIH probe side, or
+    `bands` itself) meet rows b of `bands` ONLY inside equal `keys`
+    (band, value) cells, never all-pairs, with a.id < b.id; a pair
+    colliding in several bands counts once. `carry` lists (column, name
+    of a's value, name of b's value), the row id first."""
+    a, b = probe.alias("a"), bands.alias("b")
+    ident = carry[0][0]
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return (
+        a.join(b, reduce(operator.and_, on + [F.col(f"a.{ident}") < F.col(f"b.{ident}")]))
+        .select(*[F.col(f"{s}.{c}").alias(n) for c, *names in carry for s, n in zip("ab", names)])
         .distinct()
     )
 
 
 # ---------------------------------------------------------------------------
-# MinHash on the md5 convention (r13) — the ORACLE-BACKED LSH twin.
+# MinHash on the md5 lane (r13) — the ORACLE-BACKED LSH family.
 #
-# `minhash_signatures`/`minhash_lsh_candidates` above ride xxhash64 (the
-# measured-faster engine hash) and are rows-only by the engine-specific-
-# hash convention. The ONLY engine-specific step in that whole pipeline
-# is the shingle hash: the permutation lattice (a·x + b) mod 2^31−1 with
-# the `_minhash_coeffs` schedule is already exact integer arithmetic.
-# This family swaps the shingle hash for the repo's md5 hex-slice
-# convention (15 hex chars → 60-bit lane, reduced mod the Mersenne prime
-# so a·x stays < 2^62 under ANSI), after which DuckDB reproduces
-# EVERYTHING bit-for-bit: the 32 min-aggregates, the banded buckets
-# (bucket = the band's 4 signature values verbatim — equality is all
-# candidate generation needs, so no extra hash), and the
+# `minhash_lsh_candidates` above is rows-only by the engine-specific-hash
+# convention. The ONLY engine-specific step in that whole pipeline is the
+# shingle hash: the permutation lattice (a·x + b) mod 2^31−1 with the
+# `_minhash_coeffs` schedule is already exact integer arithmetic. On the
+# md5 lane (reduced mod the Mersenne prime so a·x stays < 2^62 under
+# ANSI) DuckDB reproduces EVERYTHING bit-for-bit: the 32 min-aggregates,
+# the banded buckets (bucket = the band's 4 signature values verbatim —
+# equality is all candidate generation needs, so no extra hash), and the
 # signature-agreement count on candidate pairs. n_agree/32 is the
 # classic MinHash Jaccard estimate; the output keeps the exact integer
-# n_agree so no cross-engine float rounding is ever involved.
-#
-# Scale shape is identical to the xxhash64 path: one groupBy(doc_id)
-# signature shuffle with map-side partial mins, candidates meet ONLY
-# inside (band, bucket), and the agreement verify is a doc-id-keyed join
-# against the stored signature table — no all-pairs stage anywhere.
+# n_agree so no cross-engine float rounding is ever involved. The
+# agreement verify is a doc-id-keyed join against the stored signature
+# table — no all-pairs stage anywhere.
 # ---------------------------------------------------------------------------
 
 MINHASH_MD5_ROWS_PER_BAND = NUM_HASHES // NUM_BANDS  # 4
 
 
 def _minhash_md5_sig_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, h0..h31) wide signature table on the md5 lane. Shingle
-    strings are formed in the same transform lambda (word 3-grams,
-    space-joined); no distinct — MIN is idempotent under duplicates
-    (the `_word_shingles_with_dups` argument), and the oracle's DISTINCT
-    form provably aggregates to the same minima. Docs with < SHINGLE_N
-    words have no row (both engines)."""
-    words = docs.select("doc_id", F.split("text", " ").alias("w"))
-    shingled = words.filter(F.size("w") >= SHINGLE_N).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(w) - {SHINGLE_N}), "
-                f"i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-            )
-        ).alias("shingle"),
-    )
-    hx = shingled.select(
-        "doc_id",
-        F.expr(
-            f"cast(conv(substring(md5(shingle), 1, 15), 16, 10) as bigint) % {MERSENNE}"
-        ).alias("hx"),
-    )
-    rng_a, rng_b = _minhash_coeffs()
-    mins = [
-        F.min((F.lit(rng_a[i]) * F.col("hx") + F.lit(rng_b[i])) % F.lit(MERSENNE)).alias(f"h{i}")
-        for i in range(NUM_HASHES)
-    ]
-    return hx.groupBy("doc_id").agg(*mins)
+    """(doc_id, h0..h31) wide signature table on the md5 lane. No
+    distinct — MIN is idempotent under duplicates, and the oracle's
+    DISTINCT form provably aggregates to the same minima. Docs with
+    < SHINGLE_N words have no row (both engines)."""
+    return _permutation_mins(_word_shingles_with_dups(docs, _MD5), _MD5)
 
 
 def minhash_md5_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1263,24 +1305,13 @@ def minhash_md5_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = wide.selectExpr(
         "doc_id", f"stack({NUM_BANDS}, {band_pairs}) as (band, bucket)"
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    cand = _band_pairs(bands, bands, ("band", "bucket"), [("doc_id", "doc_a", "doc_b")])
+    sa, sb = (
+        wide.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(f"h{i}").alias(f"s{s}{i}") for i in range(NUM_HASHES)],
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = wide.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"sa{i}") for i in range(NUM_HASHES)],
-    )
-    sb = wide.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"sb{i}") for i in range(NUM_HASHES)],
+        for s in "ab"
     )
     agree = " + ".join(f"IF(sa{i} = sb{i}, 1, 0)" for i in range(NUM_HASHES))
     return (
@@ -1373,19 +1404,9 @@ def minhash_md5_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure, canonical selection — not just the pair stage.
     Like the xxhash64 original, ALL banded candidates are edges:
     banding parameters are the precision dial, no all-pairs verify."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_md5_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    clusters = connected_components(docs.select("doc_id"), pairs)
-    survivors = clusters.groupBy(F.col("cluster_id").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return docs.join(survivors, "doc_id").select(
-        "doc_id",
-        "lang",
-        "source",
-        "cluster_size",
-        (F.col("cluster_size") - 1).cast("long").alias("n_dups_removed"),
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
+    pairs = minhash_md5_candidates(spark, sf_dir)
+    return _survivor_corpus(docs, connected_components(docs.select("doc_id"), pairs))
 
 
 ORACLE_SQL["minhash_md5_dedup_corpus"] = f"""
@@ -1423,9 +1444,21 @@ SIMHASH_MAX_TOKENS = (1 << SIMHASH_LANE) - 1  # lane saturation → raise
 
 
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per document from word-level xxhash64.
+    """64-bit SimHash per document from word-level xxhash64 (`_simhash_df`
+    on the production lane). Bit 63's weight is shiftleft(1L, 63) =
+    Long.MIN_VALUE, so the summed fingerprint is the two's-complement
+    signed view of the 64-bit hash — distinct powers of two can't
+    overflow the signed-long sum. Equality with the naive per-(doc, bit)
+    plan is pinned in
+    tests/test_properties.py::test_simhash_matches_per_bit_plan."""
+    return _simhash_df(load_table(spark, sf_dir, "documents"), _XXHASH64)
 
-    For each of 64 bit positions, sum +1/-1 over token hashes and take the
+
+def _simhash_df(docs: DataFrame, lane: _Lane) -> DataFrame:
+    """(doc_id, simhash) with the `lane.bits`-bit SimHash of each
+    document's non-empty whitespace tokens.
+
+    For each bit position, sum +1/-1 over token hashes and take the
     sign. ONE groupBy(doc_id) (the `minhash_signatures` pattern): the
     shuffle is keyed on doc_id alone and moves one row per token with
     map-side partial sums — not the 64× blow-up of an
@@ -1433,117 +1466,24 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are PACKED three-to-a-long in 21-bit lanes, so the aggregate
     carries 22 buffer updates per row instead of 64 (measured 4× faster
     at sf0.1; 64 separate sum(when(...)) buffers were slower than the
-    exploded plan they replaced). sign(+1/-1 sum) ≡ 2·ones > n, so only
-    ones-counts and the token count n are aggregated. A document over
-    2^21-1 ≈ 2M whitespace tokens (~10 MB of text) would saturate a lane
-    and RAISES rather than fingerprinting wrong.
-
-    Equality with the naive per-(doc, bit) plan is pinned in
-    tests/test_properties.py::test_simhash_matches_per_bit_plan.
-    Bit 63's weight is shiftleft(1L, 63) = Long.MIN_VALUE, so the summed
-    fingerprint is the two's-complement signed view of the 64-bit hash —
-    distinct powers of two can't overflow the signed-long sum.
-    """
-    docs = load_table(spark, sf_dir, "documents")
+    exploded plan they replaced). sign(+1/-1 sum) ≡ 2·ones > n (tie → 0),
+    so only ones-counts and the token count n are aggregated. A document
+    over `SIMHASH_MAX_TOKENS` = 2^21-1 ≈ 2M tokens (~10 MB of text)
+    would saturate a lane and RAISES rather than fingerprinting wrong.
+    Docs with zero non-empty tokens have no row."""
+    # explode, then drop empty tokens: a codegen'd Filter, measured faster
+    # at sf0.1 than an interpreted filter() lambda over the token array
     tokens = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     ).filter(F.col("tok") != "")
-    tok_hash = tokens.select("doc_id", F.xxhash64("tok").alias("h"))
-
-    lane, per = SIMHASH_LANE, SIMHASH_LANES_PER_LONG
-    mask = (1 << lane) - 1
-    n_counters = (64 + per - 1) // per
-    packed = [
-        F.sum(
-            F.expr(
-                " + ".join(
-                    f"(shiftleft(shiftright(h, {per * j + b}) & 1, {lane * b}))"
-                    for b in range(per)
-                    if per * j + b < 64
-                )
-            )
-        ).alias(f"p{j}")
-        for j in range(n_counters)
-    ]
-    agg = tok_hash.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"), *packed)
-    agg = agg.select(
-        "doc_id", "n", F.array(*[F.col(f"p{j}") for j in range(n_counters)]).alias("parr")
-    )
-
-    # Bit assembly as ONE higher-order aggregate over the counter array —
-    # 64 interpreted lambda steps on the tiny per-doc aggregate, instead
-    # of a 64-term when/otherwise tree (which cost more in per-DataFrame
-    # Catalyst analysis than the whole query's executor time at sf0.1).
-    fingerprint = F.expr(
-        f"""
-        CASE WHEN n > {SIMHASH_MAX_TOKENS}
-             THEN raise_error('simhash: document exceeds {SIMHASH_MAX_TOKENS} tokens')
-        ELSE aggregate(sequence(0, 63), cast(0 as bigint), (acc, i) ->
-          acc + IF(2 * (shiftright(element_at(parr, cast(i div {per} as int) + 1),
-                                   {lane} * cast(pmod(i, {per}) as int)) & {mask}) > n,
-                   shiftleft(cast(1 as bigint), i), cast(0 as bigint)))
-        END"""
-    )
-    return agg.select("doc_id", fingerprint.alias("simhash"))
-
-
-# ---------------------------------------------------------------------------
-# SimHash on the md5 convention (r13) — the ORACLE-BACKED near-dup path.
-#
-# `simhash_fingerprints` above rides xxhash64 (the measured-faster
-# engine hash) and is rows-only by the engine-specific-hash convention.
-# This family re-derives the token hash from the repo's md5 hex-slice
-# convention (15 hex chars → a 60-bit positive lane — the
-# decontaminate_bloom precedent from r12), so EVERYTHING downstream is
-# exact integer arithmetic both engines reproduce bit-for-bit: the
-# per-bit ±1 sums, the majority threshold, the packed fingerprint, the
-# banded candidates, and the Hamming verify. The pairs oracle is the
-# strongest kind the catalog has: DuckDB computes the BRUTE-FORCE
-# all-pairs Hamming ≤ H set from its own fingerprints, so a green row
-# certifies the banded Spark plan's pigeonhole completeness against
-# the definition, not just against a mirrored plan.
-#
-# Candidate generation reuses the MIH discipline built for the phash
-# family (multimodal.py banner): 60 bits split into 4 bands of 15;
-# at the default H = 3 the probe radius is 3 // 4 = 0, i.e. plain
-# exact band match (any pair within 3 flipped bits shares a whole
-# band) — no probe fan-out at all; callers widening past 3 pay the
-# Hamming-ball masks exactly like phash. At 100 TB the random-collision
-# term is m·|A|·|B|/2^15 per band — the dial is band width via longer
-# fingerprints, same knob as the banner documents.
-# ---------------------------------------------------------------------------
-
-SIMHASH_MD5_BITS = 60  # 15 md5 hex chars — positive in a signed long
-SIMHASH_MD5_BANDS = 4
-SIMHASH_MD5_BAND_WIDTH = SIMHASH_MD5_BITS // SIMHASH_MD5_BANDS  # 15
-SIMHASH_MD5_BAND_MASK = (1 << SIMHASH_MD5_BAND_WIDTH) - 1
-SIMHASH_MD5_MAX_HAMMING = 3  # classic simhash near-dup cut
-
-
-def _simhash_md5_fingerprint_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash) with the 60-bit md5-lane SimHash — the same
-    ONE-groupBy packed-lane aggregation as `simhash_fingerprints`
-    (21-bit ones-counters, three to a long, 20 counters for 60 bits),
-    only the token hash differs. Majority rule is strictly
-    `2·ones > n` (tie → 0), deterministic in both engines. Docs with
-    zero non-empty tokens have no fingerprint row (both engines)."""
-    tokens = docs.select(
-        "doc_id",
-        F.explode(F.expr("filter(split(text, ' '), t -> t != '')")).alias("tok"),
-    )
-    tok_hash = tokens.select(
-        "doc_id",
-        F.expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)").alias("h"),
-    )
-    lane, per = SIMHASH_LANE, SIMHASH_LANES_PER_LONG
-    mask = (1 << lane) - 1
-    bits = SIMHASH_MD5_BITS
+    tok_hash = tokens.select("doc_id", F.expr(lane.hash.format("tok")).alias("h"))
+    lane_w, per, bits = SIMHASH_LANE, SIMHASH_LANES_PER_LONG, lane.bits
     n_counters = (bits + per - 1) // per
     packed = [
         F.sum(
             F.expr(
                 " + ".join(
-                    f"(shiftleft(shiftright(h, {per * j + b}) & 1, {lane * b}))"
+                    f"(shiftleft(shiftright(h, {per * j + b}) & 1, {lane_w * b}))"
                     for b in range(per)
                     if per * j + b < bits
                 )
@@ -1553,21 +1493,55 @@ def _simhash_md5_fingerprint_df(docs: DataFrame) -> DataFrame:
     ]
     agg = tok_hash.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"), *packed)
     agg = agg.select(
-        "doc_id",
-        "n",
-        F.array(*[F.col(f"p{j}") for j in range(n_counters)]).alias("parr"),
+        "doc_id", "n", F.array(*[F.col(f"p{j}") for j in range(n_counters)]).alias("parr")
     )
+    # Bit assembly as ONE higher-order aggregate over the counter array —
+    # `bits` interpreted lambda steps on the tiny per-doc aggregate,
+    # instead of a 64-term when/otherwise tree (which cost more in
+    # per-DataFrame Catalyst analysis than the whole query's executor
+    # time at sf0.1).
     fingerprint = F.expr(
         f"""
         CASE WHEN n > {SIMHASH_MAX_TOKENS}
-             THEN raise_error('simhash_md5: document exceeds {SIMHASH_MAX_TOKENS} tokens')
+             THEN raise_error('simhash ({lane.name}): document exceeds {SIMHASH_MAX_TOKENS} tokens')
         ELSE aggregate(sequence(0, {bits - 1}), cast(0 as bigint), (acc, i) ->
           acc + IF(2 * (shiftright(element_at(parr, cast(i div {per} as int) + 1),
-                                   {lane} * cast(pmod(i, {per}) as int)) & {mask}) > n,
+                                   {lane_w} * cast(pmod(i, {per}) as int)) & {(1 << lane_w) - 1}) > n,
                    shiftleft(cast(1 as bigint), i), cast(0 as bigint)))
         END"""
     )
     return agg.select("doc_id", fingerprint.alias("simhash"))
+
+
+# ---------------------------------------------------------------------------
+# SimHash on the md5 lane (r13) — the ORACLE-BACKED near-dup path.
+#
+# `simhash_fingerprints` above is rows-only by the engine-specific-hash
+# convention. On the md5 lane (the decontaminate_bloom precedent from
+# r12) EVERYTHING downstream is exact integer arithmetic both engines
+# reproduce bit-for-bit: the per-bit ±1 sums, the majority threshold,
+# the packed fingerprint, the banded candidates, and the Hamming
+# verify. The pairs oracle is the strongest kind the catalog has:
+# DuckDB computes the BRUTE-FORCE all-pairs Hamming ≤ H set from its
+# own fingerprints, so a green row certifies the banded Spark plan's
+# pigeonhole completeness against the definition, not just against a
+# mirrored plan.
+#
+# Candidate generation is the MIH discipline of the phash family
+# (multimodal.py banner): 60 bits split into 4 bands of 15; at the
+# default H = 3 the probe radius is 3 // 4 = 0, i.e. plain exact band
+# match (any pair within 3 flipped bits shares a whole band) — no probe
+# fan-out at all; callers widening past 3 pay the Hamming-ball masks
+# exactly like phash. At 100 TB the random-collision term is
+# m·|A|·|B|/2^15 per band — the dial is band width via longer
+# fingerprints, same knob as the banner documents.
+# ---------------------------------------------------------------------------
+
+SIMHASH_MD5_BITS = _MD5.bits  # 15 md5 hex chars — positive in a signed long
+SIMHASH_MD5_BANDS = 4
+SIMHASH_MD5_BAND_WIDTH = SIMHASH_MD5_BITS // SIMHASH_MD5_BANDS  # 15
+SIMHASH_MD5_BAND_MASK = (1 << SIMHASH_MD5_BAND_WIDTH) - 1
+SIMHASH_MD5_MAX_HAMMING = 3  # classic simhash near-dup cut
 
 
 def simhash_md5_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1579,13 +1553,13 @@ def simhash_md5_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "simhash_md5",
         sf_dir,
-        lambda: _simhash_md5_fingerprint_df(load_table(spark, sf_dir, "documents")),
+        lambda: _simhash_df(load_table(spark, sf_dir, "documents"), _MD5),
         (SIMHASH_MD5_BITS,),
     )
 
 
 def simhash_md5_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalog entry: (doc_id, simhash) — exact-oracle-backed (module
+    """Catalog entry: (doc_id, simhash) — exact-oracle-backed (block
     banner: every step is integer arithmetic on md5 lanes)."""
     return simhash_md5_frame(spark, sf_dir)
 
@@ -1608,40 +1582,12 @@ def simhash_md5_pairs(
     bands = fps.select(
         "doc_id", "simhash", F.posexplode(band_arr).alias("band_idx", "band_val")
     )
-    rho = max_hamming // SIMHASH_MD5_BANDS
-    if rho > 0:
-        from .multimodal import _hamming_ball_masks  # lazy: avoids import cycle
-
-        masks = _hamming_ball_masks(SIMHASH_MD5_BAND_WIDTH, rho)
-        probe = bands.select(
-            "doc_id",
-            "simhash",
-            "band_idx",
-            "band_val",
-            F.explode(F.array(*[F.lit(m) for m in masks])).alias("__mask"),
-        ).select(
-            "doc_id",
-            "simhash",
-            "band_idx",
-            F.col("band_val").bitwiseXOR(F.col("__mask")).alias("band_val"),
-        )
-    else:
-        probe = bands
-    a, b = probe.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()  # a pair may collide in several bands — count once
+    probe = _mih_probe(bands, SIMHASH_MD5_BAND_WIDTH, max_hamming // SIMHASH_MD5_BANDS)
+    pairs = _band_pairs(
+        probe,
+        bands,
+        ("band_idx", "band_val"),
+        [("doc_id", "doc_a", "doc_b"), ("simhash", "sh_a", "sh_b")],
     )
     return pairs.select(
         "doc_a",

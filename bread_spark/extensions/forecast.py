@@ -33,7 +33,7 @@ self-join / bounded fan-out over that aggregate. Overflow honesty:
 point ANSI errors loudly.
 
 Streaming: the daily micro table IS the streaming surface (one grouped
-aggregation — `streaming/stats.py::daily_micro_stream`); a snapshot
+aggregation — `timeseries._daily_micro` on a streaming frame); a snapshot
 through these batch folds is the online backtest/EWMA monitor, the
 same frozen-fold discipline as the trend/correlation family.
 

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _band_pairs, _mih_probe, connected_components
+
 MEDIA_SCHEMA = "media_id long, kind string, payload binary, mime string"
 
 FEATURE_SCHEMA = (
@@ -385,29 +387,6 @@ PHASH_BAND_WIDTH = PHASH_BITS // PHASH_BANDS  # 16
 PHASH_MAX_HAMMING = 7
 
 
-def _hamming_ball_masks(width: int, radius: int) -> list[int]:
-    """All XOR masks of ≤ radius set bits over `width`-bit values — the
-    MIH probe set, a bounded driver-side constant (ρ=1 → 17, ρ=2 →
-    137, ρ=3 → 697 at width 16). Guarded: ρ > 3 would mean the caller
-    wants max_hamming ≥ 4×PHASH_BANDS — lengthen the fingerprint
-    instead (banner dial)."""
-    if radius > 3:
-        raise ValueError(
-            f"probe radius {radius} > 3: raise PHASH_BANDS/band width "
-            "(or fingerprint bits) instead of widening the Hamming ball"
-        )
-    from itertools import combinations
-
-    masks = [0]
-    for r in range(1, radius + 1):
-        for bits in combinations(range(width), r):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            masks.append(m)
-    return masks
-
-
 def _pack_bands(flags) -> list[int]:
     """Pack PHASH_BITS boolean flags MSB-first into PHASH_BANDS band
     ints — the one packing both kernels share, so a fingerprint's band
@@ -590,6 +569,13 @@ def media_phash_features(media: DataFrame) -> DataFrame:
     )
 
 
+def _band_rows(feats: DataFrame) -> DataFrame:
+    """(media_id, bands, band_idx, band_val): one row per fingerprint band."""
+    return feats.select(
+        "media_id", "bands", F.posexplode("bands").alias("band_idx", "band_val")
+    )
+
+
 def phash_candidate_pairs(
     feats: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
@@ -604,41 +590,12 @@ def phash_candidate_pairs(
     contains b's value. The exact 64-bit Hamming distance (computed
     band-wise) then filters to ≤ max_hamming. Output:
     (media_id_a, media_id_b, hamming)."""
-    masks = _hamming_ball_masks(
-        PHASH_BAND_WIDTH, max_hamming // PHASH_BANDS
-    )
-    bands = feats.select(
-        "media_id",
-        "bands",
-        F.posexplode("bands").alias("band_idx", "band_val"),
-    )
-    probe = bands.select(
-        "media_id",
-        "bands",
-        "band_idx",
-        "band_val",
-        F.explode(F.array(*[F.lit(m) for m in masks])).alias("__mask"),
-    ).select(
-        "media_id",
-        "bands",
-        "band_idx",
-        F.col("band_val").bitwiseXOR(F.col("__mask")).alias("probe_val"),
-    )
-    a, b = probe.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.probe_val") == F.col("b.band_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_id_a"),
-            F.col("b.media_id").alias("media_id_b"),
-            F.col("a.bands").alias("bands_a"),
-            F.col("b.bands").alias("bands_b"),
-        )
-        .distinct()  # a pair may collide in several bands — count once
+    bands = _band_rows(feats)
+    pairs = _band_pairs(
+        _mih_probe(bands, PHASH_BAND_WIDTH, max_hamming // PHASH_BANDS),
+        bands,
+        ("band_idx", "band_val"),
+        [("media_id", "media_id_a", "media_id_b"), ("bands", "bands_a", "bands_b")],
     )
     # per-band xor stays < 2^16, so bit_count arithmetic is ANSI-safe
     hamming = F.expr(
@@ -734,29 +691,9 @@ def phash_gate(
     Inside one batch both joins are keyed on
     (band_idx, band_val)/media_id — no all-pairs stage, payloads never
     shuffle."""
-    masks = _hamming_ball_masks(
-        PHASH_BAND_WIDTH, max_hamming // PHASH_BANDS
-    )
     feats = media_phash_features(media)
-    incoming = (
-        feats.select(
-            "media_id",
-            "bands",
-            F.posexplode("bands").alias("band_idx", "band_val"),
-        )
-        .select(
-            "media_id",
-            "bands",
-            "band_idx",
-            "band_val",
-            F.explode(F.array(*[F.lit(m) for m in masks])).alias("__mask"),
-        )
-        .select(
-            "media_id",
-            "bands",
-            "band_idx",
-            F.col("band_val").bitwiseXOR(F.col("__mask")).alias("band_val"),
-        )
+    incoming = _mih_probe(
+        _band_rows(feats), PHASH_BAND_WIDTH, max_hamming // PHASH_BANDS
     )
     base = base_feats.select(
         F.col("bands").alias("base_bands"),
@@ -798,8 +735,6 @@ def media_phash_dedup_report(spark, sf_dir: str) -> DataFrame:
 
 
 def _phash_report_build(spark, sf_dir: str) -> DataFrame:
-    from .dedup import connected_components
-
     pairs = phash_pair_frame(spark, sf_dir).select(
         F.col("media_id_a").alias("doc_a"), F.col("media_id_b").alias("doc_b")
     )

@@ -1287,23 +1287,14 @@ def embedding_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the shared `connected_components` harness (per-round keyed
     join+groupBy, driver sees only a changed-count aggregate).
     """
-    from .dedup import connected_components
+    from .dedup import _survivor_corpus, connected_components
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     nodes = emb.select(F.col("vec_id").alias("doc_id"))
     pairs = embedding_cosine_dups(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    comp = connected_components(nodes, pairs)
-    survivors = comp.groupBy(F.col("cluster_id").alias("vec_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return emb.join(survivors, "vec_id").select(
-        "vec_id",
-        "label",
-        "cluster_size",
-        (F.col("cluster_size") - 1).cast("long").alias("n_dups_removed"),
-    )
+    return _survivor_corpus(emb, connected_components(nodes, pairs))
 
 
 ORACLE_SQL["embedding_dedup_corpus"] = f"""

@@ -30,9 +30,9 @@ convention). No collect, no broadcast of anything unbounded.
 Streaming: the sufficient statistic (per-source component sums +
 counts) maintains itself as ONE grouped streaming aggregation — the
 `nb_model_count_stream` discipline; the O(sources²) cosine matrix is
-the batch snapshot read of that state (`source_sums_stream` +
-tests/test_streaming_source_sim.py pin the fold and the
-snapshot→batch-scorer identity)."""
+the batch snapshot read of that state (`source_sums_df` on a
+streaming frame; tests/test_streaming_source_sim.py pins the fold and
+the snapshot→batch-scorer identity)."""
 
 from __future__ import annotations
 

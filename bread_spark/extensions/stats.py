@@ -55,11 +55,11 @@ plausible corpus (a daily micro-sum would need to exceed ~4e16 for
 ANSI errors loudly and the micro scale drops to 1e3).
 
 Streaming: the daily micro table IS the streaming surface — one
-grouped aggregation (`streaming/stats.py::daily_micro_stream`, the
-`ab_moments_stream` discipline); a snapshot through the batch
+grouped aggregation (`timeseries._daily_micro` applied to a streaming
+frame, the `ab_moments_df` discipline); a snapshot through the batch
 `trend_from_daily` / `correlation_from_daily` folds is the online
 trend/correlation monitor, pinned in tests/test_streaming_stats.py.
-`benford_counts_stream` is the same discipline over (type, digit)
+`benford_counts_df` is the same discipline over (type, digit)
 counts. Batch-only: `source_concentration` (the Gini rank is a
 total-order sort of the aggregate — recomputed per snapshot, not
 incrementally maintainable) and `rolling_7d_distinct_users` (sliding

@@ -304,7 +304,7 @@ def acf_from_daily(daily: DataFrame, max_lag: int = ACF_MAX_LAG) -> DataFrame:
     (type, day+lag) — shuffle on the rollup, never on raw events.
 
     Streaming surface: same as trend/correlation — a snapshot of the
-    streamed daily micro table (`daily_micro_stream`) fed through this
+    streamed daily micro table (`_daily_micro` on a stream) fed through this
     batch fold IS the batch answer (pinned in
     tests/test_streaming_stats.py)."""
     a = daily.select(

@@ -375,14 +375,12 @@ def _silver_intact(out_dir: str) -> bool:
     only be restored from bronze."""
     from .io import recover_compaction
 
-    for name in SILVER_TABLES:
-        path = f"{out_dir}/{name}"
-        if os.path.isdir(f"{path}__compacting") or os.path.isdir(f"{path}__precompact"):
-            try:
-                recover_compaction(path)
-            except FileNotFoundError:  # nothing recoverable: rebuild
-                return False
-    return all(os.path.isdir(f"{out_dir}/{name}") for name in SILVER_TABLES)
+    try:
+        for name in SILVER_TABLES:
+            recover_compaction(f"{out_dir}/{name}")
+    except FileNotFoundError:  # a table gone with nothing to restore it from
+        return False
+    return True
 
 
 def _new_files(ledger: dict | None, blocks: dict, txs: dict) -> tuple[list, list] | None:

@@ -1,11 +1,11 @@
-"""Streaming twins of the stats family's sufficient statistics.
+"""Streaming pins of the stats family.
 
-The (event_type, day, x) daily micro-sum table is the ENTIRE state the
-trend and correlation entries need, and it folds as one grouped
-streaming aggregation in complete mode (the `ab_moments_stream`
-discipline); a snapshot fed through the BATCH `trend_from_daily` /
-`correlation_from_daily` IS the batch answer over everything seen.
-Same for the Benford (event_type, digit) count table. Pinned,
+The (event_type, day, x) daily micro-sum table, the (day, event_type)
+count table and the Benford (event_type, digit) count table are each
+one grouped aggregation, so their batch kernels (`_daily_micro`,
+`daily_type_counts_df`, `benford_counts_df`) run unchanged on a
+streaming frame in complete mode; a snapshot fed through the batch
+projections IS the batch answer over everything seen. Pinned,
 including a checkpoint fold, in tests/test_streaming_stats.py.
 
 Batch-only members (module-docstring notes in extensions/stats.py):
@@ -25,29 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..extensions.daily import daily_type_counts_df
-from ..extensions.stats import benford_counts_df
-from ..extensions.timeseries import _daily_micro
-
-
-def daily_micro_stream(stream: DataFrame) -> DataFrame:
-    """Running (event_type, day, x) daily micro-sums — the identical
-    fold expression as the batch `_daily_micro`."""
-    return _daily_micro(stream)
-
-
-def daily_type_counts_stream(stream: DataFrame) -> DataFrame:
-    """Running (day, event_type, cnt) counts — the identical fold as
-    the batch `daily_type_counts_df`; a snapshot through the batch
-    `type_share_df` is the online composition monitor."""
-    return daily_type_counts_df(stream)
-
-
-def benford_counts_stream(stream: DataFrame) -> DataFrame:
-    """Running (event_type, digit, cnt) first-digit counts — the
-    identical fold expression as the batch `benford_counts_df`."""
-    return benford_counts_df(stream)
 
 
 def engagement_register_stream(

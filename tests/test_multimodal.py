@@ -424,7 +424,7 @@ def test_hamming_ball_masks_sizes_and_guard():
     the fingerprint, banner dial) and raises."""
     import pytest
 
-    from bread_spark.extensions.multimodal import _hamming_ball_masks
+    from bread_spark.extensions.dedup import _hamming_ball_masks
 
     assert len(_hamming_ball_masks(16, 0)) == 1
     assert len(_hamming_ball_masks(16, 1)) == 17
@@ -445,13 +445,13 @@ def test_phash_candidate_fanout_bounded_at_16bit_bands():
     ~30× worse than the 4×16 MIH geometry this pin locks in. Counted
     in Python over the same fingerprints the Spark join buckets (the
     probe-hit predicate 'some band within ρ' is exactly the join's
-    (band_idx, probe_val) match), deterministic via seeded payloads."""
+    (band_idx, band_val) match), deterministic via seeded payloads."""
+    from bread_spark.extensions.dedup import _hamming_ball_masks
     from bread_spark.extensions.multimodal import (
         PHASH_BANDS,
         PHASH_BAND_WIDTH,
         PHASH_MAX_HAMMING,
         _fake_phash,
-        _hamming_ball_masks,
     )
 
     n = 300

@@ -238,14 +238,24 @@ def test_minhash_md5_candidates_banded_equijoin(plans):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_minhash_md5_signature_single_shuffle(spark, sf_dir):
-    """The md5-signature core (pre-seam) must keep the one-shuffle shape
-    of `minhash_signatures`: a single Exchange keyed on doc_id with
-    map-side partial mins — not a per-permutation explode."""
-    from bread_spark.extensions.dedup import _minhash_md5_sig_df
+@pytest.mark.parametrize("lane", ["xxhash64", "md5"])
+def test_minhash_md5_signature_single_shuffle(spark, sf_dir, lane):
+    """Both signature builds (pre-seam) — the xxhash64 one under the
+    LSH bands and the md5 one — keep the one-shuffle shape: a single
+    Exchange keyed on doc_id with map-side partial mins — not a
+    per-permutation explode."""
+    from bread_spark.extensions.dedup import (
+        _minhash_md5_sig_df,
+        _word_shingles_with_dups,
+        minhash_signatures,
+    )
     from bread_spark.io import load_table
 
-    p = physical_plan(_minhash_md5_sig_df(load_table(spark, sf_dir, "documents")))
+    docs = load_table(spark, sf_dir, "documents")
+    if lane == "md5":
+        p = physical_plan(_minhash_md5_sig_df(docs))
+    else:
+        p = physical_plan(minhash_signatures(_word_shingles_with_dups(docs)))
     assert "Exchange hashpartitioning(doc_id" in p
     assert p.count("Exchange hashpartitioning") == 1
     assert "partial_min" in p

@@ -148,16 +148,18 @@ def test_simhash_matches_per_bit_plan(spark, sf_dir):
     assert got == expected
 
 
-def test_simhash_overflow_guard_raises(spark, sf_dir, monkeypatch):
+@pytest.mark.parametrize("lane", ["_XXHASH64", "_MD5"], ids=["xxhash64", "md5"])
+def test_simhash_overflow_guard_raises(spark, sf_dir, monkeypatch, lane):
     """A document over the lane-capacity token cap must raise, not emit a
-    wrong fingerprint from a saturated counter."""
-    import pytest
-
+    wrong fingerprint from a saturated counter — on both hash lanes. The
+    kernel is called directly: a cached seam frame would hide the raise."""
     from bread_spark.extensions import dedup
+    from bread_spark.io import load_table
 
     monkeypatch.setattr(dedup, "SIMHASH_MAX_TOKENS", 5)
+    docs = load_table(spark, sf_dir, "documents")
     with pytest.raises(Exception, match="exceeds 5 tokens"):
-        dedup.simhash_fingerprints(spark, sf_dir).collect()
+        dedup._simhash_df(docs, getattr(dedup, lane)).collect()
 
 
 def test_pivot_roundtrip_random_occurrences(spark):

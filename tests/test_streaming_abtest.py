@@ -1,6 +1,6 @@
-"""Streaming A/B moment twin: online moments must equal the batch
-fold and feed the batch report (default tier); the same checkpoint
-must keep folding (nightly)."""
+"""Streaming A/B moments: the batch `ab_moments_df` run on a streaming
+frame must equal the batch fold and feed the batch report (default
+tier); the same checkpoint must keep folding (nightly)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import os
 import pytest
 
 from bread_spark.extensions.abtest import ab_moments_df, ab_report_df
-from bread_spark.streaming.abtest import ab_moments_stream
 from tests.test_abtest import EV_SCHEMA
 
 BATCH1 = [
@@ -39,7 +38,7 @@ def _write(src, name, rows):
 def _run(spark, src, ckpt, table):
     stream = spark.readStream.schema(EV_SCHEMA).json(src)
     q = (
-        ab_moments_stream(stream)
+        ab_moments_df(stream)
         .writeStream.format("memory")
         .queryName(table)
         .option("checkpointLocation", ckpt)

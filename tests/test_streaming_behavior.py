@@ -1,6 +1,6 @@
-"""Streaming conversion twin: the per-user firsts table maintained
-online must equal the batch fold and feed the batch report (default
-tier); the same checkpoint must keep folding — including a user whose
+"""Streaming conversion firsts: the batch `conversion_firsts_df` run on
+a streaming frame must equal the batch fold and feed the batch report
+(default tier); the same checkpoint must keep folding — including a user whose
 first signup arrives in a LATER batch than their purchase (nightly)."""
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from bread_spark.extensions.behavior import (
     conversion_firsts_df,
     conversion_report_df,
 )
-from bread_spark.streaming.behavior import conversion_firsts_stream
 from tests.test_behavior import EV_SCHEMA
 
 BATCH1 = [
@@ -54,7 +53,7 @@ def _batch_df(spark, rows):
 def _run(spark, src, ckpt, table):
     stream = spark.readStream.schema(EV_SCHEMA).json(src)
     q = (
-        conversion_firsts_stream(stream)
+        conversion_firsts_df(stream)
         .writeStream.format("memory")
         .queryName(table)
         .option("checkpointLocation", ckpt)

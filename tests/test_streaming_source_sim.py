@@ -1,6 +1,6 @@
-"""Streaming source-sum twin: the online sufficient statistic must
-equal the batch sums and feed the batch pairwise scorer (default
-tier); the same checkpoint must keep folding (nightly)."""
+"""Streaming source sums: the batch `source_sums_df` run on a streaming
+frame must equal the batch sums and feed the batch pairwise scorer
+(default tier); the same checkpoint must keep folding (nightly)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import os
 import pytest
 
 from bread_spark.extensions.source_sim import similarity_matrix_df, source_sums_df
-from bread_spark.streaming.source_sim import source_sums_stream
 
 SCHEMA = "source string, embedding array<float>"
 
@@ -33,7 +32,7 @@ def _write(src, name, rows):
 def _run(spark, src, ckpt, table):
     stream = spark.readStream.schema(SCHEMA).json(src)
     q = (
-        source_sums_stream(stream)
+        source_sums_df(stream)
         .writeStream.format("memory")
         .queryName(table)
         .option("checkpointLocation", ckpt)

@@ -1,7 +1,7 @@
-"""Streaming stats twins: the daily micro-sum and Benford count tables
-maintained online must equal the batch folds and feed the batch
-trend/correlation/report projections (default tier); the same
-checkpoint must keep folding (nightly)."""
+"""Streaming stats: the batch daily micro-sum, type-count and Benford
+count kernels run on a streaming frame must equal the batch folds and
+feed the batch trend/correlation/report projections (default tier);
+the same checkpoint must keep folding (nightly)."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from bread_spark.extensions.stats import (
     trend_from_daily,
 )
 from bread_spark.extensions.timeseries import _daily_micro
-from bread_spark.streaming.stats import benford_counts_stream, daily_micro_stream
 from tests.test_stats import EV_SCHEMA
 
 BATCH1 = [
@@ -77,7 +76,7 @@ def test_daily_stream_matches_batch_and_feeds_trend_and_corr(spark, tmp_path):
     _write(src, "b1.json", BATCH1)
     from bread_spark.extensions.timeseries import acf_from_daily
 
-    got = _run(spark, src, ckpt, "stats_d1", daily_micro_stream)
+    got = _run(spark, src, ckpt, "stats_d1", _daily_micro)
     batch = _daily_micro(_batch_df(spark, BATCH1))
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in batch.collect()
@@ -92,7 +91,7 @@ def test_benford_stream_matches_batch_and_feeds_report(spark, tmp_path):
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
     os.makedirs(src)
     _write(src, "b1.json", BATCH1)
-    got = _run(spark, src, ckpt, "stats_b1", benford_counts_stream)
+    got = _run(spark, src, ckpt, "stats_b1", benford_counts_df)
     batch = benford_counts_df(_batch_df(spark, BATCH1))
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in batch.collect()
@@ -107,9 +106,9 @@ def test_daily_stream_folds_on_the_same_checkpoint(spark, tmp_path):
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
     os.makedirs(src)
     _write(src, "b1.json", BATCH1)
-    _run(spark, src, ckpt, "stats_n1", daily_micro_stream)
+    _run(spark, src, ckpt, "stats_n1", _daily_micro)
     _write(src, "b2.json", BATCH2)
-    got2 = _run(spark, src, ckpt, "stats_n2", daily_micro_stream)
+    got2 = _run(spark, src, ckpt, "stats_n2", _daily_micro)
     both = _daily_micro(_batch_df(spark, BATCH1 + BATCH2))
     assert {tuple(r) for r in got2.collect()} == {
         tuple(r) for r in both.collect()
@@ -121,12 +120,11 @@ def test_daily_stream_folds_on_the_same_checkpoint(spark, tmp_path):
 
 def test_type_counts_stream_matches_batch_and_feeds_shares(spark, tmp_path):
     from bread_spark.extensions.daily import daily_type_counts_df, type_share_df
-    from bread_spark.streaming.stats import daily_type_counts_stream
 
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
     os.makedirs(src)
     _write(src, "b1.json", BATCH1)
-    got = _run(spark, src, ckpt, "stats_c1", daily_type_counts_stream)
+    got = _run(spark, src, ckpt, "stats_c1", daily_type_counts_df)
     batch = daily_type_counts_df(_batch_df(spark, BATCH1))
     assert {tuple(r) for r in got.collect()} == {
         tuple(r) for r in batch.collect()
@@ -149,7 +147,7 @@ def test_daily_stream_feeds_forecast_folds(spark, tmp_path):
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
     os.makedirs(src)
     _write(src, "b1.json", BATCH1 + BATCH2)
-    got = _run(spark, src, ckpt, "stats_fc1", daily_micro_stream)
+    got = _run(spark, src, ckpt, "stats_fc1", _daily_micro)
     batch = _daily_micro(_batch_df(spark, BATCH1 + BATCH2))
     for proj in (seasonal_naive_error_df, lambda d: ewma_df(d)):
         snap = proj(got).collect()
