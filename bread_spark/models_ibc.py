@@ -250,3 +250,16 @@ def assert_unique(df: DataFrame, col: str) -> None:
 def assert_not_null(df: DataFrame, col: str) -> None:
     if not df.filter(F.col(col).isNull()).isEmpty():
         raise ValueError(f"column {col} has nulls")
+
+
+def assert_unique_not_null(df: DataFrame, col: str) -> None:
+    """`assert_unique` then `assert_not_null` on one column, same errors,
+    in one aggregate job instead of a job per check."""
+    rows, distinct, nulls = df.agg(
+        F.count(F.lit(1)), F.count_distinct(col), F.count_if(F.col(col).isNull())
+    ).first()
+    # groupBy puts every null in one group, as `assert_unique` counts them
+    if distinct + (nulls > 0) < rows:
+        raise ValueError(f"column {col} not unique")
+    if nulls:
+        raise ValueError(f"column {col} has nulls")

@@ -20,12 +20,20 @@ Design decisions (SURVEY.md §4.2):
 
 Scale: every transform is a narrow map until the single pivot/groupBy
 shuffle; the blocks-time join broadcasts the (small per-batch) blocks side.
+`run` reads and parses each batch's blocks and txs JSON once, into two
+cached frames the four tables derive from (`parse_tables`), and writes the
+four tables side by side (`session.run_concurrently`): a sync batch is a
+few MB, so each of its jobs is one task, and run one after another they
+would leave all but one core idle.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
+from functools import partial
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,11 +45,13 @@ from .schemas import (
     RAW_TX_SCHEMA,
     TX_RESULT_COLUMNS,
 )
+from .session import run_concurrently
 
 __all__ = [
     "read_raw_blocks",
     "read_raw_txs",
     "parse_blocks",
+    "parse_txs",
     "parse_tx_result",
     "parse_log_attributes",
     "parse_events_wide",
@@ -125,61 +135,20 @@ def parse_blocks(raw_blocks: DataFrame) -> DataFrame:
     )
 
 
-def parse_tx_result(raw_txs: DataFrame) -> DataFrame:
-    """tx_result silver table *before* the block-time join (reference
-    parse.py:141-146): struct flatten (P2) + key columns."""
-    return raw_txs.select(
-        F.col("hash"),
-        F.col("height").cast("long").alias("height"),
-        F.col("tx_result.gas_wanted").alias("gas_wanted"),
-        F.col("tx_result.gas_used").alias("gas_used"),
-        F.col("tx_result.code").alias("code"),
-        F.col("tx_result.codespace").alias("codespace"),
-        F.col("tx_result.info").alias("info"),
-    )
+# tx_result fields kept as tx_result columns (reference parse.py:141-146)
+TX_SCALARS = ("gas_wanted", "gas_used", "code", "codespace", "info")
 
 
-def parse_log_attributes(raw_txs: DataFrame) -> DataFrame:
-    """log_attributes silver table — long/EAV (reference parse.py:148-162).
+def parse_txs(raw_txs: DataFrame) -> DataFrame:
+    """The one parsed tx frame the three tx silver tables derive from, one
+    row per raw tx: `hash`, `height`, the `tx_result` scalars, `logs` (the
+    `log` string through from_json) and `attrs`, the tx's decoded
+    event attributes with their ordinals (see `parse_events_attrs`), NULL
+    when the tx has none.
 
-    The `log` string → from_json (P4: malformed → NULL row, the 'safe
-    parse' semantics) → explode msgs → explode events → explode attributes
-    (R1). Explode preserves sibling columns, so no np.repeat (R2) needed.
-    """
-    parsed = raw_txs.select(
-        "hash",
-        F.col("height").cast("long").alias("height"),
-        F.from_json("tx_result.log", LOG_SCHEMA).alias("logs"),
-    )
-    return (
-        parsed.select("hash", "height", F.explode("logs").alias("msg"))
-        # P17: single-msg logs omit msg_index — fill 0 (the reference's
-        # fillna(0) on the normalized logs, parse.py:154)
-        .select("hash", "height", F.coalesce(F.col("msg.msg_index"), F.lit(0).cast("long")).alias("msg_index"), F.explode("msg.events").alias("event"))
-        .select("hash", "height", "msg_index", F.col("event.type").alias("type"), F.explode("event.attributes").alias("attr"))
-        .select("hash", "height", "msg_index", "type", F.col("attr.key").alias("key"), F.col("attr.value").alias("value"))
-    )
-
-
-def parse_events_attrs(raw_txs: DataFrame) -> DataFrame:
-    """Typed-events attributes in EAV form with deterministic ordinals
-    (the intent of reference parse.py:164-178, without its row
-    misalignment — SURVEY R5).
-
-    (event_pos, attr_pos) give a total order per tx; `occurrence` = rank
-    of this attr among same-combined_key attrs of the tx, in that order.
-
-    ZERO-SHUFFLE plan: a tx's events live in ONE array cell, so the
-    ordinal is computed inside the array (count of earlier elements with
-    the same combined_key — O(n²) interpreted-lambda steps on a
-    few-element array) before a single explode. The first cut instead
-    ran row_number() over Window.partitionBy(hash, height, combined_key)
-    AFTER exploding — a full shuffle+sort of the EAV table, the largest
-    frame in the pipeline, purely to recover per-tx information the
-    pre-explode row still had. At 100 TB that shuffle is the difference
-    between a map-only parse and re-clustering the corpus; equality with
-    the window plan is pinned in
-    tests/test_parse.py::test_events_attrs_matches_window_plan.
+    Each public `parse_*` tx function is a projection of this frame, and
+    column pruning drops what it does not select, so a caller parsing only
+    tx_result pays for no JSON or base64 work.
     """
     # flattened per-tx attr array: (event_pos, attr_pos, type, key, value)
     # with b64 decode (P5 — reference decode_base64 at parse.py:51-64)
@@ -210,26 +179,123 @@ def parse_events_attrs(raw_txs: DataFrame) -> DataFrame:
                 concat_ws('_', arr[i].type, arr[i].key))) as bigint)))
         """
     )
+    cols = ["hash", "height", *TX_SCALARS, "logs"]
+    # `when`: for an empty array, sequence(0, -1) is [0, -1] and arr[0] fails
+    return raw_txs.select(
+        "hash",
+        F.col("height").cast("long").alias("height"),
+        *[F.col(f"tx_result.{c}").alias(c) for c in TX_SCALARS],
+        F.from_json("tx_result.log", LOG_SCHEMA).alias("logs"),
+        arr.alias("arr"),
+    ).select(*cols, F.when(F.size("arr") > 0, occ).alias("attrs"))
+
+
+def _tx_result(txs: DataFrame) -> DataFrame:
+    return txs.select("hash", "height", *TX_SCALARS)
+
+
+def parse_tx_result(raw_txs: DataFrame) -> DataFrame:
+    """tx_result silver table *before* the block-time join (reference
+    parse.py:141-146): struct flatten (P2) + key columns."""
+    return _tx_result(parse_txs(raw_txs))
+
+
+def _log_attributes(txs: DataFrame) -> DataFrame:
     return (
-        raw_txs.select(
-            "hash",
-            F.col("height").cast("long").alias("height"),
-            arr.alias("arr"),
-        )
-        .filter(F.size("arr") > 0)
-        .select("hash", "height", F.explode(occ).alias("r"))
-        .select(
-            "hash",
-            "height",
-            F.col("r.event_pos").alias("event_pos"),
-            F.col("r.attr_pos").alias("attr_pos"),
-            F.col("r.type").alias("type"),
-            F.col("r.key").alias("key"),
-            F.col("r.value").alias("value"),
-            F.col("r.combined_key").alias("combined_key"),
-            F.col("r.occurrence").alias("occurrence"),
-        )
+        txs.select("hash", "height", F.explode("logs").alias("msg"))
+        # P17: single-msg logs omit msg_index — fill 0 (the reference's
+        # fillna(0) on the normalized logs, parse.py:154)
+        .select("hash", "height", F.coalesce(F.col("msg.msg_index"), F.lit(0).cast("long")).alias("msg_index"), F.explode("msg.events").alias("event"))
+        .select("hash", "height", "msg_index", F.col("event.type").alias("type"), F.explode("event.attributes").alias("attr"))
+        .select("hash", "height", "msg_index", "type", F.col("attr.key").alias("key"), F.col("attr.value").alias("value"))
     )
+
+
+def parse_log_attributes(raw_txs: DataFrame) -> DataFrame:
+    """log_attributes silver table — long/EAV (reference parse.py:148-162).
+
+    The `log` string → from_json (P4: malformed → NULL row, the 'safe
+    parse' semantics) → explode msgs → explode events → explode attributes
+    (R1). Explode preserves sibling columns, so no np.repeat (R2) needed.
+    """
+    return _log_attributes(parse_txs(raw_txs))
+
+
+def _events_attrs(txs: DataFrame) -> DataFrame:
+    return txs.select("hash", "height", F.explode("attrs").alias("r")).select(
+        "hash",
+        "height",
+        *[
+            F.col(f"r.{c}").alias(c)
+            for c in ("event_pos", "attr_pos", "type", "key", "value", "combined_key", "occurrence")
+        ],
+    )
+
+
+def parse_events_attrs(raw_txs: DataFrame) -> DataFrame:
+    """Typed-events attributes in EAV form with deterministic ordinals
+    (the intent of reference parse.py:164-178, without its row
+    misalignment — SURVEY R5).
+
+    (event_pos, attr_pos) give a total order per tx; `occurrence` = rank
+    of this attr among same-combined_key attrs of the tx, in that order.
+
+    ZERO-SHUFFLE plan: a tx's events live in ONE array cell, so the
+    ordinal is computed inside the array (count of earlier elements with
+    the same combined_key — O(n²) interpreted-lambda steps on a
+    few-element array) before a single explode. The first cut instead
+    ran row_number() over Window.partitionBy(hash, height, combined_key)
+    AFTER exploding — a full shuffle+sort of the EAV table, the largest
+    frame in the pipeline, purely to recover per-tx information the
+    pre-explode row still had. At 100 TB that shuffle is the difference
+    between a map-only parse and re-clustering the corpus; equality with
+    the window plan is pinned in
+    tests/test_parse.py::test_events_attrs_matches_window_plan.
+    """
+    return _events_attrs(parse_txs(raw_txs))
+
+
+# The distinct combined_key set of raw txs, decoding only event types and
+# attribute keys (see `parse_events_wide`). Over uncached bronze it is the
+# cheap discovery: on 4 vCPU, median of 9, it took 189 ms on 100 blocks and
+# 174 ms on 1,300, against 1.06 s and 5.9 s for `attrs.combined_key` of
+# `parse_txs`, whose value decode and occurrence lambda column pruning
+# does not remove. `parse_tables` reads the keys from its cached tx frame
+# instead, which has already paid for that parse.
+_RAW_PIVOT_KEYS = """
+    flatten(transform(tx_result.events, e ->
+        transform(e.attributes, a ->
+            concat_ws('_', e.type, cast(unbase64(a.key) as string)))))
+"""
+
+
+def _pivot_keys(df: DataFrame, keys) -> list[str]:
+    """The sorted distinct values of the combined_key array column `keys`
+    over `df`, as Spark's dynamic pivot would discover them, under its
+    `spark.sql.pivotMaxValues` guard (ADVICE r13 #1): without it a
+    pathological combined_key vocabulary would collect unboundedly to the
+    driver where `grouped.pivot(col)` would have raised."""
+    max_values = int(df.sparkSession.conf.get("spark.sql.pivotMaxValues", "10000"))
+    key_values = [
+        r[0]
+        for r in df.select(F.explode(keys).alias("ck"))
+        .distinct()
+        .sort("ck")
+        .limit(max_values + 1)
+        .collect()
+    ]
+    if len(key_values) > max_values:
+        raise ValueError(
+            f"The pivot column combined_key has more than {max_values} "
+            "distinct values; raise spark.sql.pivotMaxValues or pass "
+            "key_values explicitly."
+        )
+    return key_values
+
+
+def _events_wide(txs: DataFrame, key_values: list[str]) -> DataFrame:
+    grouped = _events_attrs(txs).groupBy("hash", "height", "occurrence")
+    return grouped.pivot("combined_key", key_values).agg(F.first("value"))
 
 
 def parse_events_wide(raw_txs: DataFrame, key_values: list[str] | None = None) -> DataFrame:
@@ -251,38 +317,9 @@ def parse_events_wide(raw_txs: DataFrame, key_values: list[str] | None = None) -
     the built-in path performs. One full EAV pass per build instead of
     two.
     """
-    attrs = parse_events_attrs(raw_txs)
-    grouped = attrs.groupBy("hash", "height", "occurrence")
     if key_values is None:
-        keys_arr = F.expr(
-            """
-            flatten(transform(tx_result.events, e ->
-                transform(e.attributes, a ->
-                    concat_ws('_', e.type, cast(unbase64(a.key) as string)))))
-            """
-        )
-        # Mirror the built-in dynamic pivot's spark.sql.pivotMaxValues
-        # guard (ADVICE r13 #1): without it a pathological combined_key
-        # vocabulary would collect unboundedly to the driver where
-        # grouped.pivot(col) would have raised.
-        max_values = int(
-            raw_txs.sparkSession.conf.get("spark.sql.pivotMaxValues", "10000")
-        )
-        key_values = [
-            r[0]
-            for r in raw_txs.select(F.explode(keys_arr).alias("ck"))
-            .distinct()
-            .sort("ck")
-            .limit(max_values + 1)
-            .collect()
-        ]
-        if len(key_values) > max_values:
-            raise ValueError(
-                f"The pivot column combined_key has more than {max_values} "
-                "distinct values; raise spark.sql.pivotMaxValues or pass "
-                "key_values explicitly."
-            )
-    return grouped.pivot("combined_key", key_values).agg(F.first("value"))
+        key_values = _pivot_keys(raw_txs, F.expr(_RAW_PIVOT_KEYS))
+    return _events_wide(parse_txs(raw_txs), key_values)
 
 
 def attach_block_time(df: DataFrame, blocks: DataFrame) -> DataFrame:
@@ -296,23 +333,38 @@ def attach_block_time(df: DataFrame, blocks: DataFrame) -> DataFrame:
 SILVER_TABLES = ("blocks", "tx_result", "log_attributes", "events")
 
 
-def parse_tables(spark: SparkSession, blocks_path, txs_path) -> dict[str, DataFrame]:
+@contextmanager
+def parse_tables(spark: SparkSession, blocks_path, txs_path) -> Iterator[dict[str, DataFrame]]:
     """The four silver tables over the given bronze (a path or a list of
-    files each): parse, then attach the block time columns."""
-    raw_blocks = read_raw_blocks(spark, blocks_path)
-    raw_txs = read_raw_txs(spark, txs_path)
+    files each), for the body of a `with` block.
 
-    blocks = parse_blocks(raw_blocks)
-    tx_result = attach_block_time(parse_tx_result(raw_txs), blocks).select(*TX_RESULT_COLUMNS)
-    log_attributes = attach_block_time(parse_log_attributes(raw_txs), blocks).select(
-        *LOG_ATTRIBUTES_COLUMNS
-    )
-    events = attach_block_time(parse_events_wide(raw_txs), blocks)
+    Blocks and txs are each read and parsed once, into a cached frame that
+    every table derives from: `blocks` is its frame, the tx tables project
+    `parse_txs`, and each attaches block time from the cached blocks. The
+    `events` pivot keys are discovered from the cached tx frame before any
+    join, so the key set is that of the whole batch. Both frames are
+    unpersisted when the block exits; a table used after that re-reads
+    its bronze.
+    """
+    blocks = parse_blocks(read_raw_blocks(spark, blocks_path)).cache()
+    txs = parse_txs(read_raw_txs(spark, txs_path)).cache()
+    try:
+        yield _silver(blocks, txs, _pivot_keys(txs, F.col("attrs.combined_key")))
+    finally:
+        txs.unpersist()
+        blocks.unpersist()
+
+
+def _silver(blocks: DataFrame, txs: DataFrame, keys: list[str]) -> dict[str, DataFrame]:
+    """The four silver tables from parsed blocks, a `parse_txs` frame and
+    the `events` pivot keys."""
     return {
         "blocks": blocks,
-        "tx_result": tx_result,
-        "log_attributes": log_attributes,
-        "events": events,
+        "tx_result": attach_block_time(_tx_result(txs), blocks).select(*TX_RESULT_COLUMNS),
+        "log_attributes": attach_block_time(_log_attributes(txs), blocks).select(
+            *LOG_ATTRIBUTES_COLUMNS
+        ),
+        "events": attach_block_time(_events_wide(txs, keys), blocks),
     }
 
 
@@ -412,8 +464,9 @@ def run(
     """Bronze→silver hop (reference DataParser.run, parse.py:202-226).
 
     Without `out_dir`, returns the four silver tables over the whole
-    landing zone. With it, brings `out_dir` up to date with the landing
-    zone, each table partitioned by year/month/day (SRC12), and returns
+    landing zone as lazy frames; only the `events` pivot keys are
+    discovered, by the raw-key scan of `parse_events_wide`. With it,
+    brings `out_dir` up to date with the landing zone, each table partitioned by year/month/day (SRC12), and returns
     the frames this call wrote:
 
     - files already in the parsed-file ledger are not read again; new ones
@@ -423,13 +476,16 @@ def run(
       missing (see `_silver_intact`), every table is rebuilt from the
       whole landing zone, as a full overwrite.
 
-    After each append, every partition the batch wrote to that now holds
-    more than `MAX_PARTITION_FILES` files is rewritten into one
-    (`io.compact_partitions`), so files per partition stay bounded however
-    many batches land. The ledger is marked pending before the first write
-    and committed after the last compaction, so a crash between them makes
-    the next run rebuild rather than append the same files twice or trust
-    a half-swapped partition.
+    The new files are parsed once (`parse_tables`), and the four tables
+    are written side by side, each on its own thread. After each append,
+    every partition the batch wrote to that now holds more than
+    `MAX_PARTITION_FILES` files is rewritten into one
+    (`io.compact_partitions`), by the thread that wrote the table, so
+    files per partition stay bounded however many batches land. All four
+    threads finish before the first error is raised. The ledger is marked
+    pending before the first write and committed after the last
+    compaction, so a crash between them makes the next run rebuild rather
+    than append the same files twice or trust a half-swapped partition.
 
     Appended `events` files carry only the pivot columns their batch
     produced: read silver `events` with `mergeSchema` (the
@@ -439,7 +495,9 @@ def run(
     from .io import compact_partitions, partition_files, write_partitioned
 
     if not out_dir:
-        return parse_tables(spark, blocks_path, txs_path)
+        raw_txs = read_raw_txs(spark, txs_path)
+        keys = _pivot_keys(raw_txs, F.expr(_RAW_PIVOT_KEYS))
+        return _silver(parse_blocks(read_raw_blocks(spark, blocks_path)), parse_txs(raw_txs), keys)
     blocks, txs = _list_bronze(blocks_path), _list_bronze(txs_path)
     ledger = _read_ledger(out_dir) if _silver_intact(out_dir) else None
     new = _new_files(ledger, blocks, txs)
@@ -449,9 +507,8 @@ def run(
         return {}
     else:
         mode, done = "append", ledger["files"]
-    tables = parse_tables(spark, *new)
-    _write_ledger(out_dir, done, pending=True)
-    for name, df in tables.items():
+
+    def write(name: str, df: DataFrame) -> None:
         path = f"{out_dir}/{name}"
         before = partition_files(path) if mode == "append" else {}
         write_partitioned(df, path, mode=mode)
@@ -462,5 +519,9 @@ def run(
                 if n > max(before.get(p, 0), MAX_PARTITION_FILES)
             ]
             compact_partitions(spark, path, over)
+
+    with parse_tables(spark, *new) as tables:
+        _write_ledger(out_dir, done, pending=True)
+        run_concurrently(spark, [partial(write, name, df) for name, df in tables.items()])
     _write_ledger(out_dir, {**blocks, **txs}, pending=False)
     return tables

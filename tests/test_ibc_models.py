@@ -269,3 +269,27 @@ def test_dbt_style_assertions_raise_on_bad_day_grain(spark):
     with pytest.raises(ValueError, match="has nulls"):
         M.assert_not_null(null, "day")
     M.assert_unique(null, "day")
+
+
+@pytest.mark.parametrize(
+    "days, error",
+    [
+        (["2023-07-01", "2023-07-02"], None),
+        (["2023-07-01", "2023-07-01"], "column day not unique"),
+        (["2023-07-01", None], "column day has nulls"),
+        ([None, None], "column day not unique"),
+    ],
+)
+def test_one_pass_day_grain_check_raises_as_the_pair(spark, days, error):
+    """`assert_unique_not_null` raises what `assert_unique` then
+    `assert_not_null` raise, nulls grouped as one value."""
+    df = spark.createDataFrame([(d,) for d in days], "day string")
+    for check in (
+        lambda: M.assert_unique_not_null(df, "day"),
+        lambda: (M.assert_unique(df, "day"), M.assert_not_null(df, "day")),
+    ):
+        if error is None:
+            check()
+        else:
+            with pytest.raises(ValueError, match=error):
+                check()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 from collections import Counter
 
 import pytest
@@ -207,6 +208,73 @@ def _assert_silver_is_bronze_truth(spark, silver: str, n_txs: int) -> None:
     assert hashes.distinct().count() == hashes.count() == n_txs
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _json_scans(spark, group: str, dirs: tuple[str, ...]) -> dict[str, int]:
+    """For each bronze directory, the distinct `Scan json` operators over
+    its files in the SQL executions of a job group's jobs. A cached frame's
+    plan shows under every InMemoryTableScan that reads it, so an operator
+    is told apart by its metrics' accumulator, not by its plan node."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(n - 64, 0), min(n, 64))
+    scans: dict[str, set[int]] = {d: set() for d in dirs}
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        ex_jobs = ex.jobs().keys().toSeq()
+        if not any(ex_jobs.apply(k) in jobs for k in range(ex_jobs.size())):
+            continue
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if node.name().strip() != "Scan json":
+                continue
+            acc = node.metrics().apply(0).accumulatorId()
+            for d in dirs:
+                if f"{d}/" in node.desc():
+                    scans[d].add(acc)
+    return {d: len(accs) for d, accs in scans.items()}
+
+
+def test_append_parses_each_bronze_file_once(spark, tmp_path):
+    """One append reads its batch's blocks JSON and txs JSON with one scan
+    each: all four tables and the pivot-key discovery derive from the two
+    cached parsed frames."""
+    silver = str(tmp_path / "silver")
+    bdir, tdir, n_txs = _parse_first_batch_then_land_second(spark, tmp_path, silver)
+    sc = spark.sparkContext
+    group = f"parse-once-{tmp_path.name}"
+    sc.setJobGroup(group, "one append")
+    # scan nodes abbreviate their file paths past this length
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    try:
+        P.run(spark, bdir, tdir, out_dir=silver)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    assert _json_scans(spark, group, (bdir, tdir)) == {bdir: 1, tdir: 1}
+    _assert_silver_is_bronze_truth(spark, silver, n_txs)
+
+
+def test_run_without_out_dir_returns_lazy_tables(spark, tmp_path):
+    """Without `out_dir`, `run` returns the four tables `parse_tables`
+    builds, with the same columns and rows, and leaves nothing cached."""
+    bdir, tdir, _, _ = _landing_in_two_batches(tmp_path)
+    before = _persisted_rdds(spark)
+    lazy = P.run(spark, bdir, tdir)
+    assert _persisted_rdds(spark) == before
+    with P.parse_tables(spark, bdir, tdir) as tables:
+        assert list(lazy) == list(tables)
+        for name, df in tables.items():
+            assert lazy[name].columns == df.columns
+            assert Counter(map(tuple, lazy[name].collect())) == Counter(map(tuple, df.collect()))
+
+
 def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatch):
     """A write that fails after some tables were appended leaves the ledger
     pending; the rerun rebuilds silver instead of appending twice."""
@@ -221,8 +289,13 @@ def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatc
         real(df, path, *a, **kw)
 
     monkeypatch.setattr(io, "write_partitioned", fail_third)
+    persisted = _persisted_rdds(spark)
+    threads = set(threading.enumerate())
     with pytest.raises(OSError, match="disk full"):
         P.run(spark, bdir, tdir, out_dir=silver)
+    # the failed run unpersisted its parsed frames and joined every writer
+    assert _persisted_rdds(spark) <= persisted
+    assert not [t for t in threading.enumerate() if t not in threads]
     assert _ledger(silver)["pending"]
     assert io.parquet_row_count(f"{silver}/blocks") == 20  # appended, uncommitted
     monkeypatch.setattr(io, "write_partitioned", real)
