@@ -17,8 +17,6 @@ Layout (see SURVEY.md §7):
   operators/    relational ops Spark lacks: as-of join, interval join
   plans/        physical-plan helpers: skew salting
   sources/      Spark 4 Python DataSource for Tendermint RPC
-  streaming/    incremental bronze→silver, watermarked windows, streaming
-                dedup, stateful sessionization
 """
 
 __version__ = "0.1.0"

@@ -32,9 +32,9 @@ engine can offer; at 100 TB this is a single map-side-combined
 aggregation.
 
 Streaming: the moment table (n, Σv, Σv²) per (type, variant) is a
-textbook grouped streaming aggregation — the `nb_model_count_stream`
-discipline; the t-statistic is the batch snapshot read. `ab_moments_df`
-applied to a streaming frame IS that aggregation; snapshot →
+textbook grouped streaming aggregation; the t-statistic is the batch
+snapshot read. `ab_moments_df` applied to a streaming frame IS that
+aggregation; snapshot →
 `ab_report_df`'s final projection pinned in
 tests/test_streaming_abtest.py."""
 

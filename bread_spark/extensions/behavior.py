@@ -29,9 +29,7 @@ discipline); a snapshot through the batch report
 fold IS the online conversion monitor, pinned in
 tests/test_streaming_behavior.py. `inter_event_gap_stats` is
 batch-only: LAG needs each (user, type)'s ordered history (unbounded
-per-key state in a stream); the stateful streaming sibling for
-inter-event timing is the session operator (`streaming/sessions.py`),
-which bounds state with its inactivity gap by construction.
+per-key state in a stream).
 
 Reference parity: the reference has no behavioral-latency analytics;
 additive.

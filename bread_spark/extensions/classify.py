@@ -39,10 +39,10 @@ Weinberger et al. 2009 — fastText's input layer does the same bucketing):
 
 Tie-break convention: the predicted class is the lexicographic MAX of
 ``(score, class)`` — score DESC then class DESC. Chosen over the more
-common class-ASC so the streaming twin (`streaming/classify.py`), which
-cannot rank with window functions, gets the identical argmax from a
-plain ``max(struct(score, lang))`` aggregate; batch, oracle SQL, and
-stream all share it, so ties (possible only when two classes' scores are
+common class-ASC so an aggregate-only consumer (a stream cannot rank
+with window functions) gets the identical argmax from a plain
+``max(struct(score, lang))`` aggregate; batch and oracle SQL share it,
+so ties (possible only when two classes' scores are
 analytically equal) can never disagree across engines.
 """
 
@@ -81,8 +81,8 @@ def _tagged_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _token_rows(df: DataFrame, *keep: str, text_col: str = "text") -> DataFrame:
     """(*keep, bucket) — one row per token occurrence, hashed map-side.
-    THE tokenizer+featurizer for this family: the batch build, the
-    scorer, and both streaming twins all call it, so the model and
+    THE tokenizer+featurizer for this family: the model build and the
+    scorer both call it, so the model and
     everything scored against it can never tokenize differently."""
     toks = df.select(*keep, F.explode(F.split(text_col, " ")).alias("token")).filter(
         F.col("token") != ""
@@ -102,8 +102,8 @@ def nb_lang_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream (map-side partials collapse to ≤ classes·B groups per
     task), a per-class total, then the dense grid built by exploding a
     literal ``sequence(0, B-1)`` per class — no join fan-out, no
-    cartesian operator. Compute-once seam shared by the scores, report,
-    and streaming entries."""
+    cartesian operator. Compute-once seam shared by the scores and
+    report entries."""
     return materialized_frame(
         spark, "nb_lang_model", sf_dir, lambda: nb_model_df(_tagged_docs(spark, sf_dir))
     )
@@ -118,8 +118,8 @@ def nb_model_df(tagged: DataFrame) -> DataFrame:
 
 def nb_counts_to_model(counts: DataFrame) -> DataFrame:
     """(lang, bucket, cnt) sparse count table → the dense smoothed model.
-    Shared by the batch build, the shard merge, and the streaming count
-    maintainer's snapshots — one likelihood formula, three producers."""
+    Shared by the batch build and the shard merge — one likelihood
+    formula, two producers."""
     totals = counts.groupBy("lang").agg(F.sum("cnt").alias("tot"))
     grid = totals.select(
         "lang",
@@ -316,9 +316,8 @@ def nb_lang_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Batch-only family: these are corpus-level OFFLINE evaluation over the
 # frozen held-out split (the population is the whole eval set by
-# definition); online scoring is covered by the NB streaming twins in
-# streaming/classify.py, and a windowed "AUC so far" would measure a
-# different (window-local) population, not this statistic.
+# definition); a windowed "AUC so far" would measure a different
+# (window-local) population, not this statistic.
 # ---------------------------------------------------------------------------
 
 AUC_STRIPE = 1_000_000  # cum-window coarse stripe: 1.0 log10 unit of margin

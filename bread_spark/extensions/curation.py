@@ -316,8 +316,7 @@ BOILER_MIN_DOCS = 2  # a chunk in >= this many DISTINCT docs is boilerplate
 
 def _chunk_expr(text_col: str, n: int) -> str:
     """SQL for the fixed n-token chunk array of `text_col` — shared by
-    the batch chunkers and the streaming boilerplate gate so both sides
-    can never disagree on chunk boundaries."""
+    the chunkers so they can never disagree on chunk boundaries."""
     return (
         f"transform(sequence(0, cast(ceil(size(split({text_col}, ' ')) / {n}.0) "
         f"as int) - 1), i -> array_join(slice(split({text_col}, ' '), "
@@ -709,7 +708,7 @@ LM_LAMBDAS = {2: LM_LAMBDA, 3: LM_LAMBDA3, 4: LM_LAMBDA4, 5: LM_LAMBDA5}
 LM_MAX_ORDER = max(LM_LAMBDAS)
 # Count tables up to this order are shared compute-once seams (the 5-gram
 # chain reads the 3- and 4-gram tables twice each, and the trigram scorer,
-# the collocation miner and the streaming twin read the lower ones). The
+# and the collocation miner read the lower ones). The
 # 5-gram table's only consumer is the cached order-5 scored frame, so it
 # is aggregated inline there.
 LM_SEAM_MAX_ORDER = 4
@@ -779,7 +778,7 @@ def lm_scored_frame(spark: SparkSession, sf_dir: str, order: int) -> DataFrame:
 def lm_counts(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """Compute-once k-gram count table (w1..wk, n) for the canonical
     documents table — read by the LM scorers of every order above k, the
-    collocation miner, the OOV report and the streaming 5-gram twin.
+    collocation miner and the OOV report.
     Cache contract: plans/materialize.py.
 
     Order 1 folds the `source_token_counts` seam by token instead of
@@ -834,9 +833,8 @@ def ngram_window_expr(
 
 
 # The adjacent-pair construction shared by every bigram count build — the
-# LM seams, per-source collocation counts, and the streaming twin (which
-# must produce the IDENTICAL pair stream for its snapshot to equal the
-# batch tables). One definition so the contract cannot drift.
+# LM seams and per-source collocation counts. One definition so the
+# contract cannot drift.
 BIGRAM_PAIRS_EXPR = ngram_window_expr(2)
 
 
@@ -980,10 +978,9 @@ def zipf_fit_by_source(
     (never materializes the full per-source vocabulary); the fit itself
     is Spark's built-in regr_* aggregates over k rows per source — no
     collect, no UDF. Batch-only by design: the per-source rank
-    window needs the source's full frequency table, so the streaming
-    dashboard re-runs this fit on a schedule over the staged count
-    table rather than maintaining it incrementally (the volume/quality
-    monitors in streaming/curation.py cover the per-batch signals). At real vocab the count table is the only big
+    window needs the source's full frequency table, so a dashboard
+    re-runs this fit on a schedule over the staged count table rather
+    than maintaining it incrementally. At real vocab the count table is the only big
     intermediate, and it's exactly the table vocab_topk/BM25 already
     stage."""
     from .sketch import source_token_counts_frame
@@ -1377,11 +1374,8 @@ def curated_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch-only by design: the perplexity gate is a corpus-wide quantile
     split, decontamination compares against the full probe index, and
     packing folds a global document order — all statements about a
-    frozen corpus snapshot. The streaming path runs the member GATES
-    incrementally (streaming/curation.py's boilerplate gate and ngram5
-    scoring monitor check arriving documents against STAGED tables) and
-    re-runs this composition on snapshots — the same division of labor
-    as the bootstrap/Zipf batch-only notes."""
+    frozen corpus snapshot, re-run on each new snapshot — the same
+    division of labor as the bootstrap/Zipf batch-only notes."""
     from ..functions.text import _split_assignment
     from .training import PROBE_MAX_DOC_ID, decontaminate, pack_sequences_df
 

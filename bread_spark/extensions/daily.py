@@ -30,8 +30,7 @@ Streaming: the (day, type) count table is the daily micro-sum shape
 (counts instead of sums) — `daily_type_counts_df` applied to a
 streaming frame, snapshot → the batch share projection, pinned in
 tests/test_streaming_stats.py. Percentile bands are
-batch-only (corpus order statistics; the online sibling is the HDR
-quantile stream). New-vs-returning is batch-only as a table — the
+batch-only (corpus order statistics). New-vs-returning is batch-only as a table — the
 per-user first-day state is exactly `conversion_firsts_df`'s
 grouped-MIN shape, but the DAILY attribution needs the corpus day
 grid closed, i.e. a snapshot fold (stated, not NULLed).
@@ -76,7 +75,7 @@ def daily_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def daily_type_counts_df(ev: DataFrame) -> DataFrame:
     """(day, event_type, cnt) — the composition table's sufficient
-    statistic (and the streaming twin's fold)."""
+    statistic (and the streaming fold)."""
     return (
         ev.select(F.col("ts").cast("date").alias("day"), "event_type")
         .groupBy("day", "event_type")

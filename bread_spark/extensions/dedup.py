@@ -479,81 +479,8 @@ def ngram_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-backed since r12 (VERDICT r11 #5): the cap is pure set
     arithmetic, so the DuckDB mirror adds one df CTE to the uncapped
     oracle — the lattice/hash-convention audit found nothing engine-
-    specific in it after all.
-
-    A posting-list alternative (`_jaccard_posting_capped`: one
-    groupBy(shingle) aggregate + in-array pair expansion instead of the
-    index self-join) is value-identical (equality-pinned in
-    tests/test_recall.py) but measured ~0.3-0.5 s SLOWER at sf0.1
-    (broadcast-sizes build + collect_list/sort beat the hash join only
-    when posting lists amortize many co-occurrences). The self-join stays
-    the benched plan; revisit the posting variant where the pair/index
-    ratio is high."""
+    specific in it after all."""
     return ngram_jaccard_pairs(spark, sf_dir, max_df=MAX_DF)
-
-
-def _jaccard_posting_capped(
-    docs: DataFrame, threshold: float, max_df: int
-) -> DataFrame:
-    """Posting-list capped jaccard: shingle → distinct → count-based hot
-    drop (no unbounded array ever materializes for a degenerate shingle)
-    → per-doc sizes ride the posting list as struct fields → map-side
-    pair expansion inside the array → ONE pair aggregate. Two fewer
-    shuffles than the self-join plan and no join after the anti-join;
-    kept as the measured-alternative seam (see
-    `ngram_jaccard_pairs_capped` docstring for the local measurement).
-
-    Per-shingle arrays are bounded by `max_df` (hot shingles are dropped
-    BEFORE any collect, via the count-based broadcast anti-join), so the
-    collect_list aggregation buffer is ≤ max_df structs per key at any
-    scale."""
-    sh = _word_shingles(docs).localCheckpoint()
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("shingle")
-    )
-    kept = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    # Per-doc capped sizes: O(docs) rows → broadcast back onto the kept
-    # index map-side, so sizes ride the posting list as struct fields.
-    # (At 100 TB, if sizes outgrow broadcast this becomes a shuffle join
-    # keyed on doc_id — still upstream of the single posting aggregate.)
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    posting = (
-        kept.join(F.broadcast(sizes), "doc_id")
-        .groupBy("shingle")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ids")
-        )
-        .filter(F.size("ids") >= 2)
-    )
-    pairs = posting.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), "
-                "y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-                "x.n AS na, y.n AS nb))))"
-            )
-        ).alias("p")
-    ).select("p.*")
-    return (
-        pairs.groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("na").alias("na"),
-            F.first("nb").alias("nb"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def dedup_clusters(
@@ -837,8 +764,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift from the certified clustering.
 
     Batch-only because the clustering it reports on is a corpus-global
-    connected-components pass (its own batch-only note); the streaming
-    dedup story is the against-base gates in streaming/dedup.py."""
+    connected-components pass (its own batch-only note)."""
     clusters = dedup_clusters(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1661,8 +1587,7 @@ SPAN_DUP_MAX_FRAC = Fraction(1, 2)
 
 def span_keep_expr(dup_col, total_col):
     """keep iff dup/total ≤ SPAN_DUP_MAX_FRAC, on exact integers — the single
-    source of the verdict used by the batch report, the incremental gate, and
-    the streaming twin."""
+    source of the verdict used by the batch report and the incremental gate."""
     return F.lit(SPAN_DUP_MAX_FRAC.denominator) * dup_col <= F.lit(
         SPAN_DUP_MAX_FRAC.numerator
     ) * total_col
@@ -1701,8 +1626,7 @@ def span_array(tokens_col: str, w: int = SPAN_W):
     """Column expression: the md5 digests of every stride-1 w-token window
     of an ALREADY-TOKENIZED array column — empty array for rows shorter
     than w (Spark's sequence(1, n) counts DOWN for n ≤ 0, so the short
-    case must be explicit). Shared by the batch span family and the
-    streaming gate."""
+    case must be explicit). Shared by the span family."""
     return F.expr(
         f"CASE WHEN size({tokens_col}) < {w} THEN cast(array() as array<string>) "
         f"ELSE transform(sequence(1, size({tokens_col}) - {w - 1}), "

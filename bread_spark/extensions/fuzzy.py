@@ -152,10 +152,10 @@ def _selected_grams(
 
     `min_df` defaults to 2 for the SELF-join case: a df=1 gram has no
     partner inside the same corpus, so indexing it buys nothing there.
-    Cross-corpus consumers (`fuzzy_matches_df`, the streaming gate)
-    pass min_df=1 — a base doc whose twin lives only in the PROBE set
-    has df=1 on its distinguishing grams within the base, and those
-    grams are exactly what the probe must find.
+    The cross-corpus consumer (`fuzzy_matches_df`) passes min_df=1 — a
+    base doc whose twin lives only in the PROBE set has df=1 on its
+    distinguishing grams within the base, and those grams are exactly
+    what the probe must find.
 
     The gram index feeds two subtrees (the df aggregate and the join
     back against it); unmaterialized, Spark would run the md5 explode +
@@ -281,9 +281,8 @@ def fuzzy_pairs_df(
 
 def gram_array_expr(s_col: str, len_col: str, q: int = FUZZY_Q) -> str:
     """The distinct-gram ARRAY of one normalized string, as a SQL
-    expression — shared by the batch probe and the streaming gate so
-    both sides hash and dedupe grams identically (in-row
-    `array_distinct`, no stateful distinct needed on a stream)."""
+    expression — the probe side's form of `_char_grams`' md5 lane,
+    deduped in-row (`array_distinct`)."""
     return (
         f"array_distinct(transform(sequence(1, {len_col} - {q} + 1), "
         f"i -> cast(conv(substring(md5(substring({s_col}, i, {q})), "
@@ -309,10 +308,8 @@ def fuzzy_matches_df(
     never depends on the probe corpus's df statistics (a probe doc is
     matched if ANY `min_shared` of the base doc's selected grams appear
     anywhere in it — strictly easier to hit than the symmetric rule).
-    This is the refresh-crawl shape: the base index is built once; new
-    docs stream against it, which is exactly what the streaming twin
-    (`streaming.dedup.fuzzy_gate_stream_against_base`) does with the
-    same expressions. Nearest tie-break: lexicographic MIN of
+    This is the refresh-crawl shape: the base index is built once and
+    each new batch of docs probes it. Nearest tie-break: lexicographic MIN of
     (dist, matched_doc) — mirrored in the oracle's ranked form."""
     if base_norm is None:
         base_norm = _norm_docs(base)

@@ -634,20 +634,6 @@ def media_phash_candidates(spark, sf_dir: str) -> DataFrame:
     return phash_pair_frame(spark, sf_dir)
 
 
-def phash_band_table(media: DataFrame) -> DataFrame:
-    """DISTINCT (band_idx, band_val) table of a corpus' perceptual
-    bands — a monitoring/QC surface (band-occupancy skew, saturation
-    tracking). NOT the gate's base side: band cells saturate as the
-    corpus approaches PHASH_BANDS × 2^PHASH_BAND_WIDTH occupancy, so
-    mere band PRESENCE would false-drop (ADVICE r11, medium) — the
-    gate verifies against base FINGERPRINTS instead (`phash_gate`)."""
-    return (
-        media_phash_features(media)
-        .select(F.posexplode("bands").alias("band_idx", "band_val"))
-        .distinct()
-    )
-
-
 def phash_gate(
     media: DataFrame,
     base_feats: DataFrame,
@@ -680,8 +666,8 @@ def phash_gate(
     Scope: the gate covers the perceptual family's domain — image and
     video rows (the kinds `media_phash_features` fingerprints). Other
     kinds (audio) are NOT in the output: route them through the
-    exact-digest gate (`streaming.dedup.dedup_stream_by_digest` /
-    `dedup_stream_against_base`), which is their dedup contract anyway.
+    exact-digest dedup (`media_dedup_exact`), which is their dedup
+    contract anyway.
 
     Streaming deployment: media-grain anti semantics need the per-media
     verify set complete, so the stream wraps THIS function in

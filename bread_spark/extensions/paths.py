@@ -33,15 +33,6 @@ Window operator for all three offsets); the aggregates run on tiny
 canonical sessionized-clickstream plan: repartition by user, sort
 within, derive everything in one pass.
 
-Streaming: transitions are the naturally-online form — the state is
-each user's LAST event. `streaming/paths.py::transition_stream` keys
-`applyInPandasWithState` by user, carries (last_ts, last_id,
-last_type), and emits one row per observed transition; the running
-matrix is then a plain windowed count downstream. Batch/stream
-transition-multiset agreement incl. restart pinned. Path trigrams
-ride the same state trivially extended (two last events) — covered by
-the same twin emitting the previous type, not duplicated.
-
 Reference parity: the reference has no sequence analytics; additive.
 """
 
@@ -178,8 +169,7 @@ def followup_rates_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominators are a bounded O(types) broadcast. Pairs with zero
     followups are absent by contract (the dense spine is the
     transition matrix's job). Batch-only: the horizon needs each
-    event's full next-hour future; the streaming sibling with bounded
-    state is the funnel/session family (watermarked buffers).
+    event's full next-hour future.
     Output: (a_type, b_type, n_a, n_with_followup, followup_ppm)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"

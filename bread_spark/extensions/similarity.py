@@ -1449,8 +1449,7 @@ def _quantized_dims(emb: DataFrame, *keep: str) -> DataFrame:
 
 def silhouette_centroids_df(emb: DataFrame) -> DataFrame:
     """(clabel, pos, s, n) — the integer centroid sums the silhouette
-    distances are computed against. Exposed so the streaming twin can
-    freeze them as its base model."""
+    distances are computed against."""
     return _quantized_dims(emb, "label").groupBy(
         F.col("label").alias("clabel"), "pos"
     ).agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -1478,8 +1477,7 @@ def _sil_dist():
 
 def _sil_argmin_aggs(label_col: str = "label"):
     """Aggregates: own-centroid distance + argmin over other centroids
-    ((d ASC, clabel ASC) tie-break via struct min). Shared verbatim by
-    the batch scorer and the streaming twin so the two can never drift."""
+    ((d ASC, clabel ASC) tie-break via struct min)."""
     return [
         F.max(F.when(F.col("clabel") == F.col(label_col), F.col("d"))).alias("a"),
         F.min(
@@ -1932,11 +1930,7 @@ def semantic_decontaminate(
     threshold/argmax (the `embedding_cosine_dups` convention), and the
     top probe is the lexicographic MAX of (cosine, probe_id) — same
     rule in the kernel and the oracle's ranked form, so ties never
-    diverge across engines.
-
-    Streaming twin: `streaming/similarity.py::semantic_decontam_stream`
-    applies the IDENTICAL kernel to arriving vectors (stateless map —
-    the strongest batch/stream agreement possible: same function)."""
+    diverge across engines."""
     from .training import PROBE_MAX_DOC_ID
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1949,8 +1943,7 @@ def semantic_decontam_df(
     corpus: DataFrame, probes: DataFrame, threshold: float = SEM_CONTAM_THRESHOLD
 ) -> DataFrame:
     """`semantic_decontaminate` core over any (vec_id, embedding) corpus
-    and probe frames — tests drive it with planted paraphrase vectors,
-    and the streaming twin wraps the same kernel around a stream."""
+    and probe frames — tests drive it with planted paraphrase vectors."""
     kernel = make_probe_kernel(probes, threshold)
     return corpus.mapInPandas(
         kernel,
@@ -1964,16 +1957,16 @@ _PROBE_BC_CACHE: dict = {}
 
 def make_probe_kernel(probes: DataFrame, threshold: float):
     """Collect + unit-normalize the probe matrix (bounded by
-    construction) and return the mapInPandas kernel both the batch
-    operator and the streaming twin apply. Raises on an empty probe set
-    — a silent all-clean verdict from a misconfigured probe filter is
-    the one failure mode this operator must never have.
+    construction) and return the mapInPandas kernel the operator
+    applies. Raises on an empty probe set — a silent all-clean verdict
+    from a misconfigured probe filter is the one failure mode this
+    operator must never have.
 
     The (collect + broadcast) is cached per (application, semantic plan):
-    the catalog_plans fixture, driver plan sampling, and each streaming
-    twin all re-CONSTRUCT the frame without executing it, and without the
-    cache every construction paid an eager Spark job plus a fresh
-    broadcast. semanticHash is plan analysis only (no job); the paired
+    the catalog_plans fixture and driver plan sampling both re-CONSTRUCT
+    the frame without executing it, and without the cache every
+    construction paid an eager Spark job plus a fresh broadcast.
+    semanticHash is plan analysis only (no job); the paired
     sameSemantics check guards hash collisions."""
     import numpy as np
     import pandas as pd

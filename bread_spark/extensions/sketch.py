@@ -108,7 +108,7 @@ def cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram over token INSTANCES equals the n-weighted histogram over
     DISTINCT tokens (same token → same (d, bucket) lanes), so the ×D
     fan-out shuffles one row per distinct token instead of one per
-    instance — the streaming/core form (`cms_sketch_df`) keeps the
+    instance — the core form (`cms_sketch_df`) keeps the
     instance-level single-aggregate shape."""
     from ..plans.materialize import materialized_frame
 
@@ -137,7 +137,7 @@ def cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cms_sketch_df(docs: DataFrame) -> DataFrame:
     """`cms_sketch` core over any (text) frame — works unchanged on a
     STREAMING frame (the aggregate's state is the constant-size counter
-    table), which is what `streaming/sketch.py` runs."""
+    table)."""
     rows = _tokens(docs).select(F.md5("token").alias("dig")).select(
         F.explode(
             F.expr(
@@ -346,10 +346,8 @@ def bootstrap_source_stats(
     join-back — every shuffle is on keys whose cardinality the config
     controls, never on data volume.
     Batch-only by design: a bootstrap CI is a statement about a frozen
-    corpus snapshot (each replicate reweights EVERY document), so the
-    streaming path is re-running this on snapshots, not folding batches
-    into running state — the sketch twins (streaming/sketch.py) cover
-    the metrics that do fold."""
+    corpus snapshot (each replicate reweights EVERY document), so it is
+    re-run on snapshots, not folded batch by batch into running state."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
     u = (
@@ -497,8 +495,7 @@ def hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hll_registers_df(docs: DataFrame) -> DataFrame:
     """`hll_registers` core over any (source, text) frame — works
     unchanged on a STREAMING frame (the aggregate's state IS the
-    register table, O(sources·M)), which is what `streaming/sketch.py`
-    runs as the online distinct-count monitor."""
+    register table, O(sources·M))."""
     toks = F.filter(F.split("text", " "), lambda t: t != "")
     stream = docs.select("source", F.explode(toks).alias("token"))
     rows = stream.select(
@@ -545,7 +542,7 @@ def _hll_registers_from_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates contribute nothing to MAX(rho), so registers over the
     DISTINCT (source, token) pairs are identical to the instance-level
     build — one distinct-token-sized projection instead of a second
-    corpus tokenize (the streaming/core `hll_registers_df` keeps the
+    corpus tokenize (the core `hll_registers_df` keeps the
     instance-level shape)."""
     pairs = source_token_counts_frame(spark, sf_dir).select("source", "token")
     rows = pairs.select(
@@ -850,8 +847,7 @@ def hdr_value_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hdr_sketch_df(values: DataFrame, value_col: str = "value") -> DataFrame:
     """`hdr_value_sketch` core over any frame — works unchanged on a
     STREAMING frame (the aggregate's state is the constant-size bucket
-    table; counters fold by SUM, the sketch's merge operator), which is
-    what `streaming/sketch.py::hdr_sketch_stream` runs."""
+    table; counters fold by SUM, the sketch's merge operator)."""
     lb, ub = _hdr_bounds_exprs()
     return (
         values.select(F.expr(_hdr_bucket_expr(value_col)).alias("bucket"))
@@ -1033,14 +1029,6 @@ def _kmv_shingle_rows(docs: DataFrame) -> DataFrame:
     the wrong unit here twice over: a 31-token vocabulary never exercises
     the estimator, and resemblance-between-corpora (Broder 1997) is
     defined on shingle sets."""
-    return _kmv_hash_rows(docs).distinct()
-
-
-def _kmv_hash_rows(docs: DataFrame) -> DataFrame:
-    """(source, h) WITHOUT the distinct — the stateless projection the
-    streaming twin feeds to its bounded bottom-k state (a streaming
-    distinct would itself be unbounded state; the K-value state dedupes
-    for free). Batch callers go through `_kmv_shingle_rows`."""
     toks = F.filter(F.split("text", " "), lambda t: t != "")
     w = docs.select("source", toks.alias("w")).filter(
         F.size("w") >= KMV_SHINGLE_N
@@ -1050,7 +1038,7 @@ def _kmv_hash_rows(docs: DataFrame) -> DataFrame:
         f"cast(conv(substring(md5(concat_ws(' ', "
         f"slice(w, i + 1, {KMV_SHINGLE_N}))), 1, 15), 16, 10) as bigint))"
     )
-    return w.select("source", F.explode(F.expr(h)).alias("h"))
+    return w.select("source", F.explode(F.expr(h)).alias("h")).distinct()
 
 
 def kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1125,10 +1113,7 @@ def kmv_rank_df(rows: DataFrame, k: int = KMV_K) -> DataFrame:
 
 def kmv_sketch_df(docs: DataFrame, k: int = KMV_K) -> DataFrame:
     """`kmv_sketch` core over any (source, text) frame. NOT streaming-
-    capable as-is (rank-over-window is a batch construct); the streaming
-    twin `streaming/sketch.py::kmv_sketch_stream` maintains the same
-    bottom-k per key as bounded applyInPandasWithState state — batch/
-    stream agreement pinned in tests."""
+    capable (rank-over-window is a batch construct)."""
     from pyspark.sql.window import Window as W
 
     ranked = _kmv_shingle_rows(docs).withColumn(
@@ -1434,7 +1419,7 @@ def mg_summary(
 
     Streaming: batch-only by design — classic streaming Misra-Gries
     keeps a summary whose CONTENT depends on arrival order, so the
-    exact batch/stream agreement the other twins pin cannot hold. The
+    exact batch/stream agreement of the other sketches cannot hold. The
     incremental path is per-micro-batch summaries folded through
     `merge_mg_summaries` (bound-valid under the mergeable-summaries
     algebra), which the merge tests pin."""

@@ -28,8 +28,8 @@ doc_id-keyed join (vec_id aliases doc_id, the similarity-family
 convention). No collect, no broadcast of anything unbounded.
 
 Streaming: the sufficient statistic (per-source component sums +
-counts) maintains itself as ONE grouped streaming aggregation — the
-`nb_model_count_stream` discipline; the O(sources²) cosine matrix is
+counts) maintains itself as ONE grouped streaming aggregation; the
+O(sources²) cosine matrix is
 the batch snapshot read of that state (`source_sums_df` on a
 streaming frame; tests/test_streaming_source_sim.py pins the fold and
 the snapshot→batch-scorer identity)."""

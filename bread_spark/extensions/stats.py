@@ -64,7 +64,7 @@ counts. Batch-only: `source_concentration` (the Gini rank is a
 total-order sort of the aggregate — recomputed per snapshot, not
 incrementally maintainable) and `rolling_7d_distinct_users` (sliding
 COUNT DISTINCT needs per-(day,user) dedup state with watermark
-eviction; the approximate streaming path is `hll_registers`' twin).
+eviction; the approximate online path is the HLL engagement panel).
 
 Reference parity: the reference (pandas/DuckDB ETL) has no
 trend/correlation/Benford/concentration analytics; additive.
@@ -424,8 +424,8 @@ def engagement_df(ev: DataFrame) -> DataFrame:
     # independent rolling_distinct_df passes (×7 and ×30) re-scanned
     # and re-deduped the event stream and paid two countDistinct
     # expands plus a join. Identical integers: each count enumerates
-    # the same distinct membership sets.  (streaming sibling: HLL
-    # panel below)
+    # the same distinct membership sets.  (approximate online form:
+    # the HLL panel below)
     du = ev.select(F.col("ts").cast("date").alias("day"), "user_id").distinct()
     fan = du.select(
         F.explode(F.sequence(F.lit(0), F.lit(29))).alias("off"),
@@ -466,8 +466,7 @@ def engagement_df(ev: DataFrame) -> DataFrame:
 # HLL engagement panel — the streaming sibling of `engagement_df`
 # (VERDICT r10 #7). The exact panel is batch-only (sliding COUNT
 # DISTINCT needs per-(day, user) dedup state); the online answer is
-# per-DAY HLL user registers (streaming/stats.py maintains them with
-# watermark eviction) plus this estimator, which max-merges trailing
+# per-DAY HLL user registers plus this estimator, which max-merges trailing
 # windows from register rows alone — ≤M=64 rows per day, never users.
 # ---------------------------------------------------------------------------
 

@@ -50,14 +50,11 @@ sums. Window partitions are per event_type, so parallelism is bounded
 by type cardinality — correct here (the aggregate is tiny); for
 high-cardinality keys the same plan shards by key hash for free.
 
-Streaming: CUSUM is the naturally ONLINE detector — the recurrence
-carries one (S+, S-) pair per key. `streaming/timeseries.py` runs it
-with `applyInPandasWithState` against FROZEN baseline stats (mu, k, h
-from the reference window), state bounded at two longs per key;
-batch/stream agreement incl. restart pinned. The decomposition is
-batch-only by design: the centered trend window needs FUTURE days, so
-an online form is a different (trailing-window) estimator, not this
-operator.
+CUSUM is the naturally ONLINE detector — the recurrence carries one
+(S+, S-) pair per key, scored against FROZEN baseline stats (mu, k, h
+from the reference window). The decomposition is batch-only by design:
+the centered trend window needs FUTURE days, so an online form is a
+different (trailing-window) estimator, not this operator.
 
 Reference parity: the reference has no changepoint/seasonal analytics;
 additive.
@@ -116,8 +113,7 @@ def cusum_df(daily: DataFrame, base_days: int = CUSUM_BASE_DAYS) -> DataFrame:
     The baseline is each type's FIRST `base_days` days (day-rank
     window): mu = sum(x) div n, k = |mu| div CUSUM_K_DIV,
     mad = sum(|x - mu|) div n, h = CUSUM_H_MAD * mad — the reference
-    window a production monitor trains on before watching the rest
-    (and exactly the frozen-baseline shape the streaming twin uses).
+    window a production monitor trains on before watching the rest.
     A GLOBAL baseline would be self-referential: a level shift drags
     mu toward the midpoint, the allowance swallows half the deviation,
     and the detector flags the PRE-change regime as a drop; the
@@ -525,75 +521,6 @@ ORACLE_SQL: dict[str, str] = {
     WHERE ABS(d.residual) > {SEAS_H_MAD} * m.mad
 """,
 }
-
-
-# ---------------------------------------------------------------------------
-# Event-level CUSUM against a frozen baseline (the online form's batch core)
-# ---------------------------------------------------------------------------
-
-
-def cusum_baseline(ev: DataFrame) -> DataFrame:
-    """Frozen per-type baseline from a reference window: (event_type,
-    mu, k, h) over per-EVENT micro values — the static side the
-    streaming detector scores against (mirrors the daily detector's
-    stats, at event granularity)."""
-    v = ev.select(
-        "event_type",
-        F.round(F.col("value") * 1_000_000).cast("long").alias("v_u"),
-    )
-    stats = v.groupBy("event_type").agg(
-        F.expr("sum(v_u) div count(1)").alias("mu")
-    )
-    mad = (
-        v.join(F.broadcast(stats), "event_type")
-        .groupBy("event_type")
-        .agg(F.expr("sum(abs(v_u - mu)) div count(1)").alias("mad"))
-    )
-    return (
-        stats.join(mad, "event_type")
-        .select(
-            "event_type",
-            "mu",
-            F.expr(f"abs(mu) div {CUSUM_K_DIV}").alias("k"),
-            F.expr(f"{CUSUM_H_MAD} * mad").alias("h"),
-        )
-    )
-
-
-def event_cusum_df(ev: DataFrame, baseline: DataFrame) -> DataFrame:
-    """Per-EVENT two-sided CUSUM against a FROZEN baseline, ordered by
-    (ts, event_id) — deterministic event order, so the streaming fold
-    (same recurrence, same order) must agree row for row. Returns
-    (event_type, event_id, ts, v_u, s_pos, s_neg, alarm)."""
-    v = ev.select(
-        "event_type",
-        "event_id",
-        "ts",
-        F.round(F.col("value") * 1_000_000).cast("long").alias("v_u"),
-    ).join(F.broadcast(baseline), "event_type")
-    d = v.withColumn("dp", F.col("v_u") - F.col("mu") - F.col("k")).withColumn(
-        "dn", -(F.col("v_u") - F.col("mu") + F.col("k"))
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pp = F.sum("dp").over(wcum)
-    pn = F.sum("dn").over(wcum)
-    s_pos = pp - F.least(F.lit(0), F.min(pp).over(wcum))
-    s_neg = pn - F.least(F.lit(0), F.min(pn).over(wcum))
-    return d.select(
-        "event_type",
-        "event_id",
-        "ts",
-        "v_u",
-        s_pos.alias("s_pos"),
-        s_neg.alias("s_neg"),
-        ((s_pos > F.col("h")) | (s_neg > F.col("h")))
-        .cast("int")
-        .alias("alarm"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -37,8 +37,7 @@ driver collect). Per-query notes below.
 Streaming: batch-only family by design — each query is a bounded-
 snapshot, multi-fact-join decision-support report; the incremental
 path for this shape is partition-grain recompute over the partitioned
-parquet sink (SRC12), not operator state. The events-side analogs
-(daily rollups, OHLC, funnels, CUSUM) carry the streaming twins.
+parquet sink (SRC12), not operator state.
 
 Reference parity: the reference has no TPC-H-style suite; additive,
 next to `pricing_summary` (Q1) / `orders_with_returns` (Q4) /

@@ -203,10 +203,9 @@ def _wrs_scored(docs: DataFrame) -> DataFrame:
     """THE A-ES priority rule — (doc_id, source, n_tokens, pri) with
     pri = ln(u)/w, u the deterministic md5(seed:doc_id) uniform, w the
     token count; zero-token docs filtered (they carry no mass). Single
-    source of truth shared by `weighted_sample_docs` (global top-k),
-    `weighted_sample_by_source` (stratified), and the streaming
-    reservoir twin (`streaming/sampling.py`) — the three can never
-    disagree on a priority, so stream-vs-batch agreement is exact."""
+    source of truth shared by `weighted_sample_docs` (global top-k) and
+    `weighted_sample_by_source` (stratified) — the two can never
+    disagree on a priority."""
     w = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
     u = (
         F.conv(
@@ -279,7 +278,7 @@ def weighted_sample_by_source(
 
 def weighted_sample_by_source_df(docs: DataFrame, k: int = WRS_PER_SOURCE_K) -> DataFrame:
     """`weighted_sample_by_source` core over any (doc_id, source, text)
-    frame — the comparator the streaming reservoir twin is pinned to."""
+    frame."""
     from pyspark.sql.window import Window as W
 
     scored = _wrs_scored(docs)
@@ -669,14 +668,6 @@ def gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition ratio reuses the `repetition_scores` in-array distinct).
     """
     docs = load_table(spark, sf_dir, "documents")
-    return gopher_quality_gate_df(docs)
-
-
-def gopher_quality_gate_df(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """`gopher_quality_gate` core over any frame with a `text` column —
-    shuffle-free, so it applies unchanged to STREAMING frames (the
-    streaming quality monitor composes it). `keep` names extra input
-    columns to carry through (e.g. `source` for per-source rollups)."""
     tokens = F.filter(F.split("text", " "), lambda t: t != "")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = F.size(F.filter(tokens, lambda t: F.array_contains(stop_arr, t)))
@@ -708,7 +699,6 @@ def gopher_quality_gate_df(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataF
     ok_rep = dup_frac <= GOPHER_MAX_DUP_FRAC
     return docs.select(
         "doc_id",
-        *keep,
         F.size(tokens).cast("long").alias("n_tokens"),
         ok_len.alias("ok_token_count"),
         ok_wl.alias("ok_mean_word_len"),

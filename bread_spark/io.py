@@ -147,10 +147,6 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
                 spark.conf.set(conf_key, prev)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view (Spark SQL surface —
     the analog of the reference's dbt sources)."""
@@ -261,14 +257,6 @@ def compact_partitioned(
         out = out.sortWithinPartitions(*partition_cols, sort_by)
     staging = path.rstrip("/") + "__compacting"
     out.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    # carry the foreachBatch idempotency markers (underscore dirs are
-    # invisible to parquet discovery but must survive the swap, or a
-    # post-compaction stream restart could replay its last batch)
-    markers = os.path.join(path, "_batch_markers")
-    if os.path.isdir(markers):
-        import shutil as _sh
-
-        _sh.copytree(markers, os.path.join(staging, "_batch_markers"))
     backup = path.rstrip("/") + "__precompact"
     os.rename(path, backup)
     os.rename(staging, path)
@@ -403,12 +391,6 @@ def merge_upsert(
     staging = path.rstrip("/") + "__compacting"
     backup = path.rstrip("/") + "__precompact"
     merged.write.mode("overwrite").parquet(staging)
-    # carry foreachBatch idempotency markers across the swap, exactly as
-    # compact_partitioned does — losing them would let a restarted stream
-    # replay its last committed batch into the merged table
-    markers = os.path.join(path, "_batch_markers")
-    if os.path.isdir(markers):
-        shutil.copytree(markers, os.path.join(staging, "_batch_markers"))
     # row count from the staged parquet footers — not a second full Spark
     # job over the rewritten table
     n = parquet_row_count(staging)

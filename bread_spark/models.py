@@ -629,9 +629,8 @@ def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rollup counts, and users without a view are dropped by the
     # t_view filter below — so filtering BEFORE the user_id exchange
     # shuffles/sorts ~40% fewer rows with a provably identical result.
-    # (funnel_stages itself keeps full-input semantics for its streaming
-    # twin: a user with only other-type events still gets an all-null
-    # row there.)
+    # (funnel_stages itself keeps full-input semantics: a user with only
+    # other-type events still gets an all-null row there.)
     per_user = funnel_stages(
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("view", "click", "purchase"))
@@ -650,10 +649,9 @@ def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def funnel_stages(ev: DataFrame) -> DataFrame:
     """Per-user funnel stages (user_id, t_view, t_click, t_purchase) — the
-    intermediate `conversion_funnel` rolls up, exposed so the streaming
-    twin can pin exact agreement. The closed form the cumulative windows
-    compute: t_view = min view ts; t_click = min click ts in
-    [t_view, t_view + 24 h]; t_purchase = min purchase ts in
+    intermediate `conversion_funnel` rolls up. The closed form the
+    cumulative windows compute: t_view = min view ts; t_click = min click
+    ts in [t_view, t_view + 24 h]; t_purchase = min purchase ts in
     [t_click, t_click + 24 h]."""
     w = (
         Window.partitionBy("user_id")
@@ -766,10 +764,8 @@ _ORDER_KEY_BIAS = 100_000_000_000_000_000
 
 def event_order_key():
     """Zero-padded biased-epoch-µs ‖ event_id string: the deterministic
-    (ts, event_id) ordering key every min_by/max_by consumer shares
-    (batch OHLC here, streaming OHLC in streaming/windows.py — the
-    pinned batch/stream agreement depends on the two staying
-    byte-identical, hence ONE definition)."""
+    (ts, event_id) ordering key of `hourly_ohlc_by_type`'s min_by/max_by;
+    `ORDER_KEY_SQL` is its byte-identical oracle form."""
     return F.concat(
         F.lpad(
             (F.unix_micros("ts") + F.lit(_ORDER_KEY_BIAS)).cast("string"), 18, "0"
@@ -808,6 +804,66 @@ def hourly_ohlc_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low"),
         F.max_by("value", key).alias("close"),
         F.count(F.lit(1)).alias("n_events"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sessions and event-time windows
+# ---------------------------------------------------------------------------
+
+SESSION_GAP_MIN = 30
+
+
+def sessionize_batch(events: DataFrame) -> DataFrame:
+    """Assign session ids: a new session starts when the gap to the
+    previous event of the same user exceeds `SESSION_GAP_MIN`.
+
+    Plan: one shuffle (partitionBy user) + two window passes over already
+    co-located data. At 100 TB, user_id partitioning is naturally uniform
+    (hot users are bounded by human activity rates).
+    """
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gap_sec = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
+    with_flag = events.withColumn(
+        "new_session",
+        F.when(gap_sec.isNull() | (gap_sec > SESSION_GAP_MIN * 60), F.lit(1)).otherwise(F.lit(0)),
+    )
+    run = Window.partitionBy("user_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return with_flag.withColumn("session_id", F.sum("new_session").over(run))
+
+
+def session_stats(events: DataFrame) -> DataFrame:
+    """Per-session rollup: events, span, value — the serving-layer shape."""
+    return sessionize_batch(events).groupBy("user_id", "session_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+        F.round(F.sum("value"), 4).alias("session_value"),
+    )
+
+
+def session_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Catalog entry: per-session rollup over the events table."""
+    return session_stats(load_table(spark, sf_dir, "events"))
+
+
+def windowed_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling one-hour event-time windows: value sum and count per
+    event type, each window labelled by its start and end."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.round(F.sum("value"), 4).alias("total_value"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "event_type",
+            "total_value",
+            "n_events",
+        )
     )
 
 
@@ -1245,6 +1301,34 @@ ORACLE_SQL: dict[str, str] = {
                arg_max(value, {ORDER_KEY_SQL}) AS close,
                COUNT(1) AS n_events
         FROM events GROUP BY 1, 2
+    """,
+    "session_stats": f"""
+        WITH flagged AS (
+            SELECT user_id, ts, value,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                             OR epoch(ts) - epoch(lag(ts) OVER w) > {SESSION_GAP_MIN * 60}
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+        ), sessioned AS (
+            SELECT user_id, ts, value,
+                   CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+            FROM flagged
+        )
+        SELECT user_id, session_id, COUNT(1) AS n_events,
+               MIN(ts) AS session_start, MAX(ts) AS session_end,
+               ROUND(SUM(value), 4) AS session_value
+        FROM sessioned GROUP BY user_id, session_id
+    """,
+    "windowed_value_by_type": """
+        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
+               time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS window_end,
+               event_type,
+               ROUND(SUM(value), 4) AS total_value,
+               COUNT(1) AS n_events
+        FROM events
+        GROUP BY 1, 2, 3
     """,
     "daily_twap_by_type": """
         WITH t AS (

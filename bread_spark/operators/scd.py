@@ -17,9 +17,7 @@ Scale shape: ONE user-keyed window exchange (LEAD) — the `asof`/
 `twap` cost; output is exactly one row per input event, map-side
 after the exchange. Streaming: batch-only as an operator — closing an
 interval requires the NEXT event, i.e. per-key buffering until a
-successor arrives; the bounded-state streaming sibling is the session
-operator (`streaming/sessions.py`), which closes state with its
-inactivity gap instead of a successor event.
+successor arrives.
 
 Reference parity: the reference has no temporal-dimension operator;
 additive (SURVEY.md §2 serving-layer neighborhood).

@@ -25,8 +25,7 @@ Row counts come from the parquet footers of what was written, not from
 re-reading the tables.
 
 Every stage is resumable: extraction is watermark-planned, parse resumes
-from its ledger (or runs as the Structured-Streaming variant,
-`streaming.incremental`), and gold models are deterministic functions of
+from its ledger, and gold models are deterministic functions of
 silver — rerunning any suffix of the flow is idempotent.
 """
 

@@ -48,7 +48,6 @@ from .extensions import (
 )
 from .functions import text
 from .operators import asof, interval, scd
-from .streaming import sessions, windows
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -394,8 +393,15 @@ _register(
     },
     sketch.ORACLE_SQL,
 )
-_register({"session_stats": sessions.session_stats_query}, sessions.ORACLE_SQL)
-_register({"windowed_value_by_type": windows.windowed_value_query}, windows.ORACLE_SQL)
+# models kernels registered here, not through MODELS, to keep their
+# catalog position
+_register(
+    {
+        "session_stats": models.session_stats_query,
+        "windowed_value_by_type": models.windowed_value_by_type,
+    },
+    models.ORACLE_SQL,
+)
 _register({"last_purchase_asof": asof.last_purchase_asof}, asof.ORACLE_SQL)
 _register({"events_near_errors": interval.events_near_errors}, interval.ORACLE_SQL)
 _register({"scd2_user_state": scd.scd2_user_state}, scd.ORACLE_SQL)
@@ -657,20 +663,6 @@ def list_catalog() -> str:
         kind = "oracle" if name in ORACLES else "rows-only"
         lines.append(f"  {name:32s} {kind}")
     return "\n".join(lines)
-
-
-def run_named_queries(
-    spark: SparkSession, queries: dict[str, str]
-) -> dict[str, DataFrame]:
-    """Execute a set of named SQL queries with ${ref} chaining; each result
-    is registered as a temp view so later queries can also use plain table
-    references (the dbt `ref()` analog)."""
-    out: dict[str, DataFrame] = {}
-    for name in queries:
-        df = spark.sql(compile_chained(queries, name))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 if __name__ == "__main__":

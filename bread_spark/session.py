@@ -63,12 +63,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def tune_for_bench(spark: SparkSession) -> None:
-    """Runtime conf that is safe to set on an externally-owned session."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-
-
 def run_concurrently(spark: SparkSession, actions: Sequence[Callable[[], T]]) -> list[T]:
     """Run each action on a thread of its own and return their results in
     order, so independent Spark jobs share the cores instead of queueing.

@@ -61,10 +61,7 @@ WEIGHTS_FILE = ROOT / "scripts" / ".shard_weights.json"
 
 # Cold-start fallback (seconds, default tier, sentinel ~35 s host, r11)
 # — used only when scripts/.shard_weights.json doesn't exist yet, and
-# as a floor for files it hasn't measured. Unknown files default to 10
-# (25 for streaming files: micro-batch waits dominate them — the first
-# validation run measured shard imbalance 828-1070 s with streaming
-# files defaulted to 10).
+# as a floor for files it hasn't measured. Unknown files default to 10.
 WEIGHTS = {
     # r13 split files (clean-host estimates; the first green run
     # replaces these with harvested measurements)
@@ -82,14 +79,12 @@ WEIGHTS = {
     "test_curation.py": 45,
     "test_scale_smoke.py": 45,
     "test_properties.py": 40,
-    "test_streaming_dedup.py": 35,
     "test_similarity.py": 35,
     "test_sketch.py": 30,
     "test_multimodal.py": 30,
     "test_streaming_stats.py": 30,
     "test_training.py": 30,
     "test_span_dedup.py": 25,
-    "test_streaming_curation.py": 25,
     "test_warehouse.py": 25,
     "test_stats.py": 25,
     "test_models_stats.py": 25,
@@ -127,7 +122,7 @@ def _weight(f: str, measured: dict[str, float]) -> float:
         return max(measured[f], 0.5 * WEIGHTS.get(f, 0))
     if f in WEIGHTS:
         return WEIGHTS[f]
-    return 25 if f.startswith("test_streaming") else 10
+    return 10
 
 
 def shard_files(n: int) -> list[list[str]]:

@@ -11,22 +11,22 @@ from bread_spark.session import get_spark
 SF_DIR = os.environ.get("BREAD_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Two test tiers (r9, VERDICT r8 #2): the DEFAULT tier must stay under
-# 600 s on 32 cores; the slowest streaming checkpoint-restart twins
-# (their cost is real micro-batch/watermark WAITS, not computation)
-# carry @pytest.mark.nightly and are skipped by default. A full
-# certification pass runs them all: BREAD_TEST_NIGHTLY=1 python -m
-# pytest tests/  (or -m nightly for the nightly tier alone). Every
-# nightly-marked test still guards a pin that the default tier covers
-# at lower depth (each twin keeps a default-tier agreement test; only
-# the restart / multi-batch variants move to nightly).
+# 600 s on 32 cores; the slowest pins (replication smokes, AQE parity,
+# checkpoint-restart and multi-batch stream folds, whose cost is real
+# micro-batch WAITS rather than computation) carry @pytest.mark.nightly
+# and are skipped by default. A full certification pass runs them all:
+# BREAD_TEST_NIGHTLY=1 python -m pytest tests/  (or -m nightly for the
+# nightly tier alone). Every nightly-marked test still guards a pin
+# that the default tier covers at lower depth.
 NIGHTLY = os.environ.get("BREAD_TEST_NIGHTLY", "") not in ("", "0")
 
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "nightly: slow streaming restart/multi-batch pins — default tier "
-        "skips these; run with BREAD_TEST_NIGHTLY=1 (or -m nightly)",
+        "nightly: slow pins (replication smokes, restart/multi-batch "
+        "folds) — default tier skips these; run with BREAD_TEST_NIGHTLY=1 "
+        "(or -m nightly)",
     )
 
 

@@ -115,96 +115,27 @@ def test_compaction_refuses_streaming_sink(spark, tmp_path):
     """A streaming file sink's _spark_metadata log makes in-place
     compaction unsafe (resumed sink + log-driven readers reference the
     old files) — the function must refuse loudly, not corrupt."""
-    import pytest as _pytest
-
-    from bread_spark.streaming import incremental as INC
+    from bread_spark.parse import parse_blocks
+    from bread_spark.schemas import RAW_BLOCK_SCHEMA
     from tests.fixtures import write_fixture_files
 
     bdir, _, blocks, _ = write_fixture_files(str(tmp_path / "bronze"))
     out = str(tmp_path / "silver")
-    INC.incremental_blocks(spark, bdir, out, str(tmp_path / "ckpt")).awaitTermination(120)
+    (
+        parse_blocks(spark.readStream.schema(RAW_BLOCK_SCHEMA).json(bdir))
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .partitionBy("year", "month", "day")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
     assert os.path.isdir(os.path.join(out, "_spark_metadata"))
-    with _pytest.raises(ValueError, match="_spark_metadata"):
+    with pytest.raises(ValueError, match="_spark_metadata"):
         compact_partitioned(spark, out, partition_cols=("year", "month", "day"))
     # sink unharmed: stream resumes and reads still work
     assert spark.read.parquet(out).count() == len(blocks)
-
-
-def test_foreachbatch_sink_is_compactable_and_idempotent(spark, tmp_path):
-    """The foreachBatch sink closes the streaming-vs-compaction gap:
-    output is a plain partitioned dir (no _spark_metadata) that
-    compact_partitioned accepts; restarts don't duplicate batches; the
-    idempotency markers survive the compaction swap."""
-    from bread_spark.streaming import incremental as INC
-    from tests.fixtures import write_fixture_files
-
-    bdir, _, blocks, _ = write_fixture_files(str(tmp_path / "bronze"))
-    out = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-
-    INC.incremental_blocks_compactable(spark, bdir, out, ckpt).awaitTermination(120)
-    assert not os.path.isdir(os.path.join(out, "_spark_metadata"))
-    assert os.path.isdir(os.path.join(out, "_batch_markers"))
-    n = spark.read.parquet(out).count()
-    assert n == len(blocks)
-
-    # restart with the same checkpoint: nothing new → no duplicates
-    INC.incremental_blocks_compactable(spark, bdir, out, ckpt).awaitTermination(120)
-    assert spark.read.parquet(out).count() == n
-
-    # compaction works on this sink (refused for the plain file sink)
-    n_files = compact_partitioned(spark, out)
-    assert spark.read.parquet(out).count() == n
-    assert len(_parquet_files(out)) == n_files
-    assert os.path.isdir(os.path.join(out, "_batch_markers"))  # survived swap
-
-    # new landing files after compaction are picked up exactly once
-    extra_dir, _, extra_blocks, _ = write_fixture_files(str(tmp_path / "bronze2"))
-    for f in os.listdir(extra_dir):
-        os.rename(
-            os.path.join(extra_dir, f), os.path.join(bdir, "extra_" + f)
-        )
-    INC.incremental_blocks_compactable(spark, bdir, out, ckpt).awaitTermination(120)
-    assert spark.read.parquet(out).count() == n + len(extra_blocks)
-
-
-def test_compactable_sink_refuses_foreign_marker_namespace(spark, tmp_path):
-    """A DELETED/recreated checkpoint restarts batch ids at 0; with
-    un-namespaced markers those batches would silently no-op (data loss).
-    Run-id-namespaced markers must instead refuse to start, and
-    force_new_run must knowingly append (ADVICE r2 #3)."""
-    import shutil
-
-    import pytest as _pytest
-
-    from bread_spark.streaming import incremental as INC
-    from tests.fixtures import write_fixture_files
-
-    bdir, _, blocks, _ = write_fixture_files(str(tmp_path / "bronze"))
-    out = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-
-    INC.incremental_blocks_compactable(spark, bdir, out, ckpt).awaitTermination(120)
-    n = spark.read.parquet(out).count()
-    assert n == len(blocks)
-
-    # wipe the checkpoint: same out_dir now holds a foreign marker namespace
-    shutil.rmtree(ckpt)
-    with _pytest.raises(ValueError, match="force_new_run"):
-        INC.incremental_blocks_compactable(spark, bdir, out, ckpt)
-    assert spark.read.parquet(out).count() == n  # nothing written or lost
-
-    # explicit opt-in: the new run re-appends (documented duplicate risk)
-    INC.incremental_blocks_compactable(
-        spark, bdir, out, ckpt, force_new_run=True
-    ).awaitTermination(120)
-    assert spark.read.parquet(out).count() == 2 * n
-
-    # and the opted-in run's own restarts stay idempotent
-    INC.incremental_blocks_compactable(
-        spark, bdir, out, ckpt, force_new_run=True
-    ).awaitTermination(120)
-    assert spark.read.parquet(out).count() == 2 * n
 
 
 def test_compaction_of_batch_pipeline_silver(spark, tmp_path):

@@ -1,13 +1,27 @@
 """Ground-truth tests for the statistical-QC models (z-score outliers,
 bounded moving-average window) on tiny hand-computed corpora — the oracle
-differential proves engine agreement; these prove the math itself."""
+differential proves engine agreement; these prove the math itself. The
+sessionizer and the tumbling windows are also pinned against their
+oracle SQL and against Spark's native `session_window`."""
 
 from __future__ import annotations
 
 import datetime
 import statistics
 
-from bread_spark.models import daily_value_moving_avg, value_zscore_outliers
+from pyspark.sql import functions as F
+
+from bread_spark.io import load_table
+from bread_spark.models import (
+    ORACLE_SQL,
+    SESSION_GAP_MIN,
+    daily_value_moving_avg,
+    session_stats,
+    value_zscore_outliers,
+    windowed_value_by_type,
+)
+from tests.conftest import SF_DIR
+from tests.oracle_utils import compare, duckdb_con
 
 
 def _write_events(spark, tmp_path, rows):
@@ -157,9 +171,6 @@ def test_approx_percentiles_within_rank_error(spark):
         approx_value_percentiles_by_type,
         value_percentiles_by_type,
     )
-    from bread_spark.io import load_table
-    from tests.conftest import SF_DIR
-    from pyspark.sql import functions as F
 
     approx = {
         r["event_type"]: r
@@ -324,3 +335,72 @@ def test_late_shipment_rate_corpus(spark, sf_dir):
     for r in rows:
         assert 0 <= r["n_late"] <= r["n_lines"]
         assert 0 <= r["late_ppm"] <= 1_000_000
+
+
+def test_sessionize_batch_vs_oracle(spark):
+    events = load_table(spark, SF_DIR, "events")
+    got = session_stats(events)
+    con = duckdb_con(SF_DIR)
+    sql = f"""
+        WITH flagged AS (
+            SELECT user_id, ts, value,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                             OR epoch(ts) - epoch(lag(ts) OVER w) > {SESSION_GAP_MIN * 60}
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+        ), sessioned AS (
+            SELECT user_id, ts, value,
+                   CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                        AS BIGINT) AS session_id
+            FROM flagged
+        )
+        SELECT user_id, session_id, COUNT(1) AS n_events,
+               MIN(ts) AS session_start, MAX(ts) AS session_end,
+               ROUND(SUM(value), 4) AS session_value
+        FROM sessioned GROUP BY user_id, session_id
+    """
+    ok, msg = compare(got, con, sql)
+    assert ok, msg
+
+
+def test_windowed_value_by_type_matches_oracle(spark):
+    got = windowed_value_by_type(spark, SF_DIR)
+    ok, msg = compare(got, duckdb_con(SF_DIR), ORACLE_SQL["windowed_value_by_type"])
+    assert ok, msg
+
+
+def test_native_session_window_matches_custom_sessionizer(spark):
+    """Spark's built-in session_window must produce the same sessions as
+    the repo's two-pass window sessionizer on the real events table:
+    identical (user, start, n_events, value) multiset, and the native
+    window end is exactly last-event + gap."""
+    ev = load_table(spark, SF_DIR, "events")
+    custom = {
+        (r["user_id"], r["session_start"], r["n_events"], r["session_value"]):
+            r["session_end"]
+        for r in session_stats(ev).collect()
+    }
+    native_rows = (
+        ev.groupBy(
+            "user_id", F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("sw")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.round(F.sum("value"), 4).alias("session_value"),
+        )
+        .collect()
+    )
+    native = {
+        (r["user_id"], r["session_start"], r["n_events"], r["session_value"]):
+            (r["session_end"], r["sw"]["end"])
+        for r in native_rows
+    }
+    assert set(native) == set(custom)
+    gap = datetime.timedelta(minutes=SESSION_GAP_MIN)
+    for key, (last_ts, sw_end) in native.items():
+        assert custom[key] == last_ts
+        assert sw_end == last_ts + gap

@@ -1,11 +1,14 @@
 """Resize/frame-sample plumbing (extensions/multimodal.py). The oracle
-differential pins the plan entries; these pin the payload-moving seam
-and the plan/execute agreement."""
+differential pins the plan entries; these pin the payload-moving seam,
+the plan/execute agreement, and the feature/dedup/decoder seams on a
+hand-built binary column."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
+from bread_spark.extensions import multimodal as MM
 from bread_spark.extensions.multimodal import (
     RESIZE_MAX_H,
     RESIZE_MAX_W,
@@ -557,3 +560,43 @@ def test_phash_full_codec_swap_preserves_contracts(spark):
         assert admitted == {200, 201}
     finally:
         set_phasher(dct_phash)
+
+
+@pytest.fixture(scope="module")
+def media(spark):
+    rows = [
+        (1, "image", b"\x89PNGfakebytes1", "image/png"),
+        (2, "image", b"\x89PNGfakebytes1", "image/png"),  # exact dup of 1
+        (3, "video", b"\x00\x00fakevideobytes", "video/mp4"),
+        (4, "audio", b"RIFFfakeaudio", "audio/wav"),
+    ]
+    return spark.createDataFrame(rows, schema=MM.MEDIA_SCHEMA)
+
+
+def test_media_features(media):
+    feats = {r["media_id"]: r for r in MM.extract_media_features(media).collect()}
+    assert len(feats) == 4
+    # deterministic fake decode: same payload → same dims & digest
+    assert feats[1]["content_sha256"] == feats[2]["content_sha256"]
+    assert (feats[1]["width"], feats[1]["height"]) == (feats[2]["width"], feats[2]["height"])
+    assert feats[3]["n_frames"] > 1  # video gets frames
+    assert feats[4]["n_frames"] == 1
+    assert feats[1]["byte_len"] == 14
+
+
+def test_media_dedup_and_frame_sampling(media):
+    dups = {r["content_sha256"]: r for r in MM.media_dedup_exact(media).collect()}
+    assert len(dups) == 3
+    assert max(r["dup_count"] for r in dups.values()) == 2
+    frames = MM.frame_sample_plan(media, every_n=30).collect()
+    vid = [r for r in frames if r["media_id"] == 3]
+    assert vid and all(r["frame_idx"] % 30 == 0 for r in vid)
+
+
+def test_custom_decoder_seam(spark, media):
+    MM.set_decoder(lambda payload, kind: (640, 480, 7))
+    try:
+        feats = MM.extract_media_features(media).collect()
+        assert all((r["width"], r["height"], r["n_frames"]) == (640, 480, 7) for r in feats)
+    finally:
+        MM.set_decoder(MM._fake_decode)

@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bread_spark.streaming.sessions import SESSION_GAP_MIN, session_stats
+from bread_spark.models import SESSION_GAP_MIN, session_stats
 
 EPOCH = datetime.datetime(2024, 1, 1)
 

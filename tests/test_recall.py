@@ -58,28 +58,6 @@ def test_capped_jaccard_recall_vs_uncapped(spark):
     assert recall >= 0.9, f"capped jaccard recall {recall:.2f}"
 
 
-def test_capped_posting_plan_matches_selfjoin(spark):
-    """The posting-list capped alternative must be value-identical to the
-    benched self-join path with the same cap — same pairs, same rounded
-    jaccard scores."""
-    from bread_spark.extensions.dedup import (
-        MAX_DF,
-        _jaccard_posting_capped,
-    )
-    from bread_spark.io import load_table
-
-    selfjoin = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in QUERIES["ngram_jaccard_pairs_capped"](spark, SF_DIR).collect()
-    }
-    docs = load_table(spark, SF_DIR, "documents")
-    posting = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in _jaccard_posting_capped(docs, 0.5, MAX_DF).collect()
-    }
-    assert posting == selfjoin
-
-
 def test_lsh_bucket_pairs_vs_brute_force(spark):
     """The distributed near-dup path must (a) emit ONLY true pairs — exact
     in-bucket re-scoring makes precision 1.0, so output ⊆ brute force —

@@ -15,7 +15,7 @@ from tests.conftest import SF_DIR
 from tests.scale_fixtures import REPS, big_docs_r6, big_events  # noqa: F401
 
 def test_sessionize_scales(spark, big_events):
-    from bread_spark.streaming.sessions import session_stats
+    from bread_spark.models import session_stats
 
     base = load_table(spark, SF_DIR, "events")
     small = session_stats(base).count()

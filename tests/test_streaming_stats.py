@@ -156,8 +156,7 @@ def test_daily_stream_feeds_forecast_folds(spark, tmp_path):
 
 
 def test_engagement_hll_merge_equivalence(spark):
-    """Default-tier sibling of the nightly streaming twin: the panel's
-    trailing-window estimate is computed by max-merging PER-DAY register
+    """The panel's trailing-window estimate is computed by max-merging PER-DAY register
     tables, and HLL mergeability makes that identical to a one-shot
     register build over the whole window's events — asserted through
     the public estimator (users_7d/30d at the anchor == users_1d of the
@@ -193,66 +192,3 @@ def test_engagement_hll_merge_equivalence(spark):
     # register dominance: wider windows can never estimate lower
     for r in panel.values():
         assert r.users_1d_est <= r.users_7d_est <= r.users_30d_est
-
-
-@pytest.mark.nightly
-def test_engagement_register_stream_matches_batch_and_feeds_panel(
-    spark, tmp_path
-):
-    """A closed day's streamed register rows are bit-identical to the
-    batch `engagement_user_registers_df` build over that day's events
-    (NULL users dropped on both paths), and the snapshot through
-    `engagement_hll_panel_df` IS the batch panel estimate."""
-    from bread_spark.extensions.stats import (
-        engagement_hll_panel_df,
-        engagement_user_registers_df,
-    )
-    from bread_spark.streaming.stats import engagement_register_stream
-
-    B1 = [
-        ("a", u, f"2024-03-01T0{u % 6}:00:00", 1.0) for u in range(1, 13)
-    ] + [
-        ("a", u, f"2024-03-02T0{u % 6}:00:00", 1.0) for u in range(8, 20)
-    ]
-    src, ckpt, sink = (str(tmp_path / d) for d in ("src", "ck", "sink"))
-    os.makedirs(src)
-    _write(src, "b1.json", B1)
-    with open(os.path.join(src, "b1null.json"), "w") as f:
-        f.write(
-            json.dumps(
-                {
-                    "event_type": "a",
-                    "user_id": None,
-                    "ts": "2024-03-01T03:00:00",
-                    "value": 1.0,
-                }
-            )
-            + "\n"
-        )
-
-    def run():
-        stream = spark.readStream.schema(EV_SCHEMA).json(src)
-        q = (
-            engagement_register_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    # advance the watermark past both days so they finalize and emit
-    _write(src, "b2.json", [("a", 99, "2024-03-06T00:00:00", 1.0)])
-    run()
-
-    got = spark.read.parquet(sink)
-    batch = engagement_user_registers_df(_batch_df(spark, B1))
-    assert {tuple(r) for r in got.collect()} == {
-        tuple(r) for r in batch.collect()
-    }
-    snap = engagement_hll_panel_df(got).collect()
-    ref = engagement_hll_panel_df(batch).collect()
-    assert sorted(map(tuple, snap)) == sorted(map(tuple, ref))
