@@ -14,14 +14,20 @@ broadcast of the (tiny) query set either way.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
+from ..plans.materialize import materialized_frame, register_side_cache
 
 TOP_K = 5
 N_QUERIES = 10  # queries = vec_id < 10 (deterministic subset)
+
+_QUERY_SCHEMA = "query_id long, vec_id long, cosine double"
+_PAIR_SCHEMA = "vec_a long, vec_b long, cosine double"
 
 
 def _dot(a: str, b: str):
@@ -36,53 +42,125 @@ def _dot(a: str, b: str):
     )
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector (vec_id < N_QUERIES).
+# ---------------------------------------------------------------------------
+# The shared cosine kernel: every BLAS scorer below is built from these
+# steps, so all of them normalize, score and round in one op order and
+# their rounded scores agree bit-for-bit.
+# ---------------------------------------------------------------------------
 
-    Plan: the tiny query set rides a broadcast as a unit-normalized
-    float64 matrix; each mapInPandas block scores corpus-block × queries
-    with one BLAS matmul (same kernel as `embedding_cosine_dups` — the
-    JVM higher-order-fold version was ~40× slower), then a per-query
-    window top-k over the (small) scored set. Ordering uses the rounded
-    score + vec_id tie-break so ranks are engine-deterministic.
 
-    Scale: scoring is map-side only; the shuffle moves just
-    N_QUERIES × corpus candidate rows, and WindowGroupLimit prunes to k
-    per partition before the exchange (asserted in tests/test_plans.py).
-    """
+def _unit(vectors):
+    """float64 unit rows of an embedding batch: a / ‖a‖₂ per row (an
+    empty batch stays empty)."""
+    import numpy as np
+
+    a = np.array(vectors, dtype=np.float64)
+    return a / np.linalg.norm(a, axis=-1, keepdims=True)
+
+
+def _bounded_side(side: DataFrame):
+    """(ids, unit) of a side that is small BY CONSTRUCTION (a query set,
+    a probe suite, the broadcast corpus of the small-corpus kernel),
+    collected to the driver for a broadcast."""
+    import numpy as np
+
+    rows = side.select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return ids, _unit([r["embedding"] for r in rows])
+
+
+def _batches(fn):
+    """mapInPandas kernel applying `fn` to every non-empty Arrow batch."""
+
+    def kernel(it):
+        for pdf in it:
+            if len(pdf):
+                yield fn(pdf)
+
+    return kernel
+
+
+def _ids_unit(pdf):
+    """(ids, unit) of one pandas batch of (vec_id, embedding) rows."""
+    import numpy as np
+
+    return pdf["vec_id"].to_numpy(dtype=np.int64), _unit(pdf["embedding"].tolist())
+
+
+def _pairs_above(ids_a, ua, ids_b, ub, threshold: float, upper: bool):
+    """Above-threshold pairs of one BLAS block, oriented vec_a < vec_b.
+
+    Scores round to 4 decimals — wide enough that BLAS vs sequential-fold
+    summation-order differences (~1e-15) can't flip a rounding boundary,
+    so results stay engine-deterministic and oracle-checkable. `upper`
+    keeps only ids_a < ids_b (the sides overlap, so each pair shows up
+    twice); with disjoint sides every unordered pair appears exactly once
+    and is kept in either orientation."""
     import numpy as np
     import pandas as pd
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_unit))
-
-    def blocks(it):
-        b_qids, b_qunit = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_unit = a / np.linalg.norm(a, axis=1, keepdims=True)
-            scores = np.round(a_unit @ b_qunit.T, 6)  # corpus_block × queries
-            ic, iq = np.nonzero(a_ids[:, None] != b_qids[None, :])
-            yield pd.DataFrame(
-                {"query_id": b_qids[iq], "vec_id": a_ids[ic], "cosine": scores[ic, iq]}
-            )
-
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        blocks, "query_id long, vec_id long, cosine double"
+    scores = np.round(ua @ ub.T, 4)
+    keep = scores >= threshold
+    if upper:
+        keep &= ids_a[:, None] < ids_b[None, :]
+    ia, ib = np.nonzero(keep)
+    xa, xb = ids_a[ia], ids_b[ib]
+    return pd.DataFrame(
+        {"vec_a": np.minimum(xa, xb), "vec_b": np.maximum(xa, xb), "cosine": scores[ia, ib]}
     )
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """Per-query TOP_K of (query_id, vec_id, cosine): rounded score DESC,
+    vec_id ASC, so ranks are engine-deterministic. The shuffle moves only
+    scored candidates, and WindowGroupLimit prunes to k per partition
+    before the exchange (asserted in tests/test_plans.py)."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
+
+
+def _query_topk(spark: SparkSession, sf_dir: str, candidates=None) -> DataFrame:
+    """Top-k cosine neighbors of each query vector (vec_id < N_QUERIES).
+
+    The tiny query set rides a broadcast as a unit-normalized float64
+    matrix; each mapInPandas batch scores corpus-batch × queries with one
+    BLAS matmul (the JVM higher-order-fold version was ~40× slower) and
+    rounds to 6 decimals. `candidates(a_unit, q_unit)` narrows the
+    (corpus, query) pairs that are kept; self-pairs never are."""
+    import numpy as np
+    import pandas as pd
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    bc = spark.sparkContext.broadcast(
+        _bounded_side(emb.filter(F.col("vec_id") < N_QUERIES))
+    )
+
+    def score(pdf):
+        q_ids, q_unit = bc.value
+        a_ids, a_unit = _ids_unit(pdf)
+        keep = a_ids[:, None] != q_ids[None, :]
+        if candidates is not None:
+            keep &= candidates(a_unit, q_unit)
+        cos = np.round(a_unit @ q_unit.T, 6)  # corpus_batch × queries
+        ic, iq = np.nonzero(keep)
+        return pd.DataFrame(
+            {"query_id": q_ids[iq], "vec_id": a_ids[ic], "cosine": cos[ic, iq]}
+        )
+
+    return _top_k(emb.mapInPandas(_batches(score), _QUERY_SCHEMA))
+
+
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-k cosine neighbors for each query vector (vec_id < N_QUERIES).
+
+    Scale: scoring is map-side only; the shuffle moves just
+    N_QUERIES × corpus candidate rows before the per-query window.
+    """
+    return _query_topk(spark, sf_dir)
 
 
 def centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,12 +322,11 @@ def _projection_sign(i: int, j: int) -> float:
     return 1.0 if hashlib.md5(f"{i}:{j}".encode()).hexdigest()[0] in "02468ace" else -1.0
 
 
-def projection_sign_arrays(
-    in_dims: int = PROJ_IN_DIMS, out_dims: int = PROJ_OUT_DIMS
-) -> list[list[float]]:
-    """Column-major sign matrix: one length-`in_dims` list per output dim."""
+def projection_sign_arrays() -> list[list[float]]:
+    """Column-major sign matrix: one length-PROJ_IN_DIMS list per output dim."""
     return [
-        [_projection_sign(i, j) for i in range(in_dims)] for j in range(out_dims)
+        [_projection_sign(i, j) for i in range(PROJ_IN_DIMS)]
+        for j in range(PROJ_OUT_DIMS)
     ]
 
 
@@ -294,10 +371,9 @@ def project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 COSINE_DUP_THRESHOLD = 0.35  # synthetic corpus: pairwise cosine tops out ~0.6
 
 
-def embedding_cosine_dups(
-    spark: SparkSession, sf_dir: str, threshold: float = COSINE_DUP_THRESHOLD
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (a, b) with cosine ≥ threshold.
+def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs: (a, b) with cosine ≥
+    COSINE_DUP_THRESHOLD.
 
     Vectorized brute force: the corpus rides a Spark broadcast as one
     unit-normalized float64 matrix; each mapInPandas batch computes its
@@ -313,118 +389,82 @@ def embedding_cosine_dups(
     Scale: the collect+broadcast holds to ~10M×64 float64 (~5 GB) and is
     the exact small-corpus/re-rank kernel; **at scale use
     `lsh_bucket_pairs`** — the fully distributed default (signature-
-    bucketed candidate generation, no driver collect). Scores are
-    rounded to 4 decimals — wide enough that BLAS vs sequential-fold
-    summation-order differences (~1e-15) can't flip a rounding boundary,
-    so the result stays engine-deterministic and oracle-checkable.
+    bucketed candidate generation, no driver collect).
     """
-    import numpy as np
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = emb.collect()  # broadcast side; see scale note above
-    ids = np.array([r["vec_id"] for r in corpus], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in corpus], dtype=np.float64)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, unit))
+    bc = spark.sparkContext.broadcast(_bounded_side(emb))  # see scale note above
 
-    def blocks(it):
-        b_ids, b_unit = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_unit = a / np.linalg.norm(a, axis=1, keepdims=True)
-            scores = np.round(a_unit @ b_unit.T, 4)
-            ia, ib = np.nonzero((scores >= threshold) & (a_ids[:, None] < b_ids[None, :]))
-            yield pd.DataFrame(
-                {"vec_a": a_ids[ia], "vec_b": b_ids[ib], "cosine": scores[ia, ib]}
-            )
+    def block(pdf):
+        ids, unit = bc.value
+        return _pairs_above(*_ids_unit(pdf), ids, unit, COSINE_DUP_THRESHOLD, True)
 
-    return emb.mapInPandas(blocks, "vec_a long, vec_b long, cosine double")
+    return emb.mapInPandas(_batches(block), _PAIR_SCHEMA)
 
 
 COSINE_TILE_T = 8  # tiles for the distributed exact all-pairs kernel
 
 
-def embedding_cosine_dups_tiled(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = COSINE_DUP_THRESHOLD,
-    tiles: int = COSINE_TILE_T,
-) -> DataFrame:
+def _tile_pair_blocks(emb: DataFrame, tiles: int, block, schema: str) -> DataFrame:
+    """Blocked all-pairs over a (vec_id, ..., embedding) frame: vectors
+    land in `tiles` tiles by vec_id; each vector is fanned out once per
+    tile-PAIR containing its tile (an in-array transform + explode — T
+    rows per vector, no join), and each (ta, tb) group calls
+    `block(a, b)` once, each side as (rows, ids, unit). On the diagonal
+    (ta == tb) `b` is `a` itself.
+
+    Scale contract: executor memory is bounded by 2·(n/T) vectors per
+    group — pick T so a tile fits (n/T ≈ 20k rows of float64[64] ≈ 10
+    MB); shuffle volume is n·T rows. The T(T+1)/2 groups ARE the O(n²)
+    cost made explicit and spread across the cluster."""
+    cols = emb.columns
+    fan = emb.select(
+        *cols,
+        F.pmod(F.col("vec_id"), F.lit(tiles)).alias("tile"),
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {tiles - 1}), u -> struct("
+                f"least(pmod(vec_id, {tiles}), u) as ta, "
+                f"greatest(pmod(vec_id, {tiles}), u) as tb))"
+            )
+        ).alias("p"),
+    ).select(*cols, "tile", "p.ta", "p.tb")
+
+    def split(key, pdf):
+        import pandas as pd
+
+        ta, tb = key
+        sides = []
+        for tile in (ta, tb) if ta != tb else (ta,):
+            rows = pdf[pdf["tile"] == tile]
+            if not len(rows):
+                return pd.DataFrame()
+            sides.append((rows, *_ids_unit(rows)))
+        return block(sides[0], sides[-1])
+
+    return fan.groupBy("ta", "tb").applyInPandas(split, schema)
+
+
+def embedding_cosine_dups_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT embedding-cosine near-duplicate pairs with NO driver
     collect — the fully distributed form of `embedding_cosine_dups`
     (whose broadcast kernel caps at ~10M vectors). Same result set, same
     oracle.
 
-    Blocked all-pairs: vectors land in `tiles` tiles by vec_id; each
-    vector is fanned out once per tile-PAIR containing its tile (an
-    in-array transform + explode — T rows per vector, no join), and each
-    (ta, tb) group computes its block of the similarity matrix with one
-    BLAS matmul in `applyInPandas`, emitting only above-threshold pairs
-    with vec_a < vec_b.
-
-    Scale contract: executor memory is bounded by 2·(n/T) vectors per
-    group — pick T so a tile fits (n/T ≈ 20k rows of float64[64] ≈ 10
-    MB); shuffle volume is n·T rows. The T(T+1)/2 groups ARE the O(n²)
-    cost made explicit and spread across the cluster — exact all-pairs
-    is inherently quadratic, so at open-corpus scale the default remains
+    Each tile-pair group (`_tile_pair_blocks`) computes its block of the
+    similarity matrix with one BLAS matmul, emitting only
+    above-threshold pairs with vec_a < vec_b. Exact all-pairs is
+    inherently quadratic, so at open-corpus scale the default remains
     `lsh_bucket_pairs` (candidates meet only inside signature buckets);
     this kernel is the exact path when completeness is non-negotiable
-    (within-cluster refine, audit passes, modest n). Scores round to 4
-    decimals — BLAS summation-order noise (~1e-15) cannot flip a
-    boundary, so the result is engine-deterministic and oracle-checked
-    against the same SQL as the broadcast kernel."""
-    import numpy as np
-    import pandas as pd
-
-    t = tiles
+    (within-cluster refine, audit passes, modest n)."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fan = emb.select(
-        "vec_id",
-        "embedding",
-        F.pmod(F.col("vec_id"), F.lit(t)).alias("tile"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {t - 1}), u -> struct("
-                f"least(pmod(vec_id, {t}), u) as ta, "
-                f"greatest(pmod(vec_id, {t}), u) as tb))"
-            )
-        ).alias("p"),
-    ).select("vec_id", "embedding", "tile", "p.ta", "p.tb")
 
-    def block(key, pdf):
-        ta, tb = key
-        a = pdf[pdf["tile"] == ta]
-        b = pdf[pdf["tile"] == tb] if tb != ta else a
-        if not len(a) or not len(b):
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-        ma = np.array(a["embedding"].tolist(), dtype=np.float64)
-        mb = np.array(b["embedding"].tolist(), dtype=np.float64) if tb != ta else ma
-        ua = ma / np.linalg.norm(ma, axis=1, keepdims=True)
-        ub = mb / np.linalg.norm(mb, axis=1, keepdims=True) if tb != ta else ua
-        scores = np.round(ua @ ub.T, 4)
-        if ta == tb:
-            # within-tile: upper triangle by id
-            ia, ib = np.nonzero(
-                (scores >= threshold) & (ids_a[:, None] < ids_b[None, :])
-            )
-            va, vb = ids_a[ia], ids_b[ib]
-        else:
-            # cross-tile: every (x, y) unordered pair appears exactly once
-            # in A×B — orient by id, drop nothing
-            ia, ib = np.nonzero(scores >= threshold)
-            xa, xb = ids_a[ia], ids_b[ib]
-            va, vb = np.minimum(xa, xb), np.maximum(xa, xb)
-        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cosine": scores[ia, ib]})
+    def block(a, b):
+        # within a tile: upper triangle by id; across tiles every
+        # unordered pair appears exactly once in A×B
+        return _pairs_above(*a[1:], *b[1:], COSINE_DUP_THRESHOLD, a is b)
 
-    return fan.groupBy("ta", "tb").applyInPandas(
-        block, "vec_a long, vec_b long, cosine double"
-    )
+    return _tile_pair_blocks(emb, COSINE_TILE_T, block, _PAIR_SCHEMA)
 
 
 ORACLE_SQL: dict[str, str] = {
@@ -546,21 +586,42 @@ N_TABLES = 16  # independent hash tables — recall 1-(1-p^b)^L
 N_PLANES_PER_TABLE = 6  # bucket bits per table (64 buckets/table)
 
 
-def _plane_matrix(dim: int = 64):
-    """Deterministic pseudo-random hyperplanes: (N_TABLES*N_PLANES, dim)
-    float64 numpy matrix from a fixed LCG."""
+@functools.lru_cache(maxsize=1)
+def _plane_matrix():
+    """Deterministic pseudo-random hyperplanes: (N_TABLES*N_PLANES, 64)
+    float64 numpy matrix from a fixed LCG (built once per process, so
+    read-only)."""
     import numpy as np
 
     n = N_TABLES * N_PLANES_PER_TABLE
     state = 42
     vals = []
-    for _ in range(n * dim):
+    for _ in range(n * 64):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
         vals.append(((state >> 33) / float(1 << 31)) - 1.0)  # [-1, 1)
-    return np.array(vals, dtype=np.float64).reshape(n, dim)
+    planes = np.array(vals, dtype=np.float64).reshape(n, 64)
+    planes.flags.writeable = False
+    return planes
 
 
-def lsh_bucket_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
+def _signatures(unit):
+    """(n, N_TABLES) integer buckets of unit vectors: N_PLANES_PER_TABLE
+    sign-of-projection bits per hash table."""
+    import numpy as np
+
+    signs = (unit @ _plane_matrix().T) >= 0
+    bits = 1 << np.arange(N_PLANES_PER_TABLE, dtype=np.int64)
+    return signs.reshape(len(unit), N_TABLES, N_PLANES_PER_TABLE) @ bits
+
+
+def _bucket_match(a_unit, q_unit):
+    """(corpus, query) candidate mask: the two share a bucket in ANY table."""
+    return (_signatures(a_unit)[:, None, :] == _signatures(q_unit)[None, :, :]).any(
+        axis=2
+    )
+
+
+def lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via multi-table hyperplane LSH: L independent tables of b
     sign-of-projection bits each; a corpus vector is a candidate for a
     query if they share a bucket in ANY table; exact cosine re-ranks the
@@ -568,69 +629,19 @@ def lsh_bucket_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFra
     table recalled only ~0.1 of true neighbors on this corpus; 8 tables
     × 6 bits recalls the same neighbors with probability 1-(1-p^6)^8.
 
-    Everything runs in one mapInPandas kernel over the scan: signatures
-    (a matmul against the fixed plane matrix), bucket matching, and
-    scoring — zero shuffles before the (tiny) top-k window. At cluster
-    scale with persisted tables, the same signatures become groupBy keys
-    (the minhash-band pattern); for query serving, this broadcast form is
-    the right shape. Rows-only check (bucket membership is
+    It is `cosine_topk`'s scorer with a bucket-match mask: signatures,
+    bucket matching and scoring run in one mapInPandas kernel over the
+    scan — zero shuffles before the (tiny) top-k window — so a pair both
+    entries return carries the identical cosine. At cluster scale with
+    persisted tables, the same signatures become groupBy keys (the
+    minhash-band pattern); for query serving, this broadcast form is the
+    right shape. Rows-only check (bucket membership is
     plane-constant-specific); recall is pinned by a test instead.
     """
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = _plane_matrix()  # (L*b, dim)
-    bits = 1 << np.arange(N_PLANES_PER_TABLE, dtype=np.int64)
-
-    def signatures(unit_vecs):
-        # (n, L*b) signs → (n, L) integer buckets
-        signs = (unit_vecs @ planes.T) >= 0
-        per_table = signs.reshape(len(unit_vecs), N_TABLES, N_PLANES_PER_TABLE)
-        return per_table @ bits
-
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_sigs = signatures(q_unit)  # (Q, L)
-    bc = spark.sparkContext.broadcast((q_ids, q_unit, q_sigs))
-
-    def score(it):
-        b_qids, b_qunit, b_qsigs = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_unit = a / np.linalg.norm(a, axis=1, keepdims=True)
-            a_sigs = signatures(a_unit)  # (n, L)
-            # candidate if any table bucket matches
-            match = (a_sigs[:, None, :] == b_qsigs[None, :, :]).any(axis=2)
-            match &= a_ids[:, None] != b_qids[None, :]
-            cos = np.round(a_unit @ b_qunit.T, 6)
-            ic, iq = np.nonzero(match)
-            yield pd.DataFrame(
-                {"query_id": b_qids[iq], "vec_id": a_ids[ic], "cosine": cos[ic, iq]}
-            )
-
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        score, "query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return _query_topk(spark, sf_dir, _bucket_match)
 
 
-def lsh_bucket_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = COSINE_DUP_THRESHOLD,
-    max_bucket: int | None = 10_000,
-) -> DataFrame:
+def lsh_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-×-corpus embedding near-duplicate pairs, fully distributed —
     the 100 TB-safe default; `embedding_cosine_dups` (driver collect +
     broadcast) remains the small-corpus/re-rank kernel.
@@ -654,18 +665,16 @@ def lsh_bucket_pairs(
     tests/test_recall.py's exact-score assertion). Plus a distinct over
     the (tiny) pair set. No driver collect, no cartesian.
 
-    `max_bucket` bounds the worst bucket: a bucket of m rows scores m²/2
-    pairs, so a degenerate bucket (all-identical corpus) would otherwise
-    quadratic-blow-up exactly like uncapped jaccard fan-out. Oversized
-    buckets are dropped (recall loss is confined to pathological buckets;
-    raise b / n_tables instead at that density). Precision is exact
-    (candidates are re-scored), so output ⊆ brute-force output; recall is
-    pinned by tests/test_recall.py.
+    `max_bucket` (10,000 here) bounds the worst bucket: a bucket of m
+    rows scores m²/2 pairs, so a degenerate bucket (all-identical corpus)
+    would otherwise quadratic-blow-up exactly like uncapped jaccard
+    fan-out. Oversized buckets are dropped (recall loss is confined to
+    pathological buckets; raise b / n_tables instead at that density).
+    Precision is exact (candidates are re-scored), so output ⊆
+    brute-force output; recall is pinned by tests/test_recall.py.
 
     Rows-only check: bucket membership is plane-constant-specific.
     """
-    from ..plans.materialize import materialized_frame
-
     # Compute-once signature/bucket table (plans/materialize.py seam):
     # at 100 TB the N·L signature table is built once and stored next to
     # the embeddings; re-scoring passes (new thresholds, re-ranks) read
@@ -678,7 +687,7 @@ def lsh_bucket_pairs(
             load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         ),
     )
-    return _bucket_pair_scores(sig, threshold=threshold, max_bucket=max_bucket)
+    return _bucket_pair_scores(sig, COSINE_DUP_THRESHOLD, 10_000)
 
 
 BUCKET_SCORE_TILE = 1024  # rows per in-bucket scoring block (bounds task memory)
@@ -692,30 +701,19 @@ def _signature_rows(emb: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    planes = _plane_matrix()
-    bits = 1 << np.arange(N_PLANES_PER_TABLE, dtype=np.int64)
-
-    def sig_rows(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            unit = a / np.linalg.norm(a, axis=1, keepdims=True)
-            signs = (unit @ planes.T) >= 0
-            sigs = signs.reshape(len(unit), N_TABLES, N_PLANES_PER_TABLE) @ bits
-            n = len(ids)
-            yield pd.DataFrame(
-                {
-                    "table": np.tile(np.arange(N_TABLES, dtype=np.int32), n),
-                    "bucket": sigs.reshape(-1),
-                    "vec_id": np.repeat(ids, N_TABLES),
-                    "emb": np.repeat(pdf["embedding"].to_numpy(), N_TABLES),
-                }
-            )
+    def sig_rows(pdf):
+        ids, unit = _ids_unit(pdf)
+        return pd.DataFrame(
+            {
+                "table": np.tile(np.arange(N_TABLES, dtype=np.int32), len(ids)),
+                "bucket": _signatures(unit).reshape(-1),
+                "vec_id": np.repeat(ids, N_TABLES),
+                "emb": np.repeat(pdf["embedding"].to_numpy(), N_TABLES),
+            }
+        )
 
     return emb.mapInPandas(
-        sig_rows, "table int, bucket long, vec_id long, emb array<float>"
+        _batches(sig_rows), "table int, bucket long, vec_id long, emb array<float>"
     )
 
 
@@ -726,18 +724,14 @@ def lsh_bucket_pairs_df(
 ) -> DataFrame:
     """Core of `lsh_bucket_pairs` over any (vec_id, embedding) frame —
     also the seam the adversarial-skew test drives directly."""
-    return _bucket_pair_scores(
-        _signature_rows(emb), threshold=threshold, max_bucket=max_bucket
-    )
+    return _bucket_pair_scores(_signature_rows(emb), threshold, max_bucket)
 
 
 BUCKET_GROUP_BLOCKS = 8  # buckets per applyInPandas group (see below)
 
 
 def _bucket_pair_scores(
-    sig: DataFrame,
-    threshold: float = COSINE_DUP_THRESHOLD,
-    max_bucket: int | None = 10_000,
+    sig: DataFrame, threshold: float, max_bucket: int | None
 ) -> DataFrame:
     """In-bucket exact scoring over a signature table: candidates still
     meet ONLY inside a (table, bucket) cell — the Python kernel splits
@@ -756,9 +750,7 @@ def _bucket_pair_scores(
     import pandas as pd
 
     def block_pairs(key, pdf):
-        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-            {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-        )
+        tile = BUCKET_SCORE_TILE  # read when the plan ships (tests patch it)
         outs = []
         for _, bdf in pdf.groupby("bucket", sort=False):
             if len(bdf) < 2 or (max_bucket is not None and len(bdf) > max_bucket):
@@ -766,35 +758,24 @@ def _bucket_pair_scores(
             ids = bdf["vec_id"].to_numpy(dtype=np.int64)
             # float64 normalize AFTER transport — same op order as the
             # brute-force kernel, so rounded scores match it exactly
-            a = np.array(bdf["emb"].tolist(), dtype=np.float64)
-            unit = a / np.linalg.norm(a, axis=1, keepdims=True)
+            unit = _unit(bdf["emb"].tolist())
             # Tile the upper triangle in row blocks: a dense m×m score
             # matrix at m = max_bucket = 10_000 is ~800 MB in one task
             # (ADVICE r2 #2); per-block peak is TILE×m ≈ 80 MB and
             # output pairs stream out.
-            for s in range(0, len(ids), BUCKET_SCORE_TILE):
-                blk_ids = ids[s : s + BUCKET_SCORE_TILE]
-                scores = np.round(unit[s : s + BUCKET_SCORE_TILE] @ unit.T, 4)
-                ia, ib = np.nonzero(
-                    (scores >= threshold) & (blk_ids[:, None] < ids[None, :])
+            for s in range(0, len(ids), tile):
+                pairs = _pairs_above(
+                    ids[s : s + tile], unit[s : s + tile], ids, unit, threshold, True
                 )
-                if len(ia):
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "vec_a": blk_ids[ia],
-                                "vec_b": ids[ib],
-                                "cosine": scores[ia, ib],
-                            }
-                        )
-                    )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+                if len(pairs):
+                    outs.append(pairs)
+        return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
 
     blocked = sig.withColumn(
         "bucket_block", F.pmod(F.col("bucket"), F.lit(BUCKET_GROUP_BLOCKS))
     )
     cand = blocked.groupBy("table", "bucket_block").applyInPandas(
-        block_pairs, "vec_a long, vec_b long, cosine double"
+        block_pairs, _PAIR_SCHEMA
     )
     return cand.distinct()
 
@@ -808,43 +789,36 @@ IVF_NPROBE = 8  # clusters probed per query
 IVF_ITERS = 2  # Lloyd refinement rounds
 
 
-# Compute-once caches for the IVF front end, same contract as
-# plans/materialize.py: keyed on (applicationId, realpath(sf_dir), k,
-# iters), process-local, deterministic rebuild on any key change. The
-# k-means build (iters × [whole-corpus assign + mean aggregate]) is the
-# dominant cost of BOTH `ivf_topk` and `cluster_quota_sample`; run as a
-# catalog pass each was training the identical quantizer from scratch.
-# At 100 TB the quantizer is trained once and stored — these caches are
-# that stored-model seam. The centroid value is a k×dim numpy matrix
-# (~16 KB), not a DataFrame, hence a local dict instead of
+# Compute-once cache for the IVF front end, same contract as
+# plans/materialize.py: keyed on (applicationId, realpath(sf_dir)),
+# process-local, and emptied by `clear_materialized_frames` together
+# with the `ivf_assignment` seam built from it. The k-means build
+# (iters × [whole-corpus assign + mean aggregate]) is the dominant cost
+# of `ivf_topk`. At 100 TB the quantizer is trained once and stored —
+# this cache is that stored-model seam. The centroid value is a k×dim
+# numpy matrix (~16 KB), not a DataFrame, hence a side dict instead of
 # materialized_frame.
-_IVF_CENTROID_CACHE: dict[tuple, object] = {}
+_IVF_CENTROID_CACHE: dict[tuple, object] = register_side_cache({})
 
 
-def ivf_centroid_matrix(
-    spark: SparkSession, sf_dir: str, k: int = IVF_K, iters: int = IVF_ITERS
-):
+def ivf_centroid_matrix(spark: SparkSession, sf_dir: str):
     """Compute-once k-means centroids for the canonical embeddings table."""
     import os
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir), k, iters)
+    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
     cents = _IVF_CENTROID_CACHE.get(key)
     if cents is None:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        cents = _ivf_centroids(spark, emb, k, iters)
+        cents = _ivf_centroids(spark, emb)
         _IVF_CENTROID_CACHE[key] = cents
     return cents
 
 
-def ivf_assignment_frame(
-    spark: SparkSession, sf_dir: str, k: int = IVF_K, iters: int = IVF_ITERS
-) -> DataFrame:
+def ivf_assignment_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compute-once (vec_id, cluster) assignment under the cached
-    quantizer — the inverted-list membership table both IVF consumers
-    probe (stored alongside the index at scale)."""
-    from ..plans.materialize import materialized_frame
-
-    cents = ivf_centroid_matrix(spark, sf_dir, k, iters)
+    quantizer — the inverted-list membership table `ivf_topk` probes
+    (stored alongside the index at scale)."""
+    cents = ivf_centroid_matrix(spark, sf_dir)
     return materialized_frame(
         spark,
         "ivf_assignment",
@@ -854,14 +828,14 @@ def ivf_assignment_frame(
             load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
             cents,
         ),
-        (k, iters),
     )
 
 
-def _ivf_centroids(spark: SparkSession, emb: DataFrame, k: int, iters: int):
-    """Deterministic k-means coarse quantizer.
+def _ivf_centroids(spark: SparkSession, emb: DataFrame):
+    """Deterministic k-means coarse quantizer: IVF_K centroids after
+    IVF_ITERS Lloyd rounds.
 
-    Init = the first k vectors by vec_id (deterministic, standard for a
+    Init = the first IVF_K vectors by vec_id (deterministic, standard for a
     coarse quantizer); each Lloyd round assigns via a broadcast-centroid
     mapInPandas argmax and recomputes means with posexplode →
     groupBy(cluster, pos) — fully distributed; only the k×dim centroid
@@ -869,11 +843,10 @@ def _ivf_centroids(spark: SparkSession, emb: DataFrame, k: int, iters: int):
     """
     import numpy as np
 
-    init = emb.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
-    cents = np.array([r["embedding"] for r in init], dtype=np.float64)
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+    init = emb.filter(F.col("vec_id") < IVF_K).orderBy("vec_id").collect()
+    cents = _unit([r["embedding"] for r in init])
 
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assigned = _assign_clusters(spark, emb, cents)
         means = (
             assigned.join(emb, "vec_id")
@@ -898,40 +871,26 @@ def _assign_clusters(spark: SparkSession, emb: DataFrame, cents) -> DataFrame:
 
     bc = spark.sparkContext.broadcast(cents)
 
-    def assign(it):
-        c = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a /= np.linalg.norm(a, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cluster": np.argmax(a @ c.T, axis=1).astype(np.int32),
-                }
-            )
+    def assign(pdf):
+        ids, unit = _ids_unit(pdf)
+        return pd.DataFrame(
+            {"vec_id": ids, "cluster": np.argmax(unit @ bc.value.T, axis=1).astype(np.int32)}
+        )
 
     return emb.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id long, cluster int"
+        _batches(assign), "vec_id long, cluster int"
     )
 
 
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = TOP_K,
-    n_centroids: int = IVF_K,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via an IVF coarse quantizer — the second scale path
     alongside hyperplane LSH (`lsh_bucket_topk`).
 
     Index: k-means centroids; every corpus vector lives in one inverted
-    list (its nearest centroid). Query: probe the `nprobe` nearest
+    list (its nearest centroid). Query: probe the IVF_NPROBE nearest
     centroids, score ONLY vectors in those lists exactly, take top-k.
-    Probing nprobe/k of the corpus bounds work per query; recall follows
-    the usual IVF curve (pinned by tests/test_recall.py).
+    Probing IVF_NPROBE/IVF_K of the corpus bounds work per query; recall
+    follows the usual IVF curve (pinned by tests/test_recall.py).
 
     Plan shape at scale: assignment is map-side (broadcast centroids);
     the probe table (queries × nprobe, tiny) broadcast-joins the
@@ -944,15 +903,12 @@ def ivf_topk(
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # cached quantizer + assignment table (see the seam note above)
-    cents = ivf_centroid_matrix(spark, sf_dir, n_centroids, IVF_ITERS)
-    assigned = ivf_assignment_frame(spark, sf_dir, n_centroids, IVF_ITERS)
+    cents = ivf_centroid_matrix(spark, sf_dir)
+    assigned = ivf_assignment_frame(spark, sf_dir)
 
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_ids, q_unit = _bounded_side(emb.filter(F.col("vec_id") < N_QUERIES))
     # probe table: nprobe nearest centroids per query (driver-side: Q×k)
-    probe_order = np.argsort(-(q_unit @ cents.T), axis=1)[:, :nprobe]
+    probe_order = np.argsort(-(q_unit @ cents.T), axis=1)[:, :IVF_NPROBE]
     probes = spark.createDataFrame(
         [
             (int(q_ids[qi]), int(c))
@@ -965,37 +921,22 @@ def ivf_topk(
 
     cand = assigned.join(F.broadcast(probes), "cluster").join(emb, "vec_id")
 
-    def score(it):
+    def score(pdf):
         b_qids, b_qunit = bc_q.value
         pos = {int(q): i for i, q in enumerate(b_qids)}
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a /= np.linalg.norm(a, axis=1, keepdims=True)
-            qi = pdf["query_id"].map(pos).to_numpy(dtype=np.int64)
-            cos = np.round(
-                np.einsum("ij,ij->i", a, b_qunit[qi]), 6
-            )
-            keep = pdf["vec_id"].to_numpy(dtype=np.int64) != pdf["query_id"].to_numpy(
-                dtype=np.int64
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64)[keep],
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64)[keep],
-                    "cosine": cos[keep],
-                }
-            )
+        qi = pdf["query_id"].map(pos).to_numpy(dtype=np.int64)
+        query_ids = pdf["query_id"].to_numpy(dtype=np.int64)
+        vec_ids, unit = _ids_unit(pdf)
+        cos = np.round(np.einsum("ij,ij->i", unit, b_qunit[qi]), 6)
+        keep = vec_ids != query_ids
+        return pd.DataFrame(
+            {"query_id": query_ids[keep], "vec_id": vec_ids[keep], "cosine": cos[keep]}
+        )
 
-    scored = cand.select("query_id", "vec_id", "embedding").mapInPandas(
-        score, "query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank"))
+    return _top_k(
+        cand.select("query_id", "vec_id", "embedding").mapInPandas(
+            _batches(score), _QUERY_SCHEMA
+        )
     )
 
 
@@ -1079,8 +1020,6 @@ def kmeans_exact_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compute-once final assignment table for the canonical
     `embeddings` table — the stored inverted-list membership every
     exact-quantizer consumer reads (seams convention)."""
-    from ..plans.materialize import materialized_frame
-
     return materialized_frame(
         spark,
         "kmeans_exact",
@@ -1232,13 +1171,9 @@ ORACLE_SQL["topic_mix_by_source"] = (
 )
 
 
-def cluster_quota_sample(
-    spark: SparkSession,
-    sf_dir: str,
-    quota: int = CLUSTER_QUOTA,
-) -> DataFrame:
+def cluster_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diversity sampling over LEARNED topic clusters: cap each learned
-    cluster's contribution at `quota` vectors chosen deterministically
+    cluster's contribution at CLUSTER_QUOTA vectors chosen deterministically
     (md5(seed:vec_id) order) — `domain_quota_sample` with the "domain"
     learned from embedding space instead of read from metadata. This is
     the embedding-space diversity bound (the SemDeDup/DCLM shape): no
@@ -1253,14 +1188,12 @@ def cluster_quota_sample(
     quota is one per-cluster rank window with WindowGroupLimit
     pushdown, exactly like the domain quota.
     """
-    from pyspark.sql.window import Window as W
-
     # cached exact-quantizer assignment table (seams convention)
     assigned = kmeans_exact_frame(spark, sf_dir)
     key = F.md5(
         F.concat_ws(":", F.lit(CLUSTER_QUOTA_SEED), F.col("vec_id")).cast("binary")
     )
-    w = W.partitionBy("cluster").orderBy(key.asc(), F.col("vec_id").asc())
+    w = Window.partitionBy("cluster").orderBy(key.asc(), F.col("vec_id").asc())
     return (
         assigned.select(
             "vec_id",
@@ -1268,7 +1201,7 @@ def cluster_quota_sample(
             key.alias("sample_key"),
             F.row_number().over(w).alias("rk"),
         )
-        .filter(F.col("rk") <= quota)
+        .filter(F.col("rk") <= CLUSTER_QUOTA)
         .select("vec_id", "cluster", "sample_key")
     )
 
@@ -1340,17 +1273,7 @@ def label_mix_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "label"
     )
-    joined = docs.join(emb, "doc_id")
-    counts = joined.groupBy("source", "label").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    totals = counts.groupBy("source").agg(F.sum("n_docs").alias("n_source"))
-    return counts.join(F.broadcast(totals), "source").select(
-        "source",
-        "label",
-        "n_docs",
-        F.round(F.col("n_docs") / F.col("n_source"), 4).alias("share"),
-    )
+    return _share_by_source(docs.join(emb, "doc_id"), "label")
 
 
 def topic_mix_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,14 +1287,17 @@ def topic_mix_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = kmeans_exact_frame(spark, sf_dir).select(
         F.col("vec_id").alias("doc_id"), "cluster"
     )
-    joined = docs.join(assigned, "doc_id")
-    counts = joined.groupBy("source", "cluster").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+    return _share_by_source(docs.join(assigned, "doc_id"), "cluster")
+
+
+def _share_by_source(joined: DataFrame, key: str) -> DataFrame:
+    """(source, key, n_docs, share): each source's doc count per `key`
+    value and its ROUND(·, 4) share of the source's docs."""
+    counts = joined.groupBy("source", key).agg(F.count(F.lit(1)).alias("n_docs"))
     totals = counts.groupBy("source").agg(F.sum("n_docs").alias("n_source"))
     return counts.join(F.broadcast(totals), "source").select(
         "source",
-        "cluster",
+        key,
         "n_docs",
         F.round(F.col("n_docs") / F.col("n_source"), 4).alias("share"),
     )
@@ -1426,8 +1352,6 @@ def silhouette_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     label's centroid (tie-break: distance ASC, label ASC — deterministic
     in both engines because the distances are exact-operand doubles).
     Compute-once seam shared with `cluster_quality_report`."""
-    from ..plans.materialize import materialized_frame
-
     return materialized_frame(
         spark,
         "silhouette_scores",
@@ -1475,13 +1399,13 @@ def _sil_dist():
     ).alias("d")
 
 
-def _sil_argmin_aggs(label_col: str = "label"):
+def _sil_argmin_aggs():
     """Aggregates: own-centroid distance + argmin over other centroids
     ((d ASC, clabel ASC) tie-break via struct min)."""
     return [
-        F.max(F.when(F.col("clabel") == F.col(label_col), F.col("d"))).alias("a"),
+        F.max(F.when(F.col("clabel") == F.col("label"), F.col("d"))).alias("a"),
         F.min(
-            F.when(F.col("clabel") != F.col(label_col), F.struct("d", "clabel"))
+            F.when(F.col("clabel") != F.col("label"), F.struct("d", "clabel"))
         ).alias("nb"),
     ]
 
@@ -1737,23 +1661,9 @@ def hard_negatives(
     import numpy as np
     import pandas as pd
 
-    t = tiles
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    fan = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.pmod(F.col("vec_id"), F.lit(t)).alias("tile"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {t - 1}), u -> struct("
-                f"least(pmod(vec_id, {t}), u) as ta, "
-                f"greatest(pmod(vec_id, {t}), u) as tb))"
-            )
-        ).alias("p"),
-    ).select("vec_id", "label", "embedding", "tile", "p.ta", "p.tb")
 
     def _bests(ids_a, labs_a, ids_b, labs_b, scores, same_side):
         """Block-local lexicographic-max (cos, id) per a-row, split by
@@ -1795,50 +1705,18 @@ def hard_negatives(
             )
         return out
 
-    def block(key, pdf):
-        ta, tb = key
-        a = pdf[pdf["tile"] == ta]
-        b = pdf[pdf["tile"] == tb] if tb != ta else a
-        if not len(a) or not len(b):
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "label": pd.Series([], dtype="int32"),
-                    "is_pos": pd.Series([], dtype="int32"),
-                    "cand_id": pd.Series([], dtype="int64"),
-                    "cand_label": pd.Series([], dtype="int32"),
-                    "cos": pd.Series([], dtype="float64"),
-                }
-            )
-        ids_a = a["vec_id"].to_numpy(dtype=np.int64)
-        labs_a = a["label"].to_numpy()
-        ma = np.array(a["embedding"].tolist(), dtype=np.float64)
-        ua = ma / np.linalg.norm(ma, axis=1, keepdims=True)
-        if tb != ta:
-            ids_b = b["vec_id"].to_numpy(dtype=np.int64)
-            labs_b = b["label"].to_numpy()
-            mb = np.array(b["embedding"].tolist(), dtype=np.float64)
-            ub = mb / np.linalg.norm(mb, axis=1, keepdims=True)
-        else:
-            ids_b, labs_b, ub = ids_a, labs_a, ua
+    def block(a, b):
+        (rows_a, ids_a, ua), (rows_b, ids_b, ub) = a, b
+        labs_a, labs_b = rows_a["label"].to_numpy(), rows_b["label"].to_numpy()
         scores = np.round(ua @ ub.T, 4)
-        out = _bests(ids_a, labs_a, ids_b, labs_b, scores, tb == ta)
-        if tb != ta:  # b-side anchors see a-side candidates too
+        out = _bests(ids_a, labs_a, ids_b, labs_b, scores, a is b)
+        if a is not b:  # b-side anchors see a-side candidates too
             out += _bests(ids_b, labs_b, ids_a, labs_a, scores.T, False)
-        if not out:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "label": pd.Series([], dtype="int32"),
-                    "is_pos": pd.Series([], dtype="int32"),
-                    "cand_id": pd.Series([], dtype="int64"),
-                    "cand_label": pd.Series([], dtype="int32"),
-                    "cos": pd.Series([], dtype="float64"),
-                }
-            )
-        return pd.concat(out, ignore_index=True)
+        return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
-    local = fan.groupBy("ta", "tb").applyInPandas(
+    local = _tile_pair_blocks(
+        emb,
+        tiles,
         block,
         "vec_id long, label int, is_pos int, cand_id long, "
         "cand_label int, cos double",
@@ -1902,16 +1780,12 @@ ORACLE_SQL["hard_negatives"] = f"""
 SEM_CONTAM_THRESHOLD = 0.35  # same scale as COSINE_DUP_THRESHOLD
 
 
-def semantic_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = SEM_CONTAM_THRESHOLD,
-) -> DataFrame:
+def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space decontamination — the SEMANTIC sibling of
     `training.decontaminate` (which catches n-gram overlap): flag every
     corpus vector whose cosine against ANY benchmark-probe vector
     (vec_id < PROBE_MAX_DOC_ID, the shared probe convention) clears the
-    threshold. Catches the leak class shingles miss entirely —
+    SEM_CONTAM_THRESHOLD. Catches the leak class shingles miss entirely —
     paraphrased or translated copies of eval items that share no
     16-token window with the original (the SemDeDup observation applied
     to decontamination).
@@ -1936,26 +1810,23 @@ def semantic_decontaminate(
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = emb.filter(F.col("vec_id") < PROBE_MAX_DOC_ID)
     corpus = emb.filter(F.col("vec_id") >= PROBE_MAX_DOC_ID)
-    return semantic_decontam_df(corpus, probes, threshold)
+    return semantic_decontam_df(corpus, probes)
 
 
-def semantic_decontam_df(
-    corpus: DataFrame, probes: DataFrame, threshold: float = SEM_CONTAM_THRESHOLD
-) -> DataFrame:
+def semantic_decontam_df(corpus: DataFrame, probes: DataFrame) -> DataFrame:
     """`semantic_decontaminate` core over any (vec_id, embedding) corpus
     and probe frames — tests drive it with planted paraphrase vectors."""
-    kernel = make_probe_kernel(probes, threshold)
     return corpus.mapInPandas(
-        kernel,
+        make_probe_kernel(probes),
         "vec_id long, n_probe_hits long, top_probe long, "
         "top_cosine double, contaminated boolean",
     )
 
 
-_PROBE_BC_CACHE: dict = {}
+_PROBE_BC_CACHE: dict = register_side_cache({})
 
 
-def make_probe_kernel(probes: DataFrame, threshold: float):
+def make_probe_kernel(probes: DataFrame):
     """Collect + unit-normalize the probe matrix (bounded by
     construction) and return the mapInPandas kernel the operator
     applies. Raises on an empty probe set — a silent all-clean verdict
@@ -1977,41 +1848,34 @@ def make_probe_kernel(probes: DataFrame, threshold: float):
     if hit is not None and probes.sameSemantics(hit[0]):
         bc = hit[1]
     else:
-        rows = probes.select("vec_id", "embedding").collect()
-        if not rows:
+        side = _bounded_side(probes)
+        if not len(side[0]):
             raise ValueError(
                 "semantic decontamination needs a non-empty probe set "
                 "(an empty one would silently pass every document)"
             )
-        ids_p = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-        mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        unit_p = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        bc = sc.broadcast((ids_p, unit_p))
+        bc = sc.broadcast(side)
         _PROBE_BC_CACHE[key] = (probes, bc)
 
-    def kernel(it):
+    def score(pdf):
         p_ids, p_unit = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_unit = a / np.linalg.norm(a, axis=1, keepdims=True)
-            scores = np.round(a_unit @ p_unit.T, 4)
-            m = scores.max(axis=1)
-            # lexicographic argmax (cosine, probe_id): among tied-max
-            # columns take the LARGEST probe id — engine-stable
-            top = np.where(scores == m[:, None], p_ids[None, :], -1).max(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "n_probe_hits": (scores >= threshold).sum(axis=1),
-                    "top_probe": top,
-                    "top_cosine": m,
-                    "contaminated": m >= threshold,
-                }
-            )
+        ids, unit = _ids_unit(pdf)
+        scores = np.round(unit @ p_unit.T, 4)
+        m = scores.max(axis=1)
+        # lexicographic argmax (cosine, probe_id): among tied-max
+        # columns take the LARGEST probe id — engine-stable
+        top = np.where(scores == m[:, None], p_ids[None, :], -1).max(axis=1)
+        return pd.DataFrame(
+            {
+                "vec_id": ids,
+                "n_probe_hits": (scores >= SEM_CONTAM_THRESHOLD).sum(axis=1),
+                "top_probe": top,
+                "top_cosine": m,
+                "contaminated": m >= SEM_CONTAM_THRESHOLD,
+            }
+        )
 
-    return kernel
+    return _batches(score)
 
 
 from .training import PROBE_MAX_DOC_ID as _SEM_PROBE_MAX  # noqa: E402

@@ -1017,7 +1017,6 @@ ORACLE_SQL["hdr_value_quantiles"] = f"""
 KMV_K = 256  # sketch size: the K smallest hash values per set
 KMV_SHINGLE_N = 3  # word-shingle width (Broder resemblance's unit)
 KMV_HASH_BITS = 60  # 15 md5 hex chars → [0, 2^60), ANSI-safe under 2^62
-KMV_HASH_RANGE = 1 << KMV_HASH_BITS
 
 
 def _kmv_shingle_rows(docs: DataFrame) -> DataFrame:

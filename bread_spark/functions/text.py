@@ -21,7 +21,6 @@ from ..io import load_table
 
 # Fixed stopword sets (deterministic, shared with the oracle SQL).
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it")
-PUNCT_RE = r"[^a-zA-Z0-9\s]"
 # BPE-ish token estimate: runs of letters, runs of digits, single punct.
 BPE_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 

@@ -27,9 +27,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-# Small dimensions that should always be broadcast in joins at any scale.
-BROADCAST_TABLES = {"region", "nation"}
-
 
 # Resolved-source cache for the IMMUTABLE driver testdata dirs only: a
 # DataFrame is a reusable logical plan, and re-resolving the same parquet

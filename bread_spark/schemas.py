@@ -17,7 +17,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # --------------------------------------------------------------------------
@@ -121,18 +120,6 @@ LOG_SCHEMA = ArrayType(
 # --------------------------------------------------------------------------
 # Silver tables (FIXTURES.md §3; reference parse.py:139,162,224)
 # --------------------------------------------------------------------------
-
-BLOCKS_SCHEMA = StructType(
-    [
-        StructField("height", LongType()),
-        StructField("chain_id", StringType()),
-        StructField("time", TimestampType()),
-        StructField("proposer_address", StringType()),
-        StructField("day", StringType()),  # 'yyyy-MM-dd' strings to match
-        StructField("month", StringType()),  # the reference's to_period() output
-        StructField("year", StringType()),
-    ]
-)
 
 TX_RESULT_COLUMNS = [
     "hash",

@@ -46,13 +46,6 @@ def get_spark(
         # measured locally, size-first coalescing starved the shingle
         # self-join of parallelism (+2.3s) for ~0.1s saved on tiny shuffles.
         # On a production cluster with large shuffles, revisit per job.
-        # r13 experiment knob (guide §3.1): allow the planner to pick
-        # shuffled-hash over sort-merge when its size conditions hold.
-        # Default stays Spark's (prefer SMJ) — flip via env for A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # files.maxPartitionBytes default 128MB is right for the target;

@@ -9,11 +9,7 @@ a private SparkSession (local[8], the measured-optimal tier master), so
 idle, without the cross-test scheduler interference a shared session
 would add.
 
-Placement is weight-balanced (greedy LPT). The r11 oracle+plans
-pinning is GONE as of r13: the monolithic oracle sweep split into four
-segment files (tests/oracle_segments.py) that each build only their
-quarter's frames, so test_plans.py is the only full-catalog consumer
-left and nothing shares its session fixture across files any more.
+Placement is weight-balanced (greedy LPT).
 
 Weights are AUTO-DERIVED (VERDICT r11 #7): every green run parses its
 own per-test `--durations` lines, aggregates them per file, and writes
@@ -79,7 +75,6 @@ WEIGHTS = {
     "test_curation.py": 45,
     "test_scale_smoke.py": 45,
     "test_properties.py": 40,
-    "test_similarity.py": 35,
     "test_sketch.py": 30,
     "test_multimodal.py": 30,
     "test_streaming_stats.py": 30,
@@ -91,11 +86,7 @@ WEIGHTS = {
     "test_ltv.py": 20,
     "test_search.py": 20,
     "test_basket.py": 20,
-    "test_dedup.py": 20,
 }
-# r13: no pinning constraints left (see module docstring); kept as a
-# mechanism in case a shared-session fixture pair reappears.
-PINNED_TOGETHER = ()
 
 # pytest --durations lines: "12.34s call     tests/test_x.py::test_y"
 _DURATION_RE = re.compile(
@@ -128,15 +119,10 @@ def _weight(f: str, measured: dict[str, float]) -> float:
 def shard_files(n: int) -> list[list[str]]:
     measured = _load_measured()
     files = sorted(p.name for p in (ROOT / "tests").glob("test_*.py"))
-    pinned = [f for f in PINNED_TOGETHER if f in files]
-    rest = [f for f in files if f not in pinned]
     shards: list[list[str]] = [[] for _ in range(n)]
     loads = [0.0] * n
-    # the pinned pair seeds shard 0
-    shards[0].extend(pinned)
-    loads[0] += sum(_weight(f, measured) for f in pinned)
     # greedy LPT: heaviest first onto the lightest shard
-    for f in sorted(rest, key=lambda f: -_weight(f, measured)):
+    for f in sorted(files, key=lambda f: -_weight(f, measured)):
         i = loads.index(min(loads))
         shards[i].append(f)
         loads[i] += _weight(f, measured)

@@ -54,10 +54,6 @@ def spark():
     # bench.py and the driver keep local[$SPARK_GRAFT_CPUS]=32 (the
     # production-shaped path); nothing in the suite asserts parallelism
     # beyond >= 2 partitions, and shuffle_partitions stays 8 either way.
-    # Hermetic to the SPARK_GRAFT_PREFER_SMJ A/B knob (ADVICE r13 #4):
-    # plan pins assert SortMergeJoin shapes, so a stray env var flipping
-    # the planner preference would silently change tested plan shapes.
-    os.environ.pop("SPARK_GRAFT_PREFER_SMJ", None)
     spark = get_spark(
         app_name="bread-spark-tests", master="local[8]", shuffle_partitions=8
     )

@@ -9,7 +9,12 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from bread_spark.io import compact_partitioned, compact_partitions, partition_files
+from bread_spark.io import (
+    compact_partitioned,
+    compact_partitions,
+    merge_upsert,
+    partition_files,
+)
 
 
 def _parquet_files(path):
@@ -134,7 +139,9 @@ def test_compaction_refuses_streaming_sink(spark, tmp_path):
     assert os.path.isdir(os.path.join(out, "_spark_metadata"))
     with pytest.raises(ValueError, match="_spark_metadata"):
         compact_partitioned(spark, out, partition_cols=("year", "month", "day"))
-    # sink unharmed: stream resumes and reads still work
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        merge_upsert(spark, out, spark.read.parquet(out), ("height",))
+    # sink unharmed by either refusal: stream resumes and reads still work
     assert spark.read.parquet(out).count() == len(blocks)
 
 

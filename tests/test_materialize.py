@@ -89,10 +89,16 @@ def test_lm_seam_equals_builder(spark, sf_dir):
 
 
 def test_ivf_assignment_seam_equals_builder(spark, sf_dir):
+    """The seam serves the builder's rows; clearing the seams also empties
+    similarity.py's driver-side caches, so a rebuilt assignment frame
+    never pairs with a stale centroid matrix or probe broadcast."""
     from bread_spark.extensions.similarity import (
+        _IVF_CENTROID_CACHE,
+        _PROBE_BC_CACHE,
         _assign_clusters,
         ivf_assignment_frame,
         ivf_centroid_matrix,
+        semantic_decontaminate,
     )
     from bread_spark.io import load_table
 
@@ -105,6 +111,10 @@ def test_ivf_assignment_seam_equals_builder(spark, sf_dir):
     )
     cols = ["vec_id", "cluster"]
     assert _rows(served, cols) == _rows(direct, cols)
+    semantic_decontaminate(spark, sf_dir)  # fills the probe-broadcast cache
+    assert _IVF_CENTROID_CACHE and _PROBE_BC_CACHE
+    clear_materialized_frames()
+    assert not _IVF_CENTROID_CACHE and not _PROBE_BC_CACHE
 
 
 def test_ngram5_seams_equal_inline_build(spark, sf_dir):
