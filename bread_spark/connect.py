@@ -30,38 +30,30 @@ session's AQE/Arrow tuning.
 
 from __future__ import annotations
 
-import os
 import socket
 import time
 
 from pyspark.sql import SparkSession
+
+from .session import _builder
 
 DEFAULT_PORT = 15002
 CONNECT_PLUGIN = "org.apache.spark.sql.connect.SparkConnectPlugin"
 
 
 def start_connect_session(
-    port: int = DEFAULT_PORT,
-    sf_dir: str | None = None,
-    app_name: str = "bread-spark-connect",
+    port: int = DEFAULT_PORT, sf_dir: str | None = None
 ) -> SparkSession:
     """A normal local SparkSession whose driver JVM also hosts the Connect
     gRPC endpoint. Plugins load at JVM launch, so this must create the
     FIRST session of the process (getOrCreate on an existing session
     cannot add the plugin — the CLI entry point owns its process)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+    spark = (
+        _builder("bread-spark-connect")
         .config("spark.plugins", CONNECT_PLUGIN)
         .config("spark.connect.grpc.binding.port", str(port))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     if sf_dir is not None:
         from .io import register_views
 

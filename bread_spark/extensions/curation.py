@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..plans.rank import global_rank
 
 CHUNK_TOKENS = 32  # "paragraph" size for sub-document dedup
 DOMAIN_QUOTA = 10  # max docs any one source may contribute
@@ -1176,26 +1177,14 @@ def _ntile_buckets(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def perplexity_buckets_distributed(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = PERPLEXITY_K,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def perplexity_buckets_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`perplexity_buckets` without the single-reducer window — the
-    `shuffle_order_distributed` two-pass-rank pattern applied to score
-    order: range-repartition by (logp_q DESC, doc_id — the ×1e6
-    lattice of the rounded score, DIVERGENCES #8), sort within
-    partitions, global rank = per-partition offset (a #partitions-row
-    driver aggregate, bounded by contract) + local ordinal via Arrow
-    mapInPandas, then the exact ANSI NTILE arithmetic on the rank —
+    two-pass global rank of `plans/rank.py` over score order
+    (logp_q DESC, doc_id — the ×1e6 lattice of the rounded score,
+    DIVERGENCES #8), then the exact ANSI NTILE arithmetic on the rank —
     the first n % k buckets get ceil(n/k) rows, the rest floor(n/k).
     Value-identical to the window form (shared oracle + equality test).
     """
-    import pandas as pd  # noqa: F401 — mapInPandas batch type
-
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # The scored frame arrives persisted AND materialized from the shared
     # seam (`lm_scored_frame`), so the range partitioner's bound sampling
     # reads cached partitions instead of executing the bigram-LM plan a
@@ -1203,41 +1192,10 @@ def perplexity_buckets_distributed(
     scored = lm_scored_frame(spark, sf_dir, 2).withColumn(
         "logp_q", _logp_lattice()  # lattice rank key (DIVERGENCES #8)
     )
-    ranged = (
-        scored.repartitionByRange(
-            num_partitions, F.col("logp_q").desc(), F.col("doc_id").asc()
-        )
-        .sortWithinPartitions(F.col("logp_q").desc(), F.col("doc_id").asc())
-        .localCheckpoint()
+    ranked, n = global_rank(
+        scored, [F.col("logp_q").desc(), F.col("doc_id").asc()], "rk"
     )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in ranged.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in range(num_partitions):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    n = acc
-
-    def assign(iterator):
-        from pyspark import TaskContext
-
-        start = offsets[TaskContext.get().partitionId()]
-        seen = 0
-        for pdf in iterator:
-            out = pdf.copy()
-            out["rk"] = range(start + seen + 1, start + seen + len(pdf) + 1)
-            seen += len(pdf)
-            yield out
-
-    ranked = ranged.mapInPandas(
-        assign,
-        "doc_id long, n_tokens long, mean_logp double, logp_q long, rk long",
-    )
-    q, rem = divmod(n, k)
+    q, rem = divmod(n, PERPLEXITY_K)
     boundary = (q + 1) * rem
     # exact ANSI NTILE arithmetic, integer `div` (no float in the path)
     bucket = F.expr(

@@ -19,11 +19,9 @@ Scale note, stated in the `perplexity_buckets` tradition: this
 catalog/oracle form ranks with one global window (the oracle gate
 needs exact ROW_NUMBER semantics; fine to ~100M docs).
 `curriculum_order_distributed` is the 100 TB twin — the IDENTICAL
-assignment via `repartitionByRange(bucket, key, doc_id)` + the
-two-pass zipWithIndex rank `shuffle_order_distributed` certifies
-(per-partition counts to the driver — #partitions rows by contract —
-then offset + local ordinal in one Arrow pass, no single-reducer
-stage). Both forms share one oracle because they emit the same table.
+assignment via the two-pass global rank of `plans/rank.py` over
+(bucket, key, doc_id), no single-reducer stage. Both forms share one
+oracle because they emit the same table.
 
 Streaming: batch-only by design — a curriculum is a total order over
 a FROZEN corpus snapshot (the dataloader contract); an appending
@@ -37,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.rank import global_rank
 from .curation import ORACLE_SQL as _CURATION_ORACLE
 from .curation import perplexity_buckets
 from .training import _shuffle_key
@@ -65,50 +64,15 @@ def curriculum_order_distributed(
     spark: SparkSession, sf_dir: str, num_partitions: int | None = None
 ) -> DataFrame:
     """The 100 TB twin: identical table, no single-reducer window —
-    range-partition on (bucket, key, doc_id), then the two-pass global
-    rank (module docstring)."""
-    import pandas as pd  # noqa: F401 — mapInPandas batch type
-
-    if num_partitions is None:
-        num_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    staged = _staged(spark, sf_dir)
-    ranged = (
-        staged.repartitionByRange(
-            num_partitions, "bucket", "curriculum_key", "doc_id"
-        )
-        .sortWithinPartitions("bucket", "curriculum_key", "doc_id")
-        .localCheckpoint()
+    the two-pass global rank (`plans/rank.py`) over (bucket, key,
+    doc_id)."""
+    ranked, _ = global_rank(
+        _staged(spark, sf_dir),
+        ["bucket", "curriculum_key", "doc_id"],
+        "curriculum_rank",
+        num_partitions,
     )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in ranged.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in range(num_partitions):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-
-    def assign(iterator):
-        from pyspark import TaskContext
-
-        start = offsets[TaskContext.get().partitionId()]
-        seen = 0
-        for pdf in iterator:
-            out = pdf.copy()
-            out["curriculum_rank"] = range(
-                start + seen + 1, start + seen + len(pdf) + 1
-            )
-            seen += len(pdf)
-            yield out
-
-    return ranged.mapInPandas(
-        assign,
-        "doc_id long, bucket int, curriculum_key string, curriculum_rank long",
-    )
+    return ranked
 
 
 _CURRICULUM_SQL = f"""

@@ -42,22 +42,17 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_search_df(docs, list(BM25_QUERY), BM25_TOP_N)
 
 
-def bm25_search_df(
-    docs: DataFrame,
-    terms: list[str],
-    top_n: int = BM25_TOP_N,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """BM25 over any (doc_id, text) frame for the given query terms.
+def _bm25(docs: DataFrame, terms: list[str]) -> tuple[DataFrame, DataFrame]:
+    """(per_doc, scores) — the BM25 builder both search entries share.
 
-    The per-doc frame (doc_id, length, query-term matches) is built in
-    ONE pass over the text and materialized (localCheckpoint) — the
-    corpus stats, the tf/df tables, and the scoring join all derive from
-    it, and without materialization each derivation re-scans the text
+    The per-doc frame (doc_id, dl, query-term matches) is built in ONE
+    pass over the text and materialized (localCheckpoint) — the corpus
+    stats, the tf/df tables, and the scoring join all derive from it,
+    and without materialization each derivation re-scans the text
     (their exchange keys differ, so ReusedExchange never fires; same
     defect class the test_plans.py audit caught on the KL metric). At
-    100 TB this frame is the stored per-document index row.
+    100 TB this frame is the stored per-document index row. `scores` is
+    (doc_id, score) for every doc with a query-term match, rounded 4.
     """
     toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
     per_doc = docs.select(
@@ -80,7 +75,7 @@ def bm25_search_df(
             (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
         ).alias("idf"),
     )
-    scored = (
+    scores = (
         tf.join(F.broadcast(idf), "token")
         .join(per_doc.select("doc_id", "dl"), "doc_id")
         .join(F.broadcast(stats))
@@ -88,26 +83,34 @@ def bm25_search_df(
             "doc_id",
             (
                 F.col("idf")
-                * (F.col("tf") * (k1 + 1))
+                * (F.col("tf") * (BM25_K1 + 1))
                 / (
                     F.col("tf")
-                    + k1 * (1 - b + b * (F.col("dl") / F.col("avgdl")))
+                    + BM25_K1 * (1 - BM25_B + BM25_B * (F.col("dl") / F.col("avgdl")))
                 )
             ).alias("s"),
         )
-    )
-    return (
-        scored.groupBy("doc_id")
+        .groupBy("doc_id")
         .agg(F.round(F.sum("s"), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(top_n)
+    )
+    return per_doc, scores
+
+
+def bm25_search_df(
+    docs: DataFrame, terms: list[str], top_n: int = BM25_TOP_N
+) -> DataFrame:
+    """BM25 top-`top_n` over any (doc_id, text) frame for the given
+    query terms (`_bm25` builds the scores)."""
+    _, scores = _bm25(docs, terms)
+    return scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(
+        top_n
     )
 
 
 TFIDF_TOP_K = 5  # keywords kept per document
 
 
-def tfidf_keywords(spark: SparkSession, sf_dir: str, k: int = TFIDF_TOP_K) -> DataFrame:
+def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF — the keyword-
     extraction pass feeding tagging/clustering/search-index pipelines.
 
@@ -121,10 +124,10 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str, k: int = TFIDF_TOP_K) -> Da
     Deterministic: score rounded to 4dp, ties broken by token asc.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return tfidf_keywords_df(docs, k)
+    return tfidf_keywords_df(docs)
 
 
-def tfidf_keywords_df(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
+def tfidf_keywords_df(docs: DataFrame) -> DataFrame:
     """`tfidf_keywords` core over any (doc_id, text) frame."""
     from pyspark.sql.window import Window as W
 
@@ -154,7 +157,7 @@ def tfidf_keywords_df(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("token").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "token", "tfidf", F.col("rank").cast("long").alias("rank"))
     )
 
@@ -309,53 +312,9 @@ def search_rank_fusion_df(
     from pyspark.sql.window import Window
 
     # r14 (VERDICT r13 #5, guide §2.4): ONE document scan feeds every
-    # ranker. Previously bm25_search_df built (and checkpointed) its
-    # own per-doc length+matches frame from a second full scan of the
-    # text; the BM25 corpus stats (n_docs, avgdl) and tf/df tables
-    # derive from exactly this frame, so both rankers' inputs now share
-    # it. Same shape bm25_search_df certifies: one pass over the text,
-    # materialized because three subtrees (stats, tf, matched-doc
-    # stats) consume it.
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    per_doc = docs.select(
-        "doc_id",
-        F.size(toks_arr).alias("dl"),
-        F.filter(toks_arr, lambda t: t.isin(list(terms))).alias("matches"),
-    ).localCheckpoint()
-
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        per_doc.select("doc_id", F.explode("matches").alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfs = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    idf = dfs.join(F.broadcast(stats)).select(
-        "token",
-        F.log(
-            (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        ).alias("idf"),
-    )
-    bm_scores = (
-        tf.join(F.broadcast(idf), "token")
-        .join(per_doc.select("doc_id", "dl"), "doc_id")
-        .join(F.broadcast(stats))
-        .select(
-            "doc_id",
-            (
-                F.col("idf")
-                * (F.col("tf") * (BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + BM25_K1 * (1 - BM25_B + BM25_B * (F.col("dl") / F.col("avgdl")))
-                )
-            ).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 4).alias("score"))
-    )
+    # ranker — `_bm25`'s checkpointed per-doc length+matches frame also
+    # carries the term-frequency and coverage rankers' inputs.
+    per_doc, bm_scores = _bm25(docs, terms)
 
     # The matched-doc multi-score frame every ranker cuts from. Rank
     # positions feed the RRF sums, so every rank key lives on the exact

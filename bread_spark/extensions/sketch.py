@@ -89,6 +89,25 @@ def _bucket_expr(d_col: str, dig_col: str) -> str:
     )
 
 
+def _cms_lanes(df: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, d, bucket) — the D lane rows of each row's `token`: ONE
+    md5 digest per row, fanned out map-side by an in-array transform +
+    explode (no join), every lane slicing the same digest."""
+    return (
+        df.select(*keep, F.md5("token").alias("dig"))
+        .select(
+            *keep,
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, {CMS_D - 1}), d -> "
+                    f"struct(cast(d as bigint) as d, {_bucket_expr('d', 'dig')} as bucket))"
+                )
+            ).alias("p"),
+        )
+        .select(*keep, "p.d", "p.bucket")
+    )
+
+
 def cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch table itself: (d, bucket, cnt) — D·WIDTH rows max.
 
@@ -113,20 +132,8 @@ def cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.materialize import materialized_frame
 
     def _build() -> DataFrame:
-        counts = corpus_token_counts(spark, sf_dir)
-        rows = counts.select(
-            "n", F.md5("token").alias("dig")
-        ).select(
-            "n",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {CMS_D - 1}), d -> "
-                    f"struct(cast(d as bigint) as d, {_bucket_expr('d', 'dig')} as bucket))"
-                )
-            ).alias("p"),
-        )
         return (
-            rows.select("n", "p.d", "p.bucket")
+            _cms_lanes(corpus_token_counts(spark, sf_dir), "n")
             .groupBy("d", "bucket")
             .agg(F.sum("n").alias("cnt"))
         )
@@ -135,27 +142,18 @@ def cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cms_sketch_df(docs: DataFrame) -> DataFrame:
-    """`cms_sketch` core over any (text) frame — works unchanged on a
-    STREAMING frame (the aggregate's state is the constant-size counter
-    table)."""
-    rows = _tokens(docs).select(F.md5("token").alias("dig")).select(
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {CMS_D - 1}), d -> "
-                f"struct(cast(d as bigint) as d, {_bucket_expr('d', 'dig')} as bucket))"
-            )
-        ).alias("p")
-    )
+    """`cms_sketch` core over any (text) frame: the instance-level
+    single-aggregate build (one lane row per token instance) that the
+    plan audit in test_plans.py pins and the merge and scale tests
+    build on."""
     return (
-        rows.select("p.d", "p.bucket")
+        _cms_lanes(_tokens(docs))
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def cms_heavy_hitters(
-    spark: SparkSession, sf_dir: str, k: int = CMS_TOP_K
-) -> DataFrame:
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-calibration report: the top-k tokens by TRUE count with
     their count-min estimates — (token, n, cms_est, overestimate). The
     audit you run at small scale before trusting the sketch at large
@@ -168,17 +166,8 @@ def cms_heavy_hitters(
     the k probes join the D·WIDTH sketch on (d, bucket) as a broadcast;
     min-over-D is a k-group aggregate."""
     counts = corpus_token_counts(spark, sf_dir)
-    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(k)
-    probes = top.withColumn("dig", F.md5("token")).select(
-        "token",
-        "n",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {CMS_D - 1}), d -> "
-                f"struct(cast(d as bigint) as d, {_bucket_expr('d', 'dig')} as bucket))"
-            )
-        ).alias("p"),
-    ).select("token", "n", "p.d", "p.bucket")
+    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(CMS_TOP_K)
+    probes = _cms_lanes(top, "token", "n")
     sketch = cms_sketch(spark, sf_dir)
     return (
         F.broadcast(probes)
@@ -220,16 +209,7 @@ def cms_probe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes.join(counts, "token", "left")
         .select("token", F.coalesce("n", F.lit(0)).alias("n_true"))
     )
-    lanes = true.withColumn("dig", F.md5("token")).select(
-        "token",
-        "n_true",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {CMS_D - 1}), d -> "
-                f"struct(cast(d as bigint) as d, {_bucket_expr('d', 'dig')} as bucket))"
-            )
-        ).alias("p"),
-    ).select("token", "n_true", "p.d", "p.bucket")
+    lanes = _cms_lanes(true, "token", "n_true")
     sketch = cms_sketch(spark, sf_dir)
     return (
         F.broadcast(lanes)
@@ -321,9 +301,7 @@ def _poisson_weight_sql(u: str) -> str:
     return f"transform(array({u}), v -> CASE {cases} ELSE 6 END)[0]"
 
 
-def bootstrap_source_stats(
-    spark: SparkSession, sf_dir: str, replicates: int = BOOT_R
-) -> DataFrame:
+def bootstrap_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mean-token-count with a bootstrap confidence interval —
     the uncertainty a curation dashboard should print next to every
     corpus metric (a 25-doc source's mean is noise; a 25M-doc source's
@@ -359,7 +337,7 @@ def bootstrap_source_stats(
         n_tokens.alias("n_tokens"),
         F.explode(
             F.expr(
-                f"transform(sequence(0, {replicates - 1}), r -> struct("
+                f"transform(sequence(0, {BOOT_R - 1}), r -> struct("
                 f"cast(r as bigint) as replicate, "
                 f"{_poisson_weight_sql(u)} as w))"
             )
@@ -486,24 +464,59 @@ def hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho), and MAX absorbs them — that is the whole point of the sketch.
     The catalog entry derives the registers from the
     `source_token_counts` seam's distinct pairs (identical by the same
-    MAX-absorption argument); the streaming core below keeps the
+    MAX-absorption argument); `hll_registers_df` keeps the
     instance-level single-aggregate shape.
     """
-    return _hll_registers_from_counts(spark, sf_dir)
+    pairs = source_token_counts_frame(spark, sf_dir).select("source", "token")
+    return _hll_registers(pairs, "source")
+
+
+def _hll_registers(rows: DataFrame, key: str) -> DataFrame:
+    """(key, bucket, max_rho) over a (key, token) frame: bucket and rho
+    from the token's md5 uniform, then ONE (key, bucket)-keyed MAX
+    aggregate with map-side partials — ≤ M rows per key."""
+    return (
+        rows.select(
+            key,
+            F.expr(f"{_HLL_U32} % {HLL_M}").alias("bucket"),
+            F.expr(_rho_sql(f"({_HLL_U32} div {HLL_M})")).alias("rho"),
+        )
+        .groupBy(key, "bucket")
+        .agg(F.max("rho").alias("max_rho"))
+    )
+
+
+def _hll_estimate(regs: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, z_num, n_present, hll_est) from a register table grouped
+    by `keys`: the raw harmonic-mean estimate with the small-range
+    linear-counting switch. Z's numerator is summed as exact INTEGERS
+    (2^(VBITS+1-rho) per register), so the aggregate is
+    order-independent and the only floats are the per-group estimate
+    arithmetic."""
+    agg = regs.groupBy(*keys).agg(
+        F.expr(
+            f"sum(cast(power(2.0, {HLL_VBITS + 1} - max_rho) as bigint))"
+        ).alias("z_num"),
+        F.count(F.lit(1)).alias("n_present"),
+    )
+    scale = float(1 << (HLL_VBITS + 1))
+    z = (F.col("z_num") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(scale)) / F.lit(scale)
+    e_raw = F.expr(HLL_ALPHA) * F.lit(HLL_M) * F.lit(HLL_M) / z
+    v_zero = F.lit(HLL_M) - F.col("n_present")
+    est = F.when(
+        (e_raw <= F.lit(2.5 * HLL_M)) & (v_zero > 0),
+        F.lit(HLL_M) * F.log(F.lit(float(HLL_M)) / v_zero),
+    ).otherwise(e_raw)
+    return agg.withColumn("hll_est", est)
 
 
 def hll_registers_df(docs: DataFrame) -> DataFrame:
-    """`hll_registers` core over any (source, text) frame — works
-    unchanged on a STREAMING frame (the aggregate's state IS the
-    register table, O(sources·M))."""
+    """`hll_registers` core over any (source, text) frame: the
+    instance-level single-aggregate build (one row per token instance)
+    that the merge and scale tests build on."""
     toks = F.filter(F.split("text", " "), lambda t: t != "")
-    stream = docs.select("source", F.explode(toks).alias("token"))
-    rows = stream.select(
-        "source",
-        F.expr(f"{_HLL_U32} % {HLL_M}").alias("bucket"),
-        F.expr(_rho_sql(f"({_HLL_U32} div {HLL_M})")).alias("rho"),
-    )
-    return rows.groupBy("source", "bucket").agg(F.max("rho").alias("max_rho"))
+    tokens = docs.select("source", F.explode(toks).alias("token"))
+    return _hll_registers(tokens, "source")
 
 
 def merge_cms_sketches(base: DataFrame, delta: DataFrame) -> DataFrame:
@@ -537,55 +550,23 @@ def merge_hll_registers(base: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def _hll_registers_from_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Register table derived from the `source_token_counts` seam:
-    duplicates contribute nothing to MAX(rho), so registers over the
-    DISTINCT (source, token) pairs are identical to the instance-level
-    build — one distinct-token-sized projection instead of a second
-    corpus tokenize (the core `hll_registers_df` keeps the
-    instance-level shape)."""
-    pairs = source_token_counts_frame(spark, sf_dir).select("source", "token")
-    rows = pairs.select(
-        "source",
-        F.expr(f"{_HLL_U32} % {HLL_M}").alias("bucket"),
-        F.expr(_rho_sql(f"({_HLL_U32} div {HLL_M})")).alias("rho"),
-    )
-    return rows.groupBy("source", "bucket").agg(F.max("rho").alias("max_rho"))
-
-
 def hll_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration report: per-source TRUE distinct-token count vs the
     HLL estimate from the 64-register sketch — (source, n_true, hll_est,
     rel_err). The audit you run at small scale before trusting the
     register table at large scale (expected |rel_err| ~ 1.04/√64 ≈ 13%).
 
-    The estimate is the standard raw harmonic-mean form with the
-    small-range linear-counting correction; Z's numerator is summed as
-    exact INTEGERS (2^(VBITS+1-rho) per register) so the aggregate is
-    order-independent — the only floats are the final 20-row estimate
-    arithmetic, rounded on both sides of the differential."""
-    regs = hll_registers(spark, sf_dir)
-    agg = regs.groupBy("source").agg(
-        F.expr(
-            f"sum(cast(power(2.0, {HLL_VBITS + 1} - max_rho) as bigint))"
-        ).alias("z_num"),
-        F.count(F.lit(1)).alias("n_present"),
-    )
-    scale = float(1 << (HLL_VBITS + 1))
-    z = (F.col("z_num") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(scale)) / F.lit(scale)
-    e_raw = F.expr(HLL_ALPHA) * F.lit(HLL_M) * F.lit(HLL_M) / z
-    v_zero = F.lit(HLL_M) - F.col("n_present")
-    est = F.when(
-        (e_raw <= F.lit(2.5 * HLL_M)) & (v_zero > 0),
-        F.lit(HLL_M) * F.log(F.lit(float(HLL_M)) / v_zero),
-    ).otherwise(e_raw)
+    The estimate is `_hll_estimate`'s; its only floats are the final
+    20-row estimate arithmetic, rounded on both sides of the
+    differential."""
+    est = _hll_estimate(hll_registers(spark, sf_dir), ["source"])
     # true distincts = row count per source of the (source, token) seam
     true = (
         source_token_counts_frame(spark, sf_dir)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_true"))
     )
-    report = true.join(F.broadcast(agg.withColumn("hll_est", est)), "source")
+    report = true.join(F.broadcast(est), "source")
     return report.select(
         "source",
         "n_true",
@@ -606,25 +587,12 @@ def hll_total_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     error (same estimator arithmetic as the per-source report)."""
     regs = hll_registers(spark, sf_dir)
     merged = regs.groupBy("bucket").agg(F.max("max_rho").alias("max_rho"))
-    agg = merged.agg(
-        F.expr(
-            f"sum(cast(power(2.0, {HLL_VBITS + 1} - max_rho) as bigint))"
-        ).alias("z_num"),
-        F.count(F.lit(1)).alias("n_present"),
-    )
-    scale = float(1 << (HLL_VBITS + 1))
-    z = (F.col("z_num") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(scale)) / F.lit(scale)
-    e_raw = F.expr(HLL_ALPHA) * F.lit(HLL_M) * F.lit(HLL_M) / z
-    v_zero = F.lit(HLL_M) - F.col("n_present")
-    est = F.when(
-        (e_raw <= F.lit(2.5 * HLL_M)) & (v_zero > 0),
-        F.lit(HLL_M) * F.log(F.lit(float(HLL_M)) / v_zero),
-    ).otherwise(e_raw)
+    est = _hll_estimate(merged, [])
     true = (
         source_token_counts_frame(spark, sf_dir)
         .agg(F.countDistinct("token").alias("n_true"))
     )
-    return true.join(F.broadcast(agg.withColumn("hll_est", est))).select(
+    return true.join(F.broadcast(est)).select(
         "n_true",
         F.round("hll_est", 4).alias("hll_est"),
         F.round(
@@ -844,13 +812,13 @@ def hdr_value_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hdr_sketch_df(values: DataFrame, value_col: str = "value") -> DataFrame:
-    """`hdr_value_sketch` core over any frame — works unchanged on a
-    STREAMING frame (the aggregate's state is the constant-size bucket
-    table; counters fold by SUM, the sketch's merge operator)."""
+def hdr_sketch_df(values: DataFrame) -> DataFrame:
+    """`hdr_value_sketch` core over any (value) frame: the single
+    combiner-friendly aggregate that the plan audit in test_plans.py
+    pins and the merge and scale tests build on."""
     lb, ub = _hdr_bounds_exprs()
     return (
-        values.select(F.expr(_hdr_bucket_expr(value_col)).alias("bucket"))
+        values.select(F.expr(_hdr_bucket_expr("value")).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
@@ -1097,54 +1065,33 @@ def kmv_shingle_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kmv_rank_df(rows: DataFrame, k: int = KMV_K) -> DataFrame:
+def kmv_rank_df(rows: DataFrame) -> DataFrame:
     """Bottom-k rank step over an already-distinct (source, h) frame —
-    the tail of `kmv_sketch_df` split out so the seam-fed build skips
-    the shingle projection."""
+    the one rank every KMV build and merge runs."""
     from pyspark.sql.window import Window as W
 
     ranked = rows.withColumn(
         "rk",
         F.row_number().over(W.partitionBy("source").orderBy("h")),
     )
-    return ranked.filter(F.col("rk") <= k).select("source", "rk", "h")
+    return ranked.filter(F.col("rk") <= KMV_K).select("source", "rk", "h")
 
 
-def kmv_sketch_df(docs: DataFrame, k: int = KMV_K) -> DataFrame:
-    """`kmv_sketch` core over any (source, text) frame. NOT streaming-
-    capable (rank-over-window is a batch construct)."""
-    from pyspark.sql.window import Window as W
-
-    ranked = _kmv_shingle_rows(docs).withColumn(
-        "rk",
-        F.row_number().over(W.partitionBy("source").orderBy("h")),
-    )
-    return ranked.filter(F.col("rk") <= k).select("source", "rk", "h")
+def kmv_sketch_df(docs: DataFrame) -> DataFrame:
+    """`kmv_sketch` core over any (source, text) frame."""
+    return kmv_rank_df(_kmv_shingle_rows(docs))
 
 
-def merge_kmv_sketches(
-    base: DataFrame, delta: DataFrame, k: int = KMV_K
-) -> DataFrame:
+def merge_kmv_sketches(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold a new shard's sketch into a persisted one: the union of two
     bottom-k value sets contains the bottom-k of the union, so the merge
     is distinct-values → re-rank → keep k — sketch(A ∪ B) exactly, per
     source, from ≤ 2k rows a side. Same incremental-maintenance contract
     as the CMS/HLL/HDR merges (each crawl/day sketches its own data;
     corpus-lifetime overlap is maintained without revisiting history);
-    shard-split-merge equality pinned in test_scale_smoke.py.
-
-    `k` MUST equal the k the input sketches were BUILT with: a bottom-k'
-    sketch (k' < k) has already discarded values below the merge
-    threshold, so merging it at a larger k would fabricate order
-    statistics the shard never retained. Pass the build-time k for
-    custom-sized sketches (`kmv_sketch_df(..., k=...)`)."""
-    from pyspark.sql.window import Window as W
-
+    shard-split-merge equality pinned in test_scale_smoke.py."""
     u = base.select("source", "h").unionByName(delta.select("source", "h")).distinct()
-    ranked = u.withColumn(
-        "rk", F.row_number().over(W.partitionBy("source").orderBy("h"))
-    )
-    return ranked.filter(F.col("rk") <= k).select("source", "rk", "h")
+    return kmv_rank_df(u)
 
 
 def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1341,19 +1288,19 @@ MG_K = 16  # counters per summary: each shard ships <= K rows
 MG_SHARDS = 4  # deterministic shard = doc_id % MG_SHARDS
 
 
-def _mg_token_counts(docs: DataFrame, n_shards: int) -> DataFrame:
+def _mg_token_counts(docs: DataFrame) -> DataFrame:
     """(shard, token, c) — exact per-shard token counts."""
     toks = docs.select(
-        F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
+        F.pmod(F.col("doc_id"), F.lit(MG_SHARDS)).cast("int").alias("shard"),
         F.explode(F.split("text", " ")).alias("token"),
     ).filter(F.col("token") != "")
     return toks.groupBy("shard", "token").agg(F.count(F.lit(1)).alias("c"))
 
 
-def _mg_reduce(counts: DataFrame, key: str, val: str, k: int) -> DataFrame:
-    """The Misra-Gries reduction: subtract the (k+1)-th largest value
-    (deterministic (val DESC, token ASC) order; 0 when fewer than k+1
-    tokens) and keep strictly-positive weights — at most k rows per
+def _mg_reduce(counts: DataFrame, key: str, val: str) -> DataFrame:
+    """The Misra-Gries reduction at k = MG_K: subtract the (k+1)-th
+    largest value (deterministic (val DESC, token ASC) order; 0 when
+    fewer than k+1 tokens) and keep strictly-positive weights — at most k rows per
     group survive, and every kept weight UNDERSTATES the true value by
     at most the subtracted threshold. Returns the reduced rows plus the
     per-group threshold as `t` (the error ledger the report sums).
@@ -1373,7 +1320,7 @@ def _mg_reduce(counts: DataFrame, key: str, val: str, k: int) -> DataFrame:
     )
     thresh = (
         counts.withColumn("rk", rk)
-        .filter(F.col("rk") == k + 1)
+        .filter(F.col("rk") == MG_K + 1)
         .select(key, F.col(val).alias("t"))
     )
     return (
@@ -1388,11 +1335,9 @@ def _mg_reduce(counts: DataFrame, key: str, val: str, k: int) -> DataFrame:
     )
 
 
-def mg_summary(
-    spark: SparkSession, sf_dir: str, k: int = MG_K, n_shards: int = MG_SHARDS
-) -> DataFrame:
+def mg_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Misra-Gries heavy-hitter summary of the corpus's
-    token stream: (token, est_count, max_underestimate) — at most `k`
+    token stream: (token, est_count, max_underestimate) — at most MG_K
     rows, each estimate an UNDERSTATEMENT of the true count by at most
     `max_underestimate` = Σ per-shard thresholds + the final-merge
     threshold (the exact error ledger, not a probabilistic bound).
@@ -1407,7 +1352,7 @@ def mg_summary(
     and a stored summary folds new shards in without re-reading history
     (`merge_mg_summaries`).
 
-    Determinism: shard = doc_id % n_shards and a (count DESC, token ASC)
+    Determinism: shard = doc_id % MG_SHARDS and a (count DESC, token ASC)
     threshold order make every step engine-mirrorable — the summary
     TABLE is oracle-checked, unlike classic streaming MG whose content
     depends on arrival order. The entry uses the flat merge (sum all
@@ -1423,18 +1368,16 @@ def mg_summary(
     `merge_mg_summaries` (bound-valid under the mergeable-summaries
     algebra), which the merge tests pin."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return mg_summary_df(docs, k, n_shards)
+    return mg_summary_df(docs)
 
 
-def mg_summary_df(
-    docs: DataFrame, k: int = MG_K, n_shards: int = MG_SHARDS
-) -> DataFrame:
+def mg_summary_df(docs: DataFrame) -> DataFrame:
     """`mg_summary` core over any (doc_id, text) frame."""
-    counts = _mg_token_counts(docs, n_shards)
-    shard_sum = _mg_reduce(counts, "shard", "c", k)
+    counts = _mg_token_counts(docs)
+    shard_sum = _mg_reduce(counts, "shard", "c")
     shard_t = shard_sum.groupBy("shard").agg(F.max("t").alias("t"))
     merged = shard_sum.groupBy("token").agg(F.sum("wt").alias("m"))
-    final = _mg_reduce(merged.withColumn("g", F.lit(0)), "g", "m", k)
+    final = _mg_reduce(merged.withColumn("g", F.lit(0)), "g", "m")
     total_t = shard_t.agg(
         F.sum("t").alias("ts")
     )  # one row; the final threshold rides on every `final` row as `t`
@@ -1448,7 +1391,7 @@ def mg_summary_df(
     )
 
 
-def merge_mg_summaries(base: DataFrame, delta: DataFrame, k: int = MG_K) -> DataFrame:
+def merge_mg_summaries(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold one summary into another: pointwise weight sum, then one
     MG reduction. The result is a VALID summary of the union whose
     per-token understatement grows by at most the new threshold —
@@ -1475,7 +1418,7 @@ def merge_mg_summaries(base: DataFrame, delta: DataFrame, k: int = MG_K) -> Data
         .groupBy("token")
         .agg(F.sum("est_count").alias("m"))
     )
-    red = _mg_reduce(u.withColumn("g", F.lit(0)), "g", "m", k)
+    red = _mg_reduce(u.withColumn("g", F.lit(0)), "g", "m")
     return red.join(F.broadcast(pb)).select(
         "token",
         F.col("wt").alias("est_count"),
@@ -1483,9 +1426,7 @@ def merge_mg_summaries(base: DataFrame, delta: DataFrame, k: int = MG_K) -> Data
     )
 
 
-def mg_heavy_hitters(
-    spark: SparkSession, sf_dir: str, k: int = MG_K, n_shards: int = MG_SHARDS
-) -> DataFrame:
+def mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration report: the summary's estimates against TRUE corpus
     counts — (token, est_count, true_count, underestimate,
     max_underestimate, within_bound). The true side is the full
@@ -1497,7 +1438,7 @@ def mg_heavy_hitters(
     a second full text scan — identical counts (same tokenization,
     summed over sources), and the per-invocation cost drops to a
     vocabulary-sized fold of the checkpointed seam."""
-    summ = mg_summary(spark, sf_dir, k, n_shards)
+    summ = mg_summary(spark, sf_dir)
     true = corpus_token_counts(spark, sf_dir).select(
         "token", F.col("n").alias("true_count")
     )

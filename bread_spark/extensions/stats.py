@@ -77,9 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
-from .timeseries import daily_micro_frame
-
-_DEC = "decimal(38,0)"
+from .timeseries import _DEC, _pearson, daily_micro_frame
 
 # log10(1 + 1/d) in exact ppm literals; the nine sum to 1_000_000.
 BENFORD_PPM = {
@@ -192,37 +190,8 @@ def correlation_from_daily(daily: DataFrame) -> DataFrame:
         b,
         (F.col("day_a") == F.col("day_b")) & (F.col("type_a") < F.col("type_b")),
     )
-    m = pairs.groupBy("type_a", "type_b").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("ya").alias("sa"),
-        F.sum("yb").alias("sb"),
-        F.sum(F.col("ya").cast(_DEC) * F.col("ya").cast(_DEC)).alias("saa"),
-        F.sum(F.col("yb").cast(_DEC) * F.col("yb").cast(_DEC)).alias("sbb"),
-        F.sum(F.col("ya").cast(_DEC) * F.col("yb").cast(_DEC)).alias("sab"),
-    )
-    num = F.col("n").cast(_DEC) * F.col("sab") - F.col("sa").cast(
-        _DEC
-    ) * F.col("sb").cast(_DEC)
-    dena = F.col("n").cast(_DEC) * F.col("saa") - F.col("sa").cast(
-        _DEC
-    ) * F.col("sa").cast(_DEC)
-    denb = F.col("n").cast(_DEC) * F.col("sbb") - F.col("sb").cast(
-        _DEC
-    ) * F.col("sb").cast(_DEC)
-    r = F.when(
-        (dena > 0) & (denb > 0),
-        F.round(
-            num.cast("double")
-            / F.sqrt(dena.cast("double") * denb.cast("double")),
-            6,
-        ),
-    )
-    return m.select(
-        "type_a",
-        "type_b",
-        F.col("n").alias("n_days"),
-        num.cast("string").alias("cov_num"),
-        r.alias("r"),
+    return _pearson(pairs, ["type_a", "type_b"]).withColumnRenamed(
+        "n", "n_days"
     )
 
 
@@ -350,12 +319,12 @@ def source_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def rolling_distinct_df(ev: DataFrame, window_days: int = 7) -> DataFrame:
+def rolling_distinct_df(ev: DataFrame) -> DataFrame:
     """(day, users_1d, users_7d) — trailing-window distinct users per
-    EVENT day, via the bounded ×window fan-out (module docstring).
+    EVENT day, via the bounded ×7 fan-out (module docstring).
 
     r13-opt plan: one linear chain — distinct (day, user) pairs, the
-    ×window fan-out, a (day, user) MIN(offset) pre-aggregate, then one
+    ×7 fan-out, a (day, user) MIN(offset) pre-aggregate, then one
     per-day aggregate of plain conditional COUNTs. The pre-aggregate
     reproduces exactly what countDistinct counted (one row per distinct
     (target day, user)), with min-offset 0 ⟺ the user had an event ON
@@ -370,7 +339,7 @@ def rolling_distinct_df(ev: DataFrame, window_days: int = 7) -> DataFrame:
     )
     fan = du.select(
         F.explode(
-            F.sequence(F.lit(0), F.lit(window_days - 1))
+            F.sequence(F.lit(0), F.lit(6))
         ).alias("off"),
         "day",
         "user_id",
@@ -478,21 +447,13 @@ def engagement_user_registers_df(ev: DataFrame) -> DataFrame:
     not re-derived), token = user_id string; NULL users dropped exactly
     as `engagement_df` does. One (day, bucket)-keyed aggregate with
     map-side combine; ≤M rows per day at ANY event volume."""
-    from .sketch import HLL_M, _HLL_U32, _rho_sql
+    from .sketch import _hll_registers
 
     rows = ev.filter(F.col("user_id").isNotNull()).select(
         F.col("ts").cast("date").alias("day"),
         F.col("user_id").cast("string").alias("token"),
     )
-    return (
-        rows.select(
-            "day",
-            F.expr(f"{_HLL_U32} % {HLL_M}").alias("bucket"),
-            F.expr(_rho_sql(f"({_HLL_U32} div {HLL_M})")).alias("rho"),
-        )
-        .groupBy("day", "bucket")
-        .agg(F.max("rho").alias("max_rho"))
-    )
+    return _hll_registers(rows, "day")
 
 
 def engagement_hll_panel_df(regs: DataFrame) -> DataFrame:
@@ -505,7 +466,7 @@ def engagement_hll_panel_df(regs: DataFrame) -> DataFrame:
     (`hll_distinct_by_source`'s arithmetic), rounded 4; anchor days =
     days with a register row, matching the exact panel's event-day
     anchors. Output: (day, users_1d_est, users_7d_est, users_30d_est)."""
-    from .sketch import HLL_ALPHA, HLL_M, HLL_VBITS
+    from .sketch import _hll_estimate
 
     def est_for(days: int, alias: str) -> DataFrame:
         fan = regs.select(
@@ -519,23 +480,9 @@ def engagement_hll_panel_df(regs: DataFrame) -> DataFrame:
         merged = fan.groupBy("day", "bucket").agg(
             F.max("max_rho").alias("max_rho")
         )
-        agg = merged.groupBy("day").agg(
-            F.expr(
-                f"sum(cast(power(2.0, {HLL_VBITS + 1} - max_rho) as bigint))"
-            ).alias("z_num"),
-            F.count(F.lit(1)).alias("n_present"),
+        return _hll_estimate(merged, ["day"]).select(
+            "day", F.round("hll_est", 4).alias(alias)
         )
-        scale = float(1 << (HLL_VBITS + 1))
-        z = (
-            F.col("z_num") + (F.lit(HLL_M) - F.col("n_present")) * F.lit(scale)
-        ) / F.lit(scale)
-        e_raw = F.expr(HLL_ALPHA) * F.lit(HLL_M) * F.lit(HLL_M) / z
-        v_zero = F.lit(HLL_M) - F.col("n_present")
-        est = F.when(
-            (e_raw <= F.lit(2.5 * HLL_M)) & (v_zero > 0),
-            F.lit(HLL_M) * F.log(F.lit(float(HLL_M)) / v_zero),
-        ).otherwise(e_raw)
-        return agg.select("day", F.round(est, 4).alias(alias))
 
     d1 = est_for(1, "users_1d_est")
     d7 = est_for(7, "users_7d_est")

@@ -283,6 +283,40 @@ ACF_MAX_LAG = 7  # one week of daily lags — seasonality shows at lag 7
 _DEC = "decimal(38,0)"
 
 
+def _pearson(pairs: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, n, cov_num, r) — Pearson r per group of a (ya, yb) pairs
+    frame: six exact moments (n, Σa, Σb, Σa², Σb², Σab; products on
+    DECIMAL(38,0)), the exact covariance numerator n·Σab − ΣaΣb as a
+    string, and r as ONE IEEE division rounded 6 (null when either
+    series is constant)."""
+    m = pairs.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("ya").alias("sa"),
+        F.sum("yb").alias("sb"),
+        F.sum(F.col("ya").cast(_DEC) * F.col("ya").cast(_DEC)).alias("saa"),
+        F.sum(F.col("yb").cast(_DEC) * F.col("yb").cast(_DEC)).alias("sbb"),
+        F.sum(F.col("ya").cast(_DEC) * F.col("yb").cast(_DEC)).alias("sab"),
+    )
+    num = F.col("n").cast(_DEC) * F.col("sab") - F.col("sa").cast(
+        _DEC
+    ) * F.col("sb").cast(_DEC)
+    dena = F.col("n").cast(_DEC) * F.col("saa") - F.col("sa").cast(
+        _DEC
+    ) * F.col("sa").cast(_DEC)
+    denb = F.col("n").cast(_DEC) * F.col("sbb") - F.col("sb").cast(
+        _DEC
+    ) * F.col("sb").cast(_DEC)
+    r = F.when(
+        (dena > 0) & (denb > 0),
+        F.round(
+            num.cast("double")
+            / F.sqrt(dena.cast("double") * denb.cast("double")),
+            6,
+        ),
+    )
+    return m.select(*keys, "n", num.cast("string").alias("cov_num"), r.alias("r"))
+
+
 def acf_from_daily(daily: DataFrame, max_lag: int = ACF_MAX_LAG) -> DataFrame:
     """(event_type, lag, n_pairs, cov_num, acf) — lag-k Pearson between
     each type's daily series and its k-day-later self, k = 1..max_lag,
@@ -319,37 +353,12 @@ def acf_from_daily(daily: DataFrame, max_lag: int = ACF_MAX_LAG) -> DataFrame:
         (F.col("type_a") == F.col("type_b"))
         & (F.expr("date_add(day_a, lag)") == F.col("day_b")),
     )
-    m = pairs.groupBy("type_a", "lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("ya").alias("sa"),
-        F.sum("yb").alias("sb"),
-        F.sum(F.col("ya").cast(_DEC) * F.col("ya").cast(_DEC)).alias("saa"),
-        F.sum(F.col("yb").cast(_DEC) * F.col("yb").cast(_DEC)).alias("sbb"),
-        F.sum(F.col("ya").cast(_DEC) * F.col("yb").cast(_DEC)).alias("sab"),
-    )
-    num = F.col("n").cast(_DEC) * F.col("sab") - F.col("sa").cast(
-        _DEC
-    ) * F.col("sb").cast(_DEC)
-    dena = F.col("n").cast(_DEC) * F.col("saa") - F.col("sa").cast(
-        _DEC
-    ) * F.col("sa").cast(_DEC)
-    denb = F.col("n").cast(_DEC) * F.col("sbb") - F.col("sb").cast(
-        _DEC
-    ) * F.col("sb").cast(_DEC)
-    acf = F.when(
-        (dena > 0) & (denb > 0),
-        F.round(
-            num.cast("double")
-            / F.sqrt(dena.cast("double") * denb.cast("double")),
-            6,
-        ),
-    )
-    return m.select(
+    return _pearson(pairs, ["type_a", "lag"]).select(
         F.col("type_a").alias("event_type"),
         "lag",
         F.col("n").alias("n_pairs"),
-        num.cast("string").alias("cov_num"),
-        acf.alias("acf"),
+        "cov_num",
+        F.col("r").alias("acf"),
     )
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..plans.materialize import register_side_cache
+from ..plans.rank import global_rank
 
 # Per-language keep rates as first-md5-byte hex cutoffs: en is dominant
 # in the corpus → 25%; the rest keep 75%. ("ff" would be ~100%.)
@@ -74,7 +75,7 @@ def shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def vocab_topk(spark: SparkSession, sf_dir: str, k: int = VOCAB_K) -> DataFrame:
+def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k corpus vocabulary by token frequency (count desc, token asc
     tiebreak). explode → groupBy token keeps map-side partials; the top-k
     itself is orderBy+limit — Spark's TakeOrderedAndProject, a distributed
@@ -92,7 +93,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str, k: int = VOCAB_K) -> DataFrame:
     from .sketch import corpus_token_counts
 
     counts = corpus_token_counts(spark, sf_dir)
-    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(k)
+    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(VOCAB_K)
     w = Window.orderBy(F.desc("n"), F.asc("token"))
     return top.select(
         "token", "n", F.row_number().over(w).cast("long").alias("rank")
@@ -160,50 +161,15 @@ def shuffle_order_distributed(
     spark: SparkSession, sf_dir: str, num_partitions: int | None = None
 ) -> DataFrame:
     """The 100 TB `shuffle_order`: identical permutation, no single-reducer
-    window (VERDICT r2 #5 minor / task 7).
-
-    Plan: emit the md5 sort key map-side → `repartitionByRange(key, doc_id)`
-    (globally ordered, non-overlapping ranges) → `sortWithinPartitions` →
-    two-pass global rank the way RDD zipWithIndex does it: pass 1 is a tiny
-    per-partition count aggregate (#partitions rows reach the driver, by
-    contract), pass 2 adds partition offset + local ordinal in an Arrow
-    `mapInPandas` that never materializes a partition. localCheckpoint pins
-    the range partitioning so both passes see the same layout.
-    """
-    import pandas as pd  # noqa: F401 — mapInPandas batch type
-
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    window (VERDICT r2 #5 minor / task 7) — the md5 sort key is emitted
+    map-side, then the two-pass global rank of `plans/rank.py` over
+    (key, doc_id)."""
     docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select("doc_id", _shuffle_key().alias("shuffle_key"))
-    ranged = (
-        keyed.repartitionByRange(num_partitions, "shuffle_key", "doc_id")
-        .sortWithinPartitions("shuffle_key", "doc_id")
-        .localCheckpoint()
+    ranked, _ = global_rank(
+        keyed, ["shuffle_key", "doc_id"], "shuffle_rank", num_partitions
     )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in ranged.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for pid in range(num_partitions):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-
-    def assign(iterator):
-        from pyspark import TaskContext
-
-        start = offsets[TaskContext.get().partitionId()]
-        seen = 0
-        for pdf in iterator:
-            out = pdf.copy()
-            out["shuffle_rank"] = range(start + seen + 1, start + seen + len(pdf) + 1)
-            seen += len(pdf)
-            yield out
-
-    return ranged.mapInPandas(assign, "doc_id long, shuffle_key string, shuffle_rank long")
+    return ranked
 
 
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,7 +261,7 @@ BLOOM_K = 5  # hash functions per element
 
 
 def decontaminate_bloom(
-    spark: SparkSession, sf_dir: str, m_bits: int = BLOOM_BITS, k: int = BLOOM_K
+    spark: SparkSession, sf_dir: str, m_bits: int = BLOOM_BITS
 ) -> DataFrame:
     """`decontaminate` for probe sets too big to broadcast exactly: the
     probe shingles are folded into a fixed-size Bloom filter, so the
@@ -332,7 +298,7 @@ def decontaminate_bloom(
     semantic reference, and the oracle certifies the bloom's own
     arithmetic (positions, packing, probe, counts) end to end.
     """
-    assert k * 6 <= 32, "k slices of 6 hex chars must fit one md5 digest"
+    assert BLOOM_K * 6 <= 32, "k slices of 6 hex chars must fit one md5 digest"
     from ..plans.materialize import materialized_frame
 
     def build() -> DataFrame:
@@ -349,7 +315,7 @@ def decontaminate_bloom(
                 F.conv(F.substring("hx", 1 + 6 * i, 6), 16, 10).cast("long"),
                 F.lit(m_bits),
             ).alias(f"p{i}")
-            for i in range(k)
+            for i in range(BLOOM_K)
         ]
         # distinct on the k-position tuple = the shingle identity both
         # engines share (derived from the same md5 — no cross-engine drift)
@@ -365,7 +331,7 @@ def decontaminate_bloom(
     # pre-r12, so it carries its own checkpoint to keep warm-pass cost
     # at the joins, not the scan+md5+distinct)
     sh = materialized_frame(
-        spark, "bloom_shingle_positions", sf_dir, build, (m_bits, k)
+        spark, "bloom_shingle_positions", sf_dir, build, (m_bits,)
     )
     probe_sh = sh.filter(F.col("doc_id") < PROBE_MAX_DOC_ID)
     corpus_sh = sh.filter(F.col("doc_id") >= PROBE_MAX_DOC_ID)
@@ -373,7 +339,7 @@ def decontaminate_bloom(
     # Build: union the probe rows' k positions → word-indexed bit_or →
     # one row carrying the filter as a wi→word map (≤ m/64 entries).
     pos = probe_sh.select(
-        F.explode(F.array(*[F.col(f"p{i}") for i in range(k)])).alias("pos")
+        F.explode(F.array(*[F.col(f"p{i}") for i in range(BLOOM_K)])).alias("pos")
     )
     words_tbl = (
         pos.selectExpr("pos div 64 AS wi", "CAST(pmod(pos, 64) AS INT) AS bit")
@@ -388,7 +354,7 @@ def decontaminate_bloom(
     member = " AND ".join(
         f"(coalesce(element_at(bf, p{i} div 64), 0L)"
         f" & shiftleft(1L, CAST(pmod(p{i}, 64) AS INT))) != 0"
-        for i in range(k)
+        for i in range(BLOOM_K)
     )
     hits = corpus_sh.join(F.broadcast(bloom)).filter(F.expr(member))
 
@@ -586,16 +552,11 @@ def bpe_token_counts(
     )
 
 
-def pack_sequences(
-    spark: SparkSession,
-    sf_dir: str,
-    budget: int = PACK_BUDGET,
-    n_buckets: int = PACK_BUCKETS,
-) -> DataFrame:
-    """Greedy sequence packing: assign documents to packs of ≤ `budget`
+def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy sequence packing: assign documents to packs of ≤ PACK_BUDGET
     tokens (sample packing for training efficiency). Packing is
     inherently sequential, so it runs greedily PER BUCKET
-    (bucket = doc_id % n_buckets, docs in doc_id order) — deterministic,
+    (bucket = doc_id % PACK_BUCKETS, docs in doc_id order) — deterministic,
     embarrassingly parallel across buckets, and at 100 TB the bucket
     count scales with the cluster while each kernel stays a trivial
     running-sum loop. A doc longer than the budget gets its own pack.
@@ -611,19 +572,15 @@ def pack_sequences(
             "n_tokens"
         ),
     )
-    return pack_sequences_df(docs, budget, n_buckets)
+    return pack_sequences_df(docs)
 
 
-def pack_sequences_df(
-    sized: DataFrame,
-    budget: int = PACK_BUDGET,
-    n_buckets: int = PACK_BUCKETS,
-) -> DataFrame:
+def pack_sequences_df(sized: DataFrame) -> DataFrame:
     """`pack_sequences` core over any (doc_id, n_tokens) frame — the
     reusable pipeline stage curated_corpus_v2 runs on its survivors."""
     docs = sized.select(
         "doc_id",
-        F.pmod(F.col("doc_id"), F.lit(n_buckets)).cast("int").alias("bucket"),
+        F.pmod(F.col("doc_id"), F.lit(PACK_BUCKETS)).cast("int").alias("bucket"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
     )
 
@@ -632,7 +589,7 @@ def pack_sequences_df(
         pdf = pdf.sort_values("doc_id")
         pack_ids, local, used = [], 0, 0
         for n in pdf["n_tokens"]:
-            if used > 0 and used + n > budget:
+            if used > 0 and used + n > PACK_BUDGET:
                 local += 1
                 used = 0
             used += int(n)
@@ -940,17 +897,12 @@ def _training_corpus_oracle() -> str:
 ORACLE_SQL["training_corpus"] = _training_corpus_oracle()
 
 
-def write_training_shards(
-    df: DataFrame,
-    out_dir: str,
-    n_shards: int = 8,
-    key: str = "shuffle_key",
-) -> dict:
+def write_training_shards(df: DataFrame, out_dir: str, n_shards: int = 8) -> dict:
     """Materialize a curated corpus (e.g. `training_corpus` output) as
     `n_shards` globally-ordered parquet shards + a JSON manifest — the
     final hop before a training loader.
 
-    Sharding is `repartitionByRange(key, doc_id)`: shard boundaries are
+    Sharding is `repartitionByRange(shuffle_key, doc_id)`: shard boundaries are
     non-overlapping key ranges, rows are sorted within each shard, so
     reading shards in manifest order replays the exact seeded shuffle
     permutation. Both properties are deterministic given the data — no
@@ -967,8 +919,8 @@ def write_training_shards(
     import os as _os
 
     (
-        df.repartitionByRange(n_shards, F.col(key), F.col("doc_id"))
-        .sortWithinPartitions(key, "doc_id")
+        df.repartitionByRange(n_shards, F.col("shuffle_key"), F.col("doc_id"))
+        .sortWithinPartitions("shuffle_key", "doc_id")
         .write.mode("overwrite")
         .parquet(out_dir)
     )
@@ -978,8 +930,8 @@ def write_training_shards(
         .groupBy(F.input_file_name().alias("file"))
         .agg(
             F.count(F.lit(1)).alias("rows"),
-            F.min(key).alias("min_key"),
-            F.max(key).alias("max_key"),
+            F.min("shuffle_key").alias("min_key"),
+            F.max("shuffle_key").alias("max_key"),
         )
         .collect()  # bounded: one row per shard by contract
     )
@@ -998,7 +950,7 @@ def write_training_shards(
     manifest = {
         "n_shards": len(shards),
         "total_rows": sum(s["rows"] for s in shards),
-        "order_key": key,
+        "order_key": "shuffle_key",
         "shards": shards,
     }
     with open(_os.path.join(out_dir, "_manifest.json"), "w") as f:

@@ -30,7 +30,7 @@ grained so windows run on tiny frames.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StringType
 
@@ -43,31 +43,37 @@ def _parsed(logs: DataFrame) -> DataFrame:
     return logs.withColumn("p", F.from_json("parsed", PARSED_SCHEMA))
 
 
-def ibc_transfers_in(logs: DataFrame, txs: DataFrame) -> DataFrame:
-    """Inflows (reference ibc/ibc_transfers_in.sql).
+def _ibc_transfers(
+    logs: DataFrame,
+    txs: DataFrame,
+    module_filter: Column,
+    party_keys: tuple[str, str],
+    packet: str,
+) -> DataFrame:
+    """One transfer direction: the logs passing `module_filter`, their
+    packet columns unnested in parallel, the amount split, and the
+    timestamp joined in. `party_keys` name the parsed sender and
+    receiver keys; `packet` is the packet-key prefix.
 
-    Filter: parsed->'message_module' == exactly ['ibc_channel','ibc_channel']
-    (P15 array equality). Parallel unnest of the packet columns uses
-    arrays_zip → one explode (zip semantics — what Postgres' parallel
-    set-returning functions and DuckDB's parallel unnest both do).
-    Amount split: leading digits (P9) / denom suffix (P10).
+    Parallel unnest uses arrays_zip → one explode (zip semantics — what
+    Postgres' parallel set-returning functions and DuckDB's parallel
+    unnest both do). Amount split: leading digits (P9) / denom suffix
+    (P10).
     """
     p = _parsed(logs)
-    inflow = p.filter(
-        F.col("p")["message_module"] == F.array(F.lit("ibc_channel"), F.lit("ibc_channel"))
-    )
-    zipped = inflow.select(
+    sender, receiver = party_keys
+    zipped = p.filter(module_filter).select(
         "txhash",
         "msg_index",
         F.explode(
             F.arrays_zip(
                 F.col("p")["transfer_amount"].alias("transfer_amount"),
-                F.col("p")["fungible_token_packet_sender"].alias("sender"),
-                F.col("p")["fungible_token_packet_receiver"].alias("receiver"),
-                F.col("p")["recv_packet_packet_src_port"].alias("src_port"),
-                F.col("p")["recv_packet_packet_src_channel"].alias("src_channel"),
-                F.col("p")["recv_packet_packet_dst_port"].alias("dst_port"),
-                F.col("p")["recv_packet_packet_dst_channel"].alias("dst_channel"),
+                F.col("p")[sender].alias("sender"),
+                F.col("p")[receiver].alias("receiver"),
+                F.col("p")[f"{packet}_packet_src_port"].alias("src_port"),
+                F.col("p")[f"{packet}_packet_src_channel"].alias("src_channel"),
+                F.col("p")[f"{packet}_packet_dst_port"].alias("dst_port"),
+                F.col("p")[f"{packet}_packet_dst_channel"].alias("dst_channel"),
             )
         ).alias("z"),
     ).select(
@@ -91,44 +97,30 @@ def ibc_transfers_in(logs: DataFrame, txs: DataFrame) -> DataFrame:
     return zipped.join(txs.select("txhash", "timestamp"), "txhash", "left")
 
 
+def ibc_transfers_in(logs: DataFrame, txs: DataFrame) -> DataFrame:
+    """Inflows (reference ibc/ibc_transfers_in.sql). Filter:
+    parsed->'message_module' == exactly ['ibc_channel','ibc_channel']
+    (P15 array equality)."""
+    return _ibc_transfers(
+        logs,
+        txs,
+        F.col("p")["message_module"] == F.array(F.lit("ibc_channel"), F.lit("ibc_channel")),
+        ("fungible_token_packet_sender", "fungible_token_packet_receiver"),
+        "recv_packet",
+    )
+
+
 def ibc_transfers_out(logs: DataFrame, txs: DataFrame) -> DataFrame:
     """Outflows (reference ibc/ibc_transfers_out.sql). Filter is
     containment (P14): message_module has 'transfer' AND 'ibc_channel'."""
-    p = _parsed(logs)
-    outflow = p.filter(
+    return _ibc_transfers(
+        logs,
+        txs,
         F.array_contains(F.col("p")["message_module"], "transfer")
-        & F.array_contains(F.col("p")["message_module"], "ibc_channel")
+        & F.array_contains(F.col("p")["message_module"], "ibc_channel"),
+        ("ibc_transfer_sender", "ibc_transfer_receiver"),
+        "send_packet",
     )
-    zipped = outflow.select(
-        "txhash",
-        "msg_index",
-        F.explode(
-            F.arrays_zip(
-                F.col("p")["transfer_amount"].alias("transfer_amount"),
-                F.col("p")["ibc_transfer_sender"].alias("sender"),
-                F.col("p")["ibc_transfer_receiver"].alias("receiver"),
-                F.col("p")["send_packet_packet_src_port"].alias("src_port"),
-                F.col("p")["send_packet_packet_src_channel"].alias("src_channel"),
-                F.col("p")["send_packet_packet_dst_port"].alias("dst_port"),
-                F.col("p")["send_packet_packet_dst_channel"].alias("dst_channel"),
-            )
-        ).alias("z"),
-    ).select(
-        "txhash",
-        "msg_index",
-        F.regexp_extract(F.col("z.transfer_amount"), "^([0-9]*)", 1)
-        .cast(AMOUNT_DECIMAL)
-        .alias("transfer_amount"),
-        # leading digit run only — see ibc_transfers_in
-        F.regexp_replace(F.col("z.transfer_amount"), "^[0-9]*", "").alias("transfer_denom"),
-        F.col("z.sender").alias("sender"),
-        F.col("z.receiver").alias("receiver"),
-        F.col("z.src_port").alias("src_port"),
-        F.col("z.src_channel").alias("src_channel"),
-        F.col("z.dst_port").alias("dst_port"),
-        F.col("z.dst_channel").alias("dst_channel"),
-    )
-    return zipped.join(txs.select("txhash", "timestamp"), "txhash", "left")
 
 
 def ibc_transfers(logs: DataFrame, txs: DataFrame) -> DataFrame:

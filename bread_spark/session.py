@@ -32,10 +32,19 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    return _builder(app_name, master, shuffle_partitions).getOrCreate()
+
+
+def _builder(
+    app_name: str,
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession.Builder:
+    """The one session config every entry point starts from."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -53,7 +62,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
 
 
 def run_concurrently(spark: SparkSession, actions: Sequence[Callable[[], T]]) -> list[T]:

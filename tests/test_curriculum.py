@@ -47,3 +47,31 @@ def test_distributed_rank_is_partition_count_invariant(spark, sf_dir):
     a = _table(curriculum_order_distributed(spark, sf_dir, num_partitions=3))
     b = _table(curriculum_order_distributed(spark, sf_dir, num_partitions=17))
     assert a == b
+
+
+@pytest.mark.parametrize("n_rows", [5, 0])
+def test_global_rank_edge_inputs(spark, n_rows):
+    """Fewer rows than range partitions (some ranges empty) and an empty
+    frame: ranks are exactly 1..n, equal ROW_NUMBER over the same
+    order, and the returned count is n."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from bread_spark.plans.rank import global_rank
+
+    df = spark.createDataFrame(
+        [(i, f"k{(i * 7) % 3}") for i in range(n_rows)], "doc_id long, key string"
+    )
+    order = [F.col("key").desc(), F.col("doc_id").asc()]
+    ranked, n = global_rank(df, order, "rk", num_partitions=8)
+    got = sorted((r["doc_id"], r["key"], r["rk"]) for r in ranked.collect())
+    want = sorted(
+        (r["doc_id"], r["key"], r["rk"])
+        for r in df.select(
+            "doc_id", "key", F.row_number().over(Window.orderBy(*order)).alias("rk")
+        ).collect()
+    )
+    assert n == n_rows
+    assert got == want
+    assert sorted(r[2] for r in got) == list(range(1, n_rows + 1))
+    assert ranked.schema["rk"].dataType.typeName() == "long"
