@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 from .curation import BIGRAM_PAIRS_EXPR
 
@@ -105,10 +106,7 @@ def top_collocations_by_source_df(
     invocation (the unigram explode+aggregate; the bigram pair stream
     is the one pass over text that remains — pairs cannot fold from
     unigram counts)."""
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    w = docs.select("source", toks_arr.alias("toks")).filter(
-        F.size("toks") >= 1
-    )
+    w = docs.select("source", split_tokens().alias("toks")).filter(F.size("toks") >= 1)
     if uni is None:
         toks = w.select("source", F.explode("toks").alias("token"))
         uni = toks.groupBy("source", "token").agg(

@@ -39,6 +39,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 from ..plans.rank import global_rank
 
@@ -285,7 +286,7 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     against: chunk digests survive upstream edits that shift fixed
     windows). Reads the compute-once chunk seam — the boundary scan is
     paid once per pass, shared with `cdc_chunk_dedup`."""
-    toks_in_chunk = F.size(F.filter(F.split("chunk", " "), lambda t: t != ""))
+    toks_in_chunk = F.size(split_tokens("chunk"))
     return (
         _cdc_chunk_frame_shared(spark, sf_dir)
         .select("doc_id", F.posexplode("chunks").alias("chunk_idx", "chunk"))
@@ -515,7 +516,7 @@ def domain_token_quota(
     hot source down.
     """
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    n_tokens = F.size(split_tokens())
     key = F.md5(F.col("text").cast("binary"))
     w = (
         Window.partitionBy("source")
@@ -608,7 +609,7 @@ def corpus_mix_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias("n_tokens"),
+        F.size(split_tokens()).alias("n_tokens"),
     )
     weight = F.lit(DEFAULT_MIX_WEIGHT)
     for src, w_val in MIX_WEIGHTS.items():
@@ -676,7 +677,7 @@ def temperature_mix_weights(
     """
     docs = load_table(spark, sf_dir, "documents").select(
         "source",
-        F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias("n_tokens"),
+        F.size(split_tokens()).alias("n_tokens"),
     )
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
@@ -841,8 +842,7 @@ BIGRAM_PAIRS_EXPR = ngram_window_expr(2)
 
 def _doc_toks(docs: DataFrame, *keep: str) -> DataFrame:
     """(*keep, toks) — the shared split+filter every LM build starts from."""
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    return docs.select(*keep, toks_arr.alias("toks")).filter(F.size("toks") >= 1)
+    return docs.select(*keep, split_tokens().alias("toks")).filter(F.size("toks") >= 1)
 
 
 def ngram_counts_df(docs: DataFrame, k: int) -> DataFrame:
@@ -996,7 +996,7 @@ def zipf_fit_df(docs: DataFrame, k: int = ZIPF_TOP_K) -> DataFrame:
     """`zipf_fit_by_source` core over any (source, text) frame."""
     toks = docs.select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token"),
+        F.explode(split_tokens()).alias("token"),
     )
     counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("n"))
     return _zipf_fit_from_counts(counts, k)
@@ -1034,7 +1034,7 @@ def corpus_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts expand to the standard two-phase distinct aggregate. All JVM.
     """
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    n_tokens = F.size(split_tokens())
     return (
         docs.select(
             "source",
@@ -1084,7 +1084,7 @@ def source_kl_divergence_df(docs: DataFrame) -> DataFrame:
     catalog entry feeds `_kl_from_counts` the shared seam instead)."""
     toks = docs.select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token"),
+        F.explode(split_tokens()).alias("token"),
     )
     st = (
         toks.groupBy("source", "token")
@@ -1135,11 +1135,9 @@ def _logp_lattice():  # lazy: F.expr needs an active session
     return F.expr(_LOGP_LATTICE_SQL)
 
 
-def perplexity_buckets(
-    spark: SparkSession, sf_dir: str, k: int = PERPLEXITY_K
-) -> DataFrame:
+def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's final step: split the corpus into head/middle/tail by LM
-    score — NTILE(k) over `bigram_logprob_scores` descending (bucket 1 =
+    score — NTILE(PERPLEXITY_K) over `bigram_logprob_scores` descending (bucket 1 =
     most fluent). Head goes straight to training, middle gets sampled,
     tail gets dropped or LM-filtered harder.
 
@@ -1153,27 +1151,25 @@ def perplexity_buckets(
     construction, engine-stable per the float-discipline rule for
     RANKED values (DECISIONS #12).
     """
-    return _ntile_buckets(lm_scored_frame(spark, sf_dir, 2), k)
+    return _ntile_buckets(lm_scored_frame(spark, sf_dir, 2))
 
 
-def perplexity_buckets_ngram5(
-    spark: SparkSession, sf_dir: str, k: int = PERPLEXITY_K
-) -> DataFrame:
+def perplexity_buckets_ngram5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`perplexity_buckets` under the 5-GRAM LM — the order CCNet's
-    KenLM models actually run. Same NTILE(k) head/middle/tail split over
+    KenLM models actually run. Same NTILE(PERPLEXITY_K) head/middle/tail split over
     the order-5 scored-frame seam (shared with `ngram5_logprob_scores`;
     its order-1..4 count seams are the ones the lower orders read). The
     100 TB form swaps the window for the `perplexity_buckets_distributed`
     two-pass rank — the assignment arithmetic is order-based and
     identical. Rank key on the ×1e6 bigint lattice (DIVERGENCES #8
     closure, r11)."""
-    return _ntile_buckets(lm_scored_frame(spark, sf_dir, 5), k)
+    return _ntile_buckets(lm_scored_frame(spark, sf_dir, 5))
 
 
-def _ntile_buckets(scored: DataFrame, k: int) -> DataFrame:
+def _ntile_buckets(scored: DataFrame) -> DataFrame:
     w = Window.orderBy(_logp_lattice().desc(), F.col("doc_id").asc())
     return scored.select(
-        "doc_id", "mean_logp", F.ntile(k).over(w).alias("bucket")
+        "doc_id", "mean_logp", F.ntile(PERPLEXITY_K).over(w).alias("bucket")
     )
 
 
@@ -1227,7 +1223,7 @@ def curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rides the shared chunk-dedup seam — same frame `paragraph_dedup` serves
     rebuilt = paragraph_dedup(spark, sf_dir).select("doc_id", "text")
     docs2 = rebuilt.join(docs.select("doc_id", "source", "lang"), "doc_id")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    n_tokens = F.size(split_tokens())
     key = F.md5(F.col("text").cast("binary"))
     w = (
         Window.partitionBy("source")
@@ -1358,7 +1354,7 @@ def curated_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") >= PROBE_MAX_DOC_ID)
         .join(bad, "doc_id", "left_anti")
     )
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long")
+    n_tokens = F.size(split_tokens()).cast("long")
     # O(surviving docs) × 4 narrow columns, consumed by BOTH the packing
     # stage and the final join — checkpoint so the whole gate chain
     # (boilerplate → CDC → ppl gate → decontam → split) runs once, not

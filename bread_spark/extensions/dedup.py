@@ -35,6 +35,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 from ..plans.materialize import materialized_frame
 
@@ -769,9 +770,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(split_tokens()).cast("long").alias("n_tokens"),
     )
     joined = docs.join(clusters.select("doc_id", "is_canonical"), "doc_id")
     return joined.groupBy("source").agg(

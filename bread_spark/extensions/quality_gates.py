@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..functions.text import STOPWORDS_EN
+from ..functions.text import STOPWORDS_EN, split_tokens
 from .classify import calibration_bins_df, margin_auc_df, pr_curve_df
 from .dedup import ORACLE_SQL as _DEDUP_SQL
 from .dedup import dedup_clusters
@@ -80,7 +80,7 @@ def _gate_rows_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     score and are excluded on both engines; probe (benchmark) docs are
     out of scope — they are the eval set, not curation candidates."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = split_tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     scored = (

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 
 BM25_K1 = 1.2
@@ -54,7 +55,7 @@ def _bm25(docs: DataFrame, terms: list[str]) -> tuple[DataFrame, DataFrame]:
     100 TB this frame is the stored per-document index row. `scores` is
     (doc_id, score) for every doc with a query-term match, rounded 4.
     """
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
+    toks_arr = split_tokens()
     per_doc = docs.select(
         "doc_id",
         F.size(toks_arr).alias("dl"),
@@ -133,7 +134,7 @@ def tfidf_keywords_df(docs: DataFrame) -> DataFrame:
 
     toks = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token"),
+        F.explode(split_tokens()).alias("token"),
     )
     # tf feeds BOTH the df reduction and the scoring join — materialize
     # it so the scan→explode→aggregate subtree runs once (the derived
@@ -181,9 +182,7 @@ def _positional_postings(docs: DataFrame, words: tuple[str, str]) -> DataFrame:
     generate_subscripts − 1."""
     return docs.select(
         "doc_id",
-        F.posexplode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-            "pos", "token"
-        ),
+        F.posexplode(split_tokens()).alias("pos", "token"),
     ).filter(F.col("token").isin(*words))
 
 
@@ -432,8 +431,7 @@ def search_snippets_df(
     the top-n cut is (first_pos, doc_id), an all-integer total
     order."""
     width = 2 * SNIPPET_RADIUS + 1
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    per = docs.select("doc_id", toks_arr.alias("toks"))
+    per = docs.select("doc_id", split_tokens().alias("toks"))
     pos = F.least(
         *[
             F.coalesce(

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 
 CMS_D = 4  # hash rows
@@ -32,8 +33,7 @@ CMS_TOP_K = 20  # heavy hitters audited by the calibration report
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    return docs.select(F.explode(toks).alias("token"))
+    return docs.select(F.explode(split_tokens()).alias("token"))
 
 
 def source_token_counts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,9 +62,8 @@ def source_token_counts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _source_token_counts_df(docs: DataFrame) -> DataFrame:
     """`source_token_counts` core over any (source, text) frame: ONE
     groupBy(source, token) with map-side partials."""
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
     return (
-        docs.select("source", F.explode(toks).alias("token"))
+        docs.select("source", F.explode(split_tokens()).alias("token"))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("n_st"))
     )
@@ -327,7 +326,7 @@ def bootstrap_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus snapshot (each replicate reweights EVERY document), so it is
     re-run on snapshots, not folded batch by batch into running state."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    n_tokens = F.size(split_tokens())
     u = (
         "cast(conv(substring(md5(concat(cast(r as string), ':', "
         "cast(doc_id as string))), 1, 8), 16, 10) as bigint)"
@@ -514,8 +513,7 @@ def hll_registers_df(docs: DataFrame) -> DataFrame:
     """`hll_registers` core over any (source, text) frame: the
     instance-level single-aggregate build (one row per token instance)
     that the merge and scale tests build on."""
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    tokens = docs.select("source", F.explode(toks).alias("token"))
+    tokens = docs.select("source", F.explode(split_tokens()).alias("token"))
     return _hll_registers(tokens, "source")
 
 
@@ -996,10 +994,7 @@ def _kmv_shingle_rows(docs: DataFrame) -> DataFrame:
     the wrong unit here twice over: a 31-token vocabulary never exercises
     the estimator, and resemblance-between-corpora (Broder 1997) is
     defined on shingle sets."""
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    w = docs.select("source", toks.alias("w")).filter(
-        F.size("w") >= KMV_SHINGLE_N
-    )
+    w = docs.select("source", split_tokens().alias("w")).filter(F.size("w") >= KMV_SHINGLE_N)
     h = (
         f"transform(sequence(0, size(w) - {KMV_SHINGLE_N}), i -> "
         f"cast(conv(substring(md5(concat_ws(' ', "

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 from ..plans.materialize import register_side_cache
 from ..plans.rank import global_rank
@@ -124,9 +125,7 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source",
         "doc_id",
-        F.posexplode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-            "pos", "token"
-        ),
+        F.posexplode(split_tokens()).alias("pos", "token"),
     )
     w = Window.partitionBy("source").orderBy("doc_id", "pos")
     positioned = toks.select(
@@ -568,9 +567,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast("long").alias(
-            "n_tokens"
-        ),
+        F.size(split_tokens()).cast("long").alias("n_tokens"),
     )
     return pack_sequences_df(docs)
 

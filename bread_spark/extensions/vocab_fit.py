@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..io import load_table
 
 VOCAB_SIZE = 1024
@@ -52,9 +53,7 @@ def oov_rate_df(
     )
     toks = docs.select(
         "source",
-        F.explode(
-            F.filter(F.split("text", " "), lambda t: t != "")
-        ).alias("token"),
+        F.explode(split_tokens()).alias("token"),
     )
     return (
         toks.join(F.broadcast(vocab), "token", "left")
@@ -85,7 +84,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def doc_length_histogram_df(docs: DataFrame) -> DataFrame:
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    n_tokens = F.size(split_tokens())
     bucket = F.length(F.bin(n_tokens.cast("long"))).cast("long")
     return (
         docs.select("source", n_tokens.cast("long").alias("nt"), bucket.alias("bucket"))

@@ -13,7 +13,7 @@ expressible in ANSI SQL for the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -25,6 +25,13 @@ STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it")
 BPE_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 
+def split_tokens(col: str = "text") -> Column:
+    """The whitespace tokens of `col`: split on single spaces, empty
+    strings dropped. Every oracle mirrors it as
+    ``list_filter(string_split(text, ' '), t -> t <> '')``."""
+    return F.filter(F.split(col, " "), lambda t: t != "")
+
+
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts: whitespace tokens, BPE-ish tokens,
     characters, average token length.
@@ -32,7 +39,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map-side (no shuffle at all) — projection over the scan.
     """
     docs = load_table(spark, sf_dir, "documents")
-    ws_tokens = F.filter(F.split("text", " "), lambda t: t != "")
+    ws_tokens = split_tokens()
     return docs.select(
         "doc_id",
         F.size(ws_tokens).cast("long").alias("n_tokens"),
@@ -50,7 +57,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ratios are rounded to 4 places (cross-engine float policy).
     """
     docs = load_table(spark, sf_dir, "documents")
-    tokens = F.filter(F.split("text", " "), lambda t: t != "")
+    tokens = split_tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = F.size(F.filter(tokens, lambda t: F.array_contains(stop_arr, t)))
     alpha_chars = F.length(F.regexp_replace("text", r"[^a-zA-Z]", ""))
@@ -93,9 +100,8 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan's partitioning (no shuffle).
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda t: t != "")
     return (
-        docs.select("doc_id", words.alias("w"))
+        docs.select("doc_id", split_tokens().alias("w"))
         .select(
             "doc_id",
             "w",
@@ -205,7 +211,7 @@ def _wrs_scored(docs: DataFrame) -> DataFrame:
     source of truth shared by `weighted_sample_docs` (global top-k) and
     `weighted_sample_by_source` (stratified) — the two can never
     disagree on a priority."""
-    w = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+    w = F.size(split_tokens())
     u = (
         F.conv(
             F.substring(
@@ -597,7 +603,7 @@ def quality_rank_df(docs: DataFrame) -> DataFrame:
     percentile rank is a total order over the source's history —
     recomputed per snapshot (the `quality_filter` adaptive-threshold
     note), not an incremental fold."""
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = split_tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     scored = (
@@ -667,7 +673,7 @@ def gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition ratio reuses the `repetition_scores` in-array distinct).
     """
     docs = load_table(spark, sf_dir, "documents")
-    tokens = F.filter(F.split("text", " "), lambda t: t != "")
+    tokens = split_tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     n_stop = F.size(F.filter(tokens, lambda t: F.array_contains(stop_arr, t)))
     alpha_ratio = F.round(

@@ -18,8 +18,13 @@ surface is a thin class over one SparkSession:
 For multi-client serving the same registry sits behind Spark Connect —
 `python -m bread_spark.connect --port 15002 --sf-dir ...` brings up the
 gRPC endpoint (see `bread_spark/connect.py`, the BV-proxy analog); the
-registered temp views serve as-is. Nothing in this module is driver-local
-state beyond the cache dict.
+registered temp views serve as-is.
+
+Driver-local state: the cache dict, and for each cache miss a short-lived
+clone of the caller's session that runs the miss under the serving profile
+(`_serving_frame`: one shuffle partition, AQE and whole-stage codegen off,
+for plans no larger than one advisory partition). The caller's session and its settings are never
+changed.
 """
 
 from __future__ import annotations
@@ -48,6 +53,47 @@ def extract_queries_md(markdown: str) -> dict[str, str]:
 
 def _digest(compiled: str) -> str:
     return hashlib.md5(compiled.encode()).hexdigest()
+
+
+# The serving profile: a small page query runs as one Spark job, with no
+# AQE stage-by-stage re-planning and no range-partitioner sampling job.
+# Whole-stage codegen is off too: a page query's literals are inlined into
+# the generated Java, so each new literal set (a new date range) compiled
+# fresh classes, which cost more than the few rows they then process.
+_PROFILE = {
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.codegen.wholeStage": "false",
+}
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def _serving_frame(df: DataFrame) -> DataFrame:
+    """The frame a served page collects for `df`. When the optimized plan's
+    size estimate is at most the session's advisory partition size (the
+    size at which AQE would coalesce a shuffle to one partition anyway),
+    that is `df`'s analyzed plan in a clone of its session under
+    `_PROFILE`; otherwise `df` itself, so large plans keep the caller's
+    settings.
+
+    Names were resolved when `df` was analyzed in the caller's session, so
+    the clone reads the views and file listings the caller holds now; only
+    execution moves. A clone per call keeps every other setting equal to
+    the caller's at that moment, and leaves the caller's session as it was.
+    """
+    spark = df.sparkSession
+    clone = spark._jsparkSession.cloneSession()
+    conf = clone.conf()
+    for key, value in _PROFILE.items():
+        conf.set(key, value)
+    jvm = spark._jvm
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        clone, df._jdf.queryExecution().analyzed()
+    )
+    bound = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf.get(_ADVISORY))
+    if jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > bound:
+        return df
+    return DataFrame(jdf, SparkSession(spark.sparkContext, clone))
 
 
 def _plain_name_links(compiled: dict[str, str]) -> set[str]:
@@ -107,7 +153,9 @@ class QueryService:
 
         Serving queries are small by contract (gold tables, dashboard
         shapes) — collect is bounded; big results belong behind
-        Connect/Thrift, not this path.
+        Connect/Thrift, not this path. A miss is analyzed, and its temp
+        view registered, in the caller's session, and runs under the
+        serving profile when its plan is small (`_serving_frame`).
         """
         if compiled is None:
             compiled = self.compile(queries, name)
@@ -117,7 +165,8 @@ class QueryService:
                 self.executions += 1
             df = self.spark.sql(compiled)
             df.createOrReplaceTempView(name)
-            self._cache[key] = [row.asDict(recursive=True) for row in df.collect()]
+            rows = _serving_frame(df).collect()
+            self._cache[key] = [row.asDict(recursive=True) for row in rows]
         return self._cache[key]
 
     def run_page(self, markdown: str) -> dict[str, list[dict[str, Any]]]:

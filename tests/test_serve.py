@@ -180,3 +180,124 @@ def test_plain_name_links():
     }
     assert serve._plain_name_links(compiled) == {"a", "b"}
     assert serve._plain_name_links({}) == set()
+
+
+# -- the serving profile ------------------------------------------------------
+
+ORDERED = (
+    "SELECT o_orderstatus AS status, COUNT(*) AS n, SUM(o_totalprice) AS total "
+    "FROM orders GROUP BY o_orderstatus ORDER BY n DESC, status"
+)
+
+
+def _group_jobs(spark, group: str) -> list[int]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _group_plans(spark, group: str) -> list[str]:
+    """The physical plans of the SQL executions that ran the group's jobs."""
+    jobs = set(_group_jobs(spark, group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        ids = ex.jobs().keys().toSeq()
+        if any(ids.apply(k) in jobs for k in range(ids.size())):
+            plans.append(ex.physicalPlanDescription())
+    return plans
+
+
+@pytest.fixture
+def aqe_on(spark):
+    """The production setting: AQE on in the caller's session."""
+    was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    yield spark
+    spark.conf.set("spark.sql.adaptive.enabled", was)
+
+
+def test_profile_serves_the_plain_sessions_rows(spark):
+    svc = QueryService(spark, SF_DIR)
+    queries = {**extract_queries_md(PAGE), "ordered": ORDERED}
+    for name in queries:
+        sql = svc.compile(queries, name)
+        want = [r.asDict(recursive=True) for r in spark.sql(sql).collect()]
+        got = svc.run_json(queries, name)
+        if "ORDER BY" in sql:
+            assert got == want, name
+        assert _rows(got) == _rows(want), name
+    assert svc.executions == len(queries)
+
+
+@pytest.mark.parametrize("caller_aqe", ["false", "true"])
+def test_small_miss_runs_as_one_job(spark, caller_aqe):
+    was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", caller_aqe)
+    group = f"serve-profile-{caller_aqe}"
+    try:
+        svc = QueryService(spark, SF_DIR)
+        spark.sparkContext.setJobGroup(group, "one small miss")
+        svc.run_json({"ordered": ORDERED}, "ordered")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", was)
+    assert len(_group_jobs(spark, group)) == 1
+    (plan,) = _group_plans(spark, group)
+    assert "AdaptiveSparkPlan" not in plan
+    assert "codegen id" not in plan
+
+
+def test_plan_above_the_advisory_size_keeps_the_callers_plan(aqe_on):
+    spark = aqe_on
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    group = "serve-profile-large"
+    try:
+        svc = QueryService(spark, SF_DIR)
+        spark.sparkContext.setJobGroup(group, "a miss above the bound")
+        rows = svc.run_json({"ordered": ORDERED}, "ordered")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, was)
+    assert rows == [r.asDict() for r in spark.sql(ORDERED).collect()]
+    plans = _group_plans(spark, group)
+    assert plans and all("AdaptiveSparkPlan" in p for p in plans)
+    assert any("codegen id" in p for p in plans)
+
+
+def test_page_leaves_the_callers_settings_unchanged(aqe_on):
+    spark = aqe_on
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    QueryService(spark, SF_DIR).run_page(PAGE)
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert before["spark.sql.shuffle.partitions"] != "1"
+
+
+def test_miss_reads_the_view_registered_after_the_service_was_built(spark, tmp_path):
+    """Names resolve in the caller's session when the miss runs: a view
+    re-registered over rewritten files is what the next miss reads."""
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("serve_files")
+    svc = QueryService(spark)
+    try:
+        assert svc.run_json({"a": "SELECT COUNT(*) AS n FROM serve_files"}, "a") == [{"n": 3}]
+        spark.range(5).write.mode("overwrite").parquet(path)
+        spark.read.parquet(path).createOrReplaceTempView("serve_files")
+        q = {"b": "SELECT COUNT(*) AS n, SUM(id) AS s FROM serve_files"}
+        assert svc.run_json(q, "b") == [{"n": 5, "s": 10}]
+    finally:
+        spark.catalog.dropTempView("serve_files")
+
+
+def test_run_json_registers_its_view_on_the_callers_session(spark):
+    svc = QueryService(spark, SF_DIR)
+    svc.run_json({"served_ordered": ORDERED}, "served_ordered")
+    try:
+        got = [r.asDict() for r in spark.table("served_ordered").collect()]
+        assert _rows(got) == _rows(svc.run_json({"served_ordered": ORDERED}, "served_ordered"))
+    finally:
+        spark.catalog.dropTempView("served_ordered")
