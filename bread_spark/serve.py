@@ -23,8 +23,8 @@ registered temp views serve as-is.
 Driver-local state: the cache dict, and for each cache miss a short-lived
 clone of the caller's session that runs the miss under the serving profile
 (`_serving_frame`: one shuffle partition, AQE and whole-stage codegen off,
-for plans no larger than one advisory partition). The caller's session and its settings are never
-changed.
+for plans that read at most 8 MB and at most one advisory partition). The
+caller's session and its settings are never changed.
 """
 
 from __future__ import annotations
@@ -59,27 +59,46 @@ def _digest(compiled: str) -> str:
 # AQE stage-by-stage re-planning and no range-partitioner sampling job.
 # Whole-stage codegen is off too: a page query's literals are inlined into
 # the generated Java, so each new literal set (a new date range) compiled
-# fresh classes, which cost more than the few rows they then process.
+# fresh classes, which cost more than the few rows they then process. With
+# it off, operators are interpreted and file scans hand rows, not columnar
+# batches, to them (a scan returns batches only under whole-stage codegen).
 _PROFILE = {
     "spark.sql.shuffle.partitions": "1",
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.codegen.wholeStage": "false",
 }
 _ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+# The most a plan may read to take the profile: the largest input it was
+# measured to win on (PERF_NOTES "Serving profile"). Above it, the
+# interpreted row-at-a-time work costs more than the re-planning and the
+# compile it saves.
+_PROFILE_MAX_READ = 8 << 20
+
+
+def _read_bytes(df: DataFrame) -> int:
+    """The size estimate of what `df` reads: the sum over the leaves of its
+    optimized plan (file scans after partition pruning). Not the root's
+    estimate, which is the result's size: a LIMIT or a global aggregate
+    estimates a few rows whatever it reads."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
 
 
 def _serving_frame(df: DataFrame) -> DataFrame:
-    """The frame a served page collects for `df`. When the optimized plan's
-    size estimate is at most the session's advisory partition size (the
-    size at which AQE would coalesce a shuffle to one partition anyway),
-    that is `df`'s analyzed plan in a clone of its session under
-    `_PROFILE`; otherwise `df` itself, so large plans keep the caller's
+    """The frame a served page collects for `df`. When the plan reads at
+    most `_PROFILE_MAX_READ` and at most the session's advisory partition
+    size (the size at which AQE would coalesce a shuffle to one partition
+    anyway), that is `df`'s analyzed plan in a clone of its session under
+    `_PROFILE`; otherwise `df` itself, so larger plans keep the caller's
     settings.
 
     Names were resolved when `df` was analyzed in the caller's session, so
     the clone reads the views and file listings the caller holds now; only
     execution moves. A clone per call keeps every other setting equal to
     the caller's at that moment, and leaves the caller's session as it was.
+    The size is read off the clone's optimized plan, which `collect` then
+    runs: checking the caller's plan first would optimize twice on the
+    small path, the common one.
     """
     spark = df.sparkSession
     clone = spark._jsparkSession.cloneSession()
@@ -90,10 +109,9 @@ def _serving_frame(df: DataFrame) -> DataFrame:
     jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         clone, df._jdf.queryExecution().analyzed()
     )
-    bound = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf.get(_ADVISORY))
-    if jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > bound:
-        return df
-    return DataFrame(jdf, SparkSession(spark.sparkContext, clone))
+    served = DataFrame(jdf, SparkSession(spark.sparkContext, clone))
+    advisory = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf.get(_ADVISORY))
+    return served if _read_bytes(served) <= min(advisory, _PROFILE_MAX_READ) else df
 
 
 def _plain_name_links(compiled: dict[str, str]) -> set[str]:

@@ -5,12 +5,12 @@ multi-executor cluster reading ~100 TB:
 
 - AQE on (runtime re-plan: broadcast conversion, skew-join splitting,
   partition coalescing) so plans written at sf0.01 survive 1000x scale-up.
-  One exception: `serve.QueryService` runs a cache miss whose plan
-  estimates at most one advisory partition (64 MB by default) in a clone
-  of the session with one shuffle partition, AQE off and whole-stage
-  codegen off, because on a query that small AQE's stage-by-stage
-  re-planning and the compile of its literal-specific code are most of
-  the latency, and AQE's coalescing would leave one partition anyway.
+  One exception: `serve.QueryService` runs a cache miss whose plan reads
+  at most 8 MB (and at most one advisory partition) in a clone of the
+  session with one shuffle partition, AQE off and whole-stage codegen
+  off, because on a query that small AQE's stage-by-stage re-planning
+  and the compile of its literal-specific code are most of the latency,
+  and AQE's coalescing would leave one partition anyway.
 - Shuffle partitions sized by env; at cluster scale this should be
   ~2-3x total cores (AQE coalesces small ones back down).
 - Arrow enabled so the few Pandas-UDF operators (multimodal decode,

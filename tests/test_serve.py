@@ -230,39 +230,59 @@ def test_profile_serves_the_plain_sessions_rows(spark):
     assert svc.executions == len(queries)
 
 
+def _served(spark, group: str, sql: str) -> tuple[list[dict], list[str]]:
+    """Serve `sql` as one miss in job group `group`: its rows, and the
+    physical plans that ran it."""
+    svc = QueryService(spark, SF_DIR)
+    spark.sparkContext.setJobGroup(group, "one served miss")
+    try:
+        rows = svc.run_json({"served": sql}, "served")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.dropTempView("served")
+    return rows, _group_plans(spark, group)
+
+
 @pytest.mark.parametrize("caller_aqe", ["false", "true"])
 def test_small_miss_runs_as_one_job(spark, caller_aqe):
     was = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", caller_aqe)
     group = f"serve-profile-{caller_aqe}"
     try:
-        svc = QueryService(spark, SF_DIR)
-        spark.sparkContext.setJobGroup(group, "one small miss")
-        svc.run_json({"ordered": ORDERED}, "ordered")
+        _, (plan,) = _served(spark, group, ORDERED)
     finally:
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", was)
     assert len(_group_jobs(spark, group)) == 1
-    (plan,) = _group_plans(spark, group)
     assert "AdaptiveSparkPlan" not in plan
     assert "codegen id" not in plan
 
 
-def test_plan_above_the_advisory_size_keeps_the_callers_plan(aqe_on):
+LIMITED = (
+    "SELECT o_orderstatus AS status, COUNT(*) AS n FROM orders "
+    "GROUP BY o_orderstatus ORDER BY n DESC, status LIMIT 1"
+)
+
+
+@pytest.mark.parametrize("bound", ["advisory", "cap"])
+def test_plan_reading_more_than_the_bound_keeps_the_callers_plan(aqe_on, monkeypatch, bound):
+    """The bound is on what the plan reads, not on its result: a LIMIT 1
+    estimates one row, but it reads the whole orders table. Either bound
+    (the advisory partition size, the measured cap) sends it to the
+    caller's plan."""
     spark = aqe_on
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    was = spark.conf.get(key)
-    spark.conf.set(key, "1")
-    group = "serve-profile-large"
+    small = 4096
+    QueryService(spark, SF_DIR)
+    result = spark.sql(LIMITED)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert result <= small < serve._read_bytes(spark.sql(LIMITED))
+    if bound == "cap":
+        monkeypatch.setattr(serve, "_PROFILE_MAX_READ", small)
+    was = spark.conf.get(serve._ADVISORY)
+    spark.conf.set(serve._ADVISORY, str(small) if bound == "advisory" else was)
     try:
-        svc = QueryService(spark, SF_DIR)
-        spark.sparkContext.setJobGroup(group, "a miss above the bound")
-        rows = svc.run_json({"ordered": ORDERED}, "ordered")
+        rows, plans = _served(spark, f"serve-profile-limit-{bound}", LIMITED)
     finally:
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-        spark.conf.set(key, was)
-    assert rows == [r.asDict() for r in spark.sql(ORDERED).collect()]
-    plans = _group_plans(spark, group)
+        spark.conf.set(serve._ADVISORY, was)
+    assert rows == [r.asDict() for r in spark.sql(LIMITED).collect()]
     assert plans and all("AdaptiveSparkPlan" in p for p in plans)
     assert any("codegen id" in p for p in plans)
 
