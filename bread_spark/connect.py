@@ -61,21 +61,22 @@ def start_connect_session(
     return spark
 
 
-def wait_listening(port: int, host: str = "127.0.0.1", timeout: float = 60.0) -> bool:
-    """Poll until the endpoint accepts TCP connections (readiness probe)."""
-    deadline = time.monotonic() + timeout
+def wait_listening(port: int) -> bool:
+    """Poll for up to 60 s until the local endpoint accepts TCP
+    connections (readiness probe)."""
+    deadline = time.monotonic() + 60.0
     while time.monotonic() < deadline:
         try:
-            with socket.create_connection((host, port), timeout=2):
+            with socket.create_connection(("127.0.0.1", port), timeout=2):
                 return True
         except OSError:
             time.sleep(0.25)
     return False
 
 
-def connect_client(port: int = DEFAULT_PORT, host: str = "localhost") -> SparkSession:
-    """Remote client session over Connect. Requires the grpcio stack
-    (`pip install 'pyspark[connect]'`)."""
+def connect_client(port: int = DEFAULT_PORT) -> SparkSession:
+    """Client session over Connect to the local endpoint. Requires the
+    grpcio stack (`pip install 'pyspark[connect]'`)."""
     try:
         import grpc  # noqa: F401
     except ImportError as e:  # pragma: no cover - exercised only sans grpcio
@@ -83,7 +84,7 @@ def connect_client(port: int = DEFAULT_PORT, host: str = "localhost") -> SparkSe
             "Spark Connect clients need grpcio (pip install 'pyspark[connect]'); "
             "the SERVER side has no such dependency — it is already running"
         ) from e
-    return SparkSession.builder.remote(f"sc://{host}:{port}").getOrCreate()
+    return SparkSession.builder.remote(f"sc://localhost:{port}").getOrCreate()
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -47,12 +47,13 @@ Entries:
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..plans.materialize import materialized_frame
+from ..plans.materialize import materialized_frame, register_side_cache
 
 MAX_PIECE_LEN = 6
 SEED_SIZE = 2000
@@ -176,9 +177,8 @@ def _em_counts(
 
 def _train(spark: SparkSession, sf_dir: str):
     """Full training run -> (final counts, final scores, score trace).
-    Deterministic for a fixed corpus; memoized per (app, sf_dir) like
-    the BPE merge list."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    Deterministic for a fixed corpus; memoized in `_TRAINED`."""
+    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
     if key in _TRAINED:
         return _TRAINED[key]
     words = _word_freq_frame(spark, sf_dir)
@@ -210,7 +210,11 @@ def _train(spark: SparkSession, sf_dir: str):
     return _TRAINED[key]
 
 
-_TRAINED: dict = {}
+# Training runs per (applicationId, realpath(sf_dir)), keyed like the
+# `unigram.words` seam they are trained on and, like the BPE merge lists,
+# registered with the seam registry: `clear_materialized_frames()` empties
+# both, so a rebuilt word frame never pairs with stale training.
+_TRAINED: dict[tuple, tuple] = register_side_cache({})
 
 
 def _corpus_score(words: DataFrame, scores: dict[str, int]) -> int:

@@ -12,7 +12,7 @@ the bugs — SURVEY §7 risks):
   - watermark metadata is validated against landing-zone filenames
   - dead-letter heights go to a JSON file consumed by a repair plan
 
-HTTP transport is injectable (`fetch_json`) so tests run hermetically and
+HTTP transport is injectable (`fetch`) so tests run hermetically and
 prod can plug aiohttp/urllib. No Spark dependency in this module.
 """
 
@@ -142,91 +142,51 @@ class Extractor:
         }
         return f"{self.rpc_url}/{endpoint}?{urlencode(params)}"
 
-    def _paged_scan(self, endpoint: str, query: str, data_key: str, start: int, end: int) -> list[dict]:
-        """Full pagination with adaptive page sizing (SRC6: halve per_page
-        when a response fails to parse — oversized JSON — and recompute the
-        current page from items already consumed; give up at per_page < 1
-        and dead-letter the range start)."""
-        items: list[dict] = []
-        per_page = self.per_page
-        page = 1
-        while True:
-            url = self._url(endpoint, query, page, per_page)
-            try:
-                resp = self.fetch(url)
-            except json.JSONDecodeError:
-                per_page //= 2
-                if per_page < 1:
-                    self.dead_letter.append(start)
-                    break
-                page = len(items) // per_page + 1
-                continue
-            result = resp.get("result", {})
-            batch = result.get(data_key, [])
-            items.extend(batch)
-            total = int(result.get("total_count", len(items)))
-            if len(items) >= total or not batch:
-                break
-            page += 1
-        return items
-
-    def _paged_scan_concurrent(
-        self, endpoint: str, query: str, data_key: str, start: int, end: int
-    ) -> list[dict]:
-        """SRC8: bounded-concurrency pagination (reference extract.py:374-406).
+    def _scan(self, endpoint: str, query: str, data_key: str, start: int) -> list[dict]:
+        """Paged scan of one range (SRC6/SRC8, reference extract.py:374-441).
 
         Page 1 is fetched alone to learn `total_count` (the reference's
-        total-pages precompute, extract.py:440-441); the remaining page
-        URLs are generated up front (`generate_urls`, extract.py:295-316)
-        and fetched by a thread pool whose size bounds the in-flight
-        requests — the Semaphore(n) analog. `ThreadPoolExecutor.map`
-        preserves page order, so results are byte-identical to the
-        sequential scan.
-
-        Adaptive page-halving (SRC6) can't compose with a prefetched URL
-        list (neither does the reference's async path); an oversized
-        response anywhere falls back to the sequential adaptive scan for
-        the whole range.
+        total-pages precompute); pages 2..n are fetched by a thread pool
+        whose size, `concurrency`, bounds the requests in flight (the
+        Semaphore(n) analog), and kept in page order. A response that fails
+        to parse (oversized JSON) restarts the range at half the page size.
+        One that fails at one item per page gives up: `start` is
+        dead-lettered and the items before the failing page are returned.
         """
         from concurrent.futures import ThreadPoolExecutor
 
-        try:
-            first = self.fetch(self._url(endpoint, query, 1, self.per_page))
-        except json.JSONDecodeError:
-            return self._paged_scan(endpoint, query, data_key, start, end)
-        result = first.get("result", {})
-        items: list[dict] = list(result.get(data_key, []))
-        total = int(result.get("total_count", len(items)))
-        if len(items) >= total or not items:
-            return items
-        n_pages = -(-total // self.per_page)
-        urls = [self._url(endpoint, query, p, self.per_page) for p in range(2, n_pages + 1)]
-        try:
-            with ThreadPoolExecutor(max_workers=self.concurrency) as pool:
-                for batch in pool.map(
-                    lambda u: self.fetch(u).get("result", {}).get(data_key, []), urls
-                ):
-                    items.extend(batch)
-        except json.JSONDecodeError:
-            return self._paged_scan(endpoint, query, data_key, start, end)
-        return items
+        def page(p: int) -> dict:
+            resp = self.fetch(self._url(endpoint, query, p, per_page))
+            return resp.get("result", {})
 
-    def _scan(self, endpoint: str, query: str, data_key: str, start: int, end: int) -> list[dict]:
-        if self.concurrency > 1:
-            return self._paged_scan_concurrent(endpoint, query, data_key, start, end)
-        return self._paged_scan(endpoint, query, data_key, start, end)
+        per_page = self.per_page
+        while True:
+            items: list[dict] = []
+            try:
+                first = page(1)
+                items.extend(first.get(data_key, []))
+                total = int(first.get("total_count", len(items)))
+                if len(items) >= total or not items:
+                    return items
+                with ThreadPoolExecutor(max_workers=self.concurrency) as pool:
+                    for result in pool.map(page, range(2, -(-total // per_page) + 1)):
+                        items.extend(result.get(data_key, []))
+                return items
+            except json.JSONDecodeError:
+                if per_page == 1:
+                    self.dead_letter.append(start)
+                    return items
+                per_page //= 2
 
     def extract_blocks(self, start: int, end: int) -> list[dict]:
         """SRC1: block_search range scan."""
         return self._scan(
-            "block_search", f"block.height >= {start} AND block.height <= {end}", "blocks", start, end
+            "block_search", f"block.height >= {start} AND block.height <= {end}", "blocks", start
         )
 
     def extract_txs(self, start: int, end: int) -> list[dict]:
         """SRC2: tx_search range scan."""
-        return self._scan(
-            "tx_search", f"tx.height >= {start} AND tx.height <= {end}", "txs", start, end
-        )
+        return self._scan("tx_search", f"tx.height >= {start} AND tx.height <= {end}", "txs", start)
 
     def get_block(self, height: int) -> dict | None:
         """SRC4: point block lookup (`GET /block?height=N`, reference

@@ -151,9 +151,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 8, sort: bool = True
-) -> None:
+def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 8) -> None:
     """Bucketed managed table: co-locates join/agg keys at write time so
     repeated joins on `key` skip the shuffle entirely (the Exchange-free
     plan is asserted in tests/test_bucketing.py).
@@ -162,40 +160,31 @@ def write_bucketed(
     at ingest; every downstream join/aggregation on that key becomes a
     zero-shuffle local operation. Bucket count should be sized so one
     bucket ≈ one task's worth of data (hundreds of MB)."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("year", "month", "day"), mode: str = "overwrite"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Hive-partitioned parquet sink (reference parse.py:182-200 analog).
 
     At 100 TB the year/month/day layout gives partition pruning on every
     time-ranged query; within a partition, files are sized by Spark's
     128 MB target so scans parallelize across executors.
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode(mode).partitionBy("year", "month", "day").parquet(path)
 
 
 def compact_partitioned(
     spark: SparkSession,
     path: str,
     partition_cols: tuple[str, ...] = ("year", "month", "day"),
-    files_per_partition: int = 1,
-    sort_by: str | None = None,
 ) -> int:
-    """Rewrite a Hive-partitioned table into `files_per_partition` files
-    per partition — the compaction pass every incremental pipeline needs.
+    """Rewrite a Hive-partitioned table into one file per partition — the
+    compaction pass every incremental pipeline needs.
 
     Incremental appends (micro-batches, backfills, gap repairs) each add
     small files; at 100 TB the scan's task count — and the namenode/object
     store metadata load — grows with file count, not data size. Periodic
-    compaction restores ~128 MB files. `sort_by` additionally clusters
-    rows inside each file so parquet row-group min/max statistics prune
-    point/range predicates on that column.
+    compaction restores ~128 MB files.
 
     Rewrites to a staging dir then swaps, so a crash mid-compact never
     leaves the table half-written; the swap itself is two renames, and a
@@ -230,30 +219,10 @@ def compact_partitioned(
     # mergeSchema: appended batches may carry different columns (the wide
     # silver `events`), and a plain read keeps only one file's
     df = spark.read.option("mergeSchema", "true").parquet(path)
-    if files_per_partition == 1:
-        out = df.repartition(*[F.col(c) for c in partition_cols])
-    else:
-        # repartition(cols) co-locates each whole hive partition in one
-        # task (1 file each) — and AQE will happily coalesce salted hash
-        # buckets back together. Range-partition on (partition_cols, salt)
-        # with an explicit task count so each (partition, salt) combo
-        # keeps its own task → its own file.
-        data_cols = [c for c in df.columns if c not in partition_cols]
-        salt = F.pmod(F.xxhash64(*data_cols), F.lit(files_per_partition))
-        n_parts = df.select(*partition_cols).distinct().count()
-        out = (
-            df.withColumn("__salt", salt)
-            .repartitionByRange(
-                max(1, n_parts * files_per_partition),
-                *[F.col(c) for c in partition_cols],
-                F.col("__salt"),
-            )
-            .drop("__salt")
-        )
-    if sort_by:
-        out = out.sortWithinPartitions(*partition_cols, sort_by)
     staging = path.rstrip("/") + "__compacting"
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
+    df.repartition(*[F.col(c) for c in partition_cols]).write.mode("overwrite").partitionBy(
+        *partition_cols
+    ).parquet(staging)
     backup = path.rstrip("/") + "__precompact"
     os.rename(path, backup)
     os.rename(staging, path)

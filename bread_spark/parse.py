@@ -77,29 +77,28 @@ def read_raw_txs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(RAW_TX_SCHEMA).json(path)
 
 
-def read_raw_with_corrupt(
-    spark: SparkSession, path: str, schema, corrupt_col: str = "_corrupt_record"
-):
+def read_raw_with_corrupt(spark: SparkSession, path: str, schema):
     """Bronze scan that dead-letters malformed lines instead of silently
     nulling them: returns (good_rows, corrupt_rows). The corrupt side
     carries the raw line for the repair job — the parse-path analog of
     the ingest client's error_heights ledger (SRC16/S3)."""
     from pyspark.sql.types import StringType, StructType
 
-    with_corrupt = StructType(list(schema.fields)).add(corrupt_col, StringType())
+    corrupt = "_corrupt_record"
+    with_corrupt = StructType(list(schema.fields)).add(corrupt, StringType())
     df = (
         spark.read.schema(with_corrupt)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", corrupt)
         .json(path)
     )
     # capture file origin at scan time (input_file_name is empty once the
     # relation is cached), then cache so filtering on the corrupt column
     # is allowed (Spark forbids it directly on the lazy json relation)
     df = df.withColumn("__src", F.input_file_name()).cache()
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col, "__src")
-    bad = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col("__src").alias("source_file"), F.col(corrupt_col).alias("raw_line")
+    good = df.filter(F.col(corrupt).isNull()).drop(corrupt, "__src")
+    bad = df.filter(F.col(corrupt).isNotNull()).select(
+        F.col("__src").alias("source_file"), F.col(corrupt).alias("raw_line")
     )
     return good, bad
 
@@ -287,8 +286,7 @@ def _pivot_keys(df: DataFrame, keys) -> list[str]:
     if len(key_values) > max_values:
         raise ValueError(
             f"The pivot column combined_key has more than {max_values} "
-            "distinct values; raise spark.sql.pivotMaxValues or pass "
-            "key_values explicitly."
+            "distinct values; raise spark.sql.pivotMaxValues."
         )
     return key_values
 
@@ -298,14 +296,12 @@ def _events_wide(txs: DataFrame, key_values: list[str]) -> DataFrame:
     return grouped.pivot("combined_key", key_values).agg(F.first("value"))
 
 
-def parse_events_wide(raw_txs: DataFrame, key_values: list[str] | None = None) -> DataFrame:
+def parse_events_wide(raw_txs: DataFrame) -> DataFrame:
     """events silver table — wide/pivoted (reference parse.py:164-180).
 
-    Dynamic pivot (R4): when `key_values` is None, the distinct key set
-    is discovered and passed explicitly; production callers pass the
-    known vocabulary to skip even that (SURVEY §4.2 — at 100 TB the
-    distinct pass is one cheap column-pruned scan, done once and cached
-    in the table's metadata).
+    Dynamic pivot (R4): the distinct key set is discovered and passed to
+    the pivot explicitly (SURVEY §4.2 — at 100 TB the distinct pass is
+    one cheap column-pruned scan).
 
     r13-opt: Spark's built-in dynamic pivot discovers values by running
     the pivot CHILD's plan again — here the full EAV build (JSON parse,
@@ -317,9 +313,7 @@ def parse_events_wide(raw_txs: DataFrame, key_values: list[str] | None = None) -
     the built-in path performs. One full EAV pass per build instead of
     two.
     """
-    if key_values is None:
-        key_values = _pivot_keys(raw_txs, F.expr(_RAW_PIVOT_KEYS))
-    return _events_wide(parse_txs(raw_txs), key_values)
+    return _events_wide(parse_txs(raw_txs), _pivot_keys(raw_txs, F.expr(_RAW_PIVOT_KEYS)))
 
 
 def attach_block_time(df: DataFrame, blocks: DataFrame) -> DataFrame:
@@ -349,23 +343,18 @@ def parse_tables(spark: SparkSession, blocks_path, txs_path) -> Iterator[dict[st
     blocks = parse_blocks(read_raw_blocks(spark, blocks_path)).cache()
     txs = parse_txs(read_raw_txs(spark, txs_path)).cache()
     try:
-        yield _silver(blocks, txs, _pivot_keys(txs, F.col("attrs.combined_key")))
+        keys = _pivot_keys(txs, F.col("attrs.combined_key"))
+        yield {
+            "blocks": blocks,
+            "tx_result": attach_block_time(_tx_result(txs), blocks).select(*TX_RESULT_COLUMNS),
+            "log_attributes": attach_block_time(_log_attributes(txs), blocks).select(
+                *LOG_ATTRIBUTES_COLUMNS
+            ),
+            "events": attach_block_time(_events_wide(txs, keys), blocks),
+        }
     finally:
         txs.unpersist()
         blocks.unpersist()
-
-
-def _silver(blocks: DataFrame, txs: DataFrame, keys: list[str]) -> dict[str, DataFrame]:
-    """The four silver tables from parsed blocks, a `parse_txs` frame and
-    the `events` pivot keys."""
-    return {
-        "blocks": blocks,
-        "tx_result": attach_block_time(_tx_result(txs), blocks).select(*TX_RESULT_COLUMNS),
-        "log_attributes": attach_block_time(_log_attributes(txs), blocks).select(
-            *LOG_ATTRIBUTES_COLUMNS
-        ),
-        "events": attach_block_time(_events_wide(txs, keys), blocks),
-    }
 
 
 # The parsed-file ledger (reference parse.py:97-111): bronze file path →
@@ -459,14 +448,12 @@ def run(
     spark: SparkSession,
     blocks_path: str,
     txs_path: str,
-    out_dir: str | None = None,
+    out_dir: str,
 ) -> dict[str, DataFrame]:
     """Bronze→silver hop (reference DataParser.run, parse.py:202-226).
 
-    Without `out_dir`, returns the four silver tables over the whole
-    landing zone as lazy frames; only the `events` pivot keys are
-    discovered, by the raw-key scan of `parse_events_wide`. With it,
-    brings `out_dir` up to date with the landing zone, each table partitioned by year/month/day (SRC12), and returns
+    Brings the four silver tables under `out_dir` up to date with the
+    landing zone, each partitioned by year/month/day (SRC12), and returns
     the frames this call wrote:
 
     - files already in the parsed-file ledger are not read again; new ones
@@ -494,10 +481,6 @@ def run(
     """
     from .io import compact_partitions, partition_files, write_partitioned
 
-    if not out_dir:
-        raw_txs = read_raw_txs(spark, txs_path)
-        keys = _pivot_keys(raw_txs, F.expr(_RAW_PIVOT_KEYS))
-        return _silver(parse_blocks(read_raw_blocks(spark, blocks_path)), parse_txs(raw_txs), keys)
     blocks, txs = _list_bronze(blocks_path), _list_bronze(txs_path)
     ledger = _read_ledger(out_dir) if _silver_intact(out_dir) else None
     new = _new_files(ledger, blocks, txs)

@@ -152,16 +152,6 @@ class QueryService:
         if sf_dir is not None:
             register_views(spark, sf_dir)
 
-    def compile(self, queries: dict[str, str], name: str) -> str:
-        return compile_chained(queries, name)
-
-    def run(self, queries: dict[str, str], name: str) -> DataFrame:
-        """Execute one named query (chains inlined); registers the result
-        as a temp view so later queries can reference it by plain name."""
-        df = self.spark.sql(self.compile(queries, name))
-        df.createOrReplaceTempView(name)
-        return df
-
     def run_json(
         self, queries: dict[str, str], name: str, compiled: str | None = None
     ) -> list[dict[str, Any]]:
@@ -172,11 +162,12 @@ class QueryService:
         Serving queries are small by contract (gold tables, dashboard
         shapes) — collect is bounded; big results belong behind
         Connect/Thrift, not this path. A miss is analyzed, and its temp
-        view registered, in the caller's session, and runs under the
-        serving profile when its plan is small (`_serving_frame`).
+        view registered, in the caller's session, so later queries can
+        read it by plain name; it runs under the serving profile when its
+        plan is small (`_serving_frame`).
         """
         if compiled is None:
-            compiled = self.compile(queries, name)
+            compiled = compile_chained(queries, name)
         key = _digest(compiled)
         if key not in self._cache:
             with self._lock:
@@ -200,7 +191,7 @@ class QueryService:
         saves on one query.
         """
         queries = extract_queries_md(markdown)
-        compiled = {name: self.compile(queries, name) for name in queries}
+        compiled = {name: compile_chained(queries, name) for name in queries}
         linked = _plain_name_links(compiled)
         misses: dict[str, str] = {}
         for name, sql in compiled.items():

@@ -1,5 +1,5 @@
-"""Compaction: many small files → few per partition, data intact,
-crash-safe swap, optional sort clustering."""
+"""Compaction: many small files → one per partition, data intact,
+crash-safe swap."""
 
 from __future__ import annotations
 
@@ -57,17 +57,6 @@ def test_compaction_reduces_files_keeps_rows(spark, fragmented):
     # no staging/backup leftovers
     parent = os.path.dirname(fragmented)
     assert not any("compact" in d for d in os.listdir(parent))
-
-
-def test_compaction_multiple_files_and_sort(spark, fragmented):
-    n_files = compact_partitioned(
-        spark, fragmented, partition_cols=("day",), files_per_partition=2, sort_by="id"
-    )
-    assert 3 < n_files <= 6  # up to 2 per partition
-    # rows inside each file are clustered by id (row-group pruning aid)
-    for f in _parquet_files(fragmented):
-        ids = [r["id"] for r in spark.read.parquet(f).select("id").collect()]
-        assert ids == sorted(ids)
 
 
 def test_recover_compaction_all_crash_states(spark, fragmented):

@@ -111,6 +111,41 @@ def test_concurrent_scan_matches_sequential(tmp_path):
     assert seq.extract_blocks(1, 99) == con.extract_blocks(1, 99)
 
 
+def _node_with_big_item(total: int, big: int, fits_at: int):
+    """A node over items 0..total-1 whose response fails to parse when its
+    page holds item `big` and is more than `fits_at` items long."""
+
+    def fetch(url):
+        page = int(url.split("page=")[1].split("&")[0])
+        per_page = int(url.split("per_page=")[1].split("&")[0])
+        ids = range((page - 1) * per_page, min(page * per_page, total))
+        if big in ids and per_page > fits_at:
+            raise json.JSONDecodeError("too big", "", 0)
+        return {"result": {"blocks": [{"i": n} for n in ids], "total_count": str(total)}}
+
+    return fetch
+
+
+@pytest.mark.parametrize("concurrency", [1, 8])
+def test_oversize_on_a_middle_page_returns_the_whole_range(tmp_path, concurrency):
+    """Page 2 of 3 is oversized at 4 items a page: the range is fetched
+    again at 2, and comes back whole and in order, with no dead letter."""
+    fetch = _node_with_big_item(total=10, big=5, fits_at=2)
+    ex = ingest.Extractor("http://n", str(tmp_path), per_page=4, concurrency=concurrency, fetch=fetch)
+    assert [it["i"] for it in ex.extract_blocks(3, 99)] == list(range(10))
+    assert ex.dead_letter == []
+
+
+@pytest.mark.parametrize("concurrency", [1, 8])
+def test_item_too_big_alone_returns_the_items_before_it(tmp_path, concurrency):
+    """Item 5 fails to parse even alone: the scan gives up, returns items
+    0..4 in order, and dead-letters the range start."""
+    fetch = _node_with_big_item(total=10, big=5, fits_at=0)
+    ex = ingest.Extractor("http://n", str(tmp_path), per_page=4, concurrency=concurrency, fetch=fetch)
+    assert [it["i"] for it in ex.extract_blocks(3, 99)] == [0, 1, 2, 3, 4]
+    assert ex.dead_letter == [3]
+
+
 def test_adaptive_page_size_gives_up(tmp_path):
     def fetch(url):
         raise json.JSONDecodeError("too big", "", 0)

@@ -90,8 +90,11 @@ def test_lm_seam_equals_builder(spark, sf_dir):
 
 def test_ivf_assignment_seam_equals_builder(spark, sf_dir):
     """The seam serves the builder's rows; clearing the seams also empties
-    similarity.py's driver-side caches, so a rebuilt assignment frame
-    never pairs with a stale centroid matrix or probe broadcast."""
+    the side caches registered with them, so a rebuilt assignment frame
+    never pairs with a stale centroid matrix or probe broadcast, nor a
+    rebuilt `unigram.words` frame with stale training."""
+    import os
+
     from bread_spark.extensions.similarity import (
         _IVF_CENTROID_CACHE,
         _PROBE_BC_CACHE,
@@ -100,6 +103,7 @@ def test_ivf_assignment_seam_equals_builder(spark, sf_dir):
         ivf_centroid_matrix,
         semantic_decontaminate,
     )
+    from bread_spark.extensions.unigram import _TRAINED, _train
     from bread_spark.io import load_table
 
     cents = ivf_centroid_matrix(spark, sf_dir)
@@ -112,9 +116,12 @@ def test_ivf_assignment_seam_equals_builder(spark, sf_dir):
     cols = ["vec_id", "cluster"]
     assert _rows(served, cols) == _rows(direct, cols)
     semantic_decontaminate(spark, sf_dir)  # fills the probe-broadcast cache
-    assert _IVF_CENTROID_CACHE and _PROBE_BC_CACHE
+    trained = _train(spark, sf_dir)
+    # keyed on the realpath, as the `unigram.words` seam is
+    assert _train(spark, os.path.join(sf_dir, ".")) is trained
+    assert _IVF_CENTROID_CACHE and _PROBE_BC_CACHE and _TRAINED
     clear_materialized_frames()
-    assert not _IVF_CENTROID_CACHE and not _PROBE_BC_CACHE
+    assert not _IVF_CENTROID_CACHE and not _PROBE_BC_CACHE and not _TRAINED
 
 
 def test_ngram5_seams_equal_inline_build(spark, sf_dir):

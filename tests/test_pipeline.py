@@ -261,20 +261,6 @@ def test_append_parses_each_bronze_file_once(spark, tmp_path):
     _assert_silver_is_bronze_truth(spark, silver, n_txs)
 
 
-def test_run_without_out_dir_returns_lazy_tables(spark, tmp_path):
-    """Without `out_dir`, `run` returns the four tables `parse_tables`
-    builds, with the same columns and rows, and leaves nothing cached."""
-    bdir, tdir, _, _ = _landing_in_two_batches(tmp_path)
-    before = _persisted_rdds(spark)
-    lazy = P.run(spark, bdir, tdir)
-    assert _persisted_rdds(spark) == before
-    with P.parse_tables(spark, bdir, tdir) as tables:
-        assert list(lazy) == list(tables)
-        for name, df in tables.items():
-            assert lazy[name].columns == df.columns
-            assert Counter(map(tuple, lazy[name].collect())) == Counter(map(tuple, df.collect()))
-
-
 def test_failed_append_then_rerun_does_not_duplicate(spark, tmp_path, monkeypatch):
     """A write that fails after some tables were appended leaves the ledger
     pending; the rerun rebuilds silver instead of appending twice."""

@@ -60,12 +60,6 @@ def test_page_load_and_cache(spark):
     assert svc.executions == n_exec + 2
 
 
-def test_run_registers_view_for_downstream(spark):
-    svc = QueryService(spark, SF_DIR)
-    svc.run({"daily_n": "SELECT COUNT(1) AS n FROM orders"}, "daily_n")
-    assert spark.sql("SELECT n FROM daily_n").first()["n"] > 0
-
-
 def _rows(rows: list[dict]) -> list[tuple]:
     return sorted(tuple(sorted(r.items())) for r in rows)
 
@@ -221,7 +215,7 @@ def test_profile_serves_the_plain_sessions_rows(spark):
     svc = QueryService(spark, SF_DIR)
     queries = {**extract_queries_md(PAGE), "ordered": ORDERED}
     for name in queries:
-        sql = svc.compile(queries, name)
+        sql = compile_chained(queries, name)
         want = [r.asDict(recursive=True) for r in spark.sql(sql).collect()]
         got = svc.run_json(queries, name)
         if "ORDER BY" in sql:

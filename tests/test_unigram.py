@@ -9,10 +9,10 @@ from bread_spark.extensions.unigram import (
     MAX_PIECE_LEN,
     VOCAB_TARGET,
     _train,
-    _TRAINED,
     unigram_token_counts,
     unigram_vocab,
 )
+from bread_spark.plans.materialize import clear_materialized_frames
 from tests.conftest import SF_DIR
 
 
@@ -41,7 +41,7 @@ def test_trainer_discovers_morphemes(spark, monkeypatch):
     from bread_spark.extensions import unigram as U
 
     monkeypatch.setattr(U, "load_table", lambda sp, sf, t: _planted_corpus(spark))
-    _TRAINED.clear()
+    clear_materialized_frames()
     try:
         vocab = {r["piece"]: r for r in U.unigram_vocab(spark, "p1").collect()}
         toks = {
@@ -49,7 +49,7 @@ def test_trainer_discovers_morphemes(spark, monkeypatch):
             for r in U.unigram_token_counts(spark, "p1").collect()
         }
     finally:
-        _TRAINED.clear()
+        clear_materialized_frames()
     # the stems AND suffixes are discovered and actually used: the
     # 7-char words must split (stem + ing/ers), while 6-char "worked"/
     # "played" legitimately stay whole pieces — so the stems carry
@@ -105,6 +105,6 @@ def test_em_trace_monotone_and_bounds(spark):
 def test_training_is_deterministic(spark):
     """Two from-scratch runs produce identical vocab tables."""
     a = {(r["piece"], r["count"]) for r in unigram_vocab(spark, SF_DIR).collect()}
-    _TRAINED.clear()
+    clear_materialized_frames()
     b = {(r["piece"], r["count"]) for r in unigram_vocab(spark, SF_DIR).collect()}
     assert a == b
