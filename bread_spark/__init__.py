@@ -15,8 +15,7 @@ Layout (see SURVEY.md §7):
                 PII redaction, chunking, deterministic sampling)
   extensions/   LLM-data-pipeline operators: dedup, similarity, multimodal
   operators/    relational ops Spark lacks: as-of join, interval join
-  plans/        physical-plan helpers: skew salting
-  sources/      Spark 4 Python DataSource for Tendermint RPC
+  plans/        physical-plan helpers: materialized seams, two-pass global rank
 """
 
 __version__ = "0.1.0"

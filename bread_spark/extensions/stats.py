@@ -432,67 +432,6 @@ def engagement_df(ev: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HLL engagement panel — the streaming sibling of `engagement_df`
-# (VERDICT r10 #7). The exact panel is batch-only (sliding COUNT
-# DISTINCT needs per-(day, user) dedup state); the online answer is
-# per-DAY HLL user registers plus this estimator, which max-merges trailing
-# windows from register rows alone — ≤M=64 rows per day, never users.
-# ---------------------------------------------------------------------------
-
-
-def engagement_user_registers_df(ev: DataFrame) -> DataFrame:
-    """(day, bucket, max_rho) per-day HLL registers over DISTINCT USERS
-    — the mergeable state of the engagement panel. Same md5/rho integer
-    arithmetic as the sketch family (`_HLL_U32`/`_rho_sql` imported,
-    not re-derived), token = user_id string; NULL users dropped exactly
-    as `engagement_df` does. One (day, bucket)-keyed aggregate with
-    map-side combine; ≤M rows per day at ANY event volume."""
-    from .sketch import _hll_registers
-
-    rows = ev.filter(F.col("user_id").isNotNull()).select(
-        F.col("ts").cast("date").alias("day"),
-        F.col("user_id").cast("string").alias("token"),
-    )
-    return _hll_registers(rows, "day")
-
-
-def engagement_hll_panel_df(regs: DataFrame) -> DataFrame:
-    """DAU/WAU/MAU ESTIMATES from a per-day register table (day, bucket,
-    max_rho): each trailing window's registers are the elementwise MAX
-    of its days' rows (HLL mergeability) via the panel's own bounded
-    ×1/×7/×30 fan-out — but over ≤64 register rows per day, not user
-    rows, so the whole panel is O(days·M) regardless of traffic.
-    Estimates use the standard raw/linear-counting form
-    (`hll_distinct_by_source`'s arithmetic), rounded 4; anchor days =
-    days with a register row, matching the exact panel's event-day
-    anchors. Output: (day, users_1d_est, users_7d_est, users_30d_est)."""
-    from .sketch import _hll_estimate
-
-    def est_for(days: int, alias: str) -> DataFrame:
-        fan = regs.select(
-            F.explode(F.sequence(F.lit(0), F.lit(days - 1))).alias("off"),
-            "day",
-            "bucket",
-            "max_rho",
-        ).select(
-            F.expr("date_add(day, off)").alias("day"), "bucket", "max_rho"
-        )
-        merged = fan.groupBy("day", "bucket").agg(
-            F.max("max_rho").alias("max_rho")
-        )
-        return _hll_estimate(merged, ["day"]).select(
-            "day", F.round("hll_est", 4).alias(alias)
-        )
-
-    d1 = est_for(1, "users_1d_est")
-    d7 = est_for(7, "users_7d_est")
-    d30 = est_for(30, "users_30d_est")
-    # inner joins anchor the panel on register (= event) days: the
-    # fan-out rows past the last event day have no users_1d_est row
-    return d1.join(d7, "day").join(d30, "day")
-
-
-# ---------------------------------------------------------------------------
 # Oracles
 # ---------------------------------------------------------------------------
 

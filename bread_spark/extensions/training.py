@@ -894,67 +894,6 @@ def _training_corpus_oracle() -> str:
 ORACLE_SQL["training_corpus"] = _training_corpus_oracle()
 
 
-def write_training_shards(df: DataFrame, out_dir: str, n_shards: int = 8) -> dict:
-    """Materialize a curated corpus (e.g. `training_corpus` output) as
-    `n_shards` globally-ordered parquet shards + a JSON manifest — the
-    final hop before a training loader.
-
-    Sharding is `repartitionByRange(shuffle_key, doc_id)`: shard boundaries are
-    non-overlapping key ranges, rows are sorted within each shard, so
-    reading shards in manifest order replays the exact seeded shuffle
-    permutation. Both properties are deterministic given the data — no
-    partition-layout dependence — and the range exchange is the single
-    shuffle; at 100 TB `n_shards` scales to thousands and each shard
-    writes in parallel.
-
-    The manifest (`_manifest.json`) records per-shard file, row count and
-    key range, computed in ONE aggregate pass over the written files
-    (grouped on `input_file_name`), plus totals — what a loader needs for
-    length-known iteration and resumable epochs. Returns the manifest.
-    """
-    import json as _json
-    import os as _os
-
-    (
-        df.repartitionByRange(n_shards, F.col("shuffle_key"), F.col("doc_id"))
-        .sortWithinPartitions("shuffle_key", "doc_id")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )
-    spark = df.sparkSession
-    stats = (
-        spark.read.parquet(out_dir)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.min("shuffle_key").alias("min_key"),
-            F.max("shuffle_key").alias("max_key"),
-        )
-        .collect()  # bounded: one row per shard by contract
-    )
-    shards = sorted(
-        (
-            {
-                "file": _os.path.basename(r["file"]),
-                "rows": r["rows"],
-                "min_key": r["min_key"],
-                "max_key": r["max_key"],
-            }
-            for r in stats
-        ),
-        key=lambda s: s["min_key"],
-    )
-    manifest = {
-        "n_shards": len(shards),
-        "total_rows": sum(s["rows"] for s in shards),
-        "order_key": "shuffle_key",
-        "shards": shards,
-    }
-    with open(_os.path.join(out_dir, "_manifest.json"), "w") as f:
-        _json.dump(manifest, f, indent=2)
-    return manifest
-
-
 def training_corpus_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`training_corpus` with the near-duplicate stage added — the
     complete curation chain (quality → exact dedup → NEAR-dup removal →

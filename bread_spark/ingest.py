@@ -119,6 +119,11 @@ def get_chain_bounds(rpc_url: str, fetch: FetchFn = default_fetch) -> tuple[int,
 # Paginated range extraction (SRC1/SRC2/SRC6/SRC8)
 # ---------------------------------------------------------------------------
 
+def _height(item: dict) -> int:
+    """Height of a tx_search or block_search item."""
+    return int(item["height"] if "height" in item else item["block"]["header"]["height"])
+
+
 @dataclass
 class Extractor:
     rpc_url: str
@@ -227,7 +232,8 @@ class Extractor:
         """S3: gap fill — re-extract heights recorded in
         errors/error_heights.json via point lookups (SRC4), append them to
         the landing zone as single-height batches, and clear the ledger of
-        the heights that succeeded. (The reference's flow has this step
+        the heights that succeeded; a height whose tx scan gives up again
+        stays in the ledger. (The reference's flow has this step
         scaffolded but commented out, pipeline.py:99-109/120-123 —
         implemented here as intended.)"""
         path = os.path.join(self.out_dir, self.network, "errors", "error_heights.json")
@@ -238,11 +244,16 @@ class Extractor:
         repaired: list[int] = []
         for h in heights:
             doc = self.get_block(h)
-            if doc is not None:
-                self.save_batch([doc], "blocks", h, h)
-                txs = self.extract_txs(h, h)
-                self.save_batch(txs, "txs", h, h)
-                repaired.append(h)
+            if doc is None:
+                continue
+            n = len(self.dead_letter)
+            txs = self.extract_txs(h, h)
+            if len(self.dead_letter) > n:  # its txs still fail: land nothing
+                del self.dead_letter[n:]
+                continue
+            self.save_batch([doc], "blocks", h, h)
+            self.save_batch(txs, "txs", h, h)
+            repaired.append(h)
         remaining = sorted(set(heights) - set(repaired))
         with open(path, "w") as f:
             json.dump(remaining, f)
@@ -261,8 +272,30 @@ class Extractor:
         return path
 
     def run_range(self, start: int, end: int) -> dict[str, str]:
+        """Extract one range and land it as a `{start}_{end}.json` pair.
+
+        When a scan gives up (see `_scan`), only the heights both scans
+        returned in full are landed: blocks through the last one returned,
+        txs below the last tx height returned (that height's txs may be
+        cut short). Every later height is dead-lettered in place of the
+        range start, for `repair_dead_letter`. The files keep the range's
+        name, so the next forward sync starts past the dead-lettered
+        heights and only the repair fetches them.
+        """
+        n = len(self.dead_letter)
         blocks = self.extract_blocks(start, end)
+        blocks_cut = len(self.dead_letter) > n
         txs = self.extract_txs(start, end)
+        txs_cut = len(self.dead_letter) > n + blocks_cut
+        if blocks_cut or txs_cut:
+            last = end
+            if blocks_cut:
+                last = _height(blocks[-1]) if blocks else start - 1
+            if txs_cut:
+                last = min(last, _height(txs[-1]) - 1 if txs else start - 1)
+            blocks = [b for b in blocks if _height(b) <= last]
+            txs = [t for t in txs if _height(t) <= last]
+            self.dead_letter[n:] = range(last + 1, end + 1)
         return {
             "blocks": self.save_batch(blocks, "blocks", start, end),
             "txs": self.save_batch(txs, "txs", start, end),

@@ -151,18 +151,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 8) -> None:
-    """Bucketed managed table: co-locates join/agg keys at write time so
-    repeated joins on `key` skip the shuffle entirely (the Exchange-free
-    plan is asserted in tests/test_bucketing.py).
-
-    The 100 TB pattern: bucket the big fact tables on their join key once
-    at ingest; every downstream join/aggregation on that key becomes a
-    zero-shuffle local operation. Bucket count should be sized so one
-    bucket ≈ one task's worth of data (hundreds of MB)."""
-    df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
-
-
 def write_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Hive-partitioned parquet sink (reference parse.py:182-200 analog).
 
@@ -171,63 +159,6 @@ def write_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None
     128 MB target so scans parallelize across executors.
     """
     df.write.mode(mode).partitionBy("year", "month", "day").parquet(path)
-
-
-def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    partition_cols: tuple[str, ...] = ("year", "month", "day"),
-) -> int:
-    """Rewrite a Hive-partitioned table into one file per partition — the
-    compaction pass every incremental pipeline needs.
-
-    Incremental appends (micro-batches, backfills, gap repairs) each add
-    small files; at 100 TB the scan's task count — and the namenode/object
-    store metadata load — grows with file count, not data size. Periodic
-    compaction restores ~128 MB files.
-
-    Rewrites to a staging dir then swaps, so a crash mid-compact never
-    leaves the table half-written; the swap itself is two renames, and a
-    crash between them is repaired by `recover_compaction` (auto-invoked
-    here on startup leftovers) — roll FORWARD if staging completed
-    (_SUCCESS present), roll BACK otherwise. This is the strongest
-    guarantee plain parquet directories allow: a reader racing the swap
-    window sees a missing/partial listing for the rename instant. True
-    concurrent-reader atomicity needs a table format's ACID log
-    (Delta/Iceberg) — neither is installable in this offline container
-    (no package, no jars; checked), so EAV-canonical + batch-maintenance
-    windows is the documented policy (DIVERGENCES.md). Returns the
-    resulting file count.
-
-    Refuses to compact a Structured-Streaming file sink (a directory with
-    a `_spark_metadata` transaction log): the resumed stream and any
-    log-driven reader would reference the pre-compaction files. Plain
-    file sinks and compaction don't compose — that is exactly the gap
-    table formats (Delta/Iceberg) close with ACID rewrites; with plain
-    parquet, either compact only batch-written tables (this function) or
-    have the stream write via foreachBatch to per-batch idempotent paths.
-    """
-    import shutil
-
-    recover_compaction(path)  # heal any crashed previous swap first
-    if os.path.isdir(os.path.join(path, "_spark_metadata")):
-        raise ValueError(
-            f"{path} is a streaming file sink (_spark_metadata present); "
-            "compacting it would break the sink log. Use a table format "
-            "or a foreachBatch sink for compactable streaming output."
-        )
-    # mergeSchema: appended batches may carry different columns (the wide
-    # silver `events`), and a plain read keeps only one file's
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    staging = path.rstrip("/") + "__compacting"
-    df.repartition(*[F.col(c) for c in partition_cols]).write.mode("overwrite").partitionBy(
-        *partition_cols
-    ).parquet(staging)
-    backup = path.rstrip("/") + "__precompact"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    return sum(partition_files(path).values())
 
 
 def partition_files(path: str) -> dict[str, int]:
@@ -243,16 +174,12 @@ def partition_files(path: str) -> dict[str, int]:
     return out
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partitions: list[str],
-    partition_cols: tuple[str, ...] = ("year", "month", "day"),
-) -> None:
+def compact_partitions(spark: SparkSession, path: str, partitions: list[str]) -> None:
     """Rewrite the given partition directories of a Hive-partitioned table
-    (relative to `path`, as `partition_files` names them) into one file
-    each — `compact_partitioned` at partition grain, for an append
-    pipeline to run on the partitions each batch touched.
+    (relative to `path`, as `partition_files` names them, e.g.
+    `year=2024/month=1/day=5`) into one file each, for an append pipeline
+    to run on the partitions each batch touched. The partition columns are
+    the `col=` names of those directories.
 
     The partitions are read with `mergeSchema` (appended batches may carry
     different columns) and written under `path/_compact_staging`, which
@@ -273,14 +200,13 @@ def compact_partitions(
     if os.path.isdir(backup):  # may hold the only copy of a partition
         raise RuntimeError(f"{path}: an earlier partition swap crashed; rebuild the table")
     shutil.rmtree(staging, ignore_errors=True)
+    cols = [part.split("=", 1)[0] for part in partitions[0].split(os.sep)]
     df = (
         spark.read.option("basePath", path)
         .option("mergeSchema", "true")
         .parquet(*[os.path.join(path, p) for p in partitions])
     )
-    df.repartition(*[F.col(c) for c in partition_cols]).write.partitionBy(
-        *partition_cols
-    ).parquet(staging)
+    df.repartition(*[F.col(c) for c in cols]).write.partitionBy(*cols).parquet(staging)
     written = partition_files(staging)
     if sorted(written) != sorted(partitions):  # partition values must round-trip
         shutil.rmtree(staging)
@@ -291,79 +217,6 @@ def compact_partitions(
         os.rename(os.path.join(staging, p), os.path.join(path, p))
     shutil.rmtree(staging)
     shutil.rmtree(backup)
-
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: tuple[str, ...],
-    version_col: str | None = None,
-    delete_col: str | None = None,
-) -> int:
-    """Latest-wins MERGE of an updates batch into a plain-parquet table —
-    the `MERGE INTO` of a table format, expressed as one key-partitioned
-    window over base ∪ updates plus the compaction module's staged swap:
-
-      - an updates row whose key exists REPLACES the base row
-      - a new key is inserted
-      - with `delete_col`, an updates row with that flag true TOMBSTONES
-        its key (the applied form of a `snapshot_diff` 'removed' entry)
-      - with `version_col`, the highest version wins among multiple
-        updates per key (updates always beat base at equal footing)
-
-    Plan: ONE shuffle keyed on `key_cols` (row_number window); this is
-    copy-on-write — the whole table rewrites, which is exactly what
-    Delta/Iceberg MERGE does per touched file, generalized to the whole
-    table because plain parquet has no file-level transaction log (see
-    `compact_partitioned`'s atomicity note; neither format is
-    installable offline here). Same staging/backup suffixes as
-    compaction, so `recover_compaction` heals a crash mid-swap
-    identically. Returns the resulting row count.
-    """
-    import shutil
-
-    from pyspark.sql.window import Window
-
-    recover_compaction(path)
-    if os.path.isdir(os.path.join(path, "_spark_metadata")):
-        raise ValueError(
-            f"{path} is a streaming file sink (_spark_metadata present); "
-            "merging it would break the sink log — same constraint as "
-            "compact_partitioned."
-        )
-    base = spark.read.parquet(path).withColumn("__src", F.lit(0))
-    up = updates.withColumn("__src", F.lit(1))
-    allr = base.unionByName(up, allowMissingColumns=True)
-    order = [F.col("__src").desc()]
-    if version_col:
-        order.insert(0, F.col(version_col).desc_nulls_last())
-    # final tie-break: content hash over the non-marker columns, so two
-    # updates sharing key AND version pick the same winner on every run
-    # (row_number over a tied orderBy is otherwise partition-order luck;
-    # fully identical rows hash equal, where any winner is the same row)
-    data_cols = [c for c in allr.columns if c != "__src"]
-    order.append(F.xxhash64(*data_cols).asc())
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(*order)
-    merged = (
-        allr.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
-    if delete_col:
-        merged = merged.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
-    staging = path.rstrip("/") + "__compacting"
-    backup = path.rstrip("/") + "__precompact"
-    merged.write.mode("overwrite").parquet(staging)
-    # row count from the staged parquet footers — not a second full Spark
-    # job over the rewritten table
-    n = parquet_row_count(staging)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    return n
 
 
 def parquet_row_count(path: str) -> int:
@@ -380,40 +233,3 @@ def parquet_row_count(path: str) -> int:
                 n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return n
 
-
-def recover_compaction(path: str) -> str:
-    """Repair a compaction interrupted anywhere in its swap sequence.
-
-    States (staging = `path__compacting`, backup = `path__precompact`):
-      - table present:             drop leftover staging/backup (the
-                                   rewrite either finished or never
-                                   swapped — the live dir is truth)
-      - table missing, staging has _SUCCESS:  roll FORWARD (promote
-                                   staging, drop backup)
-      - table missing, staging incomplete:    roll BACK (restore backup,
-                                   drop staging)
-
-    Returns which action ran: 'clean' | 'cleanup' | 'forward' | 'back'.
-    Idempotent; called automatically by `compact_partitioned`.
-    """
-    import shutil
-
-    staging = path.rstrip("/") + "__compacting"
-    backup = path.rstrip("/") + "__precompact"
-    if os.path.isdir(path):
-        if not os.path.isdir(staging) and not os.path.isdir(backup):
-            return "clean"
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(backup, ignore_errors=True)
-        return "cleanup"
-    if os.path.isdir(staging) and os.path.exists(os.path.join(staging, "_SUCCESS")):
-        os.rename(staging, path)
-        shutil.rmtree(backup, ignore_errors=True)
-        return "forward"
-    if os.path.isdir(backup):
-        os.rename(backup, path)
-        shutil.rmtree(staging, ignore_errors=True)
-        return "back"
-    raise FileNotFoundError(
-        f"{path}: no table, no recoverable staging/backup — nothing to repair"
-    )

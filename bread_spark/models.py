@@ -910,7 +910,7 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide skew ratio (max key count / mean key count) on every row
     — the report an operator reads before sizing a shuffle join (a ratio
     near 1 means hash partitioning is fine; a hot ratio says salt or
-    broadcast; see plans/skew.py for the remedies).
+    broadcast).
 
     Plan: one count-per-key aggregate, a one-row global summary
     broadcast back, TakeOrderedAndProject for the top-k. All doubles are

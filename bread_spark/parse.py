@@ -360,8 +360,8 @@ def parse_tables(spark: SparkSession, blocks_path, txs_path) -> Iterator[dict[st
 # The parsed-file ledger (reference parse.py:97-111): bronze file path →
 # [size, mtime_ns] of every file the silver tables hold. It lives at the
 # silver root, so it travels with the tables it describes: restoring an
-# older silver restores its ledger, and `io.compact_partitioned`, which
-# rewrites one table directory at a time, leaves it alone.
+# older silver restores its ledger, and `io.compact_partitions`, which
+# rewrites partition directories inside one table, leaves it alone.
 LEDGER = "_parsed_files.json"
 
 
@@ -410,18 +410,9 @@ def _write_ledger(out_dir: str, files: dict, pending: bool) -> None:
 
 
 def _silver_intact(out_dir: str) -> bool:
-    """Whether all four silver tables exist, after finishing any swap an
-    interrupted `io.compact_partitioned` left behind. The ledger vouches
-    for files parsed into tables; a table gone (or still mid-swap) can
-    only be restored from bronze."""
-    from .io import recover_compaction
-
-    try:
-        for name in SILVER_TABLES:
-            recover_compaction(f"{out_dir}/{name}")
-    except FileNotFoundError:  # a table gone with nothing to restore it from
-        return False
-    return True
+    """Whether all four silver tables exist. The ledger vouches for files
+    parsed into tables; a table gone can only be restored from bronze."""
+    return all(os.path.isdir(f"{out_dir}/{name}") for name in SILVER_TABLES)
 
 
 def _new_files(ledger: dict | None, blocks: dict, txs: dict) -> tuple[list, list] | None:

@@ -1,1 +1,1 @@
-"""Physical-plan helpers: skew mitigation, partitioning strategies."""
+"""Physical-plan helpers: compute-once materialized seams, two-pass global rank."""

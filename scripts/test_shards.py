@@ -25,9 +25,8 @@ earlier shards and inflating the wall the 600 s budget reads).
 
 Safety audit (why concurrent shards can't collide):
 - no Hive/derby metastore (session.py never enableHiveSupport);
-- the only saveAsTable writer (test_bucketing.py) lives in one file,
-  so same-name table writes are serial within its shard;
-- everything else writes under per-test tmp_path;
+- no test writes a managed table (saveAsTable); every test writes
+  under its own tmp_path;
 - materialize.py seam caches are per-process by construction.
 
 Usage:

@@ -162,20 +162,6 @@ def make_mock_rpc(blocks: list[dict], txs: list[dict]):
     return fetch
 
 
-_CANON = None
-
-
-def canonical_rpc_transport(url: str) -> dict:
-    """Module-level transport over the canonical 30-block fixture chain —
-    importable BY NAME on Spark executors (a closure can't be referenced
-    from a DataSource option string)."""
-    global _CANON
-    if _CANON is None:
-        blocks = make_blocks(30)
-        _CANON = make_mock_rpc(blocks, make_txs(blocks))
-    return _CANON(url)
-
-
 def write_fixture_files(tmpdir: str, n_blocks: int = 20) -> tuple[str, str, list[dict], list[dict]]:
     """Write {start}_{end}.json batch files (the reference's landing-zone
     layout, extract.py:175-192) as JSON-lines for Spark."""

@@ -5,6 +5,8 @@ Spark-side completeness audits."""
 from __future__ import annotations
 
 import json
+import re
+from urllib.parse import parse_qs, urlparse
 
 import pytest
 
@@ -144,6 +146,75 @@ def test_item_too_big_alone_returns_the_items_before_it(tmp_path, concurrency):
     ex = ingest.Extractor("http://n", str(tmp_path), per_page=4, concurrency=concurrency, fetch=fetch)
     assert [it["i"] for it in ex.extract_blocks(3, 99)] == [0, 1, 2, 3, 4]
     assert ex.dead_letter == [3]
+
+
+def _h(item: dict) -> int:
+    return int(item["height"] if "height" in item else item["block"]["header"]["height"])
+
+
+def _node_with_bad_height(bad: int, scan: str):
+    """A node over heights 100..109, two txs a height, whose `scan`
+    ("blocks" or "txs") response fails to parse whenever its page holds
+    height `bad`'s block (or its second tx), even alone. Point block
+    lookups answer."""
+    blocks = [
+        {"block_id": {"hash": f"H{h}"}, "block": {"header": {"height": str(h)}}}
+        for h in range(100, 110)
+    ]
+    txs = [{"hash": f"T{h}_{j}", "height": str(h)} for h in range(100, 110) for j in range(2)]
+    too_big = blocks[bad - 100] if scan == "blocks" else txs[2 * (bad - 100) + 1]
+
+    def fetch(url):
+        parsed = urlparse(url)
+        q = parse_qs(parsed.query)
+        if parsed.path.endswith("/block"):
+            return {"result": blocks[int(q["height"][0]) - 100]}
+        lo, hi = map(int, re.findall(r"\d+", q["query"][0]))
+        key = "blocks" if "block_search" in parsed.path else "txs"
+        pool = [it for it in (blocks if key == "blocks" else txs) if lo <= _h(it) <= hi]
+        page, per_page = int(q["page"][0]), int(q["per_page"][0])
+        window = pool[(page - 1) * per_page : page * per_page]
+        if too_big in window:
+            raise json.JSONDecodeError("too big", "", 0)
+        return {"result": {key: window, "total_count": str(len(pool))}}
+
+    return fetch
+
+
+def _landed(root) -> tuple[list[int], list[str], list[int]]:
+    """(block heights, tx hashes, dead-lettered heights) in a landing zone."""
+    def lines(kind):
+        return [json.loads(ln) for f in sorted((root / kind).iterdir()) for ln in f.open()]
+
+    errors = root / "errors" / "error_heights.json"
+    return (
+        sorted(_h(b) for b in lines("blocks")),
+        sorted(t["hash"] for t in lines("txs")),
+        json.loads(errors.read_text()) if errors.exists() else [],
+    )
+
+
+@pytest.mark.parametrize("scan", ["blocks", "txs"])
+def test_a_scan_that_gives_up_lands_each_height_once(tmp_path, scan):
+    """Height 105 fails even at one item per page: the range lands the
+    heights before it, whole, and dead-letters the rest; each height is
+    landed or dead-lettered, never both, and the repair lands nothing
+    twice. A height whose txs still fail stays dead-lettered."""
+    ex = ingest.Extractor(
+        "http://n", str(tmp_path), network="n1", per_page=4, fetch=_node_with_bad_height(105, scan)
+    )
+    ex.run_range(100, 109)
+    ex.flush_dead_letter()
+    heights, hashes, errors = _landed(tmp_path / "n1")
+    assert heights == list(range(100, 105)) and errors == list(range(105, 110))
+    assert hashes == sorted(f"T{h}_{j}" for h in heights for j in range(2))
+    assert ingest.ingested_bounds(str(tmp_path / "n1" / "blocks")) == (100, 109)
+
+    ex.repair_dead_letter()
+    heights, hashes, errors = _landed(tmp_path / "n1")
+    assert errors == ([] if scan == "blocks" else [105])
+    assert heights == sorted(set(range(100, 110)) - set(errors))
+    assert hashes == sorted(f"T{h}_{j}" for h in heights for j in range(2))
 
 
 def test_adaptive_page_size_gives_up(tmp_path):

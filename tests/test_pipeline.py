@@ -336,22 +336,16 @@ def test_crash_mid_partition_swap_then_rerun_rebuilds(spark, tmp_path, monkeypat
     _assert_silver_is_bronze_truth(spark, silver, n_txs)
 
 
-@pytest.mark.parametrize("loss", ["mid_compaction", "deleted"])
-def test_lost_silver_table_is_restored_before_append(spark, tmp_path, parse_calls, loss):
-    """A table a crashed `io.compact_partitioned` left renamed to its backup
-    is swapped back before the next batch is appended; a table deleted
-    outright forces a full rebuild, with or without new bronze."""
+def test_lost_silver_table_is_restored_before_append(spark, tmp_path, parse_calls):
+    """A silver table deleted outright forces a full rebuild, with or
+    without new bronze."""
     silver = str(tmp_path / "silver")
     bdir, tdir, n_txs = _parse_first_batch_then_land_second(spark, tmp_path, silver)
     table = f"{silver}/tx_result"
-    if loss == "mid_compaction":  # crash between the two renames of the swap
-        os.rename(table, f"{table}__precompact")
-    else:
-        shutil.rmtree(table)
+    shutil.rmtree(table)
 
     P.run(spark, bdir, tdir, out_dir=silver)
-    assert len(parse_calls[-1][0]) == (1 if loss == "mid_compaction" else 2)
-    assert not os.path.exists(f"{table}__precompact")
+    assert len(parse_calls[-1][0]) == 2
     _assert_silver_is_bronze_truth(spark, silver, n_txs)
 
     shutil.rmtree(table)  # no new bronze: still a rebuild, not a no-op

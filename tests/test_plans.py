@@ -489,7 +489,7 @@ def test_ngram_lm_broadcast_at_test_scale_and_keyed_degrade(spark, sf_dir, order
     # Catalyst's stats: at test vocab it still auto-broadcasts (right
     # call); above autoBroadcastJoinThreshold the SAME plan becomes keyed
     # shuffle joins. Simulate over-threshold tables by disabling
-    # auto-broadcast (the test_bucketing.py idiom) and assert the keyed
+    # auto-broadcast and assert the keyed
     # forms appear — degenerate forms stay banned. The only nested-loop
     # joins allowed are the 1-row corpus-total broadcasts, which are
     # hinted in both modes.

@@ -154,41 +154,3 @@ def test_daily_stream_feeds_forecast_folds(spark, tmp_path):
         ref = proj(batch).collect()
         assert sorted(map(tuple, snap)) == sorted(map(tuple, ref))
 
-
-def test_engagement_hll_merge_equivalence(spark):
-    """The panel's trailing-window estimate is computed by max-merging PER-DAY register
-    tables, and HLL mergeability makes that identical to a one-shot
-    register build over the whole window's events — asserted through
-    the public estimator (users_7d/30d at the anchor == users_1d of the
-    direct build)."""
-    import datetime
-
-    from bread_spark.extensions.stats import (
-        engagement_hll_panel_df,
-        engagement_user_registers_df,
-    )
-
-    rows = []
-    for d, (lo, hi) in enumerate([(1, 15), (10, 25), (20, 35)]):
-        for u in range(lo, hi + 1):
-            rows.append((u, datetime.datetime(2024, 1, d + 1, 12)))
-    # the one-shot build of the SAME events, parked on a day >30 days
-    # away so both panels compute in a single plan without their
-    # trailing windows overlapping (default-tier budget: one panel job
-    # instead of two)
-    rows_direct = [(u, datetime.datetime(2024, 6, 1, 12)) for u, _ in rows]
-    ev = spark.createDataFrame(
-        rows + rows_direct, "user_id bigint, ts timestamp"
-    ).select("ts", "user_id")
-    panel = {
-        str(r.day): r
-        for r in engagement_hll_panel_df(
-            engagement_user_registers_df(ev)
-        ).collect()
-    }
-    anchor, direct = panel["2024-01-03"], panel["2024-06-01"]
-    assert anchor.users_7d_est == direct.users_1d_est
-    assert anchor.users_30d_est == direct.users_1d_est
-    # register dominance: wider windows can never estimate lower
-    for r in panel.values():
-        assert r.users_1d_est <= r.users_7d_est <= r.users_30d_est

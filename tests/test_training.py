@@ -184,46 +184,6 @@ def test_deduped_corpus_is_canonical_cover(spark):
     assert all(r["n_dups_removed"] == r["cluster_size"] - 1 for r in survivors)
 
 
-def test_write_training_shards_replays_permutation(spark, tmp_path):
-    """Shards are globally ordered by (shuffle_key, doc_id): concatenating
-    them in manifest order replays the seeded permutation exactly; the
-    manifest's counts and key ranges match the data; a rewrite is
-    byte-deterministic in assignment."""
-    import os
-
-    from bread_spark.extensions.training import training_corpus, write_training_shards
-
-    corpus = training_corpus(spark, SF_DIR)
-    out = str(tmp_path / "shards")
-    manifest = write_training_shards(corpus, out, n_shards=4)
-
-    assert manifest["total_rows"] == corpus.count()
-    assert manifest["n_shards"] <= 4
-    # key ranges are non-overlapping and ordered
-    for a, b in zip(manifest["shards"], manifest["shards"][1:]):
-        assert a["max_key"] <= b["min_key"]
-
-    # reading shards in manifest order = the seeded shuffle order
-    replayed = []
-    for s in manifest["shards"]:
-        rows = (
-            spark.read.parquet(os.path.join(out, s["file"]))
-            .select("doc_id", "shuffle_key")
-            .collect()
-        )
-        assert len(rows) == s["rows"]
-        assert rows == sorted(rows, key=lambda r: (r["shuffle_key"], r["doc_id"]))
-        assert rows[0]["shuffle_key"] >= s["min_key"]
-        assert rows[-1]["shuffle_key"] <= s["max_key"]
-        replayed.extend((r["shuffle_key"], r["doc_id"]) for r in rows)
-    assert replayed == sorted(replayed)
-
-    # deterministic shard assignment across rewrites
-    manifest2 = write_training_shards(corpus, str(tmp_path / "shards2"), n_shards=4)
-    assert [s["rows"] for s in manifest2["shards"]] == [s["rows"] for s in manifest["shards"]]
-    assert [s["min_key"] for s in manifest2["shards"]] == [s["min_key"] for s in manifest["shards"]]
-
-
 def test_training_corpus_neardup_subsets_and_removes_neardups(spark):
     """The near-dup-complete composite is a subset of training_corpus
     that contains no two docs from the same jaccard cluster."""
