@@ -7,8 +7,14 @@ LAST: {"metric": ..., "value": total_sec, "unit": "sec", "subtotals":
 {...}, "queries": {slowest 8}, "sf": ...}. The summary is last and
 <1.8 kB because the driver records only the final ~2000 chars of stdout.
 
-Each query is fully materialized via a count over the final plan (collect
-would be driver-bound for wide results; count forces the same computation).
+Each row times what a user gets: a catalog entry is fully materialized
+by a `noop` write (a `count()` lets Catalyst prune the work), and the
+`parse_run` row is the flow's bronze→silver hop, a full `parse.run`
+rebuild of a cached JSON fixture. The untimed cold pass runs each row
+inside a span of `perfbench/spans.Tracer`, which reads the row's jobs,
+stages, tasks, CPU seconds, input, shuffle and spill bytes from Spark's
+status store into `BENCH_DETAIL.json`; those counters, not wall time,
+tell a code change from host noise.
 """
 
 from __future__ import annotations
@@ -19,16 +25,13 @@ import os
 import shutil
 import statistics
 import sys
+import tempfile
 import time
+from datetime import timedelta
 
 PARSE_N_BLOCKS = int(os.environ.get("SPARK_GRAFT_PARSE_BLOCKS", "30000"))
 WARM_PASSES = int(os.environ.get("SPARK_GRAFT_WARM_PASSES", "3"))
-# r14 (VERDICT r13 #2): re-run the md5 noise probes every N queries of
-# the warm loop so a mid-run host burst is attributable PER SEGMENT from
-# the committed BENCH_DETAIL alone (r13's one-shot launch probes missed
-# the burst cohorts in both driver captures). Untimed — the probes run
-# between query groups, never inside a timed pass.
-PROBE_EVERY = int(os.environ.get("SPARK_GRAFT_PROBE_EVERY", "24"))
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def _md5_loop(n: int) -> float:
@@ -43,9 +46,8 @@ def _md5_loop(n: int) -> float:
 
 
 def _host_probes() -> tuple[float, float]:
-    """Host-noise self-adjudication (DECISIONS.md #13), measured
-    immediately before the timed warm passes and emitted INTO the
-    summary so a judge can read noise without re-running:
+    """Host-noise reading (DECISIONS.md #13), measured once, immediately
+    before the timed warm passes, and emitted INTO the summary:
 
     - ``probe_1c``: one thread chaining 2M md5 digests. Clean-host
       reference ~1.0-1.2 s; single-core throttling reads high here.
@@ -54,6 +56,8 @@ def _host_probes() -> tuple[float, float]:
       ~1.0-1.1 s on this 32-thread box; multi-core contention (the r8
       noise mode — all bench subtotals move in lockstep while probe_1c
       stays clean) reads high here ONLY.
+
+    Both read clean through the bandwidth-shaped mode (DECISIONS.md #23).
     """
     import concurrent.futures as cf
 
@@ -65,9 +69,9 @@ def _host_probes() -> tuple[float, float]:
     return round(one, 3), round(time.perf_counter() - t0, 3)
 
 
-# Bump when tests/fixtures.py changes what it generates, so a cache built
-# by an older generator is never reused (v2: valid, monotone block times).
-PARSE_FIXTURE_VERSION = 2
+# Bump when the generated fixture changes, so no stale cache is reused. v3:
+# blocks 6 s apart, the Cosmos Hub's pace, so 30,000 fill 3 day partitions.
+PARSE_FIXTURE_VERSION = 3
 
 
 def _ensure_parse_fixture(n_blocks: int) -> str:
@@ -79,10 +83,10 @@ def _ensure_parse_fixture(n_blocks: int) -> str:
     if os.path.exists(done):
         return cache
     shutil.rmtree(cache, ignore_errors=True)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, HERE)
     from tests.fixtures import make_blocks, make_txs
 
-    blocks = make_blocks(n_blocks)
+    blocks = make_blocks(n_blocks, interval=timedelta(seconds=6))
     txs = make_txs(blocks)
     bdir = os.path.join(cache, "blocks")
     tdir = os.path.join(cache, "txs")
@@ -102,27 +106,29 @@ def _ensure_parse_fixture(n_blocks: int) -> str:
     return cache
 
 
-def _parse_events_build(spark, fixture_dir: str) -> int:
-    """The bronze→silver events build (R1-R5 + J1) — the reference's only
-    timed workload (dbt/models/parsed/events.sql:2, '14 s ran alone').
-    Returns the wide-events row count (forces the full plan)."""
-    from bread_spark.parse import (
-        attach_block_time,
-        parse_blocks,
-        parse_events_wide,
-        read_raw_blocks,
-        read_raw_txs,
-    )
+def _run_row(spark, sf_dir: str, fixture_dir: str, name: str) -> float:
+    """Seconds one bench row takes: a catalog entry built and written to
+    `noop`, or `parse_run`, a full `parse.run` rebuild of the fixture into
+    a fresh directory, which is removed after the clock stops."""
+    if name != "parse_run":
+        from bread_spark.queries import QUERIES
 
-    raw_blocks = read_raw_blocks(spark, f"{fixture_dir}/blocks")
-    raw_txs = read_raw_txs(spark, f"{fixture_dir}/txs")
-    blocks = parse_blocks(raw_blocks)
-    events = attach_block_time(parse_events_wide(raw_txs), blocks)
-    return events.count()
+        start = time.perf_counter()
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - start
+    from bread_spark import parse
+
+    out_dir = tempfile.mkdtemp(prefix="bread_spark_bench_silver_")
+    try:
+        start = time.perf_counter()
+        parse.run(spark, f"{fixture_dir}/blocks", f"{fixture_dir}/txs", out_dir=out_dir)
+        return time.perf_counter() - start
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # Every benched catalog entry → the round it was first benched in, in
-# bench order (parse_events_wide, the bronze→silver build, runs last).
+# bench order (parse_run, the bronze→silver hop, runs last).
 # The headline `value` covers the WHOLE set, but the baseline it is
 # compared to is a single fixed reference workload, so growing the bench
 # set raises the total without anything getting slower. `subtotals`
@@ -432,14 +438,14 @@ BENCH_ROUNDS: dict[str, int] = {
     "autocorrelation_by_type": 11,
     # r12: memorization-risk profile
     "doc_dup_saturation": 12,
-    "parse_events_wide": 4,
+    "parse_run": 4,
 }
 
 # THE FROZEN BENCH GATE SET (declared round 6, per VERDICT r5 #4):
 # the 60 timed queries of BENCH_r05 (the 59 catalog entries above as
-# of r5 + parse_events_wide) are the official perf denominator from
-# now on. Every round reports `subtotals.frozen_r5_set` over exactly
-# these names; coverage added in later rounds lands in the headline
+# of r5 + the parse row, now parse_run) are the official perf
+# denominator from now on. Every round reports `subtotals.frozen_r5_set`
+# over exactly these names; coverage added in later rounds lands in the headline
 # `value` but can never move the frozen-set number, so "more queries"
 # can no longer read as "got slower". Target: frozen_r5_set ≤ 2.0× the
 # reference's 14 s single-workload baseline (BASELINE.md). Spelled out
@@ -466,7 +472,7 @@ FROZEN_R5_SET = frozenset({
     "ngram_jaccard_pairs_capped", "minhash_lsh_candidates",
     "simhash_fingerprints", "cosine_topk", "centroid_by_label",
     "quantize_embeddings", "lsh_bucket_pairs", "lsh_bucket_topk",
-    "cluster_quota_sample", "parse_events_wide",
+    "cluster_quota_sample", "parse_run",
 })
 
 
@@ -485,91 +491,76 @@ def _subtotals(timings: dict[str, float]) -> dict[str, float]:
     return subtotals
 
 
+def _summary(timings: dict[str, float], **fields) -> str:
+    """The compact summary line, the run's record: the total, `fields`,
+    the subtotals and the slowest queries. If the line exceeds the last
+    ~2000 chars of stdout that a bench harness keeps, the per-query map
+    shrinks rather than a completed run crashing."""
+    ranked = sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
+    for n_slowest in range(8, -1, -1):
+        line = json.dumps(
+            {
+                "metric": "bread_spark_headline_queries",
+                "value": round(sum(timings.values()), 3),
+                "unit": "sec",
+                **fields,
+                "n_queries": len(timings),
+                "subtotals": _subtotals(timings),
+                "queries": dict(ranked[:n_slowest]),
+            }
+        )
+        if len(line) < 1800:
+            return line
+    print(f"WARNING: bench summary line is {len(line)} chars", file=sys.stderr)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
-    from bread_spark.queries import QUERIES
     from bread_spark.session import get_spark
+    from perfbench.spans import STAGE_COUNTERS, Tracer
 
     spark = get_spark(app_name="bread-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    bench_queries = [n for n in BENCH_ROUNDS if n != "parse_events_wide"]
-    missing_frozen = FROZEN_R5_SET - set(bench_queries) - {"parse_events_wide"}
-    assert not missing_frozen, (
-        f"frozen r5 gate queries dropped from the bench set: {sorted(missing_frozen)}"
-    )
-
-    # One cold pass (JVM JIT, parquet footers, shuffle machinery, Python
-    # worker pool — reported for transparency), then WARM_PASSES
-    # BACK-TO-BACK timed runs per query; each query reports its MEDIAN and
-    # the headline total is the sum of medians. Medians are the
-    # stall-robust steady-state number: a single host-load hiccup on a
-    # single-task stage once recorded a 0.65 s query as 4.92 s and nearly
-    # blew the 2× baseline gate — one bad sample out of three now cannot
-    # move any query's number. Before each query group an UNTIMED gc
-    # (Python + JVM) releases the prior queries' leftovers — checkpointed
-    # RDD blocks and shuffle state only free on driver GC via the
-    # ContextCleaner, and across a 53-query catalog that accumulation
-    # inflated late-running queries by ~30% (measured: isolated warm
-    # steady-state vs in-catalog-context numbers).
     parse_fixture = _ensure_parse_fixture(PARSE_N_BLOCKS)  # untimed build
 
+    # One cold pass (JVM JIT, parquet footers, shuffle machinery, Python
+    # worker pool — reported for transparency), each row in a span whose
+    # work counters go to BENCH_DETAIL.json, then WARM_PASSES BACK-TO-BACK
+    # untraced timed runs per row; each row reports its MEDIAN and the
+    # headline total is the sum of medians. Medians are the stall-robust
+    # steady-state number: a single host-load hiccup on a single-task
+    # stage once recorded a 0.65 s query as 4.92 s and nearly blew the 2×
+    # baseline gate — one bad sample out of three now cannot move any
+    # row's number. Before each row an UNTIMED gc (Python + JVM) releases
+    # the prior rows' leftovers — checkpointed RDD blocks and shuffle
+    # state only free on driver GC via the ContextCleaner, and across a
+    # 53-query catalog that accumulation inflated late-running queries by
+    # ~30% (measured: isolated warm steady-state vs in-catalog-context
+    # numbers).
+    tracer = Tracer(spark, active=True)
+    tracer.enabled = True
+    counters: dict[str, dict[str, float]] = {}
     cold_start = time.perf_counter()
-    for name in bench_queries:
-        QUERIES[name](spark, sf_dir).count()
-    _parse_events_build(spark, parse_fixture)
+    for name in BENCH_ROUNDS:
+        with tracer.span(name) as span:
+            _run_row(spark, sf_dir, parse_fixture, name)
+        counters[name] = {k: round(span.counters[k], 3) for k in STAGE_COUNTERS}
     cold_total = round(time.perf_counter() - cold_start, 3)
 
-    def _reclaim() -> None:
+    probe_1c, probe_mc = _host_probes()  # untimed, right before the warm passes
+    samples: dict[str, list[float]] = {}
+    for name in BENCH_ROUNDS:
+        spark.sparkContext.setJobDescription(f"bench warm: {name}")
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-
-    # host-noise probes, UNTIMED, immediately before the warm passes
-    probe_1c, probe_mc = _host_probes()
-
-    samples: dict[str, list[float]] = {}
-    parse_rows = 0
-    # Interleaved per-segment noise probes (VERDICT r13 #2): same probe
-    # unit as the launch pair, recorded with the index/name of the next
-    # query so any burst window brackets a known query range.
-    probe_segments: list[dict] = []
-    for qi, name in enumerate(bench_queries):
-        if PROBE_EVERY > 0 and qi > 0 and qi % PROBE_EVERY == 0:
-            seg_1c, seg_mc = _host_probes()
-            probe_segments.append(
-                {"i": qi, "next": name, "probe_1c": seg_1c, "probe_mc": seg_mc}
-            )
-        spark.sparkContext.setJobDescription(f"bench warm: {name}")
-        _reclaim()
-        runs = []
-        for _ in range(WARM_PASSES):
-            start = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            runs.append(time.perf_counter() - start)
-        samples[name] = runs
-    spark.sparkContext.setJobDescription("bench warm: parse_events_wide")
-    _reclaim()
-    runs = []
-    for _ in range(WARM_PASSES):
-        start = time.perf_counter()
-        parse_rows = _parse_events_build(spark, parse_fixture)
-        runs.append(time.perf_counter() - start)
-    samples["parse_events_wide"] = runs
+        samples[name] = [_run_row(spark, sf_dir, parse_fixture, name) for _ in range(WARM_PASSES)]
     spark.sparkContext.setJobDescription(None)
-    # closing probe pair — brackets the tail segment (incl. parse build)
-    tail_1c, tail_mc = _host_probes()
-    probe_segments.append(
-        {"i": len(bench_queries), "next": "(end)", "probe_1c": tail_1c, "probe_mc": tail_mc}
-    )
-    probe_1c_max = round(max([probe_1c] + [s["probe_1c"] for s in probe_segments]), 3)
-    probe_mc_max = round(max([probe_mc] + [s["probe_mc"] for s in probe_segments]), 3)
     timings = {n: round(statistics.median(t), 3) for n, t in samples.items()}
-    total = round(sum(timings.values()), 3)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    subtotals = _subtotals(timings)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # Full per-query detail FIRST (humans / PERF_NOTES). The driver keeps
     # only the last ~2000 chars of stdout and json-parses what it finds
@@ -578,53 +569,28 @@ def main() -> None:
     detail = {
         "detail": "per_query_medians_sec",
         "queries": timings,
+        "counters": counters,
         "probe_1c": probe_1c,
         "probe_mc": probe_mc,
-        "probe_segments": probe_segments,
-        "probe_1c_max": probe_1c_max,
-        "probe_mc_max": probe_mc_max,
         "sf": sf_val,
         "parse_input_blocks": PARSE_N_BLOCKS,
     }
     print(json.dumps(detail))
     # Adjudicating a single-query regression across rounds needs the FULL
-    # per-query map, and the driver's stdout tail only keeps the compact
-    # summary — so persist the detail to a committed file too.
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
-        "w",
-    ) as fh:
+    # per-query map and counters, and a stdout tail capture keeps only
+    # the compact summary — so persist the detail to a committed file too.
+    with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
-    # Compact machine-readable summary LAST — the driver's record. The
-    # per-query map is capped to the slowest entries, and if the line
-    # still exceeds the ~2000-char tail capture (longer names, more
-    # subtotal keys in a future round) we DEGRADE by shrinking the map
-    # rather than crashing a completed run.
-    ranked = sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
-    for n_slowest in range(8, -1, -1):
-        summary = json.dumps(
-            {
-                "metric": "bread_spark_headline_queries",
-                "value": total,
-                "unit": "sec",
-                "cold_total": cold_total,
-                "warm_passes": WARM_PASSES,
-                "probe_1c": probe_1c,
-                "probe_mc": probe_mc,
-                "probe_1c_max": probe_1c_max,
-                "probe_mc_max": probe_mc_max,
-                "n_queries": len(timings),
-                "subtotals": subtotals,
-                "queries": dict(ranked[:n_slowest]),
-                "parse_events_rows": parse_rows,
-                "sf": sf_val,
-            }
+    print(
+        _summary(
+            timings,
+            cold_total=cold_total,
+            warm_passes=WARM_PASSES,
+            probe_1c=probe_1c,
+            probe_mc=probe_mc,
+            sf=sf_val,
         )
-        if len(summary) < 1800:
-            break
-    if len(summary) >= 1800:  # still too long even with zero queries
-        print(f"WARNING: bench summary line is {len(summary)} chars", file=sys.stderr)
-    print(summary)
+    )
     spark.stop()
 
 

@@ -229,35 +229,64 @@ class Extractor:
         return items
 
     def repair_dead_letter(self) -> list[int]:
-        """S3: gap fill — re-extract heights recorded in
-        errors/error_heights.json via point lookups (SRC4), append them to
-        the landing zone as single-height batches, and clear the ledger of
-        the heights that succeeded; a height whose tx scan gives up again
-        stays in the ledger. (The reference's flow has this step
+        """S3: gap fill — re-extract the heights recorded in
+        errors/error_heights.json, land them, and leave in the file only
+        those that fail again. Each run of consecutive heights is one range
+        scan, landed as a `{lo}_{hi}.json` pair named by the heights it
+        holds, so a cut that dead-lettered a whole range tail costs a
+        range's pages, not a point lookup per height. Where a scan gives up
+        again, at height f, f alone is re-fetched by point lookup (SRC4 —
+        `/block` may answer for one block where a block_search page holding
+        it fails) and the scan resumes at f+1. A height whose lookup or tx
+        scan fails again lands nothing, so a height that stays broken
+        rewrites no landed file. (The reference's flow has this step
         scaffolded but commented out, pipeline.py:99-109/120-123 —
         implemented here as intended.)"""
         path = os.path.join(self.out_dir, self.network, "errors", "error_heights.json")
         if not os.path.exists(path):
             return []
         with open(path) as f:
-            heights = json.load(f)
-        repaired: list[int] = []
+            heights = sorted(set(json.load(f)))
+        runs: list[list[int]] = []
         for h in heights:
-            doc = self.get_block(h)
-            if doc is None:
-                continue
-            n = len(self.dead_letter)
-            txs = self.extract_txs(h, h)
-            if len(self.dead_letter) > n:  # its txs still fail: land nothing
+            if runs and h == runs[-1][1] + 1:
+                runs[-1][1] = h
+            else:
+                runs.append([h, h])
+        failed: list[int] = []
+        for lo, hi in runs:
+            while lo <= hi:
+                n = len(self.dead_letter)
+                blocks, txs = self._extract_range(lo, hi)
+                cut = self.dead_letter[n] if len(self.dead_letter) > n else hi + 1
                 del self.dead_letter[n:]
-                continue
-            self.save_batch([doc], "blocks", h, h)
-            self.save_batch(txs, "txs", h, h)
-            repaired.append(h)
-        remaining = sorted(set(heights) - set(repaired))
+                if cut > lo:
+                    self.save_batch(blocks, "blocks", lo, cut - 1)
+                    self.save_batch(txs, "txs", lo, cut - 1)
+                if cut <= hi and not self._land_height(cut):
+                    failed.append(cut)
+                lo = cut + 1
         with open(path, "w") as f:
-            json.dump(remaining, f)
-        return repaired
+            json.dump(failed, f)
+        return sorted(set(heights) - set(failed))
+
+    def _land_height(self, h: int) -> bool:
+        """Land one height from a point block lookup and its tx scan, as an
+        `{h}_{h}.json` pair; False, landing nothing, if either fails."""
+        try:
+            doc = self.get_block(h)
+        except json.JSONDecodeError:
+            return False
+        if doc is None:
+            return False
+        n = len(self.dead_letter)
+        txs = self.extract_txs(h, h)
+        if len(self.dead_letter) > n:
+            del self.dead_letter[n:]
+            return False
+        self.save_batch([doc], "blocks", h, h)
+        self.save_batch(txs, "txs", h, h)
+        return True
 
     def save_batch(self, items: list[dict], prefix: str, start: int, end: int) -> str:
         """SRC9: landing-zone sink — JSON-lines (one doc per line) so Spark
@@ -273,15 +302,22 @@ class Extractor:
 
     def run_range(self, start: int, end: int) -> dict[str, str]:
         """Extract one range and land it as a `{start}_{end}.json` pair.
+        The files keep the range's name even when a scan gave up (see
+        `_extract_range`), so the next forward sync starts past the
+        dead-lettered heights and only the repair fetches them."""
+        blocks, txs = self._extract_range(start, end)
+        return {
+            "blocks": self.save_batch(blocks, "blocks", start, end),
+            "txs": self.save_batch(txs, "txs", start, end),
+        }
 
-        When a scan gives up (see `_scan`), only the heights both scans
-        returned in full are landed: blocks through the last one returned,
-        txs below the last tx height returned (that height's txs may be
-        cut short). Every later height is dead-lettered in place of the
-        range start, for `repair_dead_letter`. The files keep the range's
-        name, so the next forward sync starts past the dead-lettered
-        heights and only the repair fetches them.
-        """
+    def _extract_range(self, start: int, end: int) -> tuple[list[dict], list[dict]]:
+        """Blocks and txs of one range. When a scan gives up (see `_scan`),
+        only the heights both scans returned in full are kept: blocks
+        through the last one returned, txs below the last tx height
+        returned (that height's txs may be cut short). Every later height
+        is dead-lettered in place of the range start, for
+        `repair_dead_letter`."""
         n = len(self.dead_letter)
         blocks = self.extract_blocks(start, end)
         blocks_cut = len(self.dead_letter) > n
@@ -296,10 +332,7 @@ class Extractor:
             blocks = [b for b in blocks if _height(b) <= last]
             txs = [t for t in txs if _height(t) <= last]
             self.dead_letter[n:] = range(last + 1, end + 1)
-        return {
-            "blocks": self.save_batch(blocks, "blocks", start, end),
-            "txs": self.save_batch(txs, "txs", start, end),
-        }
+        return blocks, txs
 
     def flush_dead_letter(self) -> None:
         """SRC16: failed heights → errors/error_heights.json for repair."""

@@ -52,9 +52,6 @@ __all__ = [
     "read_raw_txs",
     "parse_blocks",
     "parse_txs",
-    "parse_tx_result",
-    "parse_log_attributes",
-    "parse_events_wide",
     "attach_block_time",
     "parse_tables",
     "run",
@@ -142,11 +139,11 @@ def parse_txs(raw_txs: DataFrame) -> DataFrame:
     """The one parsed tx frame the three tx silver tables derive from, one
     row per raw tx: `hash`, `height`, the `tx_result` scalars, `logs` (the
     `log` string through from_json) and `attrs`, the tx's decoded
-    event attributes with their ordinals (see `parse_events_attrs`), NULL
+    event attributes with their ordinals (see `_events_attrs`), NULL
     when the tx has none.
 
-    Each public `parse_*` tx function is a projection of this frame, and
-    column pruning drops what it does not select, so a caller parsing only
+    Each tx silver table is a projection of this frame, and column
+    pruning drops what it does not select, so a plan reading only
     tx_result pays for no JSON or base64 work.
     """
     # flattened per-tx attr array: (event_pos, attr_pos, type, key, value)
@@ -190,16 +187,18 @@ def parse_txs(raw_txs: DataFrame) -> DataFrame:
 
 
 def _tx_result(txs: DataFrame) -> DataFrame:
+    """tx_result silver table *before* the block-time join (reference
+    parse.py:141-146): struct flatten (P2) + key columns."""
     return txs.select("hash", "height", *TX_SCALARS)
 
 
-def parse_tx_result(raw_txs: DataFrame) -> DataFrame:
-    """tx_result silver table *before* the block-time join (reference
-    parse.py:141-146): struct flatten (P2) + key columns."""
-    return _tx_result(parse_txs(raw_txs))
-
-
 def _log_attributes(txs: DataFrame) -> DataFrame:
+    """log_attributes silver table — long/EAV (reference parse.py:148-162).
+
+    The `log` string → from_json (P4: malformed → NULL row, the 'safe
+    parse' semantics) → explode msgs → explode events → explode attributes
+    (R1). Explode preserves sibling columns, so no np.repeat (R2) needed.
+    """
     return (
         txs.select("hash", "height", F.explode("logs").alias("msg"))
         # P17: single-msg logs omit msg_index — fill 0 (the reference's
@@ -210,17 +209,26 @@ def _log_attributes(txs: DataFrame) -> DataFrame:
     )
 
 
-def parse_log_attributes(raw_txs: DataFrame) -> DataFrame:
-    """log_attributes silver table — long/EAV (reference parse.py:148-162).
-
-    The `log` string → from_json (P4: malformed → NULL row, the 'safe
-    parse' semantics) → explode msgs → explode events → explode attributes
-    (R1). Explode preserves sibling columns, so no np.repeat (R2) needed.
-    """
-    return _log_attributes(parse_txs(raw_txs))
-
-
 def _events_attrs(txs: DataFrame) -> DataFrame:
+    """Typed-events attributes in EAV form with deterministic ordinals
+    (the intent of reference parse.py:164-178, without its row
+    misalignment — SURVEY R5); the input of the `events` pivot.
+
+    (event_pos, attr_pos) give a total order per tx; `occurrence` = rank
+    of this attr among same-combined_key attrs of the tx, in that order.
+
+    ZERO-SHUFFLE plan: a tx's events live in ONE array cell, so the
+    ordinal is computed inside the array by `parse_txs` (count of earlier
+    elements with the same combined_key — O(n²) interpreted-lambda steps
+    on a few-element array) before a single explode here. The first cut
+    instead ran row_number() over Window.partitionBy(hash, height,
+    combined_key) AFTER exploding — a full shuffle+sort of the EAV table,
+    the largest frame in the pipeline, purely to recover per-tx
+    information the pre-explode row still had. At 100 TB that shuffle is
+    the difference between a map-only parse and re-clustering the corpus;
+    equality with the window plan is pinned in
+    tests/test_parse.py::test_events_attrs_matches_window_plan.
+    """
     return txs.select("hash", "height", F.explode("attrs").alias("r")).select(
         "hash",
         "height",
@@ -231,53 +239,16 @@ def _events_attrs(txs: DataFrame) -> DataFrame:
     )
 
 
-def parse_events_attrs(raw_txs: DataFrame) -> DataFrame:
-    """Typed-events attributes in EAV form with deterministic ordinals
-    (the intent of reference parse.py:164-178, without its row
-    misalignment — SURVEY R5).
-
-    (event_pos, attr_pos) give a total order per tx; `occurrence` = rank
-    of this attr among same-combined_key attrs of the tx, in that order.
-
-    ZERO-SHUFFLE plan: a tx's events live in ONE array cell, so the
-    ordinal is computed inside the array (count of earlier elements with
-    the same combined_key — O(n²) interpreted-lambda steps on a
-    few-element array) before a single explode. The first cut instead
-    ran row_number() over Window.partitionBy(hash, height, combined_key)
-    AFTER exploding — a full shuffle+sort of the EAV table, the largest
-    frame in the pipeline, purely to recover per-tx information the
-    pre-explode row still had. At 100 TB that shuffle is the difference
-    between a map-only parse and re-clustering the corpus; equality with
-    the window plan is pinned in
-    tests/test_parse.py::test_events_attrs_matches_window_plan.
-    """
-    return _events_attrs(parse_txs(raw_txs))
-
-
-# The distinct combined_key set of raw txs, decoding only event types and
-# attribute keys (see `parse_events_wide`). Over uncached bronze it is the
-# cheap discovery: on 4 vCPU, median of 9, it took 189 ms on 100 blocks and
-# 174 ms on 1,300, against 1.06 s and 5.9 s for `attrs.combined_key` of
-# `parse_txs`, whose value decode and occurrence lambda column pruning
-# does not remove. `parse_tables` reads the keys from its cached tx frame
-# instead, which has already paid for that parse.
-_RAW_PIVOT_KEYS = """
-    flatten(transform(tx_result.events, e ->
-        transform(e.attributes, a ->
-            concat_ws('_', e.type, cast(unbase64(a.key) as string)))))
-"""
-
-
-def _pivot_keys(df: DataFrame, keys) -> list[str]:
-    """The sorted distinct values of the combined_key array column `keys`
-    over `df`, as Spark's dynamic pivot would discover them, under its
+def _pivot_keys(txs: DataFrame) -> list[str]:
+    """The sorted distinct combined_keys of a `parse_txs` frame, as
+    Spark's dynamic pivot would discover them, under its
     `spark.sql.pivotMaxValues` guard (ADVICE r13 #1): without it a
     pathological combined_key vocabulary would collect unboundedly to the
     driver where `grouped.pivot(col)` would have raised."""
-    max_values = int(df.sparkSession.conf.get("spark.sql.pivotMaxValues", "10000"))
+    max_values = int(txs.sparkSession.conf.get("spark.sql.pivotMaxValues", "10000"))
     key_values = [
         r[0]
-        for r in df.select(F.explode(keys).alias("ck"))
+        for r in txs.select(F.explode("attrs.combined_key").alias("ck"))
         .distinct()
         .sort("ck")
         .limit(max_values + 1)
@@ -292,28 +263,15 @@ def _pivot_keys(df: DataFrame, keys) -> list[str]:
 
 
 def _events_wide(txs: DataFrame, key_values: list[str]) -> DataFrame:
-    grouped = _events_attrs(txs).groupBy("hash", "height", "occurrence")
-    return grouped.pivot("combined_key", key_values).agg(F.first("value"))
-
-
-def parse_events_wide(raw_txs: DataFrame) -> DataFrame:
     """events silver table — wide/pivoted (reference parse.py:164-180).
 
-    Dynamic pivot (R4): the distinct key set is discovered and passed to
-    the pivot explicitly (SURVEY §4.2 — at 100 TB the distinct pass is
-    one cheap column-pruned scan).
-
-    r13-opt: Spark's built-in dynamic pivot discovers values by running
-    the pivot CHILD's plan again — here the full EAV build (JSON parse,
-    base64 decode of keys AND values, the per-array occurrence ordinal
-    lambda). The discovery pass needs none of that: a projection that
-    decodes only event types and attribute keys yields the same
-    distinct combined_key set, sorted exactly as Spark sorts discovered
-    pivot values, with the same driver-side vocabulary-bounded collect
-    the built-in path performs. One full EAV pass per build instead of
-    two.
+    Dynamic pivot (R4) with the key set passed explicitly: Spark's
+    built-in discovery would run the pivot's child plan — the whole EAV
+    build — a second time, where `_pivot_keys` over an already parsed
+    frame is one column-pruned pass.
     """
-    return _events_wide(parse_txs(raw_txs), _pivot_keys(raw_txs, F.expr(_RAW_PIVOT_KEYS)))
+    grouped = _events_attrs(txs).groupBy("hash", "height", "occurrence")
+    return grouped.pivot("combined_key", key_values).agg(F.first("value"))
 
 
 def attach_block_time(df: DataFrame, blocks: DataFrame) -> DataFrame:
@@ -343,7 +301,7 @@ def parse_tables(spark: SparkSession, blocks_path, txs_path) -> Iterator[dict[st
     blocks = parse_blocks(read_raw_blocks(spark, blocks_path)).cache()
     txs = parse_txs(read_raw_txs(spark, txs_path)).cache()
     try:
-        keys = _pivot_keys(txs, F.col("attrs.combined_key"))
+        keys = _pivot_keys(txs)
         yield {
             "blocks": blocks,
             "tx_result": attach_block_time(_tx_result(txs), blocks).select(*TX_RESULT_COLUMNS),

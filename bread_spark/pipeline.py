@@ -141,13 +141,17 @@ def data_pipeline(
     sync = determine_sync_range(chain_head, min_node, max_ingested, num_blocks)
     ex = Extractor(rpc_url, landing_root, network=network, fetch=fetch)
 
-    # 2. extract forward
+    # 2. re-fetch the heights earlier scans gave up on (the watermark has
+    #    moved past them); those that fail again stay dead-lettered
+    ex.repair_dead_letter()
+
+    # 3. extract forward
     if sync is not None:
         result.sync_range = (sync.start, sync.end)
         for lo, hi in sync.chunks(num_blocks):
             ex.run_range(lo, hi)
 
-    # 3. backfill backward (bounded batches per flow run, like the
+    # 4. backfill backward (bounded batches per flow run, like the
     #    reference's while-loop with its num_blocks step)
     min_ingested, _ = ingested_bounds(blocks_dir)
     for _ in range(backfill_batches):
@@ -162,7 +166,7 @@ def data_pipeline(
     ex.flush_dead_letter()
     result.metadata = write_metadata(landing_root, network)
 
-    # 4. parse the files landed since the last run into silver (a full
+    # 5. parse the files landed since the last run into silver (a full
     #    rebuild when the parsed-file ledger can't vouch for silver)
     P.run(
         spark,
@@ -174,7 +178,7 @@ def data_pipeline(
         name: parquet_row_count(f"{silver_dir}/{name}") for name in P.SILVER_TABLES
     }
 
-    # 5. gold models + assertions; counts from the written footers
+    # 6. gold models + assertions; counts from the written footers
     gold = build_gold(spark, silver_dir, gold_dir)
     result.gold_counts = {
         name: parquet_row_count(f"{gold_dir}/{name}") if gold_dir else df.count()

@@ -24,13 +24,15 @@ def _b64(s: str) -> str:
     return base64.b64encode(s.encode()).decode()
 
 
-def make_blocks(n_blocks: int = 20, seed: int = 42) -> list[dict]:
+def make_blocks(
+    n_blocks: int = 20, seed: int = 42, interval: timedelta = BLOCK_INTERVAL
+) -> list[dict]:
     rng = random.Random(seed)
     blocks = []
     for i in range(n_blocks):
         height = START_HEIGHT + i
         # ns-precision RFC3339 timestamps, monotone across month ends
-        t = FIRST_BLOCK_TIME + BLOCK_INTERVAL * i
+        t = FIRST_BLOCK_TIME + interval * i
         ns = rng.randrange(10**9)
         blocks.append(
             {

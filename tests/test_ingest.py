@@ -271,15 +271,27 @@ def test_lcd_scan_offset_pagination(tmp_path):
 
 
 def test_repair_dead_letter_gap_fill(tmp_path):
-    """S3: error heights re-fetched via point lookup, landing files
-    appended, ledger cleared of successes only."""
+    """S3: error heights re-fetched, landing files appended, ledger
+    cleared of successes only. Height 8 fails both in a block_search
+    page and by point lookup: the run 7..9 lands 7, keeps 8 in the
+    ledger, and resumes at 9."""
+    def block(h):
+        return {"block_id": {"hash": f"H{h}"}, "block": {"header": {"height": str(h)}}}
+
     def fetch(url):
-        if "/block?height=8" in url:
-            return {"error": {"data": "still missing"}}
+        q = parse_qs(urlparse(url).query)
         if "/block?height=" in url:
-            h = url.rsplit("=", 1)[1]
-            return {"result": {"block_id": {"hash": f"H{h}"}, "block": {"header": {"height": h}}}}
-        return {"result": {"txs": [], "total_count": "0"}}
+            h = int(q["height"][0])
+            return {"error": {"data": "still missing"}} if h == 8 else {"result": block(h)}
+        if "block_search" not in url:
+            return {"result": {"txs": [], "total_count": "0"}}
+        lo, hi = map(int, re.findall(r"\d+", q["query"][0]))
+        pool = [block(h) for h in range(max(lo, 7), min(hi, 9) + 1)]
+        page, per_page = int(q["page"][0]), int(q["per_page"][0])
+        window = pool[(page - 1) * per_page : page * per_page]
+        if any(_h(b) == 8 for b in window):
+            raise json.JSONDecodeError("too big", "", 0)
+        return {"result": {"blocks": window, "total_count": str(len(pool))}}
 
     ex = ingest.Extractor("http://node", str(tmp_path), network="n1", fetch=fetch)
     ex.dead_letter = [7, 8, 9]

@@ -1,13 +1,16 @@
-"""Parse-path tests: bronze JSON → four silver tables, checked against
-pure-Python expected values computed from the fixture objects (the
-"implement the intent" semantics of SURVEY.md R5/S5 — not the reference's
-bugs), plus the EAV⟷wide pivot property and idempotence."""
+"""Parse-path tests: bronze JSON → four silver tables as `parse.run`
+writes them, checked against pure-Python expected values computed from
+the fixture objects (the "implement the intent" semantics of SURVEY.md
+R5/S5 — not the reference's bugs), plus the EAV⟷wide pivot property and
+idempotence. The EAV attributes the `events` pivot consumes are checked
+through the frame helpers `parse_tables` builds them with."""
 
 from __future__ import annotations
 
 import base64
 import datetime
 import json
+from collections import Counter
 
 import pytest
 
@@ -19,14 +22,26 @@ from tests.fixtures import write_fixture_files
 def fixture_env(spark, tmp_path_factory):
     tmpdir = tmp_path_factory.mktemp("bronze")
     bdir, tdir, blocks, txs = write_fixture_files(str(tmpdir))
+    silver = str(tmp_path_factory.mktemp("parsed") / "silver")
     return {
         "bdir": bdir,
         "tdir": tdir,
         "blocks": blocks,
         "txs": txs,
-        "raw_blocks": P.read_raw_blocks(spark, bdir),
         "raw_txs": P.read_raw_txs(spark, tdir),
+        "silver": silver,
+        "tables": P.run(spark, bdir, tdir, out_dir=silver),
     }
+
+
+def _silver(spark, silver: str, name: str):
+    """A silver table read back as the flow's readers read it."""
+    return spark.read.option("mergeSchema", "true").parquet(f"{silver}/{name}")
+
+
+def _events_attrs(raw_txs):
+    """The EAV attributes the `events` pivot consumes."""
+    return P._events_attrs(P.parse_txs(raw_txs))
 
 
 def _expected_time(time_str: str) -> datetime.datetime:
@@ -36,8 +51,8 @@ def _expected_time(time_str: str) -> datetime.datetime:
     return datetime.datetime.fromisoformat(base).replace(microsecond=us)
 
 
-def test_parse_blocks_values(fixture_env):
-    out = {r["height"]: r for r in P.parse_blocks(fixture_env["raw_blocks"]).collect()}
+def test_parse_blocks_values(spark, fixture_env):
+    out = {r["height"]: r for r in _silver(spark, fixture_env["silver"], "blocks").collect()}
     assert len(out) == len(fixture_env["blocks"])
     for b in fixture_env["blocks"]:
         h = b["block"]["header"]
@@ -46,13 +61,14 @@ def test_parse_blocks_values(fixture_env):
         assert row["proposer_address"] == h["proposer_address"]
         t = _expected_time(h["time"])
         assert row["time"].replace(tzinfo=None) == t
-        assert row["day"] == t.strftime("%Y-%m-%d")
-        assert row["month"] == t.strftime("%Y-%m")
-        assert row["year"] == t.strftime("%Y")
+        # partition values read back typed (day a date, year an int)
+        assert str(row["day"]) == t.strftime("%Y-%m-%d")
+        assert str(row["month"]) == t.strftime("%Y-%m")
+        assert str(row["year"]) == t.strftime("%Y")
 
 
-def test_parse_tx_result_values(fixture_env):
-    out = {r["hash"]: r for r in P.parse_tx_result(fixture_env["raw_txs"]).collect()}
+def test_parse_tx_result_values(spark, fixture_env):
+    out = {r["hash"]: r for r in _silver(spark, fixture_env["silver"], "tx_result").collect()}
     assert len(out) == len(fixture_env["txs"])
     for tx in fixture_env["txs"]:
         row = out[tx["hash"]]
@@ -79,10 +95,10 @@ def _expected_log_attrs(txs):
     return rows
 
 
-def test_parse_log_attributes_values(fixture_env):
+def test_parse_log_attributes_values(spark, fixture_env):
     got = {
         (r["hash"], r["height"], r["msg_index"], r["type"], r["key"], r["value"])
-        for r in P.parse_log_attributes(fixture_env["raw_txs"]).collect()
+        for r in _silver(spark, fixture_env["silver"], "log_attributes").collect()
     }
     assert got == _expected_log_attrs(fixture_env["txs"])
 
@@ -112,17 +128,17 @@ def _expected_events_attrs(txs):
 def test_parse_events_attrs_values(fixture_env):
     got = {
         (r["hash"], r["height"], r["combined_key"], r["occurrence"]): r["value"]
-        for r in P.parse_events_attrs(fixture_env["raw_txs"]).collect()
+        for r in _events_attrs(fixture_env["raw_txs"]).collect()
     }
     assert got == _expected_events_attrs(fixture_env["txs"])
 
 
-def test_events_wide_pivot_roundtrip(fixture_env):
-    """Property (SURVEY §5): wide events pivoted back to long must equal
-    the EAV attrs table — pivot(R4) ∘ melt ≡ identity."""
-    attrs = P.parse_events_attrs(fixture_env["raw_txs"])
-    wide = P.parse_events_wide(fixture_env["raw_txs"])
-    key_cols = {"hash", "height", "occurrence"}
+def test_events_wide_pivot_roundtrip(spark, fixture_env):
+    """Property (SURVEY §5): silver wide events pivoted back to long must
+    equal the EAV attrs — pivot(R4) ∘ melt ≡ identity."""
+    attrs = _events_attrs(fixture_env["raw_txs"])
+    wide = _silver(spark, fixture_env["silver"], "events")
+    key_cols = {"hash", "height", "occurrence", "time", "day", "month", "year"}
     value_cols = [c for c in wide.columns if c not in key_cols]
     melted = set()
     for r in wide.collect():
@@ -136,11 +152,10 @@ def test_events_wide_pivot_roundtrip(fixture_env):
     assert melted == eav
 
 
-def test_run_end_to_end_partitioned(spark, fixture_env, tmp_path):
-    out_dir = str(tmp_path / "silver")
-    tables = P.run(spark, fixture_env["bdir"], fixture_env["tdir"], out_dir=out_dir)
+def test_run_end_to_end_partitioned(spark, fixture_env):
+    tables = fixture_env["tables"]
     # read back the partitioned parquet: partition cols materialize
-    blocks_rt = spark.read.parquet(f"{out_dir}/blocks")
+    blocks_rt = spark.read.parquet(f"{fixture_env['silver']}/blocks")
     assert blocks_rt.count() == tables["blocks"].count()
     assert {"year", "month", "day"} <= set(blocks_rt.columns)
     # joined time columns present on every silver table
@@ -150,11 +165,16 @@ def test_run_end_to_end_partitioned(spark, fixture_env, tmp_path):
     assert tables["tx_result"].count() == len(fixture_env["txs"])
 
 
-def test_parse_idempotent(spark, fixture_env):
-    """Same input parsed twice ⇒ identical results (S5 intent)."""
-    a = P.parse_log_attributes(fixture_env["raw_txs"]).collect()
-    b = P.parse_log_attributes(fixture_env["raw_txs"]).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+def test_parse_idempotent(spark, fixture_env, tmp_path):
+    """Same input parsed twice ⇒ identical silver tables (S5 intent)."""
+    again = str(tmp_path / "silver")
+    P.run(spark, fixture_env["bdir"], fixture_env["tdir"], out_dir=again)
+    for name in P.SILVER_TABLES:
+        a, b = _silver(spark, fixture_env["silver"], name), _silver(spark, again, name)
+        cols = sorted(a.columns)
+        assert sorted(b.columns) == cols, name
+        rows = [Counter(map(tuple, df.select(cols).collect())) for df in (a, b)]
+        assert rows[0] == rows[1], name
 
 
 def test_corrupt_record_dead_letter(spark, tmp_path):
@@ -197,7 +217,7 @@ def test_events_attrs_matches_window_plan(fixture_env):
     from pyspark.sql import functions as F
 
     raw_txs = fixture_env["raw_txs"]
-    got = sorted(tuple(r) for r in P.parse_events_attrs(raw_txs).collect())
+    got = sorted(tuple(r) for r in _events_attrs(raw_txs).collect())
 
     ev = raw_txs.select(
         "hash",
@@ -228,10 +248,7 @@ def test_events_attrs_matches_window_plan(fixture_env):
 def test_events_attrs_is_shuffle_free(fixture_env):
     """The EAV parse plan must contain no Exchange — it is a pure map
     over the scan (the 100 TB contract the docstring claims)."""
-    plan = (
-        P.parse_events_attrs(fixture_env["raw_txs"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = _events_attrs(fixture_env["raw_txs"])._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
 

@@ -102,6 +102,51 @@ def test_build_gold_views_without_dir(spark, tmp_path, chain):
     assert set(models) == {"gas_used_per_day", "num_txs_per_day", "cum_txs_per_day"}
 
 
+@pytest.mark.parametrize("healed", [True, False])
+def test_flow_repairs_dead_lettered_heights(spark, tmp_path, chain, healed):
+    """Flow 1 runs over a node whose fifth height fails to parse even at
+    one item per page: the scan dead-letters it and every height after it
+    in its range. Flow 2 repairs that tail with one range scan. Over the
+    healed node silver then holds every height exactly once and nothing
+    stays dead-lettered; over a node still broken for the bad height,
+    point lookup included, flow 2 still finishes, lands the heights after
+    it, and keeps only the bad height dead-lettered."""
+    blocks, txs = chain
+    bad = START_HEIGHT + 4
+    healthy = make_mock_rpc(blocks, txs)
+
+    def broken(url):
+        if url.endswith(f"/block?height={bad}"):
+            raise json.JSONDecodeError("too big", "", 0)
+        resp = healthy(url)
+        if any(int(b["block"]["header"]["height"]) == bad for b in resp.get("result", {}).get("blocks", [])):
+            raise json.JSONDecodeError("too big", "", 0)
+        return resp
+
+    landing, silver = str(tmp_path / "landing"), str(tmp_path / "silver")
+    errors = f"{landing}/testnet/errors/error_heights.json"
+    landed = f"{landing}/testnet/blocks"
+    for fetch in (broken, healthy if healed else broken):
+        before = set(os.listdir(landed)) if os.path.isdir(landed) else set()
+        res = data_pipeline(
+            spark, "http://node", landing, silver, num_blocks=10, backfill_batches=5, fetch=fetch
+        )
+        if fetch is broken and not before:
+            with open(errors) as f:
+                tail = json.load(f)
+            assert tail[0] == bad and tail == list(range(bad, tail[-1] + 1))
+            assert res.silver_counts["blocks"] == N_BLOCKS - len(tail)
+
+    lo = bad if healed else bad + 1
+    assert set(os.listdir(landed)) - before == {f"{lo}_{tail[-1]}.json"}
+    missing = set() if healed else {str(bad)}
+    heights = spark.read.parquet(f"{silver}/blocks").select("height")
+    assert heights.count() == heights.distinct().count() == N_BLOCKS - len(missing)
+    assert res.silver_counts["tx_result"] == sum(t["height"] not in missing for t in txs)
+    with open(errors) as f:
+        assert json.load(f) == ([] if healed else [bad])
+
+
 # ---------------------------------------------------------------------------
 # incremental parse: the parsed-file ledger in silver
 # ---------------------------------------------------------------------------
